@@ -43,6 +43,45 @@ N=$(find "$OUT/bucket" -name '*.parquet' | wc -l)
 find "$OUT/bucket" -path '*year_created=*' -name '*.parquet' >/dev/null || { echo "SMOKE FAIL: no dated partition layout"; exit 1; }
 echo "SMOKE OK ($N parquet files under dated partitions)"
 
+# ---- default-contract leg: no GRAFT_FILE_CONTRACT, so the Scalable
+# contract spreads the single-split series dump across all cores. The
+# per-dump JSON records (logged at INFO) must name each dump's outcome. ----
+FP3=$OUT/floorplan_default.yaml
+cat > "$FP3" <<'YAML'
+- prefix: dumps/series
+  query: SELECT GENERATE_SERIES(0,99)
+  chunksize: 40
+- prefix: dumps/none
+  query: SELECT WHERE 1=0
+YAML
+mkdir -p "$OUT/bucket3"
+# The Spark jars the build compiles against (build.sbt's unmanagedBase).
+SPARK_JARS=$(sed -n 's/^unmanagedBase := file("\(.*\)")$/\1/p' build.sbt)
+AWS_BUCKET="file://$OUT/bucket3" \
+FLOORPLAN_FILE="$FP3" \
+LOGLEVEL=info \
+java $ADD_OPENS -Dspark.ui.enabled=false \
+  -cp "$JAR:$SPARK_JARS/*" graft.core.Floorista > "$OUT/default.log" 2>&1 \
+  || { tail -40 "$OUT/default.log"; echo "SMOKE FAIL: default-contract run exited non-zero"; exit 1; }
+
+ls -d "$OUT"/bucket3/dumps/series/year_created=*/month_created=*/day_created=* >/dev/null 2>&1 \
+  || { echo "SMOKE FAIL: default-contract series dump has no dated layout"; exit 1; }
+NONE_DIR=$(ls -d "$OUT"/bucket3/dumps/none/year_created=*/month_created=*/day_created=* 2>/dev/null || true)
+[ -n "$NONE_DIR" ] && [ -z "$(ls -A "$NONE_DIR")" ] \
+  || { echo "SMOKE FAIL: empty dump did not leave a bare folder marker"; exit 1; }
+python3 - "$OUT/default.log" <<'PY'
+import json, sys
+recs = [json.loads(line[line.index('{"record"'):]) for line in open(sys.argv[1]) if '{"record"' in line]
+dumps = {r["prefix"]: r for r in recs if r["record"] == "dump"}
+series, none = dumps["dumps/series"], dumps["dumps/none"]
+assert series["outcome"] == "written" and series["rows"] == 100, series
+assert none["outcome"] == "empty" and none["rows"] == 0, none
+totals = [r for r in recs if r["record"] == "totals"]
+assert len(totals) == 1 and totals[0]["dumps"] == 2 and totals[0]["rows"] == 100, totals
+print("dump records:", json.dumps(series), json.dumps(none), sep="\n  ")
+PY
+echo "SMOKE OK (default contract: dated layout, written 100 rows, empty marker)"
+
 # ---- optional leg: live PostgreSQL through the reference's env contract ----
 # The reference's only source is Postgres (POSTGRES_SERVICE_HOST etc.,
 # config.py:25-58). When the host has server binaries (this sandbox ships

@@ -8,7 +8,8 @@ import graft.sources.SqlTranslate
 
 /** The floorist-equivalent pipeline orchestrator (`src/floorist/floorist.py:
   * 259-292`): load the floorplan, execute each dump sequentially, count
-  * successes, log "Dumped X from total of Y", and report non-zero iff any
+  * successes, log "Dumped X from total of Y" beside the summed dump
+  * records ([[DumpTotals]]), and report non-zero iff any
   * dump failed. Dumps stay sequential on the driver (matching the
   * reference's observable interleaving, A7) while Spark parallelizes
   * *within* each dump across partitions — strictly dominating the
@@ -71,6 +72,7 @@ class Floorista(
       if (executor.execute(raw, i + 1)) dumped += 1
     }
     log.info(s"Dumped $dumped from total of ${rows.size}")
+    log.info(executor.totals.json)
     if (dumped != rows.size) 1 else 0
   }
 }

@@ -54,13 +54,7 @@ object Multimodal {
     * (micro-batches inherit the source's partitioning). */
   private def renderInput(documents: DataFrame): DataFrame = {
     val proj = documents.select(col("doc_id"), col("text"))
-    if (proj.isStreaming) proj
-    else {
-      val parallelism = proj.sparkSession.sparkContext.defaultParallelism
-      if (proj.rdd.getNumPartitions < parallelism)
-        proj.repartition(parallelism)
-      else proj
-    }
+    if (proj.isStreaming) proj else graft.plans.PreparedPlan.spreadUnderSplit(proj)
   }
 
   /** The same projection UNSPREAD — for the cheap renders (BMP memcpy,

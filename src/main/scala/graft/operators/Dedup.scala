@@ -1,10 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
 import graft.functions.CosineSimilarity.cosineSim
 import graft.functions.SimHash64
+import graft.plans.PreparedPlan
 
 /** Near-duplicate detection pipelines for document corpora.
   *
@@ -60,31 +62,14 @@ object Dedup {
   def spreadToParallelism(df: DataFrame): DataFrame = {
     require(!df.isStreaming,
       "spreadToParallelism reads df.rdd.getNumPartitions, which a streaming frame cannot answer")
-    if (hasShuffleExchange(df.queryExecution.executedPlan)) {
+    if (PreparedPlan.exists(df)(_.isInstanceOf[ShuffleExchangeLike])) {
       org.apache.log4j.Logger.getLogger(getClass).warn(
         "spreadToParallelism: physical plan contains a shuffle exchange " +
           "(aggregate/join/repartition upstream); returning it unspread — " +
           "shuffled frames already carry cluster parallelism")
       df
-    } else {
-      val parallelism = df.sparkSession.sparkContext.defaultParallelism
-      if (df.rdd.getNumPartitions < parallelism) df.repartition(parallelism) else df
-    }
+    } else PreparedPlan.spreadUnderSplit(df)
   }
-
-  /** True iff the PREPARED physical plan contains a shuffle exchange.
-    * `executedPlan` (not `sparkPlan`: exchanges are only inserted by the
-    * EnsureRequirements preparation) — and under AQE the prepared tree is
-    * hidden inside a leaf [[AdaptiveSparkPlanExec]] wrapper, so recurse
-    * into its public `initialPlan` (post-preparation, pre-execution;
-    * reading it runs no stages). */
-  private def hasShuffleExchange(
-      p: org.apache.spark.sql.execution.SparkPlan): Boolean =
-    p.collectFirst {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-          if hasShuffleExchange(a.initialPlan) => a
-    }.isDefined
 
   /** MinHash signature (array<long>, length [[NumHashes]]) — one native
     * codegen'd pass per row (see [[graft.functions.MinHashSignature]]; the

@@ -2,8 +2,16 @@ package graft.sink
 
 import java.time.LocalDate
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.functions.{count, lit}
+
+import graft.plans.PreparedPlan
 
 /** Date-partitioned gzip-parquet sink — the floorist output contract.
   *
@@ -21,23 +29,49 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale note ([[FileContract]]): `Exact` coalesces to one task to match the
   * reference's sequential chunk loop file-for-file — correct but single
-  * threaded, like the reference. `Scalable` keeps the natural partitioning
-  * (every executor writes its own chunk files, still ≤ chunksize rows each)
-  * — that's the 100 TB path, trading the exact-count contract for
-  * parallelism. Default `Scalable`; tests pin `Exact`.
+  * threaded, like the reference. `Scalable` lets every task write its own
+  * chunk files, still ≤ chunksize rows each — the 100 TB path, trading the
+  * exact-count contract for parallelism. It keeps an input's partitioning,
+  * except that an under-split input is spread across all cores first (see
+  * `shape`). Default `Scalable`; tests pin `Exact`.
   */
 sealed trait FileContract
 object FileContract {
   /** Exactly ceil(rows/chunksize) files, like the reference's chunk loop. */
   case object Exact extends FileContract
-  /** ≤ chunksize rows per file, file count = Σ per-partition ceil. */
+  /** ≤ chunksize rows per file, file count = Σ per-partition ceil. An input
+    * with fewer partitions than `defaultParallelism` is round-robin spread
+    * to that many first, when reading its partition count runs nothing. */
   case object Scalable extends FileContract
 }
 
-sealed trait WriteResult
+/** What one write committed: the rows the query produced, counted while
+  * the write ran, and the part files and bytes moved into the target. */
+final case class WriteStats(rows: Long, files: Int, bytes: Long)
+
+/** Outcome of one write. A result equals the outcome object of its kind,
+  * [[WriteResult.Written]] or [[WriteResult.EmptyMarker]], whatever stats
+  * it carries, so callers can compare and match on the outcome alone. */
+sealed abstract class WriteResult(val isEmpty: Boolean) {
+  /** `None` when the sink that produced the result did not measure it. */
+  def stats: Option[WriteStats]
+  override final def equals(o: Any): Boolean = o match {
+    case r: WriteResult => r.isEmpty == isEmpty
+    case _              => false
+  }
+  override final def hashCode: Int = isEmpty.##
+}
 object WriteResult {
-  case object Written extends WriteResult
-  case object EmptyMarker extends WriteResult
+  case object Written extends WriteResult(isEmpty = false) { def stats: Option[WriteStats] = None }
+  case object EmptyMarker extends WriteResult(isEmpty = true) { def stats: Option[WriteStats] = None }
+
+  /** A measured result: empty iff no rows were written. */
+  def apply(stats: WriteStats): WriteResult = new Measured(stats)
+
+  private final class Measured(s: WriteStats) extends WriteResult(s.rows == 0) {
+    def stats: Option[WriteStats] = Some(s)
+    override def toString: String = s"${if (isEmpty) EmptyMarker else Written}($s)"
+  }
 }
 
 class PartitionedParquetSink(
@@ -60,21 +94,23 @@ class PartitionedParquetSink(
 
   /** Write `df` under the dated target. Empty input → folder marker only.
     *
-    * The source plan executes exactly ONCE: the result is staged into a
-    * scratch directory, and the staged files are then either renamed into
-    * the target (non-empty) or replaced by the folder marker (empty). An
-    * up-front `df.isEmpty` probe would run the query twice — a different
-    * snapshot on a live JDBC source, and double cost everywhere. */
+    * One SQL execution: the result is staged into a scratch directory, and
+    * the staged files are then either renamed into the target (non-empty)
+    * or replaced by the folder marker (empty). The row count that decides
+    * between the two is an [[Observation]] on the written frame, taken by
+    * the write's own tasks — an up-front `df.isEmpty` probe or a read-back
+    * count would run the query or the staged files again (a different
+    * snapshot on a live JDBC source, and extra jobs everywhere). */
   def write(df: DataFrame, prefix: String, rowsPerFile: Option[Int],
             date: LocalDate = LocalDate.now()): WriteResult = {
     val target = targetUrl(prefix, date)
     val staging = s"${rootUrl.stripSuffix("/")}/.graft_staging/${java.util.UUID.randomUUID()}"
-    val shaped = (rowsPerFile, contract) match {
-      case (None, _)                        => df.coalesce(1)
-      case (Some(_), FileContract.Exact)    => df.coalesce(1)
-      case (Some(_), FileContract.Scalable) => df
-    }
-    val writer = shaped.write.mode("overwrite").option("compression", "gzip")
+    // Observed on the shaped frame, so the counting node sits in the write
+    // stage itself: result-stage accumulators are merged once per partition,
+    // never again on a recomputed upstream stage.
+    val counted = Observation()
+    val writer = shape(df, rowsPerFile).observe(counted, count(lit(1)).as("rows"))
+      .write.mode("overwrite").option("compression", "gzip")
     val sized = rowsPerFile match {
       case Some(n) => writer.option("maxRecordsPerFile", n.toLong)
       case None    => writer
@@ -84,13 +120,17 @@ class PartitionedParquetSink(
     val f = fs(target)
     val stagingPath = new Path(staging)
     try {
+      // The count arrives through the listener bus once the write has ended:
+      // a bounded wait, so a dropped event fails the dump instead of hanging it.
+      val observed = Await.result(counted.future, 2.minutes)
+      if (observed.schema == null || !observed.schema.fieldNames.contains("rows"))
+        throw new IllegalStateException(s"write to $staging finished without its row count")
+      val rows = observed.getAs[Long]("rows")
       val parts = f.listStatus(stagingPath)
         .filter(_.getPath.getName.startsWith("part-"))
-      // Footer-only row count of the staged output (no recompute).
-      val written = spark.read.parquet(staging).count()
       f.mkdirs(new Path(target))
-      if (written == 0) {
-        WriteResult.EmptyMarker
+      if (rows == 0) {
+        WriteResult(WriteStats(0, 0, 0))
       } else {
         parts.foreach { p =>
           // Part names embed the job UUID, so appends never collide. A
@@ -102,12 +142,35 @@ class PartitionedParquetSink(
           if (!f.rename(p.getPath, dest))
             throw new java.io.IOException(s"rename ${p.getPath} -> $dest failed")
         }
-        WriteResult.Written
+        WriteResult(WriteStats(rows, parts.length, parts.map(_.getLen).sum))
       }
     } finally {
       f.delete(stagingPath, true)
     }
   }
+
+  /** The frame the writer runs on. A single file (chunksize 0) and the
+    * `Exact` contract take one writer task. `Scalable` spreads an input
+    * with fewer partitions than `defaultParallelism` across all cores, but
+    * only when reading its partition count runs nothing and breaks no
+    * promise: a plan with an exchange, a subquery or a cached relation
+    * would pre-run work to answer, and a round-robin spread would scramble
+    * a plan's output ordering (an `ORDER BY … LIMIT` dump). The count is
+    * read from the prepared plan itself, not `df.rdd`, which Spark runs as
+    * an SQL execution of its own. */
+  private def shape(df: DataFrame, rowsPerFile: Option[Int]): DataFrame =
+    (rowsPerFile, contract) match {
+      case (Some(_), FileContract.Scalable) =>
+        val plan = df.queryExecution.executedPlan
+        val keep = plan.outputOrdering.nonEmpty || PreparedPlan.exists(df) {
+          case _: Exchange | _: ReusedExchangeExec | _: InMemoryTableScanExec => true
+          case n => n.subqueries.nonEmpty
+        }
+        val parallelism = spark.sparkContext.defaultParallelism
+        if (keep || plan.execute().getNumPartitions >= parallelism) df
+        else df.repartition(parallelism)
+      case _ => df.coalesce(1)
+    }
 
   /** Wipe a (possibly partial) dump target before a retry — the analogue of
     * `wr.s3.delete_objects(target)` (`floorist.py:209-213`). Failures

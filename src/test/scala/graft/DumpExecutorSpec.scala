@@ -85,4 +85,51 @@ class DumpExecutorSpec extends SparkSpecBase {
     assert(!ex.execute(Map[String, Any]("query" -> "SELECT 1"), 2))
     assert(ex.execute(Map[String, Any]("prefix" -> "p", "query" -> "SELECT 1"), 3))
   }
+
+  test("dump records: written, empty, retried and failed dumps each emit one JSON line") {
+    val sink = new RecordingSink(tmpDir("exec-records"))
+    val lines = scala.collection.mutable.Buffer[String]()
+    var retried = false
+    val run: String => DataFrame = {
+      case "written" => spark.range(0, 5).toDF("n")
+      case "empty"   => spark.range(0, 5).toDF("n").filter("n < 0")
+      case "retried" =>
+        if (!retried) { retried = true; throw new RuntimeException("SerializationFailure") }
+        spark.range(0, 7).toDF("n")
+      case _ => throw new IllegalArgumentException("syntax error")
+    }
+    val ex = new DumpExecutor(sink, run, sleeper = _ => (), today = () => date,
+      record = lines.append(_))
+    Seq("written", "empty", "retried", "failed").zipWithIndex.foreach { case (q, i) =>
+      ex.execute(FloorplanRow(s"rec/$q", q, Some(0)), i + 1)
+    }
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val records = lines.toSeq.map(mapper.readTree)
+    assert(records.size == 4)
+    def fields(r: com.fasterxml.jackson.databind.JsonNode) = (
+      r.get("prefix").asText, r.get("outcome").asText, r.get("rows"), r.get("files"),
+      r.get("attempts").asInt, r.get("backoff_s").asLong, r.get("error"))
+    val Seq(written, empty, again, failed) = records
+    assert(records.forall(r => r.get("record").asText == "dump" && r.get("ms").asLong >= 0))
+    assert(records.map(_.get("dump").asInt) == Seq(1, 2, 3, 4))
+
+    val (p1, o1, rows1, files1, a1, b1, e1) = fields(written)
+    assert((p1, o1, rows1.asLong, files1.asInt, a1, b1) == ("rec/written", "written", 5L, 1, 1, 0L))
+    assert(written.get("bytes").asLong > 0 && e1.isNull)
+
+    val (_, o2, rows2, files2, a2, _, e2) = fields(empty)
+    assert((o2, rows2.asLong, files2.asInt, a2) == ("empty", 0L, 0, 1) && e2.isNull)
+
+    val (_, o3, rows3, _, a3, b3, _) = fields(again)
+    assert((o3, rows3.asLong, a3, b3) == ("written", 7L, 2, 5L))
+
+    val (p4, o4, rows4, _, a4, b4, e4) = fields(failed)
+    assert((p4, o4, a4, b4) == ("rec/failed", "failed", 1, 0L))
+    assert(rows4.isNull && e4.asText == "java.lang.IllegalArgumentException")
+
+    val totals = mapper.readTree(ex.totals.json)
+    assert(totals.get("record").asText == "totals")
+    assert(Seq("dumps", "written", "empty", "failed", "rows", "attempts", "backoff_s")
+      .map(totals.get(_).asLong) == Seq(4L, 2L, 1L, 1L, 12L, 5L, 5L))
+  }
 }

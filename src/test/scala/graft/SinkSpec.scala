@@ -2,7 +2,21 @@ package graft
 
 import java.time.LocalDate
 
-import graft.sink.{FileContract, PartitionedParquetSink, WriteResult}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.functions.{broadcast, col, desc}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.sink.{FileContract, PartitionedParquetSink, WriteResult, WriteStats}
 
 class SinkSpec extends SparkSpecBase {
   private val date = LocalDate.of(2026, 8, 3) // unpadded month AND day digits
@@ -74,5 +88,137 @@ class SinkSpec extends SparkSpecBase {
     val files = parquetFiles(s"$root/par")
     // 4 partitions of ~250 rows, each split into ceil(250/100)=3 files.
     assert(files.size >= 10 && files.size <= 12, s"got ${files.size}")
+  }
+
+  // ---- Scalable: one SQL execution per write, spread only when it is free ----
+
+  /** A single-split parquet input of `rows` rows (one file, one row group). */
+  private def singleSplit(rows: Long): DataFrame = {
+    val dir = tmpDir("sink-input")
+    spark.range(0, rows).toDF("n").coalesce(1).write.mode("overwrite").parquet(dir)
+    val df = spark.read.parquet(dir)
+    assert(df.rdd.getNumPartitions == 1)
+    df
+  }
+
+  /** The query executions that finished while `body` ran, and the SQL
+    * execution id (if any) of every Spark job it started. */
+  private def executions(body: => Unit): (Seq[QueryExecution], Seq[Option[String]]) = {
+    val seen = ArrayBuffer.empty[QueryExecution]
+    val jobs = ArrayBuffer.empty[Option[String]]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.synchronized(seen += qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        seen.synchronized(seen += qe)
+    }
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
+        jobs += Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+      }
+    }
+    val sc = spark.sparkContext
+    TestListenerBus.drain(sc)
+    spark.listenerManager.register(listener)
+    sc.addSparkListener(jobListener)
+    try {
+      body
+      TestListenerBus.drain(sc)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      sc.removeSparkListener(jobListener)
+    }
+    (seen.synchronized(seen.toSeq), jobs.synchronized(jobs.toSeq))
+  }
+
+  /** Exchanges in an executed plan, looking into AQE's final plan. */
+  private def exchanges(p: SparkPlan): Int = p match {
+    case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+    case s: QueryStageExec        => exchanges(s.plan)
+    case e: Exchange              => 1 + e.children.map(exchanges).sum
+    case other                    => other.children.map(exchanges).sum
+  }
+
+  private def rowCount(f: java.io.File): Long = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new Path(f.toURI), spark.sparkContext.hadoopConfiguration))
+    try r.getRecordCount finally r.close()
+  }
+
+  /** Partition ids of the tasks that wrote these part files
+    * (`part-<partition>-<job uuid>-c<file>.gz.parquet`). */
+  private def writerTasks(files: Seq[java.io.File]): Set[String] =
+    files.map(_.getName.split("-")(1)).toSet
+
+  test("scalable: every write is one SQL execution (scan, aggregate, broadcast join, scalar subquery, empty)") {
+    val scan = singleSplit(20000)
+    scan.createOrReplaceTempView("sink_exec_scan")
+    val inputs = Seq(
+      "single-split scan" -> scan,
+      "aggregate" -> scan.groupBy((col("n") % 10).as("k")).count(),
+      "broadcast join" -> scan.join(broadcast(spark.range(0, 100).toDF("n")), "n"),
+      "scalar subquery" -> spark.sql(
+        "SELECT n FROM sink_exec_scan WHERE n > (SELECT avg(n) FROM sink_exec_scan)"),
+      "empty" -> scan.filter("n < 0"))
+    inputs.foreach { case (name, df) =>
+      val root = tmpDir("sink-one-exec")
+      val sink = new PartitionedParquetSink(spark, s"file://$root", FileContract.Scalable)
+      var result: WriteResult = null
+      val (seen, jobs) = executions { result = sink.write(df, "one", Some(1000), date) }
+      assert(seen.size == 1, s"$name: ${seen.size} SQL executions for one write")
+      assert(jobs.nonEmpty && jobs.forall(_ == jobs.head) && jobs.head.isDefined,
+        s"$name: jobs outside the write's SQL execution: $jobs")
+      val expected = df.count()
+      assert(result.stats.map(_.rows).contains(expected), s"$name: $result")
+      assert(result == (if (expected == 0) WriteResult.EmptyMarker else WriteResult.Written))
+    }
+  }
+
+  test("scalable: a single-split input is spread over defaultParallelism writer tasks") {
+    val root = tmpDir("sink-spread")
+    val sink = new PartitionedParquetSink(spark, s"file://$root", FileContract.Scalable)
+    val result = sink.write(singleSplit(60000), "spread", Some(1000), date)
+    val files = parquetFiles(s"$root/spread")
+    assert(writerTasks(files).size == spark.sparkContext.defaultParallelism)
+    val counts = files.map(rowCount)
+    assert(counts.forall(_ <= 1000), counts)
+    assert(counts.sum == 60000)
+    assert(result.stats.contains(WriteStats(60000, files.size, files.map(_.length).sum)))
+  }
+
+  test("scalable: multi-split and already-shuffled inputs get no added exchange") {
+    val parallelism = spark.sparkContext.defaultParallelism
+    val inputs = Seq(
+      ("multi-split", spark.range(0, 8000, 1, parallelism * 2).toDF("n"), 0, parallelism * 2),
+      ("shuffled", spark.range(0, 8000).toDF("n").repartition(2), 1, 2))
+    inputs.foreach { case (name, df, wantExchanges, wantTasks) =>
+      val root = tmpDir("sink-noshuffle")
+      val sink = new PartitionedParquetSink(spark, s"file://$root", FileContract.Scalable)
+      val (Seq(qe), _) = executions(sink.write(df, "keep", Some(1000), date))
+      assert(exchanges(qe.executedPlan) == wantExchanges, s"$name:\n${qe.executedPlan}")
+      assert(writerTasks(parquetFiles(s"$root/keep")).size == wantTasks, name)
+    }
+  }
+
+  test("scalable: an ORDER BY ... LIMIT dump keeps its order across chunk files") {
+    val root = tmpDir("sink-order")
+    val sink = new PartitionedParquetSink(spark, s"file://$root", FileContract.Scalable)
+    val top = singleSplit(5000).orderBy(desc("n")).limit(1000)
+    sink.write(top, "top", Some(100), date)
+    val files = parquetFiles(s"$root/top").sortBy(_.getName)
+    assert(files.size == 10)
+    val read = files.flatMap(f => spark.read.parquet(f.getPath).collect().map(_.getLong(0)))
+    assert(read == (4999L to 4000L by -1))
+  }
+
+  test("scalable: an empty single-split input leaves only the folder marker") {
+    val root = tmpDir("sink-empty-spread")
+    val sink = new PartitionedParquetSink(spark, s"file://$root", FileContract.Scalable)
+    val result = sink.write(singleSplit(1000).filter("n < 0"), "none", Some(1000), date)
+    assert(result == WriteResult.EmptyMarker)
+    assert(result.stats.contains(WriteStats(0, 0, 0)))
+    val target = new java.io.File(s"$root/none/year_created=2026/month_created=8/day_created=3")
+    assert(target.isDirectory && target.list().isEmpty)
+    assert(new java.io.File(s"$root/.graft_staging").list().isEmpty)
   }
 }
