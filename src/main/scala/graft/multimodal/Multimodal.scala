@@ -3,6 +3,8 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.artifacts.ArtifactStore
+
 /** Multimodal column plumbing: image/audio/video payloads travel as opaque
   * `binary` columns with typed metadata, and per-batch decode/feature
   * stages run as partition-local transforms (the Scala analogue of
@@ -659,52 +661,7 @@ object Multimodal {
                                 us_per_frame: Long, frame_idx: Long,
                                 gray_sum: Long, dhash: Long)
 
-  /** LRU-bounded per-(session, cacheKey) artifact cache backing the three
-    * memoized media tables (avi_meta / jpeg_meta / wav_fp). Round-18
-    * ADVICE: the unbounded maps evicted only on sparkContext.isStopped,
-    * so one long-lived session touching many dirs accumulated
-    * localCheckpointed artifacts without bound. Access-ordered
-    * LinkedHashMap capped at [[Multimodal.MaxCachedArtifactDirs]] entries
-    * per cache — far above any bench/test working set (≤ 4 dirs), so
-    * eviction never fires there; a multi-dir ingest session sheds its
-    * least-recently-probed dir instead of growing forever. Eviction drops
-    * the REFERENCE only: checkpoint blocks are reclaimed by the
-    * ContextCleaner once the frame is unreferenced (the artifacts are
-    * built via eager localCheckpoint, not CacheManager entries, so there
-    * is nothing to unpersist explicitly). The map lock is held across a
-    * build — builders of different dirs serialize — which matches the
-    * previous computeIfAbsent behavior closely enough for the
-    * single-driver-thread usage these caches serve. */
-  private[graft] final class ArtifactCache[V >: Null <: AnyRef] {
-    private val m = new java.util.LinkedHashMap[
-        (org.apache.spark.sql.SparkSession, String), V](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(org.apache.spark.sql.SparkSession, String), V])
-          : Boolean = size() > MaxCachedArtifactDirs
-    }
-    def get(key: (org.apache.spark.sql.SparkSession, String))(build: => V): V =
-      m.synchronized {
-        val it = m.keySet().iterator()
-        while (it.hasNext) {
-          if (it.next()._1.sparkContext.isStopped) it.remove()
-        }
-        val cur = m.get(key)
-        if (cur != null) cur
-        else {
-          val v = build
-          m.put(key, v)
-          v
-        }
-      }
-    private[graft] def size: Int = m.synchronized(m.size())
-    private[graft] def contains(
-        key: (org.apache.spark.sql.SparkSession, String)): Boolean =
-      m.synchronized(m.containsKey(key))
-  }
-
-  private[graft] val MaxCachedArtifactDirs = 64
-
-  /** Per-(session, cacheKey) memoized stride-2 AVI frame meta — the
+  /** Stride-2 AVI frame meta memoized in [[ArtifactStore]] — the
     * [[memoizedJpegMeta]] pattern: m30 reads the sampled-frame rows
     * verbatim, m31 aggregates the same rows into video fingerprints, so
     * the corpus renders + samples ONCE per session+dir (tiny rows: 6
@@ -712,25 +669,21 @@ object Multimodal {
     * `warmup_artifacts` ledger) instead of once per consumer. The
     * artifact build itself keeps the sampler's laziness — skipped frames
     * never JPEG-decode. */
-  private[graft] val aviMetaCache = new ArtifactCache[Dataset[AviFrameMeta]]
-
   def memoizedAviFrameMeta(documents: DataFrame,
-                           cacheKey: String): Dataset[AviFrameMeta] = {
-    aviMetaCache.get((documents.sparkSession, cacheKey))(
-      graft.tools.BuildTimer.time("avi_meta") {
-        // decode in parallel (renderAviTable spreads), then land the tiny
-        // artifact back at the SOURCE scan's partition count — consumers
-        // (m31's aggregates, m34/m35/m36's probes) read it many times per
-        // bench, and leaving it at decode parallelism charged every read
-        // ~32 near-empty tasks (triple-measured: m31 0.15 -> 0.48 s,
-        // m34 0.44 -> 1.18 s). Scale-adaptive, not a constant: at 100 TB
-        // the corpus scan has thousands of splits and the artifact keeps
-        // them. max(1, ..) guards the empty-corpus scan (0 partitions).
-        decodedAviFrameMeta(renderAviTable(documents), stride = 2)
-          .repartition(math.max(1, documents.rdd.getNumPartitions))
-          .localCheckpoint()
-      })
-  }
+                           cacheKey: String): Dataset[AviFrameMeta] =
+    ArtifactStore.get("avi_meta", documents.sparkSession, cacheKey) {
+      // decode in parallel (renderAviTable spreads), then land the tiny
+      // artifact back at the SOURCE scan's partition count — consumers
+      // (m31's aggregates, m34/m35/m36's probes) read it many times per
+      // bench, and leaving it at decode parallelism charged every read
+      // ~32 near-empty tasks (triple-measured: m31 0.15 -> 0.48 s,
+      // m34 0.44 -> 1.18 s). Scale-adaptive, not a constant: at 100 TB
+      // the corpus scan has thousands of splits and the artifact keeps
+      // them. max(1, ..) guards the empty-corpus scan (0 partitions).
+      decodedAviFrameMeta(renderAviTable(documents), stride = 2)
+        .repartition(math.max(1, documents.rdd.getNumPartitions))
+        .localCheckpoint()
+    }
 
   def decodedAviFrameMeta(media: Dataset[MediaRow],
                           stride: Int): Dataset[AviFrameMeta] = {
@@ -1186,23 +1139,20 @@ object Multimodal {
                             components: Long, restart_interval: Long,
                             gray_sum: Long, dhash: Long)
 
-  /** Per-(session, cacheKey) memoized scale-1 JPEG meta — the
+  /** Scale-1 JPEG meta memoized in [[ArtifactStore]] — the
     * build-once/consume-many pattern of the gram/MinHash/IVF indexes:
     * m19 reads the full meta, m20 reads (doc_id, dhash) for its scale-1
     * side, so the corpus renders+decodes ONCE per session+dir instead of
     * once per consumer. Materialized via localCheckpoint (tiny rows:
     * 7 longs/doc); the render cost lands in the `warmup_artifacts`
     * ledger, not in any single query's timing. */
-  private[graft] val jpegMetaCache = new ArtifactCache[Dataset[JpegMeta]]
-
-  def memoizedJpegMeta(documents: DataFrame, cacheKey: String): Dataset[JpegMeta] = {
-    jpegMetaCache.get((documents.sparkSession, cacheKey))(
-      graft.tools.BuildTimer.time("jpeg_meta")(
-        // same layout rule as avi_meta: parallel decode, compact landing
-        decodedJpegMeta(renderJpegTable(documents))
-          .repartition(math.max(1, documents.rdd.getNumPartitions))
-          .localCheckpoint()))
-  }
+  def memoizedJpegMeta(documents: DataFrame, cacheKey: String): Dataset[JpegMeta] =
+    ArtifactStore.get("jpeg_meta", documents.sparkSession, cacheKey) {
+      // same layout rule as avi_meta: parallel decode, compact landing
+      decodedJpegMeta(renderJpegTable(documents))
+        .repartition(math.max(1, documents.rdd.getNumPartitions))
+        .localCheckpoint()
+    }
 
   def decodedJpegMeta(media: Dataset[MediaRow]): Dataset[JpegMeta] = {
     val spark = media.sparkSession
@@ -1696,8 +1646,8 @@ object Multimodal {
     }.toDF("doc_id", "fp", "energies")
   }
 
-  /** Per-(session, cacheKey) memoized corpus PCM16-WAV fingerprint table
-    * (doc_id, fp, energies) — the [[memoizedAviFrameMeta]] pattern for
+  /** The corpus PCM16-WAV fingerprint table (doc_id, fp, energies),
+    * memoized in [[ArtifactStore]] — the [[memoizedAviFrameMeta]] pattern for
     * the audio family. The STANDING corpus fingerprint table is exactly
     * the artifact a real ingest deployment keeps beside the lake (m33's
     * whole premise); round 18 measured m33 AND m37 each re-rendering and
@@ -1706,15 +1656,11 @@ object Multimodal {
     * localCheckpoint, cost priced in `warmup_artifacts` as `wav_fp`.
     * Consumers slice it per doc_id (fingerprints are per-doc pure, so a
     * filtered read equals a filtered build). */
-  private[graft] val wavFpCache = new ArtifactCache[DataFrame]
-
   def memoizedWavFingerprints(documents: DataFrame,
-                              cacheKey: String): DataFrame = {
-    wavFpCache.get((documents.sparkSession, cacheKey))(
-      graft.tools.BuildTimer.time("wav_fp")(
-        decodedAudioFingerprints(renderWavTable(documents))
-          .localCheckpoint()))
-  }
+                              cacheKey: String): DataFrame =
+    ArtifactStore.get("wav_fp", documents.sparkSession, cacheKey) {
+      decodedAudioFingerprints(renderWavTable(documents)).localCheckpoint()
+    }
 
   /** The delta-vs-corpus audio probe (m33, the d13/d21 ingest shape for
     * the audio family): arriving fingerprints equi-join the STANDING

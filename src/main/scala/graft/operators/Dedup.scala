@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
+import graft.artifacts.{ArtifactStore, Releasable}
 import graft.functions.CosineSimilarity.cosineSim
 import graft.functions.SimHash64
 import graft.plans.PreparedPlan
@@ -787,7 +788,7 @@ object Dedup {
                                 signatures: DataFrame,
                                 cachedFrames: Seq[DataFrame] = Nil,
                                 appendsSinceCompaction: Int = 0,
-                                tombstones: Option[DataFrame] = None) {
+                                tombstones: Option[DataFrame] = None) extends Releasable {
     /** Band/signature tables with tombstoned ids filtered OUT — the view
       * every probe reads ([[deltaNearDupsIndexed]]). Deletion lists are
       * takedown-sized by contract, so the anti-join broadcasts and is a
@@ -948,42 +949,14 @@ object Dedup {
     MinHashIndex(idCol, bandsP, sigP)
   }
 
-  /** Per-(session, cacheKey) memoized [[buildMinHashIndex]] — the same
-    * build-once/probe-many pattern as the IVF and MIPS indexes; stopped
-    * -session entries are evicted on access. */
-  private val minhashIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), MinHashIndex]()
-
+  /** [[buildMinHashIndex]] memoized in [[ArtifactStore]]: build once per
+    * corpus, probe many. */
   def memoizedMinHashIndex(docs: DataFrame, idCol: String, shinglesCol: String,
-                           cacheKey: String): MinHashIndex = {
-    val it = minhashIndexCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
+                           cacheKey: String): MinHashIndex =
+    ArtifactStore.get("minhash_index", docs.sparkSession, cacheKey,
+        Seq(idCol, shinglesCol)) {
+      buildMinHashIndex(docs, idCol, shinglesCol)
     }
-    minhashIndexCache.computeIfAbsent((docs.sparkSession, cacheKey),
-      _ => graft.tools.BuildTimer.time("minhash_index")(buildMinHashIndex(docs, idCol, shinglesCol)))
-  }
-
-  /** Evict every memoized [[MinHashIndex]] of `s` whose cacheKey IS
-    * `keyPrefix` or extends it with the documented `"#suffix"` convention
-    * (`dir`, `dir + "#mhidx"`, ...), unpersisting its cached frames — the
-    * invalidation twin of [[memoizedMinHashIndex]]. Matching on the `#`
-    * boundary (not a bare string prefix) keeps invalidating corpus
-    * `/data/corp` from also evicting a sibling `/data/corpus` that merely
-    * shares the character prefix. */
-  def invalidateMinHashIndexCache(s: org.apache.spark.sql.SparkSession,
-                                  keyPrefix: String): Unit = {
-    val it = minhashIndexCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val k = e.getKey._2
-      if ((e.getKey._1 eq s) && (k == keyPrefix || k.startsWith(keyPrefix + "#"))) {
-        e.getValue.unpersist()
-        it.remove()
-      }
-    }
-  }
 
   /** Per-doc distinct hashed k-grams — the shared scan-side shape of the
     * ExactSubstr family ([[exactSubstrPairs]], the [[GramIndex]] build
@@ -1024,7 +997,7 @@ object Dedup {
                              k: Int, maxGramDocs: Int,
                              cachedFrames: Seq[DataFrame] = Nil,
                              appendsSinceCompaction: Int = 0,
-                             tombstones: Option[DataFrame] = None) {
+                             tombstones: Option[DataFrame] = None) extends Releasable {
     /** Releases every cached block this index transitively owns (the
       * [[MinHashIndex.unpersist]] over-approximation contract). */
     def unpersist(): Unit = {
@@ -1136,38 +1109,14 @@ object Dedup {
       cachedFrames = if (persist) Seq(gP) else Nil)
   }
 
-  /** Per-(session, cacheKey) memoized [[buildGramIndex]] — the same
-    * build-once/probe-many pattern as the MinHash/IVF/MIPS indexes;
-    * stopped-session entries are evicted on access. */
-  private val gramIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), GramIndex]()
-
+  /** [[buildGramIndex]] memoized in [[ArtifactStore]]: build once per
+    * corpus and (k, maxGramDocs), probe many. */
   def memoizedGramIndex(docs: DataFrame, idCol: String, textCol: String,
-                        k: Int, maxGramDocs: Int, cacheKey: String): GramIndex = {
-    val it = gramIndexCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
+                        k: Int, maxGramDocs: Int, cacheKey: String): GramIndex =
+    ArtifactStore.get("gram_index", docs.sparkSession, cacheKey,
+        Seq(idCol, textCol, k, maxGramDocs)) {
+      buildGramIndex(docs, idCol, textCol, k, maxGramDocs)
     }
-    gramIndexCache.computeIfAbsent((docs.sparkSession, cacheKey),
-      _ => graft.tools.BuildTimer.time("gram_index")(
-        buildGramIndex(docs, idCol, textCol, k, maxGramDocs)))
-  }
-
-  /** Evict every memoized [[GramIndex]] of `s` under `keyPrefix` (the
-    * `"#suffix"` boundary convention of the other index caches). */
-  def invalidateGramIndexCache(s: org.apache.spark.sql.SparkSession,
-                               keyPrefix: String): Unit = {
-    val it = gramIndexCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val kk = e.getKey._2
-      if ((e.getKey._1 eq s) && (kk == keyPrefix || kk.startsWith(keyPrefix + "#"))) {
-        e.getValue.unpersist()
-        it.remove()
-      }
-    }
-  }
 
   /** Index-probing delta ExactSubstr: the ingest batch's hashed k-grams
     * (scan-side, capped WITHIN the batch — a batch-wide boilerplate gram
@@ -1308,7 +1257,7 @@ object Dedup {
                                buckets: DataFrame, vectors: DataFrame,
                                bits: Int, tables: Int,
                                cachedFrames: Seq[DataFrame] = Nil,
-                               tombstones: Option[DataFrame] = None) {
+                               tombstones: Option[DataFrame] = None) extends Releasable {
     def unpersist(): Unit = {
       buckets.unpersist(); vectors.unpersist()
       cachedFrames.foreach(_.unpersist())
@@ -1395,42 +1344,16 @@ object Dedup {
       cachedFrames = if (persist) Seq(b, v) else Nil)
   }
 
-  /** Per-(session, cacheKey, density) memoized [[buildLshVecIndex]] — the
-    * same build-once/probe-many pattern as the other index caches. The
-    * requested (bits, tables) are part of the key (the memoizedIvfIndex/
-    * memoizedPqIndex convention): a caller tuning density must never be
-    * silently handed an index built at a different one. */
-  private val lshVecIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String, Int, Int), LshVecIndex]()
-
+  /** [[buildLshVecIndex]] memoized in [[ArtifactStore]]. The requested
+    * (bits, tables) are part of the key: a caller tuning density must
+    * never be silently handed an index built at a different one. */
   def memoizedLshVecIndex(emb: DataFrame, idCol: String, vecCol: String,
                           cacheKey: String, bits: Int = 0,
-                          tables: Int = 0): LshVecIndex = {
-    val it = lshVecIndexCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
+                          tables: Int = 0): LshVecIndex =
+    ArtifactStore.get("lsh_vec_index", emb.sparkSession, cacheKey,
+        Seq(idCol, vecCol, bits, tables)) {
+      buildLshVecIndex(emb, idCol, vecCol, bits, tables)
     }
-    lshVecIndexCache.computeIfAbsent(
-      (emb.sparkSession, cacheKey, bits, tables),
-      _ => graft.tools.BuildTimer.time("lsh_vec_index")(
-        buildLshVecIndex(emb, idCol, vecCol, bits, tables)))
-  }
-
-  /** Evict every memoized [[LshVecIndex]] of `s` under `keyPrefix` (the
-    * `"#suffix"` boundary convention of the other index caches). */
-  def invalidateLshVecIndexCache(s: org.apache.spark.sql.SparkSession,
-                                 keyPrefix: String): Unit = {
-    val it = lshVecIndexCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val kk = e.getKey._2
-      if ((e.getKey._1 eq s) && (kk == keyPrefix || kk.startsWith(keyPrefix + "#"))) {
-        e.getValue.unpersist()
-        it.remove()
-      }
-    }
-  }
 
   /** Index-probing delta embedding near-dups — [[deltaNearDupsIndexed]]'s
     * vector twin, completing the delta family's geometry set (d13 exact
@@ -1586,7 +1509,7 @@ object Dedup {
     * twice, a size bound, never a correctness one: probes are left-semi). */
   final case class LineSetIndex(hashes: DataFrame, lineTokens: Int,
                                 cachedFrames: Seq[DataFrame] = Nil,
-                                appendsSinceCompaction: Int = 0) {
+                                appendsSinceCompaction: Int = 0) extends Releasable {
     def unpersist(): Unit = {
       hashes.unpersist()
       cachedFrames.foreach(_.unpersist())

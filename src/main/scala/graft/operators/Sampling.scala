@@ -850,7 +850,8 @@ object Sampling {
     * rides IN the artifact (the LshVecIndex-density principle: a probe
     * at a different bucketing would silently hash grams into the wrong
     * rows), with parquet save/load for the offline cycle. */
-  final case class DsirModel(weights: DataFrame, buckets: Int) {
+  final case class DsirModel(weights: DataFrame, buckets: Int)
+      extends graft.artifacts.Releasable {
     def unpersist(): Unit = { weights.unpersist(); () }
 
     def save(dir: String): Unit = {

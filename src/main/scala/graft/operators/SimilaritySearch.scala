@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.artifacts.{ArtifactStore, Releasable}
 import graft.functions.CosineSimilarity.cosineSim
 import graft.functions.LshTableBuckets
 
@@ -248,7 +249,7 @@ object SimilaritySearch {
       vecCol: String,
       appendsSinceCompaction: Int = 0,
       cachedLeaves: Seq[DataFrame] = Nil,
-      tombstones: Option[DataFrame] = None) {
+      tombstones: Option[DataFrame] = None) extends Releasable {
     /** The assignment table with tombstoned ids filtered OUT — the view
       * every probe/dedup consumer reads. Deletion lists are takedown-
       * sized by contract (opt-outs, decontamination-after-the-fact), so
@@ -821,57 +822,32 @@ object SimilaritySearch {
       .select(col("q_id"), col("n_id"), round(col("cos"), 4).as("cos"), col("rnk"))
   }
 
-  /** Per-(session, corpus) memoized indexes: build once, probe many within a
-    * JVM — the online analogue of the offline save/load cycle. Keyed on the
-    * session object itself (identity, not a hash that a GC'd session could
-    * free for reuse); stopped-session entries are evicted on access. */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String, Int), IvfIndex]()
-
-  /** Memoized [[buildIvfIndex]]: repeated calls with the same (session,
-    * cacheKey, nCells) reuse the fitted index instead of re-clustering.
-    * Keys hold the session itself (identity semantics — an identity HASH
-    * could be reused after GC and hand a new session a dead index);
-    * entries for stopped sessions are evicted on access (their cached
-    * blocks died with the context).
+  /** [[buildIvfIndex]] memoized in [[ArtifactStore]]: repeated calls with
+    * the same corpus and nCells reuse the fitted index instead of
+    * re-clustering — the online analogue of the offline save/load cycle.
     *
     * Callers receive a LEAF-STRIPPED copy (`cachedLeaves = Nil`): the
-    * cache map's own entry keeps the ownership list (so
-    * [[invalidateIndexCaches]] can release the blocks), while a caller
-    * that folds appends onto the shared artifact owns only the leaves
-    * its own batches created — its compact/unpersist cadence cannot
-    * pull the shared base cache out from under sibling queries. */
+    * store's own entry keeps the ownership list (so invalidation can
+    * release the blocks), while a caller that folds appends onto the
+    * shared artifact owns only the leaves its own batches created — its
+    * compact/unpersist cadence cannot pull the shared base cache out from
+    * under sibling queries. */
   def memoizedIvfIndex(emb: DataFrame, idCol: String, vecCol: String,
-                       nCells: Int, cacheKey: String): IvfIndex = {
-    val it = indexCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue.assigned.sparkSession.sparkContext.isStopped) it.remove()
-    }
-    indexCache.computeIfAbsent(
-      (emb.sparkSession, cacheKey, nCells),
-      _ => graft.tools.BuildTimer.time("ivf_flat")(buildIvfIndex(emb, idCol, vecCol, nCells)))
-      .copy(cachedLeaves = Nil)
-  }
+                       nCells: Int, cacheKey: String): IvfIndex =
+    ArtifactStore.get("ivf_flat", emb.sparkSession, cacheKey,
+        Seq(idCol, vecCol, nCells)) {
+      buildIvfIndex(emb, idCol, vecCol, nCells)
+    }.copy(cachedLeaves = Nil)
 
   /** Memoized [[buildIvfIndexHier]] — the [[memoizedIvfIndex]] contract
-    * (same cache, same stopped-session eviction) under a "#hier"-suffixed
-    * key so flat and hierarchical indexes over the same corpus never
-    * collide. */
+    * under its own kind, so flat and hierarchical indexes over the same
+    * corpus never collide. */
   def memoizedIvfIndexHier(emb: DataFrame, idCol: String, vecCol: String,
-                           nCells: Int, cacheKey: String): IvfIndex = {
-    val it = indexCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue.assigned.sparkSession.sparkContext.isStopped) it.remove()
-    }
-    indexCache.computeIfAbsent(
-      (emb.sparkSession, cacheKey + "#hier", nCells),
-      _ => graft.tools.BuildTimer.time("ivf_hier")(
-        buildIvfIndexHier(emb, idCol, vecCol, nCells)))
-      .copy(cachedLeaves = Nil)
-  }
+                           nCells: Int, cacheKey: String): IvfIndex =
+    ArtifactStore.get("ivf_hier", emb.sparkSession, cacheKey,
+        Seq(idCol, vecCol, nCells)) {
+      buildIvfIndexHier(emb, idCol, vecCol, nCells)
+    }.copy(cachedLeaves = Nil)
 
   /** Convenience wrapper = [[memoizedIvfIndex]] + [[probeIvf]].
     * `cacheKey` identifies the corpus (e.g. its directory); when provided,
@@ -1150,54 +1126,12 @@ object SimilaritySearch {
     MipsIndex(if (row.isNullAt(0)) 0.0 else row.getDouble(0))
   }
 
-  /** Per-(session, corpus) memoized [[MipsIndex]] — same keying and
-    * stopped-session eviction as [[memoizedIvfIndex]]. */
-  private val mipsCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), MipsIndex]()
-
+  /** [[MipsIndex]] memoized in [[ArtifactStore]]. */
   def memoizedMipsIndex(emb: DataFrame, vecCol: String,
-                        cacheKey: String): MipsIndex = {
-    val it = mipsCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
+                        cacheKey: String): MipsIndex =
+    ArtifactStore.get("mips", emb.sparkSession, cacheKey, Seq(vecCol)) {
+      buildMipsIndex(emb, vecCol)
     }
-    mipsCache.computeIfAbsent((emb.sparkSession, cacheKey),
-      _ => graft.tools.BuildTimer.time("mips")(buildMipsIndex(emb, vecCol)))
-  }
-
-  /** Evict every memoized IVF, MIPS, and PQ index of `s` whose cacheKey IS
-    * `keyPrefix` or extends it with the documented `"#suffix"` convention
-    * (`dir`, `dir + "#aug"`, ...; IVF assignments are unpersisted) — the
-    * invalidation twin of [[memoizedIvfIndex]]/[[memoizedMipsIndex]].
-    * Matching on the `#` boundary (not a bare string prefix) keeps
-    * invalidating corpus `/data/corp` from also evicting a sibling
-    * `/data/corpus` that merely shares the character prefix. */
-  def invalidateIndexCaches(s: org.apache.spark.sql.SparkSession,
-                            keyPrefix: String): Unit = {
-    def hits(k: String): Boolean = k == keyPrefix || k.startsWith(keyPrefix + "#")
-    val ivfIt = indexCache.entrySet().iterator()
-    while (ivfIt.hasNext) {
-      val e = ivfIt.next()
-      if ((e.getKey._1 eq s) && hits(e.getKey._2)) {
-        e.getValue.unpersist()
-        ivfIt.remove()
-      }
-    }
-    val mipsIt = mipsCache.keySet().iterator()
-    while (mipsIt.hasNext) {
-      val k = mipsIt.next()
-      if ((k._1 eq s) && hits(k._2)) mipsIt.remove()
-    }
-    val pqIt = pqCache.entrySet().iterator()
-    while (pqIt.hasNext) {
-      val e = pqIt.next()
-      if ((e.getKey._1 eq s) && hits(e.getKey._2)) {
-        e.getValue.unpersist()
-        pqIt.remove()
-      }
-    }
-  }
 
   /** Approximate MIPS: the [[mipsAugment]] reduction wired into the LSH
     * pipeline end-to-end. Vectors are augmented to unit norm (corpus rows
@@ -1271,7 +1205,7 @@ object SimilaritySearch {
       m: Int, k: Int, subDim: Int, idCol: String,
       appendsSinceCompaction: Int = 0,
       cachedLeaves: Seq[DataFrame] = Nil,
-      tombstones: Option[DataFrame] = None) {
+      tombstones: Option[DataFrame] = None) extends Releasable {
     /** Unpersist every cached relation this index OWNS — see
       * [[IvfIndex.unpersist]]: `cachedLeaves` is the ownership list
       * (build-seeded base + per-batch append leaves; a union's own
@@ -1606,29 +1540,25 @@ object SimilaritySearch {
 
   /** The combined (cell, n_id, codes) candidate artifact — cell
     * assignments joined to code words on the id ONCE, at build time, and
-    * memoized per index pair (reference identity; stopped-session entries
-    * evicted like every other index cache). The join is corpus-sized on
+    * memoized per index pair in [[ArtifactStore]] (the two frames compare
+    * by reference identity). The join is corpus-sized on
     * both sides, which is exactly why it must not run per probe: the
     * round-12 32× sweep priced the probe-time form at 11.4 s for 10
     * queries, almost all of it this exchange. A production deployment
     * persists this frame as the single bucketed serving artifact;
     * in-session it is one cached join, paid on first probe (or charged to
-    * the build by forcing it there — what the stress harness does). */
-  private val ivfPqCandCache =
-    new java.util.concurrent.ConcurrentHashMap[(DataFrame, DataFrame), DataFrame]()
-
+    * the build by forcing it there — what the stress harness does). Its
+    * key names no corpus, so invalidating a dir does not reach it; an
+    * entry whose index frames were replaced is never read again and ages
+    * out under the per-kind bound. */
   def ivfPqCandidates(ivf: IvfIndex, pq: PqIndex): DataFrame = {
-    val it = ivfPqCandCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue.sparkSession.sparkContext.isStopped) it.remove()
-    }
     // Keyed on the UNDERLYING frames, not the index objects: a `delete`
     // copies the case class but shares `assigned`/`codes`, so a takedown
     // keeps hitting the materialized artifact; tombstones filter ON TOP
     // of it below (the artifact is rebuilt only when the corpus is —
     // at append/compact, which replace the frames).
-    val base = ivfPqCandCache.computeIfAbsent((ivf.assigned, pq.codes), { _ =>
+    val base = ArtifactStore.get("ivf_pq_cand", ivf.assigned.sparkSession, "",
+        Seq(ivf.assigned, pq.codes)) {
       // localCheckpoint, not cache: BOTH materializes (probes read
       // computed blocks) AND truncates the lineage. The assignment plan
       // carries the nCells-struct centroid literal — inside a many-branch
@@ -1639,7 +1569,7 @@ object SimilaritySearch {
         .select(col(ivf.idCol).as("n_id"), col("cell"))
         .join(pq.codes.select(col(pq.idCol).as("n_id"), col("codes")), Seq("n_id"))
         .localCheckpoint()
-    })
+    }
     val tombs = (ivf.tombstones.toSeq ++ pq.tombstones.toSeq)
       .map(t => t.select(t.columns.head).toDF("n_id"))
     if (tombs.isEmpty) base
@@ -1647,25 +1577,14 @@ object SimilaritySearch {
       Seq("n_id"), "left_anti")
   }
 
-  /** Per-(session, corpus) memoized [[PqIndex]] — same keying and
-    * stopped-session eviction as [[memoizedIvfIndex]]. */
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String, Int, Int), PqIndex]()
-
+  /** [[PqIndex]] memoized in [[ArtifactStore]], handed out leaf-stripped
+    * like [[memoizedIvfIndex]]. */
   def memoizedPqIndex(emb: DataFrame, idCol: String, vecCol: String,
-                      m: Int, k: Int, cacheKey: String): PqIndex = {
-    val it = pqCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getValue.codes.sparkSession.sparkContext.isStopped) it.remove()
-    }
-    pqCache.computeIfAbsent(
-      (emb.sparkSession, cacheKey, m, k),
-      _ => graft.tools.BuildTimer.time("pq")(
-        buildPqIndex(emb, idCol, vecCol, m, k)))
-      .copy(cachedLeaves = Nil) // the memoizedIvfIndex ownership contract
-  }
+                      m: Int, k: Int, cacheKey: String): PqIndex =
+    ArtifactStore.get("pq", emb.sparkSession, cacheKey,
+        Seq(idCol, vecCol, m, k)) {
+      buildPqIndex(emb, idCol, vecCol, m, k)
+    }.copy(cachedLeaves = Nil)
 
   /** Shared per-query ranking tail: top-k by (score desc, n_id) through
     * the custom [[graft.plans.GroupTopK]] operator — map-side bounded

@@ -131,22 +131,15 @@ object TextAnalysis {
     out.result()
   }
 
-  /** Per-(session, cacheKey) memoized [[bpeTrain]] — t25 reports the
-    * rules, t26 tokenizes with them; the fit runs once per session+dir. */
-  private val bpeCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (org.apache.spark.sql.SparkSession, String), Seq[BpeMerge]]()
-
+  /** [[bpeTrain]] memoized in [[graft.artifacts.ArtifactStore]] — t25
+    * reports the rules, t26 tokenizes with them; the fit runs once per
+    * corpus and (topWords, merges). */
   def memoizedBpeMerges(docs: DataFrame, textCol: String, topWords: Int,
-                        merges: Int, cacheKey: String): Seq[BpeMerge] = {
-    val it = bpeCache.keySet().iterator()
-    while (it.hasNext) {
-      if (it.next()._1.sparkContext.isStopped) it.remove()
+                        merges: Int, cacheKey: String): Seq[BpeMerge] =
+    graft.artifacts.ArtifactStore.get("bpe_merges", docs.sparkSession, cacheKey,
+        Seq(textCol, topWords, merges)) {
+      bpeTrain(docs, textCol, topWords, merges)
     }
-    bpeCache.computeIfAbsent((docs.sparkSession, cacheKey),
-      _ => graft.tools.BuildTimer.time("bpe_merges")(
-        bpeTrain(docs, textCol, topWords, merges)))
-  }
 
   /** Tokenize every document with learned merges: words → comma form →
     * the literal replace chain (one codegen'd expression, scan-side) →
@@ -781,7 +774,9 @@ object TextAnalysis {
     * [[graft.operators.Sampling.DsirModel]] — geometry rides in the
     * artifact, parquet save/load for the offline cycle. */
   final case class QualityClassifier(weights: DataFrame, bias: Double,
-                                     buckets: Int) {
+                                     buckets: Int) extends graft.artifacts.Releasable {
+    def unpersist(): Unit = { weights.unpersist(); () }
+
     def save(dir: String): Unit = {
       val spark = weights.sparkSession
       import spark.implicits._

@@ -35,8 +35,11 @@ object PipelineQueries {
       s: SparkSession, dir: String): (DataFrame, DataFrame) =
     PipelineShared.dupPairsAndClusters(s, dir)
 
+  /** Drop every memoized artifact of `s` keyed `dir` or `dir#…`, of every
+    * kind, for a long-lived session that re-ingests a corpus directory in
+    * place ([[graft.artifacts.ArtifactStore.invalidate]]). */
   def invalidateDupCache(s: SparkSession, dir: String): Unit =
-    PipelineShared.invalidateDupCache(s, dir)
+    graft.artifacts.ArtifactStore.invalidate(s, dir)
 
   private[graft] def corpusBuild(s: SparkSession, dir: String): DataFrame =
     PipelineShared.corpusBuild(s, dir)

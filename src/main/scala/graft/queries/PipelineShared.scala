@@ -4,14 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.artifacts.ArtifactStore
 import graft.operators.{Dedup, Packing, Sampling, SimilaritySearch, TextAnalysis => TA}
 import graft.sources.Sources
 
 /** Shared machinery of the LLM-training-data pipeline registries
   * ([[DedupQueries]] / [[SimilarityQueries]] / [[TextQueries]] /
-  * [[SamplingQueries]] / [[MultimodalQueries]]): the per-(session, dir)
-  * memoized artifacts (pair/cluster frames, survivors chain, DSIR model,
-  * quality classifier, line/gram/media indexes), the composed corpus-build
+  * [[SamplingQueries]] / [[MultimodalQueries]]): the builders of the
+  * per-(session, dir) artifacts memoized in [[ArtifactStore]] (pair/cluster
+  * frames, survivors chain, DSIR model, quality classifier, bloom, kNN,
+  * line-set and media indexes), the composed corpus-build
   * stages, and the SQL fragments the family oracles share. Since round 11
   * every query in the inventory carries a DuckDB oracle — the sketch/ANN
   * ops through banded claims (recall floors, planted-twin membership,
@@ -36,127 +38,68 @@ private[queries] object PipelineShared {
     * (557) — the bench measures the skew-safe production form. */
   private[graft] val D03BucketCap = 256
 
-  /** Per-(session, dir) memoized d03 pair set + connected components —
-    * the [[SimilaritySearch.memoizedIvfIndex]] pattern applied to the
-    * dedup family. Five reports share this frame (d03/d07/d09/d10/d11/d12
-    * all start from the same pairs, and four of them from the same
+  /** The d03 pair set + connected components, memoized in
+    * [[ArtifactStore]]. Five reports share this frame (d03/d07/d09/d10/
+    * d11/d12 all start from the same pairs, and four of them from the same
     * clustering); at 100 TB nobody re-clusters the corpus per report, so
     * the engine must not either: detect + cluster ONCE, read many.
     *
     * Both frames are localCheckpoint-materialized (connectedComponents
     * already returns a checkpointed frame; the pairs are checkpointed
     * here), so every downstream report reads computed blocks instead of
-    * re-running the quadratic merge-walk + iterative clustering. Keys hold
-    * the session object itself (identity semantics); stopped-session
-    * entries are evicted on access because their checkpoint blocks died
-    * with the context. */
-  private[queries] val componentsCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (DataFrame, DataFrame)]()
-
+    * re-running the quadratic merge-walk + iterative clustering. */
   private[graft] def dupPairsAndClusters(
-      s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val it = componentsCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1.sparkContext.isStopped) it.remove()
-    }
-    componentsCache.computeIfAbsent((s, dir), { key =>
-      graft.tools.BuildTimer.time("dup_pairs_clusters") {
-      val pairs = Dedup.ngramJaccardPairs(docs(key._1, key._2),
+      s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    ArtifactStore.get("dup_pairs_clusters", s, dir) {
+      val pairs = Dedup.ngramJaccardPairs(docs(s, dir),
           "doc_id", "text", "n_chars", threshold = 0.2,
           maxBucketSize = Some(D03BucketCap))
         .localCheckpoint()
       val clusters = Dedup.connectedComponents(pairs, "a_id", "b_id")
       (pairs, clusters)
-      }
-    })
-  }
-
-  /** Per-(session, dir) memoized dedup-survivors frame — the s1→s2→split
-    * prefix that BOTH composed corpus builds (p10 and p13) start from:
-    * quality gate, near-dup cluster drop, token count, split stamp, one
-    * localCheckpoint. Round 8 built this twice per bench session (once per
-    * composed build, byte-identical blocks both times); at 100 TB the
-    * deduped corpus is THE artifact a pipeline persists between its dedup
-    * and assembly phases, and nobody materializes it once per downstream
-    * consumer. Built inside [[graft.tools.BuildTimer]] so the bench prices
-    * it in `warmup_build` — sharing must show as an explicit one-time
-    * cost, never a silent per-query win. */
-  private[queries] val survivorsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private[graft] def memoizedDedupSurvivors(s: SparkSession, dir: String): DataFrame = {
-    val it = survivorsCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1.sparkContext.isStopped) it.remove()
     }
-    survivorsCache.computeIfAbsent((s, dir), { key =>
-      // The cluster build times itself (nested BuildTimer spans would
-      // double-count); only the survivors checkpoint is timed here.
-      val clusters = dupPairsAndClusters(key._1, key._2)._2
-      graft.tools.BuildTimer.time("dedup_survivors") {
-        dedupSurvivorsWithSplit(docs(key._1, key._2), clusters)
-      }
-    })
-  }
 
-  /** Per-(session, dir) memoized decontaminated + quality-scored
+  /** The memoized ([[ArtifactStore]]) dedup-survivors frame — the
+    * s1→s2→split prefix that BOTH composed corpus builds (p10 and p13)
+    * start from: quality gate, near-dup cluster drop, token count, split
+    * stamp, one localCheckpoint. Round 8 built this twice per bench session
+    * (once per composed build, byte-identical blocks both times); at 100 TB
+    * the deduped corpus is THE artifact a pipeline persists between its
+    * dedup and assembly phases, and nobody materializes it once per
+    * downstream consumer. The bench prices the build in `warmup_build` —
+    * sharing must show as an explicit one-time cost, never a silent
+    * per-query win. */
+  private[graft] def memoizedDedupSurvivors(s: SparkSession, dir: String): DataFrame =
+    ArtifactStore.get("dedup_survivors", s, dir) {
+      dedupSurvivorsWithSplit(docs(s, dir), dupPairsAndClusters(s, dir)._2)
+    }
+
+  /** The memoized ([[ArtifactStore]]) decontaminated + quality-scored
     * survivors — the [[memoizedDedupSurvivors]] pattern one stage later:
     * the p03/p11 anti-joins and the quality scan are IDENTICAL in the v2
     * and v3 composed builds (they differ only from the mixture on), so
     * the engine decontaminates once and both builds read the artifact —
     * at 100 TB the decontaminated corpus is the persisted inter-phase
-    * handoff, not a per-build re-derivation. Priced in warmup_build. */
-  private[queries] val decontamCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private[graft] def memoizedDecontamSurvivors(s: SparkSession, dir: String): DataFrame = {
-    val it = decontamCache.entrySet().iterator()
-    while (it.hasNext) {
-      if (it.next().getKey._1.sparkContext.isStopped) it.remove()
+    * handoff, not a per-build re-derivation. */
+  private[graft] def memoizedDecontamSurvivors(s: SparkSession, dir: String): DataFrame =
+    ArtifactStore.get("decontam_scored", s, dir) {
+      decontaminatedScoredSurvivors(memoizedDedupSurvivors(s, dir)).localCheckpoint()
     }
-    decontamCache.computeIfAbsent((s, dir), { key =>
-      // The survivors build times itself; only the decontamination +
-      // scoring checkpoint is timed here (the nested-span convention).
-      val surv = memoizedDedupSurvivors(key._1, key._2)
-      graft.tools.BuildTimer.time("decontam_scored") {
-        decontaminatedScoredSurvivors(surv).localCheckpoint()
-      }
-    })
-  }
 
-  private[queries] val dsirModelCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), graft.operators.Sampling.DsirModel]()
-
-  /** The p17 DSIR weight table, memoized per (session, dir) like the
-    * other standing artifacts (it is the build half of the build/apply
-    * split — two corpus-wide gram passes that the scoring probe should
-    * pay once per corpus, not once per call). Cached + materialized so
-    * repeat scores are a broadcast probe only; priced in warmup_build. */
+  /** The p17 DSIR weight table, memoized in [[ArtifactStore]] (it is the
+    * build half of the build/apply split — two corpus-wide gram passes
+    * that the scoring probe should pay once per corpus, not once per
+    * call). Cached + materialized so repeat scores are a broadcast probe
+    * only. */
   private[queries] def memoizedDsirModel(s: SparkSession,
-                                dir: String): graft.operators.Sampling.DsirModel = {
-    val it = dsirModelCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1.sparkContext.isStopped) it.remove()
+                                dir: String): graft.operators.Sampling.DsirModel =
+    ArtifactStore.get("dsir_model", s, dir) {
+      val m = graft.operators.Sampling.dsirModelTable(
+        docs(s, dir), "text",
+        isTarget = col("source") === "src0", buckets = 1024)
+      m.weights.cache().count()
+      m
     }
-    dsirModelCache.computeIfAbsent((s, dir), { key =>
-      graft.tools.BuildTimer.time("dsir_model") {
-        val m = graft.operators.Sampling.dsirModelTable(
-          docs(key._1, key._2), "text",
-          isTarget = col("source") === "src0", buckets = 1024)
-        m.weights.cache().count()
-        m
-      }
-    })
-  }
-
-  private[queries] val qualityClfCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), graft.operators.TextAnalysis.QualityClassifier]()
 
   /** t17's planted-seed vocabulary (the QualityClassifierSpec
     * construction over the real corpus): 6 marker words absent from the
@@ -181,62 +124,26 @@ private[queries] object PipelineShared {
         " ").as("text"))
   }
 
-  /** The t17 trained classifier, memoized per (session, dir) — the
-    * [[memoizedDsirModel]] convention (train once, score many; the
-    * bounded local fit priced in warmup_build). Trained on a BALANCED
+  /** The t17 trained classifier, memoized in [[ArtifactStore]] — the
+    * [[memoizedDsirModel]] convention (train once, score many). Trained
+    * on a BALANCED
     * fit set (40 planted seeds vs the first 40 raw docs): with the
     * 40-vs-500 imbalance the logistic bias drags every score under 0.15
     * and the 0.5 decision boundary is meaningless; balanced, the planted
     * vocabulary separates at 0.5 with wide margins (measured seed min
     * 0.628 / raw max 0.403 at every SF). */
   private[queries] def memoizedQualityClf(s: SparkSession, dir: String)
-      : graft.operators.TextAnalysis.QualityClassifier = {
-    val it = qualityClfCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1.sparkContext.isStopped) it.remove()
+      : graft.operators.TextAnalysis.QualityClassifier =
+    ArtifactStore.get("quality_clf", s, dir) {
+      val fitInput = docs(s, dir).filter(col("doc_id") < 40)
+        .select(col("doc_id"), col("text"))
+        .unionByName(t17PlantedSeeds(s, dir))
+      val clf = graft.operators.TextAnalysis.trainQualityClassifier(
+        fitInput, "doc_id", "text",
+        isSeed = col("doc_id") >= 400000L, buckets = 1024)
+      clf.weights.cache().count()
+      clf
     }
-    qualityClfCache.computeIfAbsent((s, dir), { key =>
-      graft.tools.BuildTimer.time("quality_clf") {
-        val fitInput = docs(key._1, key._2).filter(col("doc_id") < 40)
-          .select(col("doc_id"), col("text"))
-          .unionByName(t17PlantedSeeds(key._1, key._2))
-        val clf = graft.operators.TextAnalysis.trainQualityClassifier(
-          fitInput, "doc_id", "text",
-          isSeed = col("doc_id") >= 400000L, buckets = 1024)
-        clf.weights.cache().count()
-        clf
-      }
-    })
-  }
-
-  /** Drop EVERY memoized artifact derived from one (session, dir) — the
-    * pair/components frame here plus the shared dedup-survivors frame and
-    * the MinHash, IVF, and MIPS indexes (whose cacheKeys are all
-    * `dir`-rooted: `dir`, `dir + "#aug"`, `dir + "#mhidx"`) — for a
-    * long-lived session that re-ingests a corpus directory in place. The
-    * checkpoint blocks themselves are reclaimed by the ContextCleaner once
-    * the dropped frames become unreachable (localCheckpoint bypasses the
-    * CacheManager, so there is nothing to unpersist explicitly); the index
-    * caches unpersist their own cached frames on eviction. */
-  def invalidateDupCache(s: SparkSession, dir: String): Unit = {
-    componentsCache.remove((s, dir))
-    survivorsCache.remove((s, dir))
-    decontamCache.remove((s, dir))
-    Option(dsirModelCache.remove((s, dir))).foreach(_.unpersist())
-    Option(qualityClfCache.remove((s, dir))).foreach(_.weights.unpersist())
-    Option(lineSetIndexCache.remove((s, dir))).foreach(_.unpersist())
-    evalGramsCache.remove((s, dir))
-    bloomIndexCache.remove((s, dir))
-    shardedBloomCache.remove((s, dir))
-    knnGraphCache.remove((s, dir))
-    mediaPairsCache.remove((s, dir))
-    Dedup.invalidateMinHashIndexCache(s, dir)
-    Dedup.invalidateGramIndexCache(s, dir)
-    Dedup.invalidateLshVecIndexCache(s, dir)
-    SimilaritySearch.invalidateIndexCaches(s, dir)
-    ()
-  }
 
   /** Round 10: the ExactSubstr family's APPLY step. */
   /** Exactly 16 words — one full line at the t16 window width, so the
@@ -275,161 +182,87 @@ private[queries] object PipelineShared {
   private[queries] val CodeTokenStream =
     "for ( i = 0 ; i < n ; i ++ ) { acc += arr [ i ] ; } return acc ;"
 
-  /** Per-(session, dir) memoized eval-side GRAM TABLE (eval_id, gram)
-    * over 13-grams of the non-train splits — the reference-set artifact
-    * BOTH bloom ops and their exact twins read (in production it is
-    * derived once from the curated benchmark suite and persisted beside
-    * the filter). Round 11 re-ran the eval-side scan + gram HOF +
-    * explode inside EVERY p21/p22 execution; checkpointing it here turns
-    * those runs into probes of computed blocks. Priced in warmup_build
-    * (`eval_grams`). */
-  private[queries] val evalGramsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private[queries] def memoizedEvalGrams(s: SparkSession, dir: String): DataFrame = {
-    val it = evalGramsCache.entrySet().iterator()
-    while (it.hasNext) {
-      if (it.next().getKey._1.sparkContext.isStopped) it.remove()
+  /** The memoized ([[ArtifactStore]]) eval-side GRAM TABLE (eval_id,
+    * gram) over 13-grams of the non-train splits — the reference-set
+    * artifact BOTH bloom ops and their exact twins read (in production it
+    * is derived once from the curated benchmark suite and persisted beside
+    * the filter). Round 11 re-ran the eval-side scan + gram HOF + explode
+    * inside EVERY p21/p22 execution; checkpointing it here turns those
+    * runs into probes of computed blocks. */
+  private[queries] def memoizedEvalGrams(s: SparkSession, dir: String): DataFrame =
+    ArtifactStore.get("eval_grams", s, dir) {
+      val withSplit = docs(s, dir).withColumn("split",
+        Sampling.assignSplit(col("doc_id")))
+      // spread: the gram HOF over the eval slice would otherwise run on
+      // the compact scan's single partition (the d03 scan-layout lesson)
+      Sampling.evalGramTable(
+        Dedup.spreadToParallelism(
+          withSplit.filter(col("split") =!= "train")),
+        "doc_id", "text", n = 13)
+        .localCheckpoint()
     }
-    evalGramsCache.computeIfAbsent((s, dir), { key =>
-      graft.tools.BuildTimer.time("eval_grams") {
-        val withSplit = docs(key._1, key._2).withColumn("split",
-          Sampling.assignSplit(col("doc_id")))
-        // spread: the gram HOF over the eval slice would otherwise run on
-        // the compact scan's single partition (the d03 scan-layout lesson)
-        Sampling.evalGramTable(
-          Dedup.spreadToParallelism(
-            withSplit.filter(col("split") =!= "train")),
-          "doc_id", "text", n = 13)
-          .localCheckpoint()
-      }
-    })
-  }
 
-  /** Per-(session, dir) memoized eval-side [[Sampling.BloomIndex]] over
-    * 13-grams of the non-train splits — the p21 probe artifact; priced
-    * in warmup_build. */
-  private[queries] val bloomIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), Sampling.BloomIndex]()
-
-  private[queries] def memoizedBloomIndex(s: SparkSession, dir: String): Sampling.BloomIndex = {
-    val it = bloomIndexCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1.sparkContext.isStopped) it.remove()
+  /** The memoized ([[ArtifactStore]]) eval-side [[Sampling.BloomIndex]]
+    * over 13-grams of the non-train splits — the p21 probe artifact. */
+  private[queries] def memoizedBloomIndex(s: SparkSession, dir: String): Sampling.BloomIndex =
+    ArtifactStore.get("bloom_index", s, dir) {
+      Sampling.buildBloomIndex(memoizedEvalGrams(s, dir), "gram")
     }
-    bloomIndexCache.computeIfAbsent((s, dir), { key =>
-      val evalGrams = memoizedEvalGrams(key._1, key._2)
-      graft.tools.BuildTimer.time("bloom_index") {
-        Sampling.buildBloomIndex(evalGrams, "gram")
-      }
-    })
-  }
 
-  /** Per-(session, dir) memoized 2-shard [[Sampling.ShardedBloomIndex]]
+  /** The memoized ([[ArtifactStore]]) 2-shard [[Sampling.ShardedBloomIndex]]
     * over the same eval gram table as [[memoizedBloomIndex]] — p23's
     * probe artifact (the past-2³⁰-bits lifecycle exercised end-to-end at
     * bench scale: same grams, same k, the shard draw the only
-    * difference). Priced in warmup_build. */
-  private[queries] val shardedBloomCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), Sampling.ShardedBloomIndex]()
-
+    * difference). */
   private[queries] def memoizedShardedBloom(s: SparkSession,
-                                            dir: String): Sampling.ShardedBloomIndex = {
-    val it = shardedBloomCache.entrySet().iterator()
-    while (it.hasNext) {
-      if (it.next().getKey._1.sparkContext.isStopped) it.remove()
+                                            dir: String): Sampling.ShardedBloomIndex =
+    ArtifactStore.get("bloom_sharded", s, dir) {
+      Sampling.buildShardedBloomIndex(memoizedEvalGrams(s, dir), "gram", nShards = 2)
     }
-    shardedBloomCache.computeIfAbsent((s, dir), { key =>
-      val evalGrams = memoizedEvalGrams(key._1, key._2)
-      graft.tools.BuildTimer.time("bloom_sharded") {
-        Sampling.buildShardedBloomIndex(evalGrams, "gram", nShards = 2)
-      }
-    })
-  }
 
-  /** Per-(session, dir) memoized [[SimilaritySearch.KnnGraph]] over the
-    * s05-convention twinned embedding corpus (byte-identical copies of
+  /** The memoized ([[ArtifactStore]]) [[SimilaritySearch.KnnGraph]] over
+    * the s05-convention twinned embedding corpus (byte-identical copies of
     * the first 10 vectors under ids +100000) — s14's product artifact;
-    * edges checkpoint inside buildKnnGraph, build priced in
-    * warmup_build. */
-  private[queries] val knnGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), SimilaritySearch.KnnGraph]()
-
+    * edges checkpoint inside buildKnnGraph. */
   private[queries] def memoizedKnnGraph(s: SparkSession,
-                                        dir: String): SimilaritySearch.KnnGraph = {
-    val it = knnGraphCache.entrySet().iterator()
-    while (it.hasNext) {
-      if (it.next().getKey._1.sparkContext.isStopped) it.remove()
-    }
-    knnGraphCache.computeIfAbsent((s, dir), { key =>
-      val base = emb(key._1, key._2).select(col("vec_id"), col("embedding"))
+                                        dir: String): SimilaritySearch.KnnGraph =
+    ArtifactStore.get("knn_graph", s, dir) {
+      val base = emb(s, dir).select(col("vec_id"), col("embedding"))
       val aug = base.unionByName(base.filter(col("vec_id") < 10)
         .select((col("vec_id") + 100000L).as("vec_id"), col("embedding")))
-      graft.tools.BuildTimer.time("knn_graph") {
-        SimilaritySearch.buildKnnGraph(aug, "vec_id", "embedding", k = 3)
-      }
-    })
-  }
-
-  /** Per-(session, dir) memoized corpus [[Dedup.LineSetIndex]] — the
-    * [[Dedup.memoizedGramIndex]] convention for the d23 probe: build the
-    * corpus line-hash set once per directory, probe every batch; priced
-    * in warmup_build. */
-  private[queries] val lineSetIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), Dedup.LineSetIndex]()
-
-  private[queries] def memoizedLineSetIndex(s: SparkSession, dir: String,
-                                   corpus: DataFrame): Dedup.LineSetIndex = {
-    val it = lineSetIndexCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1.sparkContext.isStopped) it.remove()
+      SimilaritySearch.buildKnnGraph(aug, "vec_id", "embedding", k = 3)
     }
-    lineSetIndexCache.computeIfAbsent((s, dir), { _ =>
-      graft.tools.BuildTimer.time("line_set_index") {
-        Dedup.buildLineSetIndex(corpus, "doc_id", "text", lineTokens = 16)
-      }
-    })
-  }
+
+  /** The memoized ([[ArtifactStore]]) corpus [[Dedup.LineSetIndex]] for
+    * the d23 probe: build the corpus line-hash set once per directory,
+    * probe every batch. */
+  private[queries] def memoizedLineSetIndex(s: SparkSession, dir: String,
+                                   corpus: DataFrame): Dedup.LineSetIndex =
+    ArtifactStore.get("line_set_index", s, dir) {
+      Dedup.buildLineSetIndex(corpus, "doc_id", "text", lineTokens = 16)
+    }
 
   /** The m05 pair build (planted re-encodes + dHash fingerprints +
     * capped frame-hash join) + its connected components, shared by m05
     * (which emits the pairs) and m07 (which applies the clustering) —
-    * [[dupPairsAndClusters]] at the media layer: detect + cluster ONCE
-    * per (session, dir), read many; both frames checkpoint-materialized,
-    * the build priced in warmup_build. */
-  private[queries] val mediaPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (DataFrame, DataFrame)]()
-
+    * [[dupPairsAndClusters]] at the media layer: detect + cluster ONCE,
+    * read many ([[ArtifactStore]]); both frames checkpoint-materialized. */
   private[queries] def mediaPairsAndClusters(
-      s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val it = mediaPairsCache.entrySet().iterator()
-    while (it.hasNext) {
-      if (it.next().getKey._1.sparkContext.isStopped) it.remove()
+      s: SparkSession, dir: String): (DataFrame, DataFrame) =
+    ArtifactStore.get("media_pairs", s, dir) {
+      val media = graft.multimodal.Multimodal.asMediaTable(docs(s, dir))
+      val planted = graft.multimodal.Multimodal.reencodeStub(
+        media.filter(col("doc_id") < 40), shift = 1, idOffset = 100000L)
+      val frames = graft.multimodal.Multimodal
+        .sampleFrames(media.unionByName(planted), frameBytes = 64, stride = 4)
+        .toDF()
+        .select(col("doc_id"),
+          graft.functions.DHash64.dhash64(col("frame")).as("fp"))
+      val pairs = graft.multimodal.Multimodal
+        .frameOverlap(frames, "doc_id", "fp").localCheckpoint()
+      val clusters = Dedup.connectedComponents(pairs, "a_id", "b_id")
+      (pairs, clusters)
     }
-    mediaPairsCache.computeIfAbsent((s, dir), { key =>
-      graft.tools.BuildTimer.time("media_pairs") {
-        val media = graft.multimodal.Multimodal.asMediaTable(docs(key._1, key._2))
-        val planted = graft.multimodal.Multimodal.reencodeStub(
-          media.filter(col("doc_id") < 40), shift = 1, idOffset = 100000L)
-        val frames = graft.multimodal.Multimodal
-          .sampleFrames(media.unionByName(planted), frameBytes = 64, stride = 4)
-          .toDF()
-          .select(col("doc_id"),
-            graft.functions.DHash64.dhash64(col("frame")).as("fp"))
-        val pairs = graft.multimodal.Multimodal
-          .frameOverlap(frames, "doc_id", "fp").localCheckpoint()
-        val clusters = Dedup.connectedComponents(pairs, "a_id", "b_id")
-        (pairs, clusters)
-      }
-    })
-  }
 
   /** The end-to-end corpus build — the product story the 50 isolated
     * pipeline ops exist for, composed in the order a training-data team

@@ -15,16 +15,24 @@ import scala.jdk.CollectionConverters._
   * BenchFormatSpec holds the committed total under
   * [[graft.Bench.WarmupBudgetSeconds]].
   *
-  * Eagerness caveat: each memoized builder wraps only its EAGER work
-  * (KMeans fit, checkpoint materialization, collect-based scalars); a
-  * builder's lazily-cached frames fill on their first downstream action,
-  * which lands inside the warm-up run of the first probing query and is
+  * Eagerness caveat: a build times only its EAGER work (KMeans fit,
+  * checkpoint materialization, collect-based scalars); a build's
+  * lazily-cached frames fill on their first downstream action, which
+  * lands inside the warm-up run of the first probing query and is
   * excluded from the timed medians either way.
+  *
+  * Spans are EXCLUSIVE: a span opened inside another on the same thread
+  * (a build that reads another artifact, built on first use) is charged
+  * to its own label and subtracted from its parent's, so the total counts
+  * every nanosecond once.
   */
 object BuildTimer {
   private val acc = new java.util.concurrent.atomic.AtomicLong(0L)
   private val byLabel =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
+  /** Nanoseconds spent in spans nested inside the innermost open span of
+    * this thread. */
+  private val nested = ThreadLocal.withInitial[Array[Long]](() => Array(0L))
 
   /** Time one artifact build under `label`. An artifact built more than
     * once in a JVM (distinct cache keys for the same family — e.g. the
@@ -32,12 +40,17 @@ object BuildTimer {
     * breakdown answers "which FAMILY is the warm-up spending on", not
     * "which key". */
   def time[T](label: String)(f: => T): T = {
+    val cell = nested.get()
+    val outer = cell(0)
+    cell(0) = 0L
     val t0 = System.nanoTime()
     try f finally {
       val dt = System.nanoTime() - t0
-      acc.addAndGet(dt)
+      val self = dt - cell(0)
+      cell(0) = outer + dt
+      acc.addAndGet(self)
       byLabel.computeIfAbsent(label,
-        _ => new java.util.concurrent.atomic.AtomicLong(0L)).addAndGet(dt)
+        _ => new java.util.concurrent.atomic.AtomicLong(0L)).addAndGet(self)
       ()
     }
   }

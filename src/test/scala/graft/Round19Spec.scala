@@ -123,29 +123,6 @@ class Round19Spec extends SparkSpecBase {
       .sameElements(viaExpr.collect().map(_.toString).sorted))
   }
 
-  // ---- media artifact caches are LRU-bounded --------------------------
-
-  test("the media artifact cache evicts least-recently-used dirs past the " +
-    "bound and keeps hot entries") {
-    val c = new Multimodal.ArtifactCache[java.lang.Integer]
-    val max = Multimodal.MaxCachedArtifactDirs
-    var builds = 0
-    def get(i: Int): Int = c.get((spark, s"dir$i")) { builds += 1; Integer.valueOf(i) }.intValue
-    (0 until max).foreach(get)
-    assert(builds == max && c.size == max)
-    // hot key 0 re-read (LRU refresh), then one past the bound: the
-    // eldest UNTOUCHED key (1) leaves, 0 stays
-    assert(get(0) == 0 && builds == max)
-    get(max)
-    assert(c.size == max, "the cache must not grow past the bound")
-    assert(c.contains((spark, "dir0")), "recently-probed entry survives")
-    assert(!c.contains((spark, "dir1")), "least-recently-used entry evicted")
-    // re-reading a surviving key is still a cache hit
-    val before = builds
-    get(0); get(max)
-    assert(builds == before)
-  }
-
   // ---- AdmissionPipeline stream-stage cost guard ----------------------
 
   test("a streaming stage whose decide re-reads its survivors is rejected " +

@@ -74,7 +74,7 @@ class Round6Spec extends SparkSpecBase {
     val keep = Dedup.memoizedMinHashIndex(docs, "doc_id", "sh", "round6://other")
     PipelineQueries.invalidateDupCache(spark, "round6://invalidate-test")
     assert(Dedup.memoizedMinHashIndex(docs, "doc_id", "sh", "round6://other") eq keep)
-    Dedup.invalidateMinHashIndexCache(spark, "round6://other")
+    PipelineQueries.invalidateDupCache(spark, "round6://other")
   }
 
   // ---- MinHashIndex append lifecycle -------------------------------------

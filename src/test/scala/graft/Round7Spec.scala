@@ -111,25 +111,25 @@ class Round7Spec extends SparkSpecBase {
     val mhCorp = Dedup.memoizedMinHashIndex(docs, "doc_id", "sh", "r7://corp")
     val mhSib = Dedup.memoizedMinHashIndex(docs, "doc_id", "sh", "r7://corpus")
     val mhSub = Dedup.memoizedMinHashIndex(docs, "doc_id", "sh", "r7://corp#mhidx")
-    Dedup.invalidateMinHashIndexCache(spark, "r7://corp")
+    PipelineQueries.invalidateDupCache(spark, "r7://corp")
     // Exact key + "#"-suffixed keys evicted; the sibling corpus survives.
     assert(!(Dedup.memoizedMinHashIndex(docs, "doc_id", "sh", "r7://corp") eq mhCorp))
     assert(Dedup.memoizedMinHashIndex(docs, "doc_id", "sh", "r7://corpus") eq mhSib)
     assert(!(Dedup.memoizedMinHashIndex(docs, "doc_id", "sh", "r7://corp#mhidx") eq mhSub))
-    Dedup.invalidateMinHashIndexCache(spark, "r7://corp")
-    Dedup.invalidateMinHashIndexCache(spark, "r7://corpus")
+    PipelineQueries.invalidateDupCache(spark, "r7://corp")
+    PipelineQueries.invalidateDupCache(spark, "r7://corpus")
 
     val emb = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))).toDF("vec_id", "v")
     val ivfCorp = SimilaritySearch.memoizedIvfIndex(emb, "vec_id", "v", 2, "r7i://corp")
     val ivfSib = SimilaritySearch.memoizedIvfIndex(emb, "vec_id", "v", 2, "r7i://corpus")
-    SimilaritySearch.invalidateIndexCaches(spark, "r7i://corp")
+    PipelineQueries.invalidateDupCache(spark, "r7i://corp")
     // the memoized getter hands out leaf-stripped COPIES (r18 ownership
     // contract), so instance identity lives on the shared `assigned`
     // frame, not the case-class wrapper
     assert(!(SimilaritySearch.memoizedIvfIndex(emb, "vec_id", "v", 2, "r7i://corp").assigned eq ivfCorp.assigned))
     assert(SimilaritySearch.memoizedIvfIndex(emb, "vec_id", "v", 2, "r7i://corpus").assigned eq ivfSib.assigned)
-    SimilaritySearch.invalidateIndexCaches(spark, "r7i://corp")
-    SimilaritySearch.invalidateIndexCaches(spark, "r7i://corpus")
+    PipelineQueries.invalidateDupCache(spark, "r7i://corp")
+    PipelineQueries.invalidateDupCache(spark, "r7i://corpus")
   }
 
   // ---- q46: the salt actually spreads the hot key ------------------------
