@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
-import graft.artifacts.{ArtifactStore, Releasable}
+import graft.artifacts.{ArtifactStore, Persisted, Releasable, Tombstones}
 import graft.functions.CosineSimilarity.cosineSim
 import graft.functions.SimHash64
 import graft.plans.PreparedPlan
@@ -790,27 +790,17 @@ object Dedup {
                                 appendsSinceCompaction: Int = 0,
                                 tombstones: Option[DataFrame] = None) extends Releasable {
     /** Band/signature tables with tombstoned ids filtered OUT — the view
-      * every probe reads ([[deltaNearDupsIndexed]]). Deletion lists are
-      * takedown-sized by contract, so the anti-join broadcasts and is a
-      * map-side filter over the index scan. */
-    def liveBands: DataFrame = antiTombstoned(bands)
-    def liveSignatures: DataFrame = antiTombstoned(signatures)
-    private def antiTombstoned(df: DataFrame): DataFrame = tombstones match {
-      case None => df
-      case Some(t) =>
-        df.join(broadcast(t.select(col(idCol)).distinct()),
-          Seq(idCol), "left_anti")
-    }
+      * every probe reads ([[deltaNearDupsIndexed]]). */
+    def liveBands: DataFrame = Tombstones.live(bands, idCol, tombstones)
+    def liveSignatures: DataFrame = Tombstones.live(signatures, idCol, tombstones)
 
     /** Tombstone `ids` (any frame carrying `idCol`): O(|ids|) — probes
       * exclude the docs immediately; [[save]]/[[compact]] drop their
       * rows physically (tombstone-at-probe, drop-at-compact: the
       * takedown verb — opt-outs, decontamination-after-the-fact —
       * between full rebuilds). Unknown ids are harmless. */
-    def delete(ids: DataFrame): MinHashIndex = {
-      val t = ids.select(col(idCol))
-      copy(tombstones = Some(tombstones.fold(t)(_.unionByName(t))))
-    }
+    def delete(ids: DataFrame): MinHashIndex =
+      copy(tombstones = Tombstones.add(tombstones, ids, idCol))
     /** Releases every cached block this index transitively owns: the top
       * frames AND the cached constituents accumulated by [[append]] —
       * unpersisting a union frame alone matches nothing in the
@@ -835,13 +825,12 @@ object Dedup {
       * `buildMinHashIndex(admittedBatch).save(dir, "append")` adds only
       * the batch's files — the standing corpus index is never rewritten,
       * so the append cost tracks the batch, not the corpus. */
-    def save(dir: String, mode: String = "overwrite"): Unit = {
+    def save(dir: String, mode: String = "overwrite"): Unit =
       // the LIVE view: a saved artifact has deletions applied physically
       // (append-mode ingest batches carry no tombstones, so the filter
       // is a no-op there)
-      liveBands.write.mode(mode).parquet(s"$dir/bands")
-      liveSignatures.write.mode(mode).parquet(s"$dir/signatures")
-    }
+      Persisted.save(dir, "minhash_index", mode = mode)(
+        "bands" -> liveBands, "signatures" -> liveSignatures)
 
     /** Fold an admitted ingest batch into the in-memory index: the
       * batch's signatures and band keys (computed scan-side, exactly the
@@ -929,10 +918,10 @@ object Dedup {
 
   /** Load an index previously written with [[MinHashIndex.save]]. */
   def loadMinHashIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       idCol: String): MinHashIndex =
-    MinHashIndex(idCol,
-      spark.read.parquet(s"$dir/bands"),
-      spark.read.parquet(s"$dir/signatures"))
+                       idCol: String): MinHashIndex = {
+    val p = Persisted.load(spark, dir, "minhash_index")
+    MinHashIndex(idCol, p.frame("bands"), p.frame("signatures"))
+  }
 
   /** Build the [[MinHashIndex]] of a corpus: signatures scan-side (one
     * codegen'd pass), band keys unrolled from them — no shuffle at all in
@@ -1007,36 +996,24 @@ object Dedup {
     }
 
     /** The gram table with tombstoned ids filtered OUT — the view every
-      * probe reads ([[MinHashIndex.liveBands]] contract: broadcast
-      * anti-join, map-side filter). */
-    def liveGrams: DataFrame = tombstones match {
-      case None => grams
-      case Some(t) =>
-        grams.join(broadcast(t.select(col(idCol)).distinct()),
-          Seq(idCol), "left_anti")
-    }
+      * probe reads. */
+    def liveGrams: DataFrame = Tombstones.live(grams, idCol, tombstones)
 
     /** Tombstone `ids` — the [[MinHashIndex.delete]] contract:
       * O(|ids|), probes exclude immediately, [[save]]/[[compact]] drop
       * physically. */
-    def delete(ids: DataFrame): GramIndex = {
-      val t = ids.select(col(idCol))
-      copy(tombstones = Some(tombstones.fold(t)(_.unionByName(t))))
-    }
+    def delete(ids: DataFrame): GramIndex =
+      copy(tombstones = Tombstones.add(tombstones, ids, idCol))
 
     /** Persist grams + the (k, maxGramDocs) parameters the probe must
       * reuse (a probe gramming at a different k would silently never
       * match). `mode = "append"` is the offline ingest-fold cycle: only
-      * the batch's files are added, the standing index is not rewritten
-      * (meta is idempotent — re-written each append with the same row).
+      * the batch's files are added, the standing index is not rewritten;
+      * a batch built at another (k, maxGramDocs) is refused.
       * Writes the LIVE view — deletions land physically. */
-    def save(dir: String, mode: String = "overwrite"): Unit = {
-      liveGrams.write.mode(mode).parquet(s"$dir/grams")
-      val spark = grams.sparkSession
-      import spark.implicits._
-      Seq((k, maxGramDocs)).toDF("k", "max_gram_docs").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/meta")
-    }
+    def save(dir: String, mode: String = "overwrite"): Unit =
+      Persisted.save(dir, "gram_index",
+        Map("k" -> k, "max_gram_docs" -> maxGramDocs), mode)("grams" -> liveGrams)
 
     /** Fold an admitted ingest batch in: the batch's grams (capped
       * WITHIN the batch) union onto the standing frame — append cost is
@@ -1060,15 +1037,11 @@ object Dedup {
       * not be a path the current lineage scans (self-overwrite — the
       * [[MinHashIndex.compact]] caveat; alternate generation dirs). */
     def compact(dir: String, persist: Boolean = true): GramIndex = {
-      val spark = grams.sparkSession
       // LIVE view into the re-cap: tombstoned docs drop physically AND
       // stop occupying doc-frequency cap slots from here on
-      capGramDf(liveGrams, maxGramDocs).write.mode("overwrite").parquet(s"$dir/grams")
-      import spark.implicits._
-      Seq((k, maxGramDocs)).toDF("k", "max_gram_docs").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/meta")
+      GramIndex(idCol, capGramDf(liveGrams, maxGramDocs), k, maxGramDocs).save(dir)
       unpersist()
-      val fresh = loadGramIndex(spark, dir, idCol)
+      val fresh = loadGramIndex(grams.sparkSession, dir, idCol)
       if (persist)
         fresh.copy(grams = fresh.grams.cache(),
           cachedFrames = Seq(fresh.grams))
@@ -1091,9 +1064,8 @@ object Dedup {
   /** Load an index previously written with [[GramIndex.save]]. */
   def loadGramIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                     idCol: String): GramIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").collect().head
-    GramIndex(idCol, spark.read.parquet(s"$dir/grams"),
-      meta.getInt(0), meta.getInt(1))
+    val p = Persisted.load(spark, dir, "gram_index")
+    GramIndex(idCol, p.frame("grams"), p.int("k"), p.int("max_gram_docs"))
   }
 
   /** Build the [[GramIndex]] of a corpus: grams scan-side, one hash
@@ -1264,38 +1236,25 @@ object Dedup {
       ()
     }
 
-    /** Bucket/vector tables with tombstoned ids filtered OUT — the
-      * [[MinHashIndex.liveBands]] contract (broadcast anti-join,
-      * map-side filter) for the vector-delta family's probes. */
-    def liveBuckets: DataFrame = antiTombstoned(buckets)
-    def liveVectors: DataFrame = antiTombstoned(vectors)
-    private def antiTombstoned(df: DataFrame): DataFrame = tombstones match {
-      case None => df
-      case Some(t) =>
-        df.join(broadcast(t.select(col(idCol)).distinct()),
-          Seq(idCol), "left_anti")
-    }
+    /** Bucket/vector tables with tombstoned ids filtered OUT — the view
+      * the vector-delta family's probes read. */
+    def liveBuckets: DataFrame = Tombstones.live(buckets, idCol, tombstones)
+    def liveVectors: DataFrame = Tombstones.live(vectors, idCol, tombstones)
 
     /** Tombstone `ids` — the [[MinHashIndex.delete]] contract:
       * O(|ids|), probes (batch [[deltaEmbeddingNearDups]] and the
       * streaming twin) exclude immediately, [[save]] drops physically. */
-    def delete(ids: DataFrame): LshVecIndex = {
-      val t = ids.select(col(idCol))
-      copy(tombstones = Some(tombstones.fold(t)(_.unionByName(t))))
-    }
+    def delete(ids: DataFrame): LshVecIndex =
+      copy(tombstones = Tombstones.add(tombstones, ids, idCol))
 
     /** Persist buckets + vectors + the (bits, tables) density the probe
       * must reuse. `mode = "append"` folds an admitted batch's files in
-      * without rewriting the standing index (meta idempotent). Writes
-      * the LIVE view — deletions land physically. */
-    def save(dir: String, mode: String = "overwrite"): Unit = {
-      liveBuckets.write.mode(mode).parquet(s"$dir/buckets")
-      liveVectors.write.mode(mode).parquet(s"$dir/vectors")
-      val spark = buckets.sparkSession
-      import spark.implicits._
-      Seq((bits, tables)).toDF("bits", "tables").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/meta")
-    }
+      * without rewriting the standing index; a batch bucketed at another
+      * density is refused. Writes the LIVE view — deletions land
+      * physically. */
+    def save(dir: String, mode: String = "overwrite"): Unit =
+      Persisted.save(dir, "lsh_vec_index", Map("bits" -> bits, "tables" -> tables),
+        mode)("buckets" -> liveBuckets, "vectors" -> liveVectors)
 
     /** Fold an admitted ingest batch in at the INDEX's density — append
       * cost is one pass over the batch; ids assumed disjoint. */
@@ -1315,9 +1274,9 @@ object Dedup {
   /** Load an index previously written with [[LshVecIndex.save]]. */
   def loadLshVecIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                       idCol: String, vecCol: String): LshVecIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").collect().head
-    LshVecIndex(idCol, vecCol, spark.read.parquet(s"$dir/buckets"),
-      spark.read.parquet(s"$dir/vectors"), meta.getInt(0), meta.getInt(1))
+    val p = Persisted.load(spark, dir, "lsh_vec_index")
+    LshVecIndex(idCol, vecCol, p.frame("buckets"), p.frame("vectors"),
+      p.int("bits"), p.int("tables"))
   }
 
   /** Build the [[LshVecIndex]] of a corpus: buckets scan-side via the
@@ -1516,13 +1475,11 @@ object Dedup {
       ()
     }
 
-    def save(dir: String, mode: String = "overwrite"): Unit = {
-      hashes.write.mode(mode).parquet(s"$dir/line_hashes")
-      val spark = hashes.sparkSession
-      import spark.implicits._
-      Seq(lineTokens).toDF("line_tokens").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/meta")
-    }
+    /** Persist the hashes + the window width the probe must reuse;
+      * `mode = "append"` refuses a batch sliced at another width. */
+    def save(dir: String, mode: String = "overwrite"): Unit =
+      Persisted.save(dir, "line_set_index", Map("line_tokens" -> lineTokens),
+        mode)("line_hashes" -> hashes)
 
     /** Fold an admitted ingest batch in: the batch's distinct line hashes
       * union onto the standing frame — one pass over the batch. */
@@ -1542,13 +1499,9 @@ object Dedup {
       * current lineage scans — the [[GramIndex.compact]] caveat), release
       * the old lineage, return the freshly-loaded flat index. */
     def compact(dir: String, persist: Boolean = true): LineSetIndex = {
-      val spark = hashes.sparkSession
-      hashes.distinct().write.mode("overwrite").parquet(s"$dir/line_hashes")
-      import spark.implicits._
-      Seq(lineTokens).toDF("line_tokens").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/meta")
+      LineSetIndex(hashes.distinct(), lineTokens).save(dir)
       unpersist()
-      val fresh = loadLineSetIndex(spark, dir)
+      val fresh = loadLineSetIndex(hashes.sparkSession, dir)
       if (persist)
         fresh.copy(hashes = fresh.hashes.cache(),
           cachedFrames = Seq(fresh.hashes))
@@ -1571,9 +1524,10 @@ object Dedup {
 
   /** Load an index previously written with [[LineSetIndex.save]]. */
   def loadLineSetIndex(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): LineSetIndex =
-    LineSetIndex(spark.read.parquet(s"$dir/line_hashes"),
-      spark.read.parquet(s"$dir/meta").head().getInt(0))
+                       dir: String): LineSetIndex = {
+    val p = Persisted.load(spark, dir, "line_set_index")
+    LineSetIndex(p.frame("line_hashes"), p.int("line_tokens"))
+  }
 
   /** Build the [[LineSetIndex]] of a corpus: lines scan-side, one
     * distinct aggregate on the 64-bit hash — nothing else shuffles. */

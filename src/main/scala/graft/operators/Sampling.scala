@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.artifacts.Persisted
+
 /** Deterministic sampling and dataset splitting for training pipelines.
   *
   * Everything here is a pure function of row CONTENT (md5 of a key), never
@@ -250,27 +252,47 @@ object Sampling {
   /** The Bloom artifact: `mBits` bits as packed longs, `k` probes per
     * item (Kirsch–Mitzenmacher double hashing — two xxhash64 draws
     * derive all k positions). Save/load/memoize like the gram and IVF
-    * indexes. */
+    * indexes; persisted as a one-shard [[ShardedBloomIndex]]. */
   final case class BloomIndex(bits: Array[Long], mBits: Int, k: Int,
                               nItems: Long) {
-    def save(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-      import spark.implicits._
-      Seq((mBits, k, nItems)).toDF("m_bits", "k", "n_items").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/bloom_meta")
-      bits.zipWithIndex.map { case (b, i) => (i, b) }.toSeq
-        .toDF("w", "bits").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/bloom_bits")
-    }
+    def save(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
+      saveBloom(spark, dir, "bloom_index", Array(bits), mBits, k, nItems)
   }
 
   def loadBloomIndex(spark: org.apache.spark.sql.SparkSession,
                      dir: String): BloomIndex = {
-    val meta = spark.read.parquet(s"$dir/bloom_meta").collect().head
-    val (m, k, n) = (meta.getInt(0), meta.getInt(1), meta.getLong(2))
-    val bits = new Array[Long](m / 64)
-    spark.read.parquet(s"$dir/bloom_bits").collect()
-      .foreach(r => bits(r.getInt(0)) = r.getLong(1))
-    BloomIndex(bits, m, k, n)
+    val (shards, m, k, n) = loadBloom(spark, dir, "bloom_index")
+    BloomIndex(shards(0), m, k, n)
+  }
+
+  /** The one persisted form of both Bloom artifacts: `bloom_bits` rows
+    * (shard, w, bits), one file per shard, beside (m_bits per shard, k,
+    * n_items, n_shards). Rows are produced executor-side from one
+    * broadcast per shard, so the driver holds the index itself and never
+    * a row per word (the pre-round-13 driver-local Seq of nShards × m/64
+    * boxed tuples was 10^8+ objects at the >2^30-bit scale the sharded
+    * artifact targets), and each write task fetches only its own shard. */
+  private def saveBloom(spark: org.apache.spark.sql.SparkSession, dir: String,
+                        kind: String, shards: Array[Array[Long]], mBits: Int,
+                        k: Int, nItems: Long): Unit = {
+    import spark.implicits._
+    val bcs = shards.map(spark.sparkContext.broadcast(_))
+    try {
+      val rows = bcs.zipWithIndex.map { case (bc, s) =>
+        spark.range(mBits / 64L).map(w => (s, w.toInt, bc.value(w.toInt))).coalesce(1)
+      }.reduce(_ union _)
+      Persisted.save(dir, kind, Map("m_bits" -> mBits, "k" -> k, "n_items" -> nItems,
+        "n_shards" -> shards.length))("bloom_bits" -> rows.toDF("shard", "w", "bits"))
+    } finally bcs.foreach(_.destroy())
+  }
+
+  private def loadBloom(spark: org.apache.spark.sql.SparkSession, dir: String,
+                        kind: String): (Array[Array[Long]], Int, Int, Long) = {
+    val p = Persisted.load(spark, dir, kind)
+    val shards = Array.fill(p.int("n_shards"))(new Array[Long](p.int("m_bits") / 64))
+    p.frame("bloom_bits").collect()
+      .foreach(r => shards(r.getInt(0))(r.getInt(1)) = r.getLong(2))
+    (shards, p.int("m_bits"), p.int("k"), p.long("n_items"))
   }
 
   /** 1L << i for i in 0..63 — the variable-shift stand-in: Spark's Column
@@ -379,38 +401,13 @@ object Sampling {
                                      mBitsPerShard: Int, k: Int,
                                      nItems: Long) {
     def nShards: Int = shards.length
-    def save(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-      import spark.implicits._
-      Seq((mBitsPerShard, k, nItems, nShards))
-        .toDF("m_bits", "k", "n_items", "n_shards").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/bloom_meta")
-      // One shard per write job, rows produced executor-side from a
-      // broadcast of that shard's long[] — never the pre-round-13
-      // driver-local Seq of nShards × m/64 boxed (shard, w, bits)
-      // tuples, which at the >2^30-bit scale this artifact targets was
-      // 10^8+ transient objects on the driver heap. Driver residency
-      // stays one long[m/64] per shard (the index itself), nothing more.
-      val words = mBitsPerShard / 64
-      shards.zipWithIndex.foreach { case (bits, s) =>
-        val bc = spark.sparkContext.broadcast(bits)
-        val mode = if (s == 0) "overwrite" else "append"
-        spark.range(words.toLong)
-          .map(w => (s, w.toInt, bc.value(w.toInt)))
-          .toDF("shard", "w", "bits").coalesce(1)
-          .write.mode(mode).parquet(s"$dir/bloom_bits")
-        bc.unpersist(blocking = false)
-      }
-    }
+    def save(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
+      saveBloom(spark, dir, "bloom_sharded", shards, mBitsPerShard, k, nItems)
   }
 
   def loadShardedBloomIndex(spark: org.apache.spark.sql.SparkSession,
                             dir: String): ShardedBloomIndex = {
-    val meta = spark.read.parquet(s"$dir/bloom_meta").collect().head
-    val (m, k, n, s) =
-      (meta.getInt(0), meta.getInt(1), meta.getLong(2), meta.getInt(3))
-    val shards = Array.fill(s)(new Array[Long](m / 64))
-    spark.read.parquet(s"$dir/bloom_bits").collect()
-      .foreach(r => shards(r.getInt(0))(r.getInt(1)) = r.getLong(2))
+    val (shards, m, k, n) = loadBloom(spark, dir, "bloom_sharded")
     ShardedBloomIndex(shards, m, k, n)
   }
 
@@ -854,20 +851,17 @@ object Sampling {
       extends graft.artifacts.Releasable {
     def unpersist(): Unit = { weights.unpersist(); () }
 
-    def save(dir: String): Unit = {
-      val spark = weights.sparkSession
-      import spark.implicits._
-      weights.write.mode("overwrite").parquet(s"$dir/dsir_weights")
-      Seq(buckets).toDF("buckets").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/dsir_meta")
-    }
+    def save(dir: String): Unit =
+      Persisted.save(dir, "dsir_model", Map("buckets" -> buckets))(
+        "dsir_weights" -> weights)
   }
 
   /** Load a model previously written with [[DsirModel.save]]. */
   def loadDsirModel(spark: org.apache.spark.sql.SparkSession,
-                    dir: String): DsirModel =
-    DsirModel(spark.read.parquet(s"$dir/dsir_weights"),
-      spark.read.parquet(s"$dir/dsir_meta").head().getInt(0))
+                    dir: String): DsirModel = {
+    val p = Persisted.load(spark, dir, "dsir_model")
+    DsirModel(p.frame("dsir_weights"), p.int("buckets"))
+  }
 
   /** Fit the [[DsirModel]]: totals ride a broadcast 1-row aggregate —
     * no driver action anywhere. This is what [[dsirScoreAgainst]] and

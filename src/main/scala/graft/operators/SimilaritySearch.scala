@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.artifacts.{ArtifactStore, Releasable}
+import graft.artifacts.{ArtifactStore, Persisted, Releasable, Tombstones}
 import graft.functions.CosineSimilarity.cosineSim
 import graft.functions.LshTableBuckets
 
@@ -251,16 +251,8 @@ object SimilaritySearch {
       cachedLeaves: Seq[DataFrame] = Nil,
       tombstones: Option[DataFrame] = None) extends Releasable {
     /** The assignment table with tombstoned ids filtered OUT — the view
-      * every probe/dedup consumer reads. Deletion lists are takedown-
-      * sized by contract (opt-outs, decontamination-after-the-fact), so
-      * the anti-join broadcasts the tombstone side and costs one
-      * map-side filter over the corpus scan — never a shuffle. */
-    def liveAssigned: DataFrame = tombstones match {
-      case None => assigned
-      case Some(t) =>
-        assigned.join(broadcast(t.select(col(idCol)).distinct()),
-          Seq(idCol), "left_anti")
-    }
+      * every probe/dedup consumer reads. */
+    def liveAssigned: DataFrame = Tombstones.live(assigned, idCol, tombstones)
 
     /** Tombstone `ids` (any frame carrying `idCol`): O(|ids|) — the
       * corpus is NOT touched; every subsequent probe excludes the ids at
@@ -268,10 +260,8 @@ object SimilaritySearch {
       * physically (tombstone-at-probe, drop-at-compact — the takedown
       * verb a real training-data pipeline needs between full rebuilds).
       * Unknown ids are harmless (the anti-join just matches nothing). */
-    def delete(ids: DataFrame): IvfIndex = {
-      val t = ids.select(col(idCol))
-      copy(tombstones = Some(tombstones.fold(t)(_.unionByName(t))))
-    }
+    def delete(ids: DataFrame): IvfIndex =
+      copy(tombstones = Tombstones.add(tombstones, ids, idCol))
     /** Unpersist every cached relation this index OWNS — `cachedLeaves`
       * is the ownership list (the GramIndex `cachedFrames` discipline):
       * the build seeds it with the base assignment's cached frame, each
@@ -294,20 +284,19 @@ object SimilaritySearch {
     def save(dir: String): Unit = {
       val spark = assigned.sparkSession
       import spark.implicits._
-      liveAssigned.write.mode("overwrite").parquet(s"$dir/assignments")
-      centroids.toSeq.map { case (i, c) => (i, c.toSeq) }
-        .toDF("cell", "cvec").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/centroids")
+      Persisted.save(dir, "ivf_index")("assignments" -> liveAssigned,
+        "centroids" -> centroids.toSeq.map { case (i, c) => (i, c.toSeq) }
+          .toDF("cell", "cvec").coalesce(1))
     }
   }
 
   /** Load an index previously written with [[IvfIndex.save]]. */
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                    idCol: String, vecCol: String): IvfIndex = {
-    val centroids = spark.read.parquet(s"$dir/centroids")
-      .collect()
+    val p = Persisted.load(spark, dir, "ivf_index")
+    val centroids = p.frame("centroids").collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
-    IvfIndex(centroids, spark.read.parquet(s"$dir/assignments"), idCol, vecCol)
+    IvfIndex(centroids, p.frame("assignments"), idCol, vecCol)
   }
 
   /** Fit the coarse quantizer on a deterministic 1-in-`sampleMod` hash-sample
@@ -1017,13 +1006,8 @@ object SimilaritySearch {
           max(col("cos")).as("max_cos"),
           min(col("cos")).as("min_cos"))
 
-    def save(dir: String): Unit = {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      Seq(k).toDF("k").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/knn_meta")
-      edges.write.mode("overwrite").parquet(s"$dir/knn_edges")
-    }
+    def save(dir: String): Unit =
+      Persisted.save(dir, "knn_graph", Map("k" -> k))("knn_edges" -> edges)
   }
 
   def buildKnnGraph(emb: DataFrame, idCol: String, vecCol: String,
@@ -1038,9 +1022,10 @@ object SimilaritySearch {
       k)
 
   def loadKnnGraph(spark: org.apache.spark.sql.SparkSession,
-                   dir: String): KnnGraph =
-    KnnGraph(spark.read.parquet(s"$dir/knn_edges"),
-      spark.read.parquet(s"$dir/knn_meta").collect().head.getInt(0))
+                   dir: String): KnnGraph = {
+    val p = Persisted.load(spark, dir, "knn_graph")
+    KnnGraph(p.frame("knn_edges"), p.int("k"))
+  }
 
   /** Incremental append — the delta-ingest shape of the graph build (the
     * [[graft.operators.Dedup]] delta-index convention): edges for the NEW
@@ -1104,18 +1089,15 @@ object SimilaritySearch {
     * the empty/all-zero corpus (the degenerate case the probe falls back
     * to the exact path for). */
   final case class MipsIndex(maxNorm: Double) {
-    /** Persist alongside the other index artifacts (one-row parquet). */
-    def save(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-      import spark.implicits._
-      Seq(maxNorm).toDF("max_norm").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/mips")
-    }
+    /** Persist alongside the other index artifacts: the manifest alone. */
+    def save(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
+      Persisted.save(dir, "mips", Map("max_norm" -> maxNorm))()
   }
 
   /** Load an index previously written with [[MipsIndex.save]]. */
   def loadMipsIndex(spark: org.apache.spark.sql.SparkSession,
                     dir: String): MipsIndex =
-    MipsIndex(spark.read.parquet(s"$dir/mips").collect().head.getDouble(0))
+    MipsIndex(Persisted.load(spark, dir, "mips").double("max_norm"))
 
   /** One aggregate over the corpus → the max L2 norm. Null (empty corpus)
     * maps to 0.0, the degenerate marker. */
@@ -1215,22 +1197,14 @@ object SimilaritySearch {
       cachedLeaves.foreach(_.unpersist()); ()
     }
 
-    /** The code table with tombstoned ids filtered OUT — the
-      * [[IvfIndex.liveAssigned]] contract for the PQ half: broadcast
-      * anti-join, map-side filter, never a shuffle. */
-    def liveCodes: DataFrame = tombstones match {
-      case None => codes
-      case Some(t) =>
-        codes.join(broadcast(t.select(col(idCol)).distinct()),
-          Seq(idCol), "left_anti")
-    }
+    /** The code table with tombstoned ids filtered OUT — the view every
+      * PQ probe reads. */
+    def liveCodes: DataFrame = Tombstones.live(codes, idCol, tombstones)
 
     /** Tombstone `ids` — see [[IvfIndex.delete]]: O(|ids|), probes
       * exclude immediately, [[compactPqIndex]] drops physically. */
-    def delete(ids: DataFrame): PqIndex = {
-      val t = ids.select(col(idCol))
-      copy(tombstones = Some(tombstones.fold(t)(_.unionByName(t))))
-    }
+    def delete(ids: DataFrame): PqIndex =
+      copy(tombstones = Tombstones.add(tombstones, ids, idCol))
 
     /** Persist the index as parquet (codes + codebooks + the (m, k,
       * subDim) meta the probe must reuse — explicit rather than derived
@@ -1239,22 +1213,20 @@ object SimilaritySearch {
     def save(dir: String): Unit = {
       val spark = codes.sparkSession
       import spark.implicits._
-      liveCodes.write.mode("overwrite").parquet(s"$dir/pq_codes")
-      codebooks.zipWithIndex.flatMap { case (cb, sub) =>
-        cb.zipWithIndex.map { case (c, code) => (sub, code, c.toSeq) }
-      }.toSeq.toDF("sub", "code", "cvec").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/pq_codebooks")
-      Seq((m, k, subDim)).toDF("m", "k", "sub_dim").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/pq_meta")
+      Persisted.save(dir, "pq", Map("m" -> m, "k" -> k, "sub_dim" -> subDim))(
+        "pq_codes" -> liveCodes,
+        "pq_codebooks" -> codebooks.zipWithIndex.flatMap { case (cb, sub) =>
+          cb.zipWithIndex.map { case (c, code) => (sub, code, c.toSeq) }
+        }.toSeq.toDF("sub", "code", "cvec").coalesce(1))
     }
   }
 
   /** Load an index previously written with [[PqIndex.save]]. */
   def loadPqIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                   idCol: String): PqIndex = {
-    val meta = spark.read.parquet(s"$dir/pq_meta").collect().head
-    val (m, k, subDim) = (meta.getInt(0), meta.getInt(1), meta.getInt(2))
-    val rows = spark.read.parquet(s"$dir/pq_codebooks").collect()
+    val p = Persisted.load(spark, dir, "pq")
+    val (m, k, subDim) = (p.int("m"), p.int("k"), p.int("sub_dim"))
+    val rows = p.frame("pq_codebooks").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     val codebooks =
       if (rows.isEmpty) Array.empty[Array[Array[Double]]]
@@ -1263,8 +1235,7 @@ object SimilaritySearch {
         rows.foreach { case (sub, code, c) => cb(sub)(code) = c }
         cb
       }
-    PqIndex(codebooks, spark.read.parquet(s"$dir/pq_codes"),
-      m, k, subDim, idCol)
+    PqIndex(codebooks, p.frame("pq_codes"), m, k, subDim, idCol)
   }
 
   /** L2-normalize an `array<float|double>` column to array<double> (zero

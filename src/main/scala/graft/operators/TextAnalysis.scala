@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.artifacts.Persisted
+
 /** Column builders (plus one whole-operator pipeline,
   * [[repetitionMetrics]]) for text analytics over a document corpus —
   * tokenize, shingle, quality-score, language-ID, fingerprint. All pure
@@ -702,20 +704,17 @@ object TextAnalysis {
     * per-partition repeats; the output is the corpus' repeated-line
     * set — small in practice and the equi-join side of every apply. */
   final case class BoilerplateLines(flagged: DataFrame, lineTokens: Int) {
-    def save(dir: String): Unit = {
-      val spark = flagged.sparkSession
-      import spark.implicits._
-      flagged.write.mode("overwrite").parquet(s"$dir/boiler_flagged")
-      Seq(lineTokens).toDF("line_tokens").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/boiler_meta")
-    }
+    def save(dir: String): Unit =
+      Persisted.save(dir, "boilerplate_lines", Map("line_tokens" -> lineTokens))(
+        "boiler_flagged" -> flagged)
   }
 
   /** Load an artifact previously written with [[BoilerplateLines.save]]. */
   def loadBoilerplateLines(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): BoilerplateLines =
-    BoilerplateLines(spark.read.parquet(s"$dir/boiler_flagged"),
-      spark.read.parquet(s"$dir/boiler_meta").head().getInt(0))
+                           dir: String): BoilerplateLines = {
+    val p = Persisted.load(spark, dir, "boilerplate_lines")
+    BoilerplateLines(p.frame("boiler_flagged"), p.int("line_tokens"))
+  }
 
   def boilerplateLineTable(docs: DataFrame, idCol: String, textCol: String,
                            lineTokens: Int = 16,
@@ -777,21 +776,16 @@ object TextAnalysis {
                                      buckets: Int) extends graft.artifacts.Releasable {
     def unpersist(): Unit = { weights.unpersist(); () }
 
-    def save(dir: String): Unit = {
-      val spark = weights.sparkSession
-      import spark.implicits._
-      weights.write.mode("overwrite").parquet(s"$dir/qc_weights")
-      Seq((bias, buckets)).toDF("bias", "buckets").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dir/qc_meta")
-    }
+    def save(dir: String): Unit =
+      Persisted.save(dir, "quality_clf", Map("bias" -> bias, "buckets" -> buckets))(
+        "qc_weights" -> weights)
   }
 
   /** Load a classifier previously written with [[QualityClassifier.save]]. */
   def loadQualityClassifier(spark: org.apache.spark.sql.SparkSession,
                             dir: String): QualityClassifier = {
-    val meta = spark.read.parquet(s"$dir/qc_meta").head()
-    QualityClassifier(spark.read.parquet(s"$dir/qc_weights"),
-      meta.getDouble(0), meta.getInt(1))
+    val p = Persisted.load(spark, dir, "quality_clf")
+    QualityClassifier(p.frame("qc_weights"), p.double("bias"), p.int("buckets"))
   }
 
   /** Deterministic full-batch gradient-descent logistic regression over
