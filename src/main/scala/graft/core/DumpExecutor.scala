@@ -29,8 +29,6 @@ import graft.sink.{PartitionedParquetSink, WriteResult, WriteStats}
 class DumpExecutor(
     sink: PartitionedParquetSink,
     runQuery: String => DataFrame,
-    maxRetries: Int = RetryPolicy.MaxRetries,
-    retryDelaySeconds: Long = RetryPolicy.RetryDelaySeconds,
     sleeper: Long => Unit = s => Thread.sleep(s * 1000),
     today: () => LocalDate = () => LocalDate.now(),
     /** Wraps each ATTEMPT (query + write) and supplies the query runner
@@ -108,7 +106,7 @@ class DumpExecutor(
         // carrying on would keep writing from a corrupted process. The
         // reference's `except Exception` has the same fatal/non-fatal line.
         case scala.util.control.NonFatal(ex) =>
-          RetryPolicy.evaluate(ex, attempt, maxRetries) match {
+          RetryPolicy.evaluate(ex, attempt) match {
             case RetryPolicy.Failure =>
               log.error(s"[Dump #$dumpNo] Failed: $ex")
               return failed(ex)
@@ -116,7 +114,7 @@ class DumpExecutor(
               log.error(s"[Dump #$dumpNo] Retries exhausted after ${attempt + 1} attempts: $ex")
               return failed(ex)
             case RetryPolicy.Retry =>
-              val backoff = RetryPolicy.backoffSeconds(attempt, retryDelaySeconds)
+              val backoff = RetryPolicy.backoffSeconds(attempt)
               log.warn(s"[Dump #$dumpNo] Retryable error (attempt ${attempt + 1}), " +
                 s"sleeping ${backoff}s: $ex")
               sleeper(backoff)

@@ -22,11 +22,7 @@ import graft.sources.SqlTranslate
   * and every retried task then sees the anchor's exported snapshot, which
   * the reference's single cursor cannot offer past one connection.
   */
-class Floorista(
-    spark: SparkSession,
-    config: EngineConfig,
-    executorFactory: (PartitionedParquetSink, String => DataFrame) => DumpExecutor =
-      (sink, run) => new DumpExecutor(sink, run)) {
+class Floorista(spark: SparkSession, config: EngineConfig) {
 
   private val log = LoggerFactory.getLogger(classOf[Floorista])
 
@@ -63,7 +59,7 @@ class Floorista(
       case Some(j) =>
         new DumpExecutor(sink, runQuery,
           attemptScope = graft.sources.SnapshotJdbcSource.dumpAttemptScope(spark, j))
-      case None => executorFactory(sink, runQuery)
+      case None => new DumpExecutor(sink, runQuery)
     }
 
     val rows = FloorplanParser.parseFile(config.floorplanFile)

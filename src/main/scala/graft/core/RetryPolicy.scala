@@ -5,9 +5,9 @@ package graft.core
   * Faithful to the reference classifier (`src/floorist/floorist.py:31-63`):
   * an error is retryable iff its message contains one of four substrings;
   * `evaluate` returns RETRY until the attempt budget is spent
-  * (exhausted at `attempt >= maxRetries - 1`), FAILURE for anything
-  * non-retryable. Backoff is `delay * 2^attempt` seconds (5s, 10s with the
-  * defaults, asserted by `tests/test_floorist_standalone.py:204-230`).
+  * (exhausted at `attempt >= MaxRetries - 1`), FAILURE for anything
+  * non-retryable. Backoff is `RetryDelaySeconds * 2^attempt` seconds (5s,
+  * 10s, asserted by `tests/test_floorist_standalone.py:204-230`).
   */
 object RetryPolicy {
   sealed trait Outcome
@@ -39,12 +39,12 @@ object RetryPolicy {
     false
   }
 
-  def evaluate(ex: Throwable, attempt: Int, maxRetries: Int = MaxRetries): Outcome =
+  def evaluate(ex: Throwable, attempt: Int): Outcome =
     if (!isRetryable(ex)) Failure
-    else if (attempt >= maxRetries - 1) Exhausted
+    else if (attempt >= MaxRetries - 1) Exhausted
     else Retry
 
   /** Seconds to sleep before retry number `attempt + 1`. */
-  def backoffSeconds(attempt: Int, base: Long = RetryDelaySeconds): Long =
-    base * (1L << attempt)
+  def backoffSeconds(attempt: Int): Long =
+    RetryDelaySeconds * (1L << attempt)
 }

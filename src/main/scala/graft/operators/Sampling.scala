@@ -118,33 +118,15 @@ object Sampling {
     *
     * Round 12: delegates to the codegen'd
     * [[graft.functions.WordShingles]] — element-for-element equal to the
-    * HOF formulation below (same tokenizer, same order-preserving dedup,
+    * round-7 HOF formulation (same tokenizer, same order-preserving dedup,
     * same empty-below-n contract; Round12Spec pins the equality on the
-    * corpus), but compiled: higher-order functions are CodegenFallback,
+    * corpus against the test-side reference twin), but compiled:
+    * higher-order functions are CodegenFallback,
     * and this is the single hottest expression in the engine (every
     * decontamination op, the decontam artifact, both stream gates). */
   def wordNgrams(text: Column, n: Int): Column = {
     require(n >= 2, s"n-gram size must be >= 2, got $n")
     graft.functions.WordShingles.wordShingles(text, n, distinct = true)
-  }
-
-  /** The round-7 HOF formulation, kept as the REFERENCE definition
-    * [[wordNgrams]] is spec-pinned against. The one-element-`transform`
-    * binds the token array once per row (the nested-HOF re-evaluation
-    * trap — measured ~6× on p11 at sf0.1); `sequence(1, k)` produces a
-    * DESCENDING `[1, 0]` when k < 1, so the bound is checked before the
-    * range exists. */
-  private[graft] def wordNgramsHof(text: Column, n: Int): Column = {
-    require(n >= 2, s"n-gram size must be >= 2, got $n")
-    val ws0 = filter(split(text, " "), t => t =!= "")
-    element_at(
-      transform(array(ws0), ws =>
-        when(size(ws) >= n,
-          array_distinct(transform(
-            sequence(lit(1), size(ws) - lit(n - 1)),
-            i => concat_ws(" ", slice(ws, i, lit(n))))))
-          .otherwise(array().cast("array<string>"))),
-      1)
   }
 
   /** The static (gram, eval_id) lookup table [[ngramContamination]] and its
@@ -298,13 +280,13 @@ object Sampling {
   /** 1L << i for i in 0..63 — the variable-shift stand-in: Spark's Column
     * API only shifts by literals, so bit masks come from this 64-element
     * literal array instead (element_at is O(1) on a constant). */
-  private val BitMasks: Seq[Long] = (0 until 64).map(i => 1L << i)
+  private[graft] val BitMasks: Seq[Long] = (0 until 64).map(i => 1L << i)
 
   /** k bit positions of `gram` (Kirsch–Mitzenmacher: `h1 + i·(2·h2+1)`
     * mod m; the odd multiplier keeps the stride nonzero). Both hashes are
     * reduced mod m BEFORE the affine combine so no intermediate can
     * overflow (ANSI-safe). */
-  private def bloomPositions(gram: Column, mBits: Int, k: Int): Seq[Column] = {
+  private[graft] def bloomPositions(gram: Column, mBits: Int, k: Int): Seq[Column] = {
     val m = lit(mBits.toLong)
     val h1 = pmod(xxhash64(gram), m)
     val h2 = pmod(xxhash64(gram, lit(0x9E3779B9L)), m) * 2L + 1L
@@ -368,27 +350,6 @@ object Sampling {
       s"auto-sized bloom of $target bits exceeds the 2^30 single-array bound " +
         s"for ~$nItems grams — shard wider or pass bits explicitly")
     math.max(1 << 17, target.toInt)
-  }
-
-  /** Round-11 build shape, kept as the REFERENCE definition the aggregate
-    * build is pinned against (Round12Spec asserts word-for-word equal bit
-    * arrays): positions fan out scan-side via the Column `bloomPositions`
-    * and reduce to (word, bit_or) rows. Quadratically more row traffic
-    * than the aggregate — never call it on a production-sized set. */
-  private[graft] def buildBloomIndexReference(grams: DataFrame, gramCol: String,
-                                              mBits: Int, k: Int = 16): BloomIndex = {
-    val m = mBits
-    val masks = typedlit(BitMasks)
-    val pos = grams.select(
-      explode(array(bloomPositions(col(gramCol), m, k): _*)).as("pos"))
-    val words = pos.select(
-        shiftright(col("pos"), 6).cast("int").as("w"),
-        element_at(masks, pmod(col("pos"), lit(64)).cast("int") + 1).as("mk"))
-      .groupBy(col("w")).agg(expr("bit_or(mk)").as("bits"))
-      .collect()
-    val bits = new Array[Long](m / 64)
-    words.foreach(r => bits(r.getInt(0)) = r.getLong(1))
-    BloomIndex(bits, m, k, grams.select(col(gramCol)).distinct().count())
   }
 
   /** The past-2³⁰-bits artifact: nShards independent sub-filters, a
@@ -912,20 +873,6 @@ object Sampling {
       .withColumn("dsir_w",
         round(col("sum_w_bp").cast("double") / col("n_grams").cast("double"), 4))
   }
-
-  /** The explode → broadcast-join → aggregate formulation
-    * [[dsirScoreAgainst]] replaced, kept as the spec-pinned reference
-    * twin (Round12Spec asserts row-for-row equality). */
-  private[graft] def dsirScoreAgainstJoined(docs: DataFrame, idCol: String,
-                                            textCol: String,
-                                            model: DsirModel): DataFrame =
-    dsirGrams(docs, textCol, lit(false).as("__t"), model.buckets, Seq(idCol))
-      .join(broadcast(model.weights.select(col("bucket"), col("w_bp"))),
-        Seq("bucket"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_grams"), sum(col("w_bp")).as("sum_w_bp"))
-      .withColumn("dsir_w",
-        round(col("sum_w_bp").cast("double") / col("n_grams").cast("double"), 4))
 
   /** Shared scan-side gram→bucket pass (unigram+bigram multisets, the
     * md5 bucket hash) so the model build and every apply agree on

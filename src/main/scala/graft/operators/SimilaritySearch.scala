@@ -299,6 +299,40 @@ object SimilaritySearch {
     IvfIndex(centroids, p.frame("assignments"), idCol, vecCol)
   }
 
+  /** The driver-local k-means fit sample of `vec` over `vecs`, shared by
+    * the IVF, hier-IVF and PQ builds: a deterministic 1-in-`sampleMod`
+    * hash sample on `idCol`, collected in ONE bounded job.
+    *
+    *  - The sample is bounded BY CONSTRUCTION, never by the caller
+    *    remembering to pass `sampleMod`: with `sampleMod` ≤ 1 the modulus
+    *    comes from a cheap id-only count so the expected sample lands near
+    *    `maxLocalFit / 4`; small corpora derive 1 and keep the bit-exact
+    *    full fit the specs pin.
+    *  - An EMPTY hash sample (the modulus past the corpus count) falls
+    *    back to the full frame: such a corpus is smaller than the modulus,
+    *    so the full fit is cheap, and without it the whole corpus would
+    *    silently vanish from the index.
+    *  - More than `maxLocalFit` vectors fails loudly instead of an OOM. */
+  private def fitSample(vecs: DataFrame, idCol: String, vec: Column, sampleMod: Int,
+                        maxLocalFit: Int, label: String): Array[Array[Double]] = {
+    val effSampleMod =
+      if (sampleMod > 1) sampleMod
+      else {
+        val n = vecs.select(col(idCol)).count()
+        math.max(1L, math.ceil(n.toDouble / (maxLocalFit / 4)).toLong).toInt
+      }
+    def collect(df: DataFrame): Array[Array[Double]] =
+      df.select(vec).limit(maxLocalFit + 1).collect().map(_.getSeq[Double](0).toArray)
+    val sampled = collect(
+      if (effSampleMod <= 1) vecs
+      else vecs.filter(pmod(xxhash64(col(idCol)), lit(effSampleMod)) === 0))
+    val pts = if (sampled.isEmpty && effSampleMod > 1) collect(vecs) else sampled
+    require(pts.length <= maxLocalFit,
+      s"$label fit sample exceeds $maxLocalFit vectors — raise sampleMod " +
+        "(the fit is a bounded-sample job by design)")
+    pts
+  }
+
   /** Fit the coarse quantizer on a deterministic 1-in-`sampleMod` hash-sample
     * of the corpus (sampleMod = 1 → full fit, for tiny corpora), then assign
     * every vector to its cell. The KMeans job only ever sees the sample —
@@ -321,29 +355,8 @@ object SimilaritySearch {
     // RNG), so downstream recall floors were re-measured: every banded
     // oracle (s04/s11 40/50% floors) and spec bound (DedupSpec >= 0.8 on
     // planted clusters) holds with the prior margin.
-    val effSampleMod =
-      if (sampleMod > 1) sampleMod
-      else {
-        val n = vecs.select(col(idCol)).count()
-        math.max(1L, math.ceil(n.toDouble / (maxLocalFit / 4)).toLong).toInt
-      }
-    val sampled =
-      if (effSampleMod <= 1) vecs
-      else vecs.filter(pmod(xxhash64(col(idCol)), lit(effSampleMod)) === 0)
-    var pts = sampled
-      .select(transform(col(vecCol), x => x.cast("double")).as("v"))
-      .limit(maxLocalFit + 1).collect().map(_.getSeq[Double](0).toArray)
-    if (pts.isEmpty && effSampleMod > 1)
-      // EMPTY hash-sample (sampleMod past the corpus count): fall back to
-      // the full frame — such a corpus is by construction smaller than
-      // sampleMod rows, so the full fit is cheap and the sampling intent
-      // (bound the fit size) still holds (the buildPqIndex guard; without
-      // it the whole corpus would silently vanish from the index).
-      pts = vecs.select(transform(col(vecCol), x => x.cast("double")).as("v"))
-        .limit(maxLocalFit + 1).collect().map(_.getSeq[Double](0).toArray)
-    require(pts.length <= maxLocalFit,
-      s"IVF fit sample exceeds $maxLocalFit vectors — raise sampleMod " +
-        "(the coarse-quantizer fit is a bounded-sample job by design)")
+    val pts = fitSample(vecs, idCol, transform(col(vecCol), x => x.cast("double")),
+      sampleMod, maxLocalFit, "IVF")
     if (pts.isEmpty) {
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -627,37 +640,8 @@ object SimilaritySearch {
     import graft.functions.DotProduct.dotProduct
     val spark = emb.sparkSession
     val vecs = emb.select(col(idCol), col(vecCol))
-    // The fit is a DRIVER-LOCAL collect, so the sample must be bounded BY
-    // CONSTRUCTION, never by the caller remembering to pass sampleMod —
-    // the memoized/ivfTopK wrappers don't, and with the old default a
-    // production-scale corpus hit the maxLocalFit require instead of
-    // sampling. With sampleMod unset, derive the modulus from a cheap
-    // id-only count (column-pruned scan, once per build) so the expected
-    // sample lands well under maxLocalFit; small corpora derive mod 1 and
-    // keep the bit-exact full-fit behavior the specs pin.
-    val effSampleMod =
-      if (sampleMod > 1) sampleMod
-      else {
-        val n = vecs.select(col(idCol)).count()
-        math.max(1L, math.ceil(n.toDouble / (maxLocalFit / 4)).toLong).toInt
-      }
-    val sampled =
-      if (effSampleMod <= 1) vecs
-      else vecs.filter(pmod(xxhash64(col(idCol)), lit(effSampleMod)) === 0)
-    // ONE bounded collect of the fit sample — the same discipline as the
-    // centroid/codebook artifacts (the sample is chosen bounded at 100 TB;
-    // maxLocalFit makes an unbounded "sample" loud instead of an OOM).
-    // Falls back to the full frame when the hash-sample is empty (the
-    // buildIvfIndex/buildPqIndex guard).
-    var pts = sampled
-      .select(transform(col(vecCol), x => x.cast("double")).as("v"))
-      .limit(maxLocalFit + 1).collect().map(_.getSeq[Double](0).toArray)
-    if (pts.isEmpty && effSampleMod > 1)
-      pts = vecs.select(transform(col(vecCol), x => x.cast("double")).as("v"))
-        .limit(maxLocalFit + 1).collect().map(_.getSeq[Double](0).toArray)
-    require(pts.length <= maxLocalFit,
-      s"hier IVF fit sample exceeds $maxLocalFit vectors — raise sampleMod " +
-        "(the coarse-quantizer fit is a bounded-sample job by design)")
+    val pts = fitSample(vecs, idCol, transform(col(vecCol), x => x.cast("double")),
+      sampleMod, maxLocalFit, "hier IVF")
     if (pts.isEmpty) {
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -1266,25 +1250,7 @@ object SimilaritySearch {
     // bucket was 3-4 s at sf0.1 for a 2000-vector corpus). One collect,
     // m deterministic k-means++ fits over driver-side slices, then the
     // unchanged single codegen'd encode pass.
-    val effSampleMod =
-      if (sampleMod > 1) sampleMod
-      else {
-        val n = normalized.select(col(idCol)).count()
-        math.max(1L, math.ceil(n.toDouble / (maxLocalFit / 4)).toLong).toInt
-      }
-    val sampled =
-      if (effSampleMod <= 1) normalized
-      else normalized.filter(pmod(xxhash64(col(idCol)), lit(effSampleMod)) === 0)
-    var pts = sampled.select(col("__vn"))
-      .limit(maxLocalFit + 1).collect().map(_.getSeq[Double](0).toArray)
-    if (pts.isEmpty && effSampleMod > 1)
-      // empty hash-sample -> full frame (the sampling-intent guard: such
-      // a corpus is by construction smaller than sampleMod rows)
-      pts = normalized.select(col("__vn"))
-        .limit(maxLocalFit + 1).collect().map(_.getSeq[Double](0).toArray)
-    require(pts.length <= maxLocalFit,
-      s"PQ fit sample exceeds $maxLocalFit vectors — raise sampleMod " +
-        "(the codebook fit is a bounded-sample job by design)")
+    val pts = fitSample(normalized, idCol, col("__vn"), sampleMod, maxLocalFit, "PQ")
     if (pts.isEmpty) {
       val empty = emb.sparkSession.createDataFrame(
         emb.sparkSession.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -1363,12 +1329,7 @@ object SimilaritySearch {
     val effK = if (k > 0) k else index.k
     // tombstones apply to the caller-supplied corpus too: a takedown
     // must not resurrect through the re-fit (drop-at-compact)
-    val liveCorpus = index.tombstones match {
-      case None => corpus
-      case Some(t) =>
-        corpus.join(broadcast(t.select(col(index.idCol)).distinct()),
-          Seq(index.idCol), "left_anti")
-    }
+    val liveCorpus = Tombstones.live(corpus, index.idCol, index.tombstones)
     val rebuilt = buildPqIndex(liveCorpus, index.idCol, vecCol,
       m = effM, k = effK, sampleMod = sampleMod, persist = false)
     // localCheckpoint is EAGER: materialize before unpersisting the old

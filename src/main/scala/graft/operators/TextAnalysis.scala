@@ -899,21 +899,4 @@ object TextAnalysis {
           exp(-(lit(clf.bias) + col("__sw") / col("n_grams").cast("double")))),
           4).as("quality"))
   }
-
-  /** The explode → broadcast-join → aggregate formulation
-    * [[scoreQualityClassifier]] replaced, kept as the spec-pinned
-    * reference twin (Round12Spec asserts row-for-row equality). */
-  private[graft] def scoreQualityClassifierJoined(
-      docs: DataFrame, idCol: String, textCol: String,
-      clf: QualityClassifier): DataFrame =
-    graft.operators.Sampling
-      .dsirGrams(docs, textCol, lit(false).as("__t"), clf.buckets, Seq(idCol))
-      .join(broadcast(clf.weights.select(col("bucket"), col("w"))),
-        Seq("bucket"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_grams"), sum(col("w")).as("__sw"))
-      .select(col(idCol), col("n_grams"),
-        round(lit(1.0) / (lit(1.0) +
-          exp(-(lit(clf.bias) + col("__sw") / col("n_grams").cast("double")))),
-          4).as("quality"))
 }

@@ -17,15 +17,20 @@ import org.apache.spark.sql.types.LongType
   * `spark.experimental.extraStrategies` (no session rebuild needed).
   *
   * Why a custom operator: Spark's idiomatic per-key top-k is
-  * `row_number().over(Window.partitionBy(key).orderBy(ord)) <= k`, whose
-  * physical plan shuffles EVERY row to its key's partition and then sorts
-  * ENTIRE partitions — at 100 TB that is a full-data shuffle plus a full
-  * sort to keep k rows per key. This operator keeps a bounded heap per key
-  * on the MAP side (the top-k analogue of partial aggregation), so at most
-  * `k × |keys|` rows per input partition reach the exchange; the reduce
-  * side merges heaps and emits ranks. Shuffled bytes drop from O(N) to
-  * O(k · |keys| · partitions) and no full sort ever runs — the sort that
-  * remains is per-key over ≤ k survivors.
+  * `row_number().over(Window.partitionBy(key).orderBy(ord)) <= k`. Since
+  * Spark 3.5 (and on the 4.1.2 this engine runs) that plan gets a partial
+  * `WindowGroupLimit` before the exchange, so it too ships at most
+  * `k × |keys|` rows per input partition — but only after SORTING every
+  * input partition in full, and it sorts the survivors again after the
+  * exchange. This operator keeps a bounded heap per key on the MAP side
+  * (the top-k analogue of partial aggregation), so the same
+  * O(k · |keys| · partitions) rows reach the exchange with no full sort
+  * anywhere; the reduce side merges heaps and emits ranks, and the sort
+  * that remains is per-key over ≤ k survivors. The heap map costs per
+  * key, so the crossover is key cardinality: at 20M rows, k = 3 and 4
+  * shuffle partitions on a 4-core `local[4]` host, the heap form
+  * measured 1.1 s vs 7.8 s at 1k keys but 9.1 s vs 5.0 s at 1M keys
+  * (one session, median of 5).
   *
   * Rank semantics are exactly `row_number` (1-based, gap-free) provided
   * the ordering is total per key (give it a tiebreak column, same as any
@@ -37,9 +42,9 @@ import org.apache.spark.sql.types.LongType
   * that feeds this operator row-by-row, and any downstream codegen span
   * starts fresh above it. That is the same boundary every blocking
   * operator (sort, window, non-codegen aggregate) introduces, and it is
-  * the right trade here: the operator's value is shuffle-volume
-  * reduction (O(k·keys) vs O(N)), which dwarfs the per-row virtual-call
-  * cost at the boundary. The plan-shape expectations live with the
+  * the right trade here: the operator's value is keeping O(k·keys) rows
+  * per partition without sorting the other O(N), which dwarfs the
+  * per-row virtual-call cost at the boundary. The plan-shape expectations live with the
   * operator's specs — GroupTopKSpec (partial/final split, pushdown
   * through the node) and Round5Spec/Round11Spec (the multi-flush and
   * AQE-coalesced-to-1 partition ends).

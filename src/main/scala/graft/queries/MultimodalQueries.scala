@@ -11,7 +11,7 @@ import graft.queries.PipelineShared._
   * Split out of the monolithic PipelineQueries in round 11 (pure
   * re-grouping: every entry verbatim; shared machinery lives in
   * [[PipelineShared]], aggregation in [[PipelineQueries]]). */
-private[queries] object MultimodalQueries {
+private[graft] object MultimodalQueries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -520,29 +520,8 @@ private[queries] object MultimodalQueries {
     // hash aggregate per (kind, admit, reason) with integer-bp corpus
     // shares. Decode is map-only scan-side; the aggregate output is 9
     // rows.
-    "m27_admission_report" -> ((s, dir) => {
-      val M = graft.multimodal.Multimodal
-      val base = docs(s, dir).filter(length(col("text")) >= 1)
-      val media = M.renderAdmissionMixTable(base).toDF()
-        .withColumn("ts", lit(java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
-      val gated = graft.streaming.EventStreams
-        .mediaDecodeGateStream(media, "doc_id", "media", "ts")
-      val g = gated.groupBy(col("kind"), col("admit"), col("reason"))
-        .agg(count(lit(1)).as("n_docs"))
-      // total via a bounded unpartitioned window over the ≤10-row report
-      // frame (round 19): the former crossJoin(broadcast(g.agg)) carried
-      // the whole render+decode subplan a SECOND time inside the total's
-      // broadcast (structurally; AQE stage reuse usually dedupes it at
-      // runtime, but the single-evaluation shape shouldn't depend on a
-      // runtime optimization firing).
-      g.withColumn("__tot", sum(col("n_docs")).over(
-          org.apache.spark.sql.expressions.Window.rowsBetween(
-            org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.unboundedFollowing)))
-        .withColumn("share_bp",
-          expr("CAST(n_docs * 10000 DIV __tot AS BIGINT)"))
-        .drop("__tot")
-    }),
+    "m27_admission_report" -> ((s, dir) =>
+      admissionReport(docs(s, dir).filter(length(col("text")) >= 1))),
 
 
     // m28 (round 16): PROGRESSIVE JPEG (SOF2) — every doc re-encoded
@@ -848,6 +827,33 @@ private[queries] object MultimodalQueries {
     }),
   )
 
+  /** m27's plan over a non-empty-text docs frame: every payload of the
+    * rendered admission mix through the decode gate, one row per (kind,
+    * admit, reason) with its integer-bp share. The catalog runs it on
+    * `documents`, the stress harness on its replicated corpus. */
+  private[graft] def admissionReport(base: DataFrame): DataFrame = {
+    val M = graft.multimodal.Multimodal
+    val media = M.renderAdmissionMixTable(base).toDF()
+      .withColumn("ts", lit(java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
+    val gated = graft.streaming.EventStreams
+      .mediaDecodeGateStream(media, "doc_id", "media", "ts")
+    val g = gated.groupBy(col("kind"), col("admit"), col("reason"))
+      .agg(count(lit(1)).as("n_docs"))
+    // total via a bounded unpartitioned window over the ≤10-row report
+    // frame (round 19): the former crossJoin(broadcast(g.agg)) carried
+    // the whole render+decode subplan a SECOND time inside the total's
+    // broadcast (structurally; AQE stage reuse usually dedupes it at
+    // runtime, but the single-evaluation shape shouldn't depend on a
+    // runtime optimization firing).
+    g.withColumn("__tot", sum(col("n_docs")).over(
+        org.apache.spark.sql.expressions.Window.rowsBetween(
+          org.apache.spark.sql.expressions.Window.unboundedPreceding,
+          org.apache.spark.sql.expressions.Window.unboundedFollowing)))
+      .withColumn("share_bp",
+        expr("CAST(n_docs * 10000 DIV __tot AS BIGINT)"))
+      .drop("__tot")
+  }
+
   /** The m34 sequence-banded pair machinery over a (doc_id, n_frames,
     * frame_idx, dhash) sampled-frame table: candidates through the m20
     * band recipe applied PER FRAME (4 × 14-bit bands, census capped 2..16
@@ -855,7 +861,7 @@ private[queries] object MultimodalQueries {
     * nominates), verdict = n_frames equality + max Hamming ≤ 4 across the
     * full sampled-sequence join. The verdict join is bounded by
     * |candidates| × frames-per-video; every table is a tiny derived key. */
-  private def aviFrameBandPairs(h: DataFrame): DataFrame = {
+  private[graft] def aviFrameBandPairs(h: DataFrame): DataFrame = {
     val bands = h.select(col("doc_id"), col("n_frames"), col("frame_idx"),
         explode(array((0 until 4).map(k => struct(lit(k).as("band"),
           shiftright(col("dhash"), 14 * k).bitwiseAND(lit(16383L))
@@ -891,7 +897,7 @@ private[queries] object MultimodalQueries {
     * discipline), verdict = Hamming ≤ 4 over the full 56-bit hash. The
     * input is a localCheckpointed tiny table, so the bucket census and
     * both self-join branches never replay decode lineage. */
-  private def dhashBandPairs(h: DataFrame): DataFrame = {
+  private[graft] def dhashBandPairs(h: DataFrame): DataFrame = {
     val bands = h.select(col("doc_id"), col("dhash"),
         explode(array((0 until 4).map(k => struct(lit(k).as("band"),
           shiftright(col("dhash"), 14 * k).bitwiseAND(lit(16383L))

@@ -20,7 +20,7 @@ import graft.sources.Sources
   * decision-boundary sides) whose exact payloads DuckDB recomputes
   * verbatim; ScalaTest keeps the stronger planted-structure ground truth.
   */
-private[queries] object PipelineShared {
+private[graft] object PipelineShared {
 
   private[queries] def docs(s: SparkSession, dir: String): DataFrame =
     Sources.table(s, dir, "documents")
@@ -50,14 +50,16 @@ private[queries] object PipelineShared {
     * re-running the quadratic merge-walk + iterative clustering. */
   private[graft] def dupPairsAndClusters(
       s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    ArtifactStore.get("dup_pairs_clusters", s, dir) {
-      val pairs = Dedup.ngramJaccardPairs(docs(s, dir),
-          "doc_id", "text", "n_chars", threshold = 0.2,
-          maxBucketSize = Some(D03BucketCap))
-        .localCheckpoint()
-      val clusters = Dedup.connectedComponents(pairs, "a_id", "b_id")
-      (pairs, clusters)
-    }
+    ArtifactStore.get("dup_pairs_clusters", s, dir)(dupPairsAndClustersOf(docs(s, dir)))
+
+  /** The unmemoized body of [[dupPairsAndClusters]] over any docs frame
+    * (the stress harness runs it on its replicated corpus). */
+  private[graft] def dupPairsAndClustersOf(docs: DataFrame): (DataFrame, DataFrame) = {
+    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", "n_chars",
+        threshold = 0.2, maxBucketSize = Some(D03BucketCap))
+      .localCheckpoint()
+    (pairs, Dedup.connectedComponents(pairs, "a_id", "b_id"))
+  }
 
   /** The memoized ([[ArtifactStore]]) dedup-survivors frame — the
     * s1→s2→split prefix that BOTH composed corpus builds (p10 and p13)

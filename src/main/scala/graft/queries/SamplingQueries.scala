@@ -11,7 +11,7 @@ import graft.queries.PipelineShared._
   * Split out of the monolithic PipelineQueries in round 11 (pure
   * re-grouping: every entry verbatim; shared machinery lives in
   * [[PipelineShared]], aggregation in [[PipelineQueries]]). */
-private[queries] object SamplingQueries {
+private[graft] object SamplingQueries {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -45,40 +45,7 @@ private[queries] object SamplingQueries {
     // over the quality survivors only, the t04 normalized-md5 corpus
     // probe over the blocklist survivors only — a stage-order slip,
     // double-charge, or share arithmetic bug hash-mismatches.
-    "p24_admission_pipeline" -> ((s, dir) => {
-      import s.implicits._
-      import graft.streaming.AdmissionPipeline
-      import graft.streaming.AdmissionPipeline.Stage
-      val all = docs(s, dir)
-      val delta = all.filter(pmod(col("doc_id"), lit(10)) === 7)
-        .select(col("doc_id"), col("text"))
-      val corpusFps = all.filter(pmod(col("doc_id"), lit(10)) =!= 7)
-        .select(TA.fingerprint(col("text")).as("__cfp")).distinct()
-      val stages = Seq(
-        // rowLocal, not verdict (round 19): qualityFilter is per-row
-        // pure, so the verdict-join stitch-back paid two exchanges for
-        // values a scan-side Column computes in place (qualityKeep /
-        // qualityReasons are the same rules — Round19Spec pins no-drift)
-        Stage.rowLocal("quality", TA.qualityKeep(col("text")),
-          TA.qualityReasons(col("text"))),
-        Stage.verdict("blocklist", "doc_id") { df =>
-          TA.blocklistFilter(df, "doc_id", "text",
-              Seq("slow", "merge").toDF("word"))
-            .select(col("doc_id"), col("keep").as("admit"),
-              when(col("keep"), lit("")).otherwise(concat(
-                lit("blocklisted tokens: "), col("n_flagged"))).as("reason"))
-        },
-        Stage.verdict("exact_dup", "doc_id") { df =>
-          df.select(col("doc_id"), TA.fingerprint(col("text")).as("__fp"))
-            .join(corpusFps.withColumn("__hit", lit(1)),
-              col("__fp") === col("__cfp"), "left")
-            .select(col("doc_id"), col("__hit").isNull.as("admit"),
-              when(col("__hit").isNull, lit(""))
-                .otherwise(lit("exact duplicate already in corpus"))
-                .as("reason"))
-        })
-      AdmissionPipeline.report(AdmissionPipeline.run(delta, stages))
-    }),
+    "p24_admission_pipeline" -> ((s, dir) => admissionPipeline(docs(s, dir))),
 
 
     // p21: Bloom-filter decontamination — p11's leak class when the
@@ -445,6 +412,45 @@ private[queries] object SamplingQueries {
                 CAST(1 AS BIGINT) AS fp_ok
          FROM g JOIN sp USING (doc_id) LEFT JOIN hit ON g.doc_id = hit.doc_id
          WHERE sp.split = 'train'"""
+
+  /** p24's plan over a docs frame: the %10 = 7 delta through quality →
+    * blocklist → corpus-exact-dup, reported per disposition class. The
+    * catalog runs it on `documents`, the stress harness on its replicated
+    * corpus. */
+  private[graft] def admissionPipeline(all: DataFrame): DataFrame = {
+    val spark = all.sparkSession
+    import spark.implicits._
+    import graft.streaming.AdmissionPipeline
+    import graft.streaming.AdmissionPipeline.Stage
+    val delta = all.filter(pmod(col("doc_id"), lit(10)) === 7)
+      .select(col("doc_id"), col("text"))
+    val corpusFps = all.filter(pmod(col("doc_id"), lit(10)) =!= 7)
+      .select(TA.fingerprint(col("text")).as("__cfp")).distinct()
+    val stages = Seq(
+      // rowLocal, not verdict (round 19): qualityFilter is per-row
+      // pure, so the verdict-join stitch-back paid two exchanges for
+      // values a scan-side Column computes in place (qualityKeep /
+      // qualityReasons are the same rules — Round19Spec pins no-drift)
+      Stage.rowLocal("quality", TA.qualityKeep(col("text")),
+        TA.qualityReasons(col("text"))),
+      Stage.verdict("blocklist", "doc_id") { df =>
+        TA.blocklistFilter(df, "doc_id", "text",
+            Seq("slow", "merge").toDF("word"))
+          .select(col("doc_id"), col("keep").as("admit"),
+            when(col("keep"), lit("")).otherwise(concat(
+              lit("blocklisted tokens: "), col("n_flagged"))).as("reason"))
+      },
+      Stage.verdict("exact_dup", "doc_id") { df =>
+        df.select(col("doc_id"), TA.fingerprint(col("text")).as("__fp"))
+          .join(corpusFps.withColumn("__hit", lit(1)),
+            col("__fp") === col("__cfp"), "left")
+          .select(col("doc_id"), col("__hit").isNull.as("admit"),
+            when(col("__hit").isNull, lit(""))
+              .otherwise(lit("exact duplicate already in corpus"))
+              .as("reason"))
+      })
+    AdmissionPipeline.report(AdmissionPipeline.run(delta, stages))
+  }
 
   val oracleSql: Map[String, String] = Map(
 

@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.artifacts.ArtifactStore
+
 /** Table registry over the driver's parquet testdata (TESTDATA.md).
   *
   * Registers each `<dir>/<table>.parquet` as a temp view so the engine's
@@ -10,37 +12,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale notes: a temp view over a parquet path is just a logical plan —
   * Catalyst prunes columns and pushes filters into the scan. The plan is
-  * memoized per (session, dir, table): `spark.read.parquet` lists files and
-  * reads footers for schema inference, which on object storage is a LIST +
-  * GET per call — a catalog would do that once, so the cache restores
-  * catalog-like behavior. The testdata files are immutable, so a cached
-  * plan never goes stale.
+  * memoized in [[graft.artifacts.ArtifactStore]] as kind `source_table`,
+  * keyed on the directory: `spark.read.parquet` lists files and reads
+  * footers for schema inference, which on object storage is a LIST + GET
+  * per call — a catalog would do that once, so the memo restores
+  * catalog-like behavior. A session that rewrites a table in place calls
+  * `ArtifactStore.invalidate(session, dir)` to drop the old listing.
   */
 object Sources {
   val tableNames: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** (session, dir, table) -> resolved plan. Only POSITIVE lookups are
-    * memoized: caching "file absent" would make a table created later in
-    * the session permanently invisible. Entries for stopped sessions are
-    * evicted on access so test suites that churn sessions don't accumulate
-    * dead plans.
-    */
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
-  private def cached(spark: SparkSession, dir: String, name: String): Option[DataFrame] = {
-    cache.keysIterator
-      .filter(_._1.sparkContext.isStopped)
-      .foreach(cache.remove)
-    val key = (spark, dir, name)
-    cache.get(key).orElse {
-      val loaded = load(spark, dir, name)
-      loaded.foreach(cache.put(key, _))
-      loaded
-    }
-  }
 
   /** Read one table as a DataFrame (no view registration).
     *
@@ -60,8 +42,9 @@ object Sources {
     * granularity or never emit the raw timestamp).
     */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    cached(spark, dir, name).getOrElse(
-      throw new java.io.FileNotFoundException(s"$dir/$name.parquet"))
+    // A missing table throws inside the build, so only tables that exist
+    // are memoized: one created later in the session stays visible.
+    ArtifactStore.get("source_table", spark, dir, Seq(name))(load(spark, dir, name))
 
   private val NanosAsLongKey = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -84,29 +67,28 @@ object Sources {
     * session/dir/table), so the serialization costs nothing steady-state. */
   private val loadLock = new Object
 
-  private def load(spark: SparkSession, dir: String, name: String): Option[DataFrame] = loadLock.synchronized {
+  private def load(spark: SparkSession, dir: String, name: String): DataFrame = loadLock.synchronized {
     val path = s"$dir/$name.parquet"
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) None
-    else {
-      val raw =
-        try spark.read.parquet(path)
-        catch {
-          // ILLEGAL_PARQUET_TYPE on TIMESTAMP(NANOS): take the legacy
-          // read path, but only after the footer CONFIRMS a nanos column
-          // (any other analysis failure rethrows untouched).
-          case e: org.apache.spark.sql.AnalysisException =>
-            // If the footer inspection itself fails, surface the ORIGINAL
-            // read error, not the inspection's.
-            val nanosCols =
-              try nanosAnnotatedColumns(spark, path)
-              catch { case scala.util.control.NonFatal(_) => Set.empty[String] }
-            if (nanosCols.isEmpty) throw e
-            readWithLegacyNanos(spark, path, nanosCols)
-        }
-      Some(normalizeTimestamps(spark, raw, name))
-    }
+    if (!fs.exists(new org.apache.hadoop.fs.Path(path)))
+      throw new java.io.FileNotFoundException(path)
+    val raw =
+      try spark.read.parquet(path)
+      catch {
+        // ILLEGAL_PARQUET_TYPE on TIMESTAMP(NANOS): take the legacy
+        // read path, but only after the footer CONFIRMS a nanos column
+        // (any other analysis failure rethrows untouched).
+        case e: org.apache.spark.sql.AnalysisException =>
+          // If the footer inspection itself fails, surface the ORIGINAL
+          // read error, not the inspection's.
+          val nanosCols =
+            try nanosAnnotatedColumns(spark, path)
+            catch { case scala.util.control.NonFatal(_) => Set.empty[String] }
+          if (nanosCols.isEmpty) throw e
+          readWithLegacyNanos(spark, path, nanosCols)
+      }
+    normalizeTimestamps(spark, raw, name)
   }
 
   /** Column names in the first data file's footer annotated
@@ -224,7 +206,8 @@ object Sources {
   /** Register every testdata table that exists under `dir` as a temp view. */
   def registerAll(spark: SparkSession, dir: String): Unit =
     tableNames.foreach { t =>
-      cached(spark, dir, t).foreach(_.createOrReplaceTempView(t))
+      try table(spark, dir, t).createOrReplaceTempView(t)
+      catch { case _: java.io.FileNotFoundException => () }
     }
 
   /** Read a non-parquet lake file. `schema` is REQUIRED for csv/json:

@@ -55,10 +55,6 @@ object BuildTimer {
     }
   }
 
-  /** Unlabeled form kept for callers outside the bench's artifact
-    * taxonomy; accumulates under `"other"`. */
-  def time[T](f: => T): T = time("other")(f)
-
   def totalSeconds: Double = acc.get() / 1e9
 
   /** Per-label seconds, descending — the `warmup_artifacts` payload. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, SimilaritySearch}
+import graft.queries.{MultimodalQueries, PipelineShared, SamplingQueries}
 
 /** Scale-up stress harness: replicates the sf0.1 tables N× (with key
   * offsets, so cardinalities really grow) and times the operators whose
@@ -537,28 +538,16 @@ object Stress {
     // this case times it). Admitted tokens/packs grow exactly linearly:
     // per-language budgets fill, so output ≈ budget ∝ factor.
     time("corpus_build") {
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", "n_chars",
-          threshold = 0.2,
-          maxBucketSize = Some(graft.queries.PipelineQueries.D03BucketCap))
-        .localCheckpoint()
-      val clusters = Dedup.connectedComponents(pairs, "a_id", "b_id")
-      graft.queries.PipelineQueries
-        .corpusBuildFrom(docs, clusters, budget = 3000L * factor)
-        .count()
+      val (_, clusters) = PipelineShared.dupPairsAndClustersOf(docs)
+      PipelineShared.corpusBuildFrom(docs, clusters, budget = 3000L * factor).count()
     }
     // The v2 composition (p13): adds the 13-gram decontamination stage and
     // the epoch-repeat tail to the same chain — the delta over
     // corpus_build must stay bounded by the gram probe (matches ∝ eval
     // population) plus a map-only explode.
     time("corpus_build_v2") {
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", "n_chars",
-          threshold = 0.2,
-          maxBucketSize = Some(graft.queries.PipelineQueries.D03BucketCap))
-        .localCheckpoint()
-      val clusters = Dedup.connectedComponents(pairs, "a_id", "b_id")
-      graft.queries.PipelineQueries
-        .corpusBuildV2From(docs, clusters, budget = 3000L * factor)
-        .count()
+      val (_, clusters) = PipelineShared.dupPairsAndClustersOf(docs)
+      PipelineShared.corpusBuildV2From(docs, clusters, budget = 3000L * factor).count()
     }
     // The v3 composition (p16): v2 with the mixture stage swapped for the
     // target-mixture closed-form solve. Cost profile must match v2 — the
@@ -566,14 +555,8 @@ object Stress {
     // SAME lang-keyed exchange, so any superlinear delta here means the
     // stated-mixture stage added a corpus shuffle it must not have.
     time("corpus_build_v3") {
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", "n_chars",
-          threshold = 0.2,
-          maxBucketSize = Some(graft.queries.PipelineQueries.D03BucketCap))
-        .localCheckpoint()
-      val clusters = Dedup.connectedComponents(pairs, "a_id", "b_id")
-      graft.queries.PipelineQueries
-        .corpusBuildV3From(docs, clusters, budget = 3000L * factor)
-        .count()
+      val (_, clusters) = PipelineShared.dupPairsAndClustersOf(docs)
+      PipelineShared.corpusBuildV3From(docs, clusters, budget = 3000L * factor).count()
     }
     // 13-gram decontamination with the PRODUCTION shape: the eval side is
     // a PINNED curated set (base-corpus eval split) while the train corpus
@@ -1134,10 +1117,6 @@ object Stress {
         .toDF().agg(sum(col("gray_sum"))).collect()
       docs.filter(length(col("text")) >= 1).count()
     }
-    // m20: lossy-variant near-dup — every 40th doc re-encoded at
-    // quantizer scale 2, candidates through 4×14-bit LSH bands over the
-    // decoded dHash (bucket cap 16), Hamming ≤ 4 verdict. The banded
-    // join is the s-family topology; decode cost rides the scan.
     // m28: PROGRESSIVE JPEG render+decode — the round-16 multi-scan
     // coefficient-store path (even ids also 4:2:0). Map-only like
     // jpeg_decode: encode precomputes per-block coefficients, decode
@@ -1179,16 +1158,13 @@ object Stress {
     // every payload genuinely decoded scan-side (incl. every AVI frame),
     // one 9-row aggregate.
     time("admission_report") {
-      val M = graft.multimodal.Multimodal
-      val media = M.renderAdmissionMixTable(
-          docs.filter(length(col("text")) >= 1)).toDF()
-        .withColumn("ts", lit(java.sql.Timestamp.valueOf("2026-01-01 00:00:00")))
-      graft.streaming.EventStreams
-        .mediaDecodeGateStream(media, "doc_id", "media", "ts")
-        .groupBy(col("kind"), col("admit"), col("reason"))
-        .agg(count(lit(1)).as("n_docs")).collect()
+      MultimodalQueries.admissionReport(docs.filter(length(col("text")) >= 1)).collect()
       docs.filter(length(col("text")) >= 1).count()
     }
+    // m20: lossy-variant near-dup — every 40th doc re-encoded at
+    // quantizer scale 2, candidates through 4×14-bit LSH bands over the
+    // decoded dHash (bucket cap 16), Hamming ≤ 4 verdict. The banded
+    // join is the s-family topology; decode cost rides the scan.
     time("lossy_variant_dedup") {
       val M = graft.multimodal.Multimodal
       val base = docs.filter(length(col("text")) >= 1)
@@ -1200,25 +1176,7 @@ object Stress {
       // render+decode lineage replays per self-join branch.
       val h = M.decodedDHash(q1.unionByName(q2))
         .select(col("doc_id"), col("dhash")).localCheckpoint()
-      val bands = h.select(col("doc_id"), col("dhash"),
-          explode(array((0 until 4).map(k => struct(lit(k).as("band"),
-            shiftright(col("dhash"), 14 * k).bitwiseAND(lit(16383L))
-              .as("bucket"))): _*)).as("bk"))
-        .select(col("doc_id"), col("dhash"),
-          col("bk.band").as("band"), col("bk.bucket").as("bucket"))
-      val keep = bands.groupBy(col("band"), col("bucket"))
-        .agg(count(lit(1)).as("n")).filter(col("n").between(2, 16))
-        .select(col("band"), col("bucket"))
-      val k = bands.join(keep, Seq("band", "bucket"))
-      k.as("a").join(k.as("b"),
-          col("a.band") === col("b.band") &&
-            col("a.bucket") === col("b.bucket") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-          col("a.dhash").as("ah"), col("b.dhash").as("bh"))
-        .distinct()
-        .filter(expr("bit_count(ah ^ bh)") <= 4)
-        .count()
+      MultimodalQueries.dhashBandPairs(h).count()
     }
     // q55: windowed distinct with a ROWS frame — state is O(frame) per
     // row; the exchange is the user_id hash partition, linear in events.
@@ -1263,34 +1221,7 @@ object Stress {
           .select(col("doc_id"), col("n_frames"), col("frame_idx"),
             col("dhash")))
         .localCheckpoint()
-      val bands = h.select(col("doc_id"), col("n_frames"), col("frame_idx"),
-          explode(array((0 until 4).map(k => struct(lit(k).as("band"),
-            shiftright(col("dhash"), 14 * k).bitwiseAND(lit(16383L))
-              .as("bucket"))): _*)).as("bk"))
-        .select(col("doc_id"), col("n_frames"), col("frame_idx"),
-          col("bk.band").as("band"), col("bk.bucket").as("bucket"))
-      val keep = bands.groupBy(col("frame_idx"), col("band"), col("bucket"))
-        .agg(count(lit(1)).as("n")).filter(col("n").between(2, 16))
-        .select(col("frame_idx"), col("band"), col("bucket"))
-      val k = bands.join(keep, Seq("frame_idx", "band", "bucket"))
-      val cand = k.as("a").join(k.as("b"),
-          col("a.frame_idx") === col("b.frame_idx") &&
-            col("a.band") === col("b.band") &&
-            col("a.bucket") === col("b.bucket") &&
-            col("a.doc_id") < col("b.doc_id") &&
-            col("a.n_frames") === col("b.n_frames"))
-        .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-          col("a.n_frames").as("n_frames"))
-        .distinct()
-      val fa = h.select(col("doc_id").as("a_id"), col("frame_idx"),
-        col("dhash").as("ah"))
-      val fb = h.select(col("doc_id").as("b_id"), col("frame_idx"),
-        col("dhash").as("bh"))
-      cand.join(fa, Seq("a_id")).join(fb, Seq("b_id", "frame_idx"))
-        .groupBy(col("a_id"), col("b_id"), col("n_frames"))
-        .agg(max(expr("bit_count(ah ^ bh)")).cast("long").as("mh"))
-        .filter(col("mh") <= 4)
-        .count()
+      MultimodalQueries.aviFrameBandPairs(h).count()
     }
     // m35: ingest video-dup probe — the corpus fingerprint artifact
     // builds UNTIMED (its cost is avi_frame_sample's curve); the timed
@@ -1359,38 +1290,7 @@ object Stress {
     // Both populations grow with factor; every stage is scan-side or an
     // id/fingerprint equi-join, so the curve must stay linear.
     time("admission_pipeline") {
-      import graft.streaming.AdmissionPipeline
-      import graft.streaming.AdmissionPipeline.Stage
-      val TA = graft.operators.TextAnalysis
-      val spark2 = spark
-      import spark2.implicits._
-      val delta = docs.filter(pmod(col("doc_id"), lit(10)) === 7)
-        .select(col("doc_id"), col("text"))
-      val corpusFps = docs.filter(pmod(col("doc_id"), lit(10)) =!= 7)
-        .select(TA.fingerprint(col("text")).as("__cfp")).distinct()
-      val stages = Seq(
-        Stage.verdict("quality", "doc_id") { df =>
-          TA.qualityFilter(df, "doc_id", "text")
-            .select(col("doc_id"), col("keep").as("admit"),
-              col("reasons").as("reason"))
-        },
-        Stage.verdict("blocklist", "doc_id") { df =>
-          TA.blocklistFilter(df, "doc_id", "text",
-              Seq("slow", "merge").toDF("word"))
-            .select(col("doc_id"), col("keep").as("admit"),
-              when(col("keep"), lit("")).otherwise(concat(
-                lit("blocklisted tokens: "), col("n_flagged"))).as("reason"))
-        },
-        Stage.verdict("exact_dup", "doc_id") { df =>
-          df.select(col("doc_id"), TA.fingerprint(col("text")).as("__fp"))
-            .join(corpusFps.withColumn("__hit", lit(1)),
-              col("__fp") === col("__cfp"), "left")
-            .select(col("doc_id"), col("__hit").isNull.as("admit"),
-              when(col("__hit").isNull, lit(""))
-                .otherwise(lit("exact duplicate already in corpus"))
-                .as("reason"))
-        })
-      AdmissionPipeline.report(AdmissionPipeline.run(delta, stages))
+      SamplingQueries.admissionPipeline(docs)
         .agg(sum(col("n_docs"))).collect()(0).getLong(0)
     }
     time("semantic_dedup") {

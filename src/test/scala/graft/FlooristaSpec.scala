@@ -162,7 +162,7 @@ class FlooristaSpec extends SparkSpecBase {
     // Floorista -> PartitionedParquetSink path as every reference dump —
     // dated partitioned layout, chunked gzip parquet, append semantics.
     val lake = "/root/testdata/sf0.001"
-    graft.queries.PipelineQueries.corpusBuild(spark, lake)
+    graft.queries.PipelineShared.corpusBuild(spark, lake)
       .createOrReplaceTempView("corpus_build")
     val (code, root) = run(
       """- prefix: corpora/main
@@ -179,7 +179,7 @@ class FlooristaSpec extends SparkSpecBase {
       s"chunksize ceiling violated by ${f.getName}"))
 
     // Read-back equality against the frame that was dumped.
-    val expected = graft.queries.PipelineQueries.corpusBuild(spark, lake)
+    val expected = graft.queries.PipelineShared.corpusBuild(spark, lake)
       .collect().map(_.toSeq).toSet
     val back = spark.read.parquet(leaf.getPath)
       .select("doc_id", "lang", "n_tokens", "pack_id", "bucket", "split")

@@ -1,0 +1,77 @@
+package graft
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions._
+
+import graft.operators.{Sampling, TextAnalysis}
+
+/** Reference formulations the shipped operators replaced, kept only as the
+  * twins specs pin the shipped forms against (Round12Spec): each computes
+  * the same result the slow, obvious way. Never call them on
+  * production-sized inputs. */
+object ReferenceTwins {
+
+  /** The round-7 HOF formulation of [[Sampling.wordNgrams]]. The
+    * one-element-`transform` binds the token array once per row (the
+    * nested-HOF re-evaluation trap — measured ~6× on p11 at sf0.1);
+    * `sequence(1, k)` produces a DESCENDING `[1, 0]` when k < 1, so the
+    * bound is checked before the range exists. */
+  def wordNgramsHof(text: Column, n: Int): Column = {
+    require(n >= 2, s"n-gram size must be >= 2, got $n")
+    val ws0 = filter(split(text, " "), t => t =!= "")
+    element_at(
+      transform(array(ws0), ws =>
+        when(size(ws) >= n,
+          array_distinct(transform(
+            sequence(lit(1), size(ws) - lit(n - 1)),
+            i => concat_ws(" ", slice(ws, i, lit(n))))))
+          .otherwise(array().cast("array<string>"))),
+      1)
+  }
+
+  /** The round-11 shape of [[Sampling.buildBloomIndex]]: positions fan out
+    * scan-side via the Column `bloomPositions` and reduce to
+    * (word, bit_or) rows — quadratically more row traffic than the
+    * aggregate build, which must produce word-for-word equal bits. */
+  def buildBloomIndexReference(grams: DataFrame, gramCol: String,
+                               mBits: Int, k: Int = 16): Sampling.BloomIndex = {
+    val m = mBits
+    val masks = typedlit(Sampling.BitMasks)
+    val pos = grams.select(
+      explode(array(Sampling.bloomPositions(col(gramCol), m, k): _*)).as("pos"))
+    val words = pos.select(
+        shiftright(col("pos"), 6).cast("int").as("w"),
+        element_at(masks, pmod(col("pos"), lit(64)).cast("int") + 1).as("mk"))
+      .groupBy(col("w")).agg(expr("bit_or(mk)").as("bits"))
+      .collect()
+    val bits = new Array[Long](m / 64)
+    words.foreach(r => bits(r.getInt(0)) = r.getLong(1))
+    Sampling.BloomIndex(bits, m, k, grams.select(col(gramCol)).distinct().count())
+  }
+
+  /** The explode → broadcast-join → aggregate formulation
+    * [[Sampling.dsirScoreAgainst]] replaced. */
+  def dsirScoreAgainstJoined(docs: DataFrame, idCol: String, textCol: String,
+                             model: Sampling.DsirModel): DataFrame =
+    Sampling.dsirGrams(docs, textCol, lit(false).as("__t"), model.buckets, Seq(idCol))
+      .join(broadcast(model.weights.select(col("bucket"), col("w_bp"))),
+        Seq("bucket"))
+      .groupBy(col(idCol))
+      .agg(count(lit(1)).as("n_grams"), sum(col("w_bp")).as("sum_w_bp"))
+      .withColumn("dsir_w",
+        round(col("sum_w_bp").cast("double") / col("n_grams").cast("double"), 4))
+
+  /** The explode → broadcast-join → aggregate formulation
+    * [[TextAnalysis.scoreQualityClassifier]] replaced. */
+  def scoreQualityClassifierJoined(docs: DataFrame, idCol: String, textCol: String,
+                                   clf: TextAnalysis.QualityClassifier): DataFrame =
+    Sampling.dsirGrams(docs, textCol, lit(false).as("__t"), clf.buckets, Seq(idCol))
+      .join(broadcast(clf.weights.select(col("bucket"), col("w"))),
+        Seq("bucket"))
+      .groupBy(col(idCol))
+      .agg(count(lit(1)).as("n_grams"), sum(col("w")).as("__sw"))
+      .select(col(idCol), col("n_grams"),
+        round(lit(1.0) / (lit(1.0) +
+          exp(-(lit(clf.bias) + col("__sw") / col("n_grams").cast("double")))),
+          4).as("quality"))
+}

@@ -253,8 +253,8 @@ class Round10Spec extends SparkSpecBase {
 
   test("p16 exchange ledger: the mixture swap adds no corpus shuffle") {
     val base = graft.sources.Sources.table(spark, sfDir, "documents")
-    val clusters = graft.queries.PipelineQueries.dupPairsAndClusters(spark, sfDir)._2
-    val built = graft.queries.PipelineQueries.corpusBuildV3From(base, clusters,
+    val clusters = graft.queries.PipelineShared.dupPairsAndClusters(spark, sfDir)._2
+    val built = graft.queries.PipelineShared.corpusBuildV3From(base, clusters,
       budget = 3000L, materialize = false)
     built.queryExecution.toRdd.count()
     // p13's allowlist verbatim: the target-mixture solve replaces the
@@ -282,8 +282,8 @@ class Round10Spec extends SparkSpecBase {
     // total modulo content-hash Bernoulli noise (deterministic for fixed
     // data, so the band below is a fixed fact of sf0.001, not a flake).
     val base = graft.sources.Sources.table(spark, sfDir, "documents")
-    val clusters = graft.queries.PipelineQueries.dupPairsAndClusters(spark, sfDir)._2
-    val out = graft.queries.PipelineQueries
+    val clusters = graft.queries.PipelineShared.dupPairsAndClusters(spark, sfDir)._2
+    val out = graft.queries.PipelineShared
       .corpusBuildV3From(base, clusters, budget = 1000000L)
       .filter(col("epoch_idx") === 1) // one row per admitted doc
       .groupBy(col("lang")).agg(sum(col("n_tokens")).cast("long").as("adm"))
@@ -293,7 +293,7 @@ class Round10Spec extends SparkSpecBase {
     val totals = {
       // totals = admitted/rate is circular; recompute via the v2 build's
       // pre-mix stage equivalent: quality+dedup+p03+p11 survivors.
-      val withSplit = graft.queries.PipelineQueries
+      val withSplit = graft.queries.PipelineShared
         .dedupSurvivorsWithSplit(base, clusters, materialize = false)
       val cont = graft.operators.Sampling
         .exactContamination(withSplit, "doc_id", "text", "split")

@@ -96,7 +96,7 @@ class Round12Spec extends SparkSpecBase {
     Seq(2, 3, 13).foreach { n =>
       val drift = docs.select(col("doc_id"),
           Sampling.wordNgrams(col("text"), n).as("e"),
-          Sampling.wordNgramsHof(col("text"), n).as("h"))
+          ReferenceTwins.wordNgramsHof(col("text"), n).as("h"))
         .filter(col("e") =!= col("h"))
       assert(drift.isEmpty,
         s"n=$n drift: ${drift.select(col("doc_id")).take(3).toSeq}")
@@ -112,7 +112,7 @@ class Round12Spec extends SparkSpecBase {
     val grams = gramFrame(4000, "agg")
     val m = 1 << 17
     val fast = Sampling.buildBloomIndex(grams, "gram", mBits = m)
-    val ref = Sampling.buildBloomIndexReference(grams, "gram", mBits = m)
+    val ref = ReferenceTwins.buildBloomIndexReference(grams, "gram", mBits = m)
     assert(java.util.Arrays.equals(fast.bits, ref.bits),
       "aggregate build drifted from the bloomPositions reference")
     assert(fast.mBits == ref.mBits && fast.k == ref.k)
@@ -520,7 +520,7 @@ class Round12Spec extends SparkSpecBase {
       isTarget = col("source") === "src0", buckets = 256)
     val a = Sampling.dsirScoreAgainst(d, "doc_id", "text", model)
       .as[(Long, Long, Long, Double)].collect().toSet
-    val b = Sampling.dsirScoreAgainstJoined(d, "doc_id", "text", model)
+    val b = ReferenceTwins.dsirScoreAgainstJoined(d, "doc_id", "text", model)
       .as[(Long, Long, Long, Double)].collect().toSet
     assert(a == b, "integer-bp weights: the double sum must be exact")
     assert(a.nonEmpty)
@@ -533,7 +533,7 @@ class Round12Spec extends SparkSpecBase {
     val a = graft.operators.TextAnalysis
       .scoreQualityClassifier(d, "doc_id", "text", clf)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    val b = graft.operators.TextAnalysis
+    val b = ReferenceTwins
       .scoreQualityClassifierJoined(d, "doc_id", "text", clf)
       .as[(Long, Long, Double)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
     assert(a.keySet == b.keySet && a.nonEmpty)

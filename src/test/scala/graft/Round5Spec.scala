@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, SimilaritySearch, TextAnalysis => TA}
 import graft.plans.GroupTopK
-import graft.queries.PipelineQueries
+import graft.queries.{PipelineQueries, PipelineShared}
 
 /** Round-5 hardening: the shared memoized components frame, the capped d03
   * production form, the offline MIPS index, and the GroupTopK collision /
@@ -36,18 +36,18 @@ class Round5Spec extends SparkSpecBase {
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "uno dos tres cuatro cinco seis siete")))
 
-    val (pairsA1, clustersA1) = PipelineQueries.dupPairsAndClusters(spark, dirA)
-    val (pairsA2, clustersA2) = PipelineQueries.dupPairsAndClusters(spark, dirA)
+    val (pairsA1, clustersA1) = PipelineShared.dupPairsAndClusters(spark, dirA)
+    val (pairsA2, clustersA2) = PipelineShared.dupPairsAndClusters(spark, dirA)
     // Cache HIT: the identical materialized frames come back, not a rebuild.
     assert(pairsA1 eq pairsA2, "pairs frame must be memoized per (session, dir)")
     assert(clustersA1 eq clustersA2, "clusters frame must be memoized per (session, dir)")
 
-    val (pairsB, clustersB) = PipelineQueries.dupPairsAndClusters(spark, dirB)
+    val (pairsB, clustersB) = PipelineShared.dupPairsAndClusters(spark, dirB)
     assert(!(pairsB eq pairsA1), "a different dir must build its own frame")
 
     // Explicit invalidation forces a rebuild on the next read.
     PipelineQueries.invalidateDupCache(spark, dirA)
-    val (pairsA3, _) = PipelineQueries.dupPairsAndClusters(spark, dirA)
+    val (pairsA3, _) = PipelineShared.dupPairsAndClusters(spark, dirA)
     assert(!(pairsA3 eq pairsA1), "invalidate must drop the memoized frame")
 
     // And each dir's content is its own: A has the planted pair, B none.
@@ -65,7 +65,7 @@ class Round5Spec extends SparkSpecBase {
       (4L, "p q r s t u v w x z")))
     // d07 emits the components; d10 aggregates them; both must agree with
     // the memoized frame (same object underneath, so they cannot drift).
-    val clusters = PipelineQueries.dupPairsAndClusters(spark, dir)._2
+    val clusters = PipelineShared.dupPairsAndClusters(spark, dir)._2
     val d07 = PipelineQueries.queries("d07_dup_clusters")(spark, dir)
     assert(d07.exceptAll(clusters).isEmpty && clusters.exceptAll(d07).isEmpty)
     val d10 = PipelineQueries.queries("d10_dup_rate")(spark, dir)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{Dedup, JoinStrategies, SimilaritySearch}
-import graft.queries.PipelineQueries
+import graft.queries.{PipelineQueries, PipelineShared}
 
 /** Round-7 additions: the automated MinHashIndex compaction lifecycle
   * (bounded lineage, probe invariance, full cache release), the `#`
@@ -181,11 +181,11 @@ class Round7Spec extends SparkSpecBase {
 
   test("p10 exchange ledger: no corpus shuffle is keyed on doc_id") {
     val base = graft.sources.Sources.table(spark, dir, "documents")
-    val clusters = PipelineQueries.dupPairsAndClusters(spark, dir)._2
+    val clusters = PipelineShared.dupPairsAndClusters(spark, dir)._2
     // materialize = false: one plan tree, so EVERY exchange of the
     // composition is visible (a localCheckpoint hides its upstream as an
     // opaque RDD scan).
-    val built = PipelineQueries.corpusBuildFrom(base, clusters,
+    val built = PipelineShared.corpusBuildFrom(base, clusters,
       budget = 3000L, materialize = false)
     assert(built.queryExecution.toRdd.count() > 0)
     val exchanges = shuffleExchanges(built)
@@ -240,12 +240,12 @@ class Round7Spec extends SparkSpecBase {
       Dedup.connectedComponents(
         Dedup.ngramJaccardPairs(docs, "doc_id", "text", "n_chars",
             threshold = 0.2,
-            maxBucketSize = Some(PipelineQueries.D03BucketCap))
+            maxBucketSize = Some(PipelineShared.D03BucketCap))
           .localCheckpoint(),
         "a_id", "b_id")
     def measure(k: Int): (Long, Long) = {
       val docs = replicated(k)
-      val out = PipelineQueries
+      val out = PipelineShared
         .corpusBuildFrom(docs, clustersOf(docs), budget = 3000L * k)
         .agg(sum(col("n_tokens")).cast("long"),
           (max(col("pack_id")) + 1).cast("long"))
@@ -264,8 +264,8 @@ class Round7Spec extends SparkSpecBase {
 
   test("p13 exchange ledger and epoch invariants") {
     val base = graft.sources.Sources.table(spark, dir, "documents")
-    val clusters = PipelineQueries.dupPairsAndClusters(spark, dir)._2
-    val built = PipelineQueries.corpusBuildV2From(base, clusters,
+    val clusters = PipelineShared.dupPairsAndClusters(spark, dir)._2
+    val built = PipelineShared.corpusBuildV2From(base, clusters,
       budget = 3000L, materialize = false)
     assert(built.queryExecution.toRdd.count() > 0)
     // Ledger = p10's allowlist + the gram stage: its broadcast probe's
@@ -288,7 +288,7 @@ class Round7Spec extends SparkSpecBase {
     // Epoch invariants on the real output: repeats in 1..4, epochs dense
     // per doc, and the doc-level frame equals p10's shape semantics
     // (every admitted doc appears exactly `repeats` times).
-    val rows = PipelineQueries.corpusBuildV2From(base, clusters, budget = 3000L)
+    val rows = PipelineShared.corpusBuildV2From(base, clusters, budget = 3000L)
       .select(col("doc_id"), col("repeats"), col("epoch_idx"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(rows.nonEmpty)
