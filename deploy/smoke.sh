@@ -80,7 +80,17 @@ totals = [r for r in recs if r["record"] == "totals"]
 assert len(totals) == 1 and totals[0]["dumps"] == 2 and totals[0]["rows"] == 100, totals
 print("dump records:", json.dumps(series), json.dumps(none), sep="\n  ")
 PY
-echo "SMOKE OK (default contract: dated layout, written 100 rows, empty marker)"
+# Local roots are written through graft.sink.ForkFreeLocalFileSystem, named
+# in the write job's Hadoop conf and loaded from the packaged jar: the modes
+# must be Hadoop's defaults under umask 022.
+SERIES_DIR=$(ls -d "$OUT"/bucket3/dumps/series/year_created=*/month_created=*/day_created=*)
+[ "$(stat -c %A "$SERIES_DIR")" = drwxr-xr-x ] \
+  || { echo "SMOKE FAIL: $SERIES_DIR has mode $(stat -c %A "$SERIES_DIR"), not drwxr-xr-x"; exit 1; }
+for f in "$SERIES_DIR"/part-*; do
+  [ "$(stat -c %A "$f")" = -rw-r--r-- ] \
+    || { echo "SMOKE FAIL: $f has mode $(stat -c %A "$f"), not -rw-r--r--"; exit 1; }
+done
+echo "SMOKE OK (default contract: dated layout, written 100 rows, empty marker, rw-r--r-- parts)"
 
 # ---- optional leg: live PostgreSQL through the reference's env contract ----
 # The reference's only source is Postgres (POSTGRES_SERVICE_HOST etc.,

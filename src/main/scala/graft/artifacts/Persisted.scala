@@ -8,6 +8,8 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sink.ForkFreeLocalFileSystem
+
 /** A standing artifact read back by [[Persisted.load]]: its frames and the
   * scalar build parameters it was saved with. */
 final class Persisted private (params: JsonNode, frames: Map[String, DataFrame]) {
@@ -49,6 +51,7 @@ object Persisted {
       s"an artifact is saved with mode overwrite or append, got $mode")
     val spark = frames.headOption.fold(SparkSession.active)(_._2.sparkSession)
     val (fs, root) = open(spark, dir)
+    val local = ForkFreeLocalFileSystem.options(root, spark.sparkContext.hadoopConfiguration)
     val manifest = new Path(root, ManifestName)
     val json = mapper.writeValueAsString(Map("kind" -> kind, "version" -> Version,
       "params" -> params.asJava, "frames" -> frames.map(_._1).asJava).asJava)
@@ -59,7 +62,7 @@ object Persisted {
           s"cannot append to $dir: it holds $standing, this batch would save $json")
     }
     fs.delete(manifest, false)
-    frames.foreach { case (name, df) => df.write.mode(mode).parquet(s"$dir/$name") }
+    frames.foreach { case (name, df) => df.write.mode(mode).options(local).parquet(s"$dir/$name") }
     val tmp = new Path(root, ManifestName + ".tmp")
     val out = fs.create(tmp, true)
     try out.write(json.getBytes(UTF_8)) finally out.close()
@@ -78,9 +81,11 @@ object Persisted {
     new Persisted(m.get("params"), frames)
   }
 
+  /** A local `dir` goes through [[ForkFreeLocalFileSystem]], here and in
+    * the frame writes; other schemes get Hadoop's own file system. */
   private def open(spark: SparkSession, dir: String): (FileSystem, Path) = {
     val root = new Path(dir)
-    (root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
+    (ForkFreeLocalFileSystem.get(root, spark.sparkContext.hadoopConfiguration), root)
   }
 
   private def read(fs: FileSystem, manifest: Path, dir: String, kind: String): JsonNode = {

@@ -89,8 +89,10 @@ class PartitionedParquetSink(
   def targetUrl(prefix: String, date: LocalDate): String =
     s"${rootUrl.stripSuffix("/")}/${datePath(prefix, date)}"
 
+  /** Local roots go through [[ForkFreeLocalFileSystem]], here and in the
+    * write job (see `write`); other schemes get Hadoop's own file system. */
   private def fs(url: String): FileSystem =
-    FileSystem.get(new java.net.URI(url), spark.sparkContext.hadoopConfiguration)
+    ForkFreeLocalFileSystem.get(new Path(url), spark.sparkContext.hadoopConfiguration)
 
   /** Write `df` under the dated target. Empty input → folder marker only.
     *
@@ -111,6 +113,7 @@ class PartitionedParquetSink(
     val counted = Observation()
     val writer = shape(df, rowsPerFile).observe(counted, count(lit(1)).as("rows"))
       .write.mode("overwrite").option("compression", "gzip")
+      .options(ForkFreeLocalFileSystem.options(new Path(staging), spark.sparkContext.hadoopConfiguration))
     val sized = rowsPerFile match {
       case Some(n) => writer.option("maxRecordsPerFile", n.toLong)
       case None    => writer

@@ -1,10 +1,15 @@
 package graft
 
+import java.io.IOException
+import java.nio.file.{Files, Paths}
 import java.time.LocalDate
 
+import scala.annotation.nowarn
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.TestListenerBus
@@ -16,7 +21,8 @@ import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions.{broadcast, col, desc}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.sink.{FileContract, PartitionedParquetSink, WriteResult, WriteStats}
+import graft.sink.{FileContract, ForkFreeLocalFileSystem, ForkFreeRawLocalFileSystem, PartitionedParquetSink,
+  WriteResult, WriteStats}
 
 class SinkSpec extends SparkSpecBase {
   private val date = LocalDate.of(2026, 8, 3) // unpadded month AND day digits
@@ -220,5 +226,88 @@ class SinkSpec extends SparkSpecBase {
     val target = new java.io.File(s"$root/none/year_created=2026/month_created=8/day_created=3")
     assert(target.isDirectory && target.list().isEmpty)
     assert(new java.io.File(s"$root/.graft_staging").list().isEmpty)
+  }
+
+  // ---- local roots: Hadoop's modes, set without a chmod subprocess ----
+
+  private def octal(s: String): Int = Integer.parseInt(s, 8)
+
+  private def mode(p: java.nio.file.Path): Int =
+    Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & octal("7777")
+
+  /** Every directory and file strictly below `root`. */
+  private def below(root: String): (Seq[java.nio.file.Path], Seq[java.nio.file.Path]) = {
+    val base = Paths.get(root)
+    val walk = Files.walk(base)
+    try walk.iterator.asScala.filter(_ != base).toSeq.partition(Files.isDirectory(_))
+    finally walk.close()
+  }
+
+  private def localFs(root: String): ForkFreeLocalFileSystem =
+    ForkFreeLocalFileSystem.get(new Path(s"file://$root"), spark.sparkContext.hadoopConfiguration)
+      .asInstanceOf[ForkFreeLocalFileSystem]
+
+  test("local roots: dump dirs, part and .crc files and the folder marker get a plain write's modes") {
+    val plain = tmpDir("sink-modes-plain")
+    spark.range(0, 10).toDF("n").write.parquet(s"file://$plain/out")
+    val (plainDirs, plainFiles) = below(plain)
+    val dirMode = plainDirs.map(mode).distinct
+    val fileMode = plainFiles.map(mode).distinct
+    assert(plainFiles.exists(_.getFileName.toString.endsWith(".crc")))
+    // Hadoop's default fs.permissions.umask-mode, 022.
+    assert(dirMode == Seq(octal("755")) && fileMode == Seq(octal("644")), (dirMode, fileMode))
+
+    val root = tmpDir("sink-modes")
+    val sink = new PartitionedParquetSink(spark, s"file://$root", FileContract.Scalable)
+    assert(sink.write(spark.range(0, 1000).toDF("n"), "series", Some(13), date) == WriteResult.Written)
+    assert(sink.write(spark.range(0, 10).toDF("n").filter("n < 0"), "none", Some(13), date)
+      == WriteResult.EmptyMarker)
+
+    val (dirs, files) = below(root)
+    val names = files.map(_.getFileName.toString)
+    assert(names.count(_.startsWith("part-")) >= 77)
+    assert(names.count(_.endsWith(".parquet.crc")) == names.count(_.startsWith("part-")))
+    val marker = Paths.get(root, "none/year_created=2026/month_created=8/day_created=3")
+    assert(dirs.contains(marker) && marker.toFile.list().isEmpty)
+    assert(dirs.count(_.getFileName.toString.startsWith("day_created=")) == 2)
+    dirs.foreach(d => assert(mode(d) == dirMode.head, d))
+    files.foreach(f => assert(mode(f) == fileMode.head, f))
+  }
+
+  @nowarn("cat=deprecation") // the per-class lookup; its replacement keys on the scheme alone
+  private def rawStatistics: FileSystem.Statistics =
+    FileSystem.getStatistics("file", classOf[ForkFreeRawLocalFileSystem])
+
+  test("a local-root dump is written through the fork-free file system") {
+    val root = tmpDir("sink-forkfree")
+    // Hadoop keeps one statistics object per file system class.
+    val stats = rawStatistics
+    val before = stats.getBytesWritten
+    new PartitionedParquetSink(spark, s"file://$root").write(spark.range(0, 100).toDF("n"), "s", Some(13), date)
+    assert(stats.getBytesWritten > before)
+  }
+
+  test("the fork-free file system sets every mode 0000-0777, falls back for 01777, and throws on a missing path") {
+    val root = tmpDir("sink-setmode")
+    val fs = localFs(root)
+    val file = Paths.get(root, "f")
+    val dir = Paths.get(root, "d")
+    Files.createFile(file)
+    Files.createDirectory(dir)
+    for (p <- Seq(file, dir); m <- 0 to octal("777")) {
+      fs.setPermission(new Path(p.toUri), new FsPermission(m.toShort))
+      assert(mode(p) == m, s"$p: set ${m.toOctalString}, read ${mode(p).toOctalString}")
+    }
+    fs.setPermission(new Path(dir.toUri), new FsPermission(octal("1777").toShort))
+    assert(mode(dir) == octal("1777"))
+    intercept[IOException](fs.setPermission(new Path(s"file://$root/missing"), FsPermission.getFileDefault))
+  }
+
+  test("only local paths get the fork-free file system keys") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = tmpDir("sink-keys")
+    assert(ForkFreeLocalFileSystem.options(new Path(s"file://$root"), conf).nonEmpty)
+    assert(ForkFreeLocalFileSystem.options(new Path(root), conf).nonEmpty) // the default FS is local
+    assert(ForkFreeLocalFileSystem.options(new Path("s3a://bucket/dumps"), conf).isEmpty)
   }
 }
