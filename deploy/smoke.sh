@@ -12,6 +12,17 @@ sbt -batch package >/dev/null
 JAR=$(ls target/scala-2.13/flooristspark_2.13-*.jar | head -1)
 
 OUT=$(mktemp -d /tmp/graft_smoke.XXXX)
+# On exit, however the script ends: stop the live-Postgres leg's server if
+# it started, then remove both work dirs.
+PGBIN="" PGROOT=""
+as_pg() { if [ "$(id -un)" = root ]; then su -s /bin/sh postgres -c "cd /tmp && $1"; else sh -c "$1"; fi; }
+cleanup() {
+  if [ -n "$PGROOT" ] && [ -f "$PGROOT/data/postmaster.pid" ]; then
+    as_pg "$PGBIN/pg_ctl -D $PGROOT/data -m immediate stop" >/dev/null 2>&1 || true
+  fi
+  rm -rf "$OUT" ${PGROOT:+"$PGROOT"}
+}
+trap cleanup EXIT
 FP=$OUT/floorplan.yaml
 cat > "$FP" <<'YAML'
 - prefix: dumps/nations
@@ -99,7 +110,6 @@ echo "SMOKE OK (default contract: dated layout, written 100 rows, empty marker, 
 # in-repo pgwire driver), spin a throwaway instance and drive the SAME
 # packaged entrypoint in JDBC mode: floorplan SQL runs ON Postgres, every
 # attempt inside a pinned exported snapshot, uuid decoding to STRING.
-PGBIN=""
 for d in /usr/lib/postgresql/15/bin /usr/lib/postgresql/16/bin /usr/lib/postgresql/14/bin; do
   [ -x "$d/initdb" ] && PGBIN=$d && break
 done
@@ -114,10 +124,8 @@ PGPORT=$(python3 - <<'PY'
 import socket; s=socket.socket(); s.bind(("127.0.0.1",0)); print(s.getsockname()[1]); s.close()
 PY
 )
-as_pg() { if [ "$(id -un)" = root ]; then su -s /bin/sh postgres -c "cd /tmp && $1"; else sh -c "$1"; fi; }
 as_pg "$PGBIN/initdb -D $PGROOT/data --auth=trust --auth-host=trust -U graft -E UTF8" >/dev/null
 as_pg "$PGBIN/pg_ctl -D $PGROOT/data -w -t 30 -l $PGROOT/log -o \"-p $PGPORT -k $PGROOT -c listen_addresses=127.0.0.1 -c fsync=off\" start" >/dev/null
-trap 'as_pg "$PGBIN/pg_ctl -D $PGROOT/data -m immediate stop" >/dev/null 2>&1 || true' EXIT
 
 psql -h 127.0.0.1 -p "$PGPORT" -U graft -d postgres -q <<'SQL'
 CREATE TABLE hosts (id uuid PRIMARY KEY, account int4, display_name text);

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 
-import graft.artifacts.{ArtifactStore, Persisted, Releasable, Tombstones}
+import graft.artifacts.{Compactable, Leaves, OwnsLeaves, Persisted, Tombstones}
 import graft.functions.CosineSimilarity.cosineSim
 import graft.functions.SimHash64
 import graft.plans.PreparedPlan
@@ -786,9 +786,9 @@ object Dedup {
     * once offline, probe every ingest batch against it. */
   final case class MinHashIndex(idCol: String, bands: DataFrame,
                                 signatures: DataFrame,
-                                cachedFrames: Seq[DataFrame] = Nil,
+                                cachedLeaves: Seq[DataFrame] = Nil,
                                 appendsSinceCompaction: Int = 0,
-                                tombstones: Option[DataFrame] = None) extends Releasable {
+                                tombstones: Option[DataFrame] = None) extends Compactable {
     /** Band/signature tables with tombstoned ids filtered OUT — the view
       * every probe reads ([[deltaNearDupsIndexed]]). */
     def liveBands: DataFrame = Tombstones.live(bands, idCol, tombstones)
@@ -801,18 +801,6 @@ object Dedup {
       * between full rebuilds). Unknown ids are harmless. */
     def delete(ids: DataFrame): MinHashIndex =
       copy(tombstones = Tombstones.add(tombstones, ids, idCol))
-    /** Releases every cached block this index transitively owns: the top
-      * frames AND the cached constituents accumulated by [[append]] —
-      * unpersisting a union frame alone matches nothing in the
-      * CacheManager (it caches the constituent plans, cascade=false), so
-      * an appended index tracks its cached batch/base frames explicitly
-      * and releases each one here. Unpersist of an uncached frame is a
-      * no-op, so the list may safely over-approximate. */
-    def unpersist(): Unit = {
-      bands.unpersist(); signatures.unpersist()
-      cachedFrames.foreach(_.unpersist())
-      ()
-    }
 
     /** At 100 TB, write the band table BUCKETED on (band, bh)
       * (`bucketBy` + `saveAsTable`, the [[JoinStrategies]] layout) so
@@ -845,23 +833,13 @@ object Dedup {
       * as [[deltaNearDupsIndexed]]); input: (id, shingles). */
     def append(batch: DataFrame, shinglesCol: String,
                persist: Boolean = true): MinHashIndex = {
-      val bSig0 = batch.select(col(idCol),
-        minhashSignature(col(shinglesCol)).as("sig"))
-      val bSig = if (persist) bSig0.cache() else bSig0
-      val bBands = bSig
-        .select(col(idCol), explode(bandKeys(col("sig"))).as("bk"))
-        .select(col(idCol), col("bk.band").as("band"), col("bk.bh").as("bh"))
-      val bBandsP = if (persist) bBands.cache() else bBands
-      // Carry forward the standing index's top frames too: for a base
-      // index built with persist=true they ARE the cached constituents,
-      // and unpersisting an uncached frame is a no-op — so the appended
-      // index's unpersist() releases the whole chain.
-      MinHashIndex(idCol, bands.unionByName(bBandsP),
-        signatures.unionByName(bSig),
-        cachedFrames = cachedFrames ++ Seq(bands, signatures) ++
-          (if (persist) Seq(bSig, bBandsP) else Nil),
-        appendsSinceCompaction = appendsSinceCompaction + 1,
-        tombstones = tombstones)
+      val leaves = new Leaves(persist, cachedLeaves)
+      val bSig = leaves(batch.select(col(idCol),
+        minhashSignature(col(shinglesCol)).as("sig")))
+      val bBands = leaves(bandTable(bSig, idCol))
+      MinHashIndex(idCol, bands.unionByName(bBands),
+        signatures.unionByName(bSig), leaves.owned,
+        appendsSinceCompaction + 1, tombstones)
     }
 
     /** Number of Union nodes in the band frame's analyzed plan — the
@@ -875,8 +853,8 @@ object Dedup {
 
     /** Fold the accumulated append lineage flat: materialize the index to
       * `dir` (overwrite — the amortized offline rewrite, paid once per
-      * [[appendAndMaybeCompact]] window, not per batch), release every
-      * cached block of the old lineage, and return a freshly-loaded FLAT
+      * [[appendAndMaybeCompact]] window, not per batch), release the
+      * leaves the old lineage owns, and return a freshly-loaded FLAT
       * index (union depth 0; probes re-analyze a two-scan plan). Probe
       * results are invariant across the boundary (Round7Spec). `dir` must
       * not be a path the current lineage SCANS (an index loaded from
@@ -886,9 +864,8 @@ object Dedup {
       save(dir, "overwrite")
       unpersist()
       val fresh = loadMinHashIndex(bands.sparkSession, dir, idCol)
-      if (persist)
-        MinHashIndex(idCol, fresh.bands.cache(), fresh.signatures.cache())
-      else fresh
+      val leaves = new Leaves(persist)
+      MinHashIndex(idCol, leaves(fresh.bands), leaves(fresh.signatures), leaves.owned)
     }
 
     /** The automated ingest-fold lifecycle: [[append]] the batch, then
@@ -900,13 +877,9 @@ object Dedup {
       * paid once per window. */
     def appendAndMaybeCompact(batch: DataFrame, shinglesCol: String,
                               compactDir: String, compactEvery: Int = 16,
-                              persist: Boolean = true): MinHashIndex = {
-      require(compactEvery > 0, "compactEvery must be positive")
-      val appended = append(batch, shinglesCol, persist)
-      if (appended.appendsSinceCompaction >= compactEvery)
-        appended.compact(compactDir, persist)
-      else appended
-    }
+                              persist: Boolean = true): MinHashIndex =
+      Leaves.appendAndMaybeCompact(compactEvery)(append(batch, shinglesCol, persist))(
+        _.compact(compactDir, persist))
   }
 
   /** MinHash Jaccard estimate from two signature columns: matching
@@ -929,23 +902,25 @@ object Dedup {
     * Input: (id, shingles). */
   def buildMinHashIndex(docs: DataFrame, idCol: String, shinglesCol: String,
                         persist: Boolean = true): MinHashIndex = {
-    val sig = docs.select(col(idCol), minhashSignature(col(shinglesCol)).as("sig"))
-    val sigP = if (persist) sig.cache() else sig
-    val bands = sigP
-      .select(col(idCol), explode(bandKeys(col("sig"))).as("bk"))
-      .select(col(idCol), col("bk.band").as("band"), col("bk.bh").as("bh"))
-    val bandsP = if (persist) bands.cache() else bands
-    MinHashIndex(idCol, bandsP, sigP)
+    val leaves = new Leaves(persist)
+    val sig = leaves(docs.select(col(idCol), minhashSignature(col(shinglesCol)).as("sig")))
+    val bands = leaves(bandTable(sig, idCol))
+    MinHashIndex(idCol, bands, sig, leaves.owned)
   }
 
-  /** [[buildMinHashIndex]] memoized in [[ArtifactStore]]: build once per
-    * corpus, probe many. */
+  /** The (id, band, bh) band-key table of an (id, sig) signature table. */
+  private def bandTable(sig: DataFrame, idCol: String): DataFrame =
+    sig.select(col(idCol), explode(bandKeys(col("sig"))).as("bk"))
+      .select(col(idCol), col("bk.band").as("band"), col("bk.bh").as("bh"))
+
+  /** [[buildMinHashIndex]] memoized through [[Leaves.memoized]]: build once
+    * per corpus, probe many. */
   def memoizedMinHashIndex(docs: DataFrame, idCol: String, shinglesCol: String,
                            cacheKey: String): MinHashIndex =
-    ArtifactStore.get("minhash_index", docs.sparkSession, cacheKey,
+    Leaves.memoized("minhash_index", docs.sparkSession, cacheKey,
         Seq(idCol, shinglesCol)) {
       buildMinHashIndex(docs, idCol, shinglesCol)
-    }
+    }(_.copy(cachedLeaves = Nil))
 
   /** Per-doc distinct hashed k-grams — the shared scan-side shape of the
     * ExactSubstr family ([[exactSubstrPairs]], the [[GramIndex]] build
@@ -984,17 +959,9 @@ object Dedup {
     * probes co-locate without re-shuffling the corpus side. */
   final case class GramIndex(idCol: String, grams: DataFrame,
                              k: Int, maxGramDocs: Int,
-                             cachedFrames: Seq[DataFrame] = Nil,
+                             cachedLeaves: Seq[DataFrame] = Nil,
                              appendsSinceCompaction: Int = 0,
-                             tombstones: Option[DataFrame] = None) extends Releasable {
-    /** Releases every cached block this index transitively owns (the
-      * [[MinHashIndex.unpersist]] over-approximation contract). */
-    def unpersist(): Unit = {
-      grams.unpersist()
-      cachedFrames.foreach(_.unpersist())
-      ()
-    }
-
+                             tombstones: Option[DataFrame] = None) extends Compactable {
     /** The gram table with tombstoned ids filtered OUT — the view every
       * probe reads. */
     def liveGrams: DataFrame = Tombstones.live(grams, idCol, tombstones)
@@ -1021,13 +988,10 @@ object Dedup {
       * index. Union depth is bounded by [[appendAndMaybeCompact]]. */
     def append(batch: DataFrame, textCol: String,
                persist: Boolean = true): GramIndex = {
-      val b0 = capGramDf(hashedDocGrams(batch, idCol, textCol, k), maxGramDocs)
-      val b = if (persist) b0.cache() else b0
-      GramIndex(idCol, grams.unionByName(b), k, maxGramDocs,
-        cachedFrames = cachedFrames ++ Seq(grams) ++
-          (if (persist) Seq(b) else Nil),
-        appendsSinceCompaction = appendsSinceCompaction + 1,
-        tombstones = tombstones)
+      val leaves = new Leaves(persist, cachedLeaves)
+      val b = leaves(capGramDf(hashedDocGrams(batch, idCol, textCol, k), maxGramDocs))
+      GramIndex(idCol, grams.unionByName(b), k, maxGramDocs, leaves.owned,
+        appendsSinceCompaction + 1, tombstones)
     }
 
     /** Flatten the append lineage AND restore the global doc-frequency
@@ -1042,23 +1006,17 @@ object Dedup {
       GramIndex(idCol, capGramDf(liveGrams, maxGramDocs), k, maxGramDocs).save(dir)
       unpersist()
       val fresh = loadGramIndex(grams.sparkSession, dir, idCol)
-      if (persist)
-        fresh.copy(grams = fresh.grams.cache(),
-          cachedFrames = Seq(fresh.grams))
-      else fresh
+      val leaves = new Leaves(persist)
+      fresh.copy(grams = leaves(fresh.grams), cachedLeaves = leaves.owned)
     }
 
     /** [[append]] then, every `compactEvery` appends, [[compact]] — the
       * bounded-lineage ingest-fold lifecycle. */
     def appendAndMaybeCompact(batch: DataFrame, textCol: String,
                               compactDir: String, compactEvery: Int = 16,
-                              persist: Boolean = true): GramIndex = {
-      require(compactEvery > 0, "compactEvery must be positive")
-      val appended = append(batch, textCol, persist)
-      if (appended.appendsSinceCompaction >= compactEvery)
-        appended.compact(compactDir, persist)
-      else appended
-    }
+                              persist: Boolean = true): GramIndex =
+      Leaves.appendAndMaybeCompact(compactEvery)(append(batch, textCol, persist))(
+        _.compact(compactDir, persist))
   }
 
   /** Load an index previously written with [[GramIndex.save]]. */
@@ -1075,20 +1033,19 @@ object Dedup {
                      persist: Boolean = true): GramIndex = {
     require(k >= 2, s"run length must be >= 2 tokens, got $k")
     require(maxGramDocs >= 2, s"doc-frequency cap must be >= 2, got $maxGramDocs")
-    val g = capGramDf(hashedDocGrams(docs, idCol, textCol, k), maxGramDocs)
-    val gP = if (persist) g.cache() else g
-    GramIndex(idCol, gP, k, maxGramDocs,
-      cachedFrames = if (persist) Seq(gP) else Nil)
+    val leaves = new Leaves(persist)
+    val g = leaves(capGramDf(hashedDocGrams(docs, idCol, textCol, k), maxGramDocs))
+    GramIndex(idCol, g, k, maxGramDocs, leaves.owned)
   }
 
-  /** [[buildGramIndex]] memoized in [[ArtifactStore]]: build once per
-    * corpus and (k, maxGramDocs), probe many. */
+  /** [[buildGramIndex]] memoized through [[Leaves.memoized]]: build once
+    * per corpus and (k, maxGramDocs), probe many. */
   def memoizedGramIndex(docs: DataFrame, idCol: String, textCol: String,
                         k: Int, maxGramDocs: Int, cacheKey: String): GramIndex =
-    ArtifactStore.get("gram_index", docs.sparkSession, cacheKey,
+    Leaves.memoized("gram_index", docs.sparkSession, cacheKey,
         Seq(idCol, textCol, k, maxGramDocs)) {
       buildGramIndex(docs, idCol, textCol, k, maxGramDocs)
-    }
+    }(_.copy(cachedLeaves = Nil))
 
   /** Index-probing delta ExactSubstr: the ingest batch's hashed k-grams
     * (scan-side, capped WITHIN the batch — a batch-wide boilerplate gram
@@ -1228,14 +1185,8 @@ object Dedup {
   final case class LshVecIndex(idCol: String, vecCol: String,
                                buckets: DataFrame, vectors: DataFrame,
                                bits: Int, tables: Int,
-                               cachedFrames: Seq[DataFrame] = Nil,
-                               tombstones: Option[DataFrame] = None) extends Releasable {
-    def unpersist(): Unit = {
-      buckets.unpersist(); vectors.unpersist()
-      cachedFrames.foreach(_.unpersist())
-      ()
-    }
-
+                               cachedLeaves: Seq[DataFrame] = Nil,
+                               tombstones: Option[DataFrame] = None) extends OwnsLeaves {
     /** Bucket/vector tables with tombstoned ids filtered OUT — the view
       * the vector-delta family's probes read. */
     def liveBuckets: DataFrame = Tombstones.live(buckets, idCol, tombstones)
@@ -1259,15 +1210,12 @@ object Dedup {
     /** Fold an admitted ingest batch in at the INDEX's density — append
       * cost is one pass over the batch; ids assumed disjoint. */
     def append(batch: DataFrame, persist: Boolean = true): LshVecIndex = {
-      val bB0 = SimilaritySearch.lshKeyed(batch, idCol, vecCol, bits, tables)
-        .select(col(idCol), col("t"), col("bucket"))
-      val bV0 = batch.select(col(idCol), col(vecCol))
-      val (bB, bV) = if (persist) (bB0.cache(), bV0.cache()) else (bB0, bV0)
+      val leaves = new Leaves(persist, cachedLeaves)
+      val bB = leaves(SimilaritySearch.lshKeyed(batch, idCol, vecCol, bits, tables)
+        .select(col(idCol), col("t"), col("bucket")))
+      val bV = leaves(batch.select(col(idCol), col(vecCol)))
       LshVecIndex(idCol, vecCol, buckets.unionByName(bB),
-        vectors.unionByName(bV), bits, tables,
-        cachedFrames = cachedFrames ++ Seq(buckets, vectors) ++
-          (if (persist) Seq(bB, bV) else Nil),
-        tombstones = tombstones)
+        vectors.unionByName(bV), bits, tables, leaves.owned, tombstones)
     }
   }
 
@@ -1295,24 +1243,23 @@ object Dedup {
           corpusCount.getOrElse(emb.count()))
         (autoBits, if (tables > 0) tables else autoTables)
       }
-    val b0 = SimilaritySearch.lshKeyed(emb, idCol, vecCol, nBits, nTables)
-      .select(col(idCol), col("t"), col("bucket"))
-    val v0 = emb.select(col(idCol), col(vecCol))
-    val (b, v) = if (persist) (b0.cache(), v0.cache()) else (b0, v0)
-    LshVecIndex(idCol, vecCol, b, v, nBits, nTables,
-      cachedFrames = if (persist) Seq(b, v) else Nil)
+    val leaves = new Leaves(persist)
+    val b = leaves(SimilaritySearch.lshKeyed(emb, idCol, vecCol, nBits, nTables)
+      .select(col(idCol), col("t"), col("bucket")))
+    val v = leaves(emb.select(col(idCol), col(vecCol)))
+    LshVecIndex(idCol, vecCol, b, v, nBits, nTables, leaves.owned)
   }
 
-  /** [[buildLshVecIndex]] memoized in [[ArtifactStore]]. The requested
-    * (bits, tables) are part of the key: a caller tuning density must
-    * never be silently handed an index built at a different one. */
+  /** [[buildLshVecIndex]] memoized through [[Leaves.memoized]]. The
+    * requested (bits, tables) are part of the key: a caller tuning density
+    * must never be silently handed an index built at a different one. */
   def memoizedLshVecIndex(emb: DataFrame, idCol: String, vecCol: String,
                           cacheKey: String, bits: Int = 0,
                           tables: Int = 0): LshVecIndex =
-    ArtifactStore.get("lsh_vec_index", emb.sparkSession, cacheKey,
+    Leaves.memoized("lsh_vec_index", emb.sparkSession, cacheKey,
         Seq(idCol, vecCol, bits, tables)) {
       buildLshVecIndex(emb, idCol, vecCol, bits, tables)
-    }
+    }(_.copy(cachedLeaves = Nil))
 
   /** Index-probing delta embedding near-dups — [[deltaNearDupsIndexed]]'s
     * vector twin, completing the delta family's geometry set (d13 exact
@@ -1467,14 +1414,8 @@ object Dedup {
     * distinctness — until then a line appended by two batches is stored
     * twice, a size bound, never a correctness one: probes are left-semi). */
   final case class LineSetIndex(hashes: DataFrame, lineTokens: Int,
-                                cachedFrames: Seq[DataFrame] = Nil,
-                                appendsSinceCompaction: Int = 0) extends Releasable {
-    def unpersist(): Unit = {
-      hashes.unpersist()
-      cachedFrames.foreach(_.unpersist())
-      ()
-    }
-
+                                cachedLeaves: Seq[DataFrame] = Nil,
+                                appendsSinceCompaction: Int = 0) extends Compactable {
     /** Persist the hashes + the window width the probe must reuse;
       * `mode = "append"` refuses a batch sliced at another width. */
     def save(dir: String, mode: String = "overwrite"): Unit =
@@ -1485,13 +1426,11 @@ object Dedup {
       * union onto the standing frame — one pass over the batch. */
     def append(batch: DataFrame, idCol: String, textCol: String,
                persist: Boolean = true): LineSetIndex = {
-      val b0 = hashedDocLines(batch, idCol, textCol, lineTokens)
-        .select(col("h")).distinct()
-      val b = if (persist) b0.cache() else b0
-      LineSetIndex(hashes.unionByName(b), lineTokens,
-        cachedFrames = cachedFrames ++ Seq(hashes) ++
-          (if (persist) Seq(b) else Nil),
-        appendsSinceCompaction = appendsSinceCompaction + 1)
+      val leaves = new Leaves(persist, cachedLeaves)
+      val b = leaves(hashedDocLines(batch, idCol, textCol, lineTokens)
+        .select(col("h")).distinct())
+      LineSetIndex(hashes.unionByName(b), lineTokens, leaves.owned,
+        appendsSinceCompaction + 1)
     }
 
     /** Flatten the append lineage and restore global distinctness:
@@ -1502,10 +1441,8 @@ object Dedup {
       LineSetIndex(hashes.distinct(), lineTokens).save(dir)
       unpersist()
       val fresh = loadLineSetIndex(hashes.sparkSession, dir)
-      if (persist)
-        fresh.copy(hashes = fresh.hashes.cache(),
-          cachedFrames = Seq(fresh.hashes))
-      else fresh
+      val leaves = new Leaves(persist)
+      fresh.copy(hashes = leaves(fresh.hashes), cachedLeaves = leaves.owned)
     }
 
     /** [[append]] then, every `compactEvery` appends, [[compact]] — the
@@ -1513,13 +1450,9 @@ object Dedup {
       * twin). */
     def appendAndMaybeCompact(batch: DataFrame, idCol: String, textCol: String,
                               compactDir: String, compactEvery: Int = 16,
-                              persist: Boolean = true): LineSetIndex = {
-      require(compactEvery > 0, "compactEvery must be positive")
-      val appended = append(batch, idCol, textCol, persist)
-      if (appended.appendsSinceCompaction >= compactEvery)
-        appended.compact(compactDir, persist)
-      else appended
-    }
+                              persist: Boolean = true): LineSetIndex =
+      Leaves.appendAndMaybeCompact(compactEvery)(append(batch, idCol, textCol, persist))(
+        _.compact(compactDir, persist))
   }
 
   /** Load an index previously written with [[LineSetIndex.save]]. */
@@ -1535,11 +1468,10 @@ object Dedup {
                         lineTokens: Int = 16,
                         persist: Boolean = true): LineSetIndex = {
     require(lineTokens >= 1, s"lineTokens must be positive, got $lineTokens")
-    val h = hashedDocLines(docs, idCol, textCol, lineTokens)
-      .select(col("h")).distinct()
-    val hP = if (persist) h.cache() else h
-    LineSetIndex(hP, lineTokens,
-      cachedFrames = if (persist) Seq(hP) else Nil)
+    val leaves = new Leaves(persist)
+    val h = leaves(hashedDocLines(docs, idCol, textCol, lineTokens)
+      .select(col("h")).distinct())
+    LineSetIndex(h, lineTokens, leaves.owned)
   }
 
   /** d23: ingest-time paragraph clean — the d21 composition at line

@@ -99,8 +99,7 @@ object Sampling {
     * distinct-gram table is BROADCAST and the corpus-sized train side
     * streams through a map-side hash join; the only shuffled rows are the
     * matches (bounded by eval size × dup factor), aggregated per train
-    * doc. `broadcastEval=false` falls back to a shuffle join for the
-    * stand-in case where the "eval" side is a whole corpus split. Output:
+    * doc. Output:
     * one row per contaminated train doc — `(train_id, n_shared_grams,
     * first_eval_id)` (count of distinct leaked n-grams; lowest sharing
     * eval doc id, deterministic).
@@ -145,8 +144,7 @@ object Sampling {
     * (bounded by the eval population's grams) ever shuffle. */
   private def contaminationMatches(df: DataFrame, idCol: String,
                                    textCol: String, splitCol: String, n: Int,
-                                   trainLabel: String, broadcastEval: Boolean,
-                                   spread: Boolean): DataFrame = {
+                                   trainLabel: String, spread: Boolean): DataFrame = {
     // The dominant cost is per-row CPU (the n-gram HOF + explode), and a
     // compact parquet corpus reads as ONE partition per row group — behind
     // a broadcast join nothing re-parallelizes that scan, so both the
@@ -167,16 +165,14 @@ object Sampling {
       .select(col("gram"), col(idCol).as("eval_id"))
     val tr = grams.filter(col(splitCol) === trainLabel)
       .select(col(idCol).as("train_id"), col("gram"))
-    tr.join(if (broadcastEval) broadcast(ev) else ev, Seq("gram"))
+    tr.join(broadcast(ev), Seq("gram"))
   }
 
   def ngramContamination(df: DataFrame, idCol: String, textCol: String,
                          splitCol: String, n: Int = 13,
                          trainLabel: String = "train",
-                         broadcastEval: Boolean = true,
                          spread: Boolean = true): DataFrame =
-    contaminationMatches(df, idCol, textCol, splitCol, n, trainLabel,
-        broadcastEval, spread)
+    contaminationMatches(df, idCol, textCol, splitCol, n, trainLabel, spread)
       .groupBy(col("train_id"))
       .agg(count_distinct(col("gram")).as("n_shared_grams"),
         min(col("eval_id")).as("first_eval_id"))
@@ -200,11 +196,10 @@ object Sampling {
   def contaminationProvenance(df: DataFrame, idCol: String, textCol: String,
                               splitCol: String, n: Int = 13,
                               trainLabel: String = "train",
-                              broadcastEval: Boolean = true,
                               spread: Boolean = true): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val pairs = contaminationMatches(df, idCol, textCol, splitCol, n,
-        trainLabel, broadcastEval, spread)
+        trainLabel, spread)
       .groupBy(col("eval_id"), col("train_id"))
       .agg(count_distinct(col("gram")).as("n_shared"))
     val byEval = Window.partitionBy(col("eval_id"))

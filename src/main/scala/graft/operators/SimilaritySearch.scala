@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.artifacts.{ArtifactStore, Persisted, Releasable, Tombstones}
+import graft.artifacts.{ArtifactStore, Compactable, Leaves, Persisted, Tombstones}
 import graft.functions.CosineSimilarity.cosineSim
 import graft.functions.LshTableBuckets
 
@@ -249,7 +249,7 @@ object SimilaritySearch {
       vecCol: String,
       appendsSinceCompaction: Int = 0,
       cachedLeaves: Seq[DataFrame] = Nil,
-      tombstones: Option[DataFrame] = None) extends Releasable {
+      tombstones: Option[DataFrame] = None) extends Compactable {
     /** The assignment table with tombstoned ids filtered OUT — the view
       * every probe/dedup consumer reads. */
     def liveAssigned: DataFrame = Tombstones.live(assigned, idCol, tombstones)
@@ -262,21 +262,6 @@ object SimilaritySearch {
       * Unknown ids are harmless (the anti-join just matches nothing). */
     def delete(ids: DataFrame): IvfIndex =
       copy(tombstones = Tombstones.add(tombstones, ids, idCol))
-    /** Unpersist every cached relation this index OWNS — `cachedLeaves`
-      * is the ownership list (the GramIndex `cachedFrames` discipline):
-      * the build seeds it with the base assignment's cached frame, each
-      * append adds its batch frame, and after appends `assigned` is a
-      * lazy union whose own unpersist cannot reach the cached CHILDREN —
-      * without the leaf list a long-lived ingest topology would pin one
-      * stale cached frame per batch in the CacheManager forever.
-      * Releasing ONLY the owned list (never `assigned` blindly) is what
-      * lets [[memoizedIvfIndex]] hand out leaf-stripped copies: an
-      * append chain rooted at the shared artifact owns just its own
-      * batches, so its compaction cadence can never unpersist the cached
-      * base other queries depend on. */
-    def unpersist(): Unit = {
-      cachedLeaves.foreach(_.unpersist()); ()
-    }
 
     /** Persist the index as parquet (assignments + centroids). Writes the
       * LIVE view: a saved artifact has deletions applied physically, so
@@ -374,10 +359,9 @@ object SimilaritySearch {
     // Only persist an index something will hold on to: a throwaway build
     // (ivfTopK without a cacheKey) would otherwise pin one cached relation
     // per call in the CacheManager with nothing ever unpersisting it.
-    val assigned = if (persist) assignedPlan.cache() else assignedPlan
+    val leaves = new Leaves(persist)
     IvfIndex(centers.zipWithIndex.map { case (c, i) => (i, c.map(_.toFloat)) },
-      assigned, idCol, vecCol,
-      cachedLeaves = if (persist) Seq(assigned) else Nil)
+      leaves(assignedPlan), idCol, vecCol, cachedLeaves = leaves.owned)
   }
 
   /** Append a batch to an IVF index with FROZEN centroids — the ingest
@@ -403,18 +387,17 @@ object SimilaritySearch {
     // cells are contiguous 0..n-1 by construction; sort so a LOADED
     // index (parquet row order is arbitrary) assigns identically
     val centers = index.centroids.sortBy(_._1).map(_._2.map(_.toDouble))
-    val assignedNew0 =
-      if (centers.length == 1)
-        vecs.select(col(index.idCol), col(index.vecCol), lit(0).as("cell"))
-      else assignByArgmin(vecs, index.idCol, index.vecCol, centers)
     // cache ONLY the batch frame and union lazily (the Dedup index-append
     // convention): a checkpoint of the union would rewrite the whole
     // corpus per batch, turning O(batch) ingest into O(corpus)
-    val assignedNew = if (persist) assignedNew0.cache() else assignedNew0
+    val leaves = new Leaves(persist, index.cachedLeaves)
+    val assignedNew = leaves(
+      if (centers.length == 1)
+        vecs.select(col(index.idCol), col(index.vecCol), lit(0).as("cell"))
+      else assignByArgmin(vecs, index.idCol, index.vecCol, centers))
     index.copy(assigned = index.assigned.unionByName(assignedNew),
       appendsSinceCompaction = index.appendsSinceCompaction + 1,
-      cachedLeaves = index.cachedLeaves ++
-        (if (persist) Seq(assignedNew) else Nil))
+      cachedLeaves = leaves.owned)
   }
 
   /** The automated ingest-fold lifecycle (the MinHashIndex
@@ -427,13 +410,9 @@ object SimilaritySearch {
     * per window. */
   def appendIvfAndMaybeCompact(index: IvfIndex, batch: DataFrame,
                                nCells: Int = 0, compactEvery: Int = 16,
-                               persist: Boolean = true): IvfIndex = {
-    require(compactEvery > 0, "compactEvery must be positive")
-    val appended = appendIvfIndex(index, batch, persist)
-    if (appended.appendsSinceCompaction >= compactEvery)
-      compactIvfIndex(appended, nCells)
-    else appended
-  }
+                               persist: Boolean = true): IvfIndex =
+    Leaves.appendAndMaybeCompact(compactEvery)(appendIvfIndex(index, batch, persist))(
+      compactIvfIndex(_, nCells))
 
   /** Re-fit at compact: rebuild the coarse quantizer from the index's own
     * retained vectors (the assignment table carries them), restoring the
@@ -450,8 +429,8 @@ object SimilaritySearch {
     * also break any probe whose nProbe-covers-all-cells exactness
     * assumption was sized to the build).
     *
-    * The superseded lineage's cached relations (base assignment + every
-    * per-batch append leaf) are unpersisted AFTER the rebuilt assignment
+    * The leaves the superseded lineage owns (a base assignment it built,
+    * and every per-batch append leaf) are unpersisted AFTER the rebuilt assignment
     * materializes — the MinHashIndex.compact save→unpersist→reload
     * discipline; without it each compaction window would leave
     * ~compactEvery stale cached frames pinned in the CacheManager. */
@@ -758,12 +737,13 @@ object SimilaritySearch {
       .join(broadcast(finesDf), Seq("__ccell"))
       .select(col(idCol), col(vecCol),
         bindOnce(v => argminCell(col("fines"), v, "cell")).as("cell"))
-    val assigned = if (persist) assignedPlan.cache() else assignedPlan
+    val leaves = new Leaves(persist)
+    val assigned = leaves(assignedPlan)
     val cents = fineCentroids.toArray
       .map { case (_, cell, c) => (cell, c.map(_.toFloat)) }
       .sortBy(_._1)
     val byCell = fineCentroids.toArray.sortBy(_._2)
-    HierBuild(IvfIndex(cents, assigned, idCol, vecCol),
+    HierBuild(IvfIndex(cents, assigned, idCol, vecCol, cachedLeaves = leaves.owned),
       coarseC, byCell.map(_._1), byCell.map(_._3))
   }
 
@@ -795,32 +775,26 @@ object SimilaritySearch {
       .select(col("q_id"), col("n_id"), round(col("cos"), 4).as("cos"), col("rnk"))
   }
 
-  /** [[buildIvfIndex]] memoized in [[ArtifactStore]]: repeated calls with
-    * the same corpus and nCells reuse the fitted index instead of
-    * re-clustering — the online analogue of the offline save/load cycle.
-    *
-    * Callers receive a LEAF-STRIPPED copy (`cachedLeaves = Nil`): the
-    * store's own entry keeps the ownership list (so invalidation can
-    * release the blocks), while a caller that folds appends onto the
-    * shared artifact owns only the leaves its own batches created — its
-    * compact/unpersist cadence cannot pull the shared base cache out from
-    * under sibling queries. */
+  /** [[buildIvfIndex]] memoized through [[Leaves.memoized]]: repeated
+    * calls with the same corpus and nCells reuse the fitted index instead
+    * of re-clustering — the online analogue of the offline save/load
+    * cycle. Callers get the store's view, which owns no leaves. */
   def memoizedIvfIndex(emb: DataFrame, idCol: String, vecCol: String,
                        nCells: Int, cacheKey: String): IvfIndex =
-    ArtifactStore.get("ivf_flat", emb.sparkSession, cacheKey,
+    Leaves.memoized("ivf_flat", emb.sparkSession, cacheKey,
         Seq(idCol, vecCol, nCells)) {
       buildIvfIndex(emb, idCol, vecCol, nCells)
-    }.copy(cachedLeaves = Nil)
+    }(_.copy(cachedLeaves = Nil))
 
   /** Memoized [[buildIvfIndexHier]] — the [[memoizedIvfIndex]] contract
     * under its own kind, so flat and hierarchical indexes over the same
     * corpus never collide. */
   def memoizedIvfIndexHier(emb: DataFrame, idCol: String, vecCol: String,
                            nCells: Int, cacheKey: String): IvfIndex =
-    ArtifactStore.get("ivf_hier", emb.sparkSession, cacheKey,
+    Leaves.memoized("ivf_hier", emb.sparkSession, cacheKey,
         Seq(idCol, vecCol, nCells)) {
       buildIvfIndexHier(emb, idCol, vecCol, nCells)
-    }.copy(cachedLeaves = Nil)
+    }(_.copy(cachedLeaves = Nil))
 
   /** Convenience wrapper = [[memoizedIvfIndex]] + [[probeIvf]].
     * `cacheKey` identifies the corpus (e.g. its directory); when provided,
@@ -1171,16 +1145,7 @@ object SimilaritySearch {
       m: Int, k: Int, subDim: Int, idCol: String,
       appendsSinceCompaction: Int = 0,
       cachedLeaves: Seq[DataFrame] = Nil,
-      tombstones: Option[DataFrame] = None) extends Releasable {
-    /** Unpersist every cached relation this index OWNS — see
-      * [[IvfIndex.unpersist]]: `cachedLeaves` is the ownership list
-      * (build-seeded base + per-batch append leaves; a union's own
-      * unpersist cannot reach cached children, and a leaf-stripped
-      * memoized copy must not be able to release the shared base). */
-    def unpersist(): Unit = {
-      cachedLeaves.foreach(_.unpersist()); ()
-    }
-
+      tombstones: Option[DataFrame] = None) extends Compactable {
     /** The code table with tombstoned ids filtered OUT — the view every
       * PQ probe reads. */
     def liveCodes: DataFrame = Tombstones.live(codes, idCol, tombstones)
@@ -1271,12 +1236,11 @@ object SimilaritySearch {
     // chained ML transforms this replaces walked every row through the
     // boxed Vector path m times and were the dominant ivf_pq_build term
     // (≈95 s → seconds at the 32× stress point).
-    val encoded = normalized.select(col(idCol),
+    val leaves = new Leaves(persist)
+    val codes = leaves(normalized.select(col(idCol),
       graft.functions.PqEncode.pqEncode(col("__vn"), codebooks, subDim)
-        .as("codes"))
-    val codes = if (persist) encoded.cache() else encoded
-    PqIndex(codebooks, codes, m, kEff, subDim, idCol,
-      cachedLeaves = if (persist) Seq(codes) else Nil)
+        .as("codes")))
+    PqIndex(codebooks, codes, m, kEff, subDim, idCol, cachedLeaves = leaves.owned)
   }
 
   /** Append a batch to a PQ index with FROZEN codebooks: normalize and
@@ -1301,15 +1265,14 @@ object SimilaritySearch {
         "(an empty build has no codebooks to freeze)")
     val normalized = batch.select(col(index.idCol),
       l2normalizeCol(col(vecCol)).as("__vn"))
-    val encodedNew0 = normalized.select(col(index.idCol),
-      graft.functions.PqEncode.pqEncode(col("__vn"), index.codebooks,
-        index.subDim).as("codes"))
     // batch-only cache + lazy union (the Dedup index-append convention)
-    val encodedNew = if (persist) encodedNew0.cache() else encodedNew0
+    val leaves = new Leaves(persist, index.cachedLeaves)
+    val encodedNew = leaves(normalized.select(col(index.idCol),
+      graft.functions.PqEncode.pqEncode(col("__vn"), index.codebooks,
+        index.subDim).as("codes")))
     index.copy(codes = index.codes.unionByName(encodedNew),
       appendsSinceCompaction = index.appendsSinceCompaction + 1,
-      cachedLeaves = index.cachedLeaves ++
-        (if (persist) Seq(encodedNew) else Nil))
+      cachedLeaves = leaves.owned)
   }
 
   /** Re-fit at compact, PQ side — [[compactIvfIndex]]'s analogue with one
@@ -1320,7 +1283,7 @@ object SimilaritySearch {
     * and the compact is a fresh [[buildPqIndex]] over it at the index's
     * own (m, k) geometry (`m`/`k` <= 0 default to the fitted values), its
     * code table materialized (localCheckpoint) so the append-union
-    * lineage flattens, and the superseded lineage's cached relations
+    * lineage flattens, and the superseded lineage's owned leaves
     * unpersisted afterwards. Codebook drift accumulated under frozen
     * appends resets here: the re-fit sees the ingest distribution. */
   def compactPqIndex(index: PqIndex, corpus: DataFrame, vecCol: String,
@@ -1351,13 +1314,9 @@ object SimilaritySearch {
   def appendPqAndMaybeCompact(index: PqIndex, batch: DataFrame,
                               vecCol: String, corpus: () => DataFrame,
                               compactEvery: Int = 16,
-                              persist: Boolean = true): PqIndex = {
-    require(compactEvery > 0, "compactEvery must be positive")
-    val appended = appendPqIndex(index, batch, vecCol, persist)
-    if (appended.appendsSinceCompaction >= compactEvery)
-      compactPqIndex(appended, corpus(), vecCol)
-    else appended
-  }
+                              persist: Boolean = true): PqIndex =
+    Leaves.appendAndMaybeCompact(compactEvery)(appendPqIndex(index, batch, vecCol, persist))(
+      compactPqIndex(_, corpus(), vecCol))
 
   /** Per-query ADC lookup tables against a [[PqIndex]]: one row per query
     * — (q_id, lut), lut laid out [sub·k + code] as [[graft.functions
@@ -1509,14 +1468,14 @@ object SimilaritySearch {
       Seq("n_id"), "left_anti")
   }
 
-  /** [[PqIndex]] memoized in [[ArtifactStore]], handed out leaf-stripped
-    * like [[memoizedIvfIndex]]. */
+  /** [[PqIndex]] memoized through [[Leaves.memoized]], handed out as a
+    * view that owns no leaves, like [[memoizedIvfIndex]]. */
   def memoizedPqIndex(emb: DataFrame, idCol: String, vecCol: String,
                       m: Int, k: Int, cacheKey: String): PqIndex =
-    ArtifactStore.get("pq", emb.sparkSession, cacheKey,
+    Leaves.memoized("pq", emb.sparkSession, cacheKey,
         Seq(idCol, vecCol, m, k)) {
       buildPqIndex(emb, idCol, vecCol, m, k)
-    }.copy(cachedLeaves = Nil)
+    }(_.copy(cachedLeaves = Nil))
 
   /** Shared per-query ranking tail: top-k by (score desc, n_id) through
     * the custom [[graft.plans.GroupTopK]] operator — map-side bounded

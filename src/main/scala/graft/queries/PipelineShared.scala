@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.artifacts.ArtifactStore
+import graft.artifacts.{ArtifactStore, Leaves}
 import graft.operators.{Dedup, Packing, Sampling, SimilaritySearch, TextAnalysis => TA}
 import graft.sources.Sources
 
@@ -235,14 +235,14 @@ private[graft] object PipelineShared {
       SimilaritySearch.buildKnnGraph(aug, "vec_id", "embedding", k = 3)
     }
 
-  /** The memoized ([[ArtifactStore]]) corpus [[Dedup.LineSetIndex]] for
+  /** The memoized ([[Leaves.memoized]]) corpus [[Dedup.LineSetIndex]] for
     * the d23 probe: build the corpus line-hash set once per directory,
     * probe every batch. */
-  private[queries] def memoizedLineSetIndex(s: SparkSession, dir: String,
-                                   corpus: DataFrame): Dedup.LineSetIndex =
-    ArtifactStore.get("line_set_index", s, dir) {
+  private[graft] def memoizedLineSetIndex(s: SparkSession, dir: String,
+                                          corpus: DataFrame): Dedup.LineSetIndex =
+    Leaves.memoized("line_set_index", s, dir) {
       Dedup.buildLineSetIndex(corpus, "doc_id", "text", lineTokens = 16)
-    }
+    }(_.copy(cachedLeaves = Nil))
 
   /** The m05 pair build (planted re-encodes + dHash fingerprints +
     * capped frame-hash join) + its connected components, shared by m05

@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.functions.{count, lit, min, spark_partition_id}
 
 import graft.plans.PreparedPlan
 
@@ -102,7 +102,12 @@ class PartitionedParquetSink(
     * between the two is an [[Observation]] on the written frame, taken by
     * the write's own tasks — an up-front `df.isEmpty` probe or a read-back
     * count would run the query or the staged files again (a different
-    * snapshot on a live JDBC source, and extra jobs everywhere). */
+    * snapshot on a live JDBC source, and extra jobs everywhere).
+    *
+    * Spark writes a file for partition 0 even when it holds no rows, so
+    * the same observation takes the lowest partition id that saw a row:
+    * when it is above 0, partition 0's file has no rows and stays out of
+    * the target. A failed write leaves nothing in staging either. */
   def write(df: DataFrame, prefix: String, rowsPerFile: Option[Int],
             date: LocalDate = LocalDate.now()): WriteResult = {
     val target = targetUrl(prefix, date)
@@ -111,26 +116,30 @@ class PartitionedParquetSink(
     // stage itself: result-stage accumulators are merged once per partition,
     // never again on a recomputed upstream stage.
     val counted = Observation()
-    val writer = shape(df, rowsPerFile).observe(counted, count(lit(1)).as("rows"))
+    val writer = shape(df, rowsPerFile)
+      .observe(counted, count(lit(1)).as("rows"), min(spark_partition_id()).as("first_part"))
       .write.mode("overwrite").option("compression", "gzip")
       .options(ForkFreeLocalFileSystem.options(new Path(staging), spark.sparkContext.hadoopConfiguration))
     val sized = rowsPerFile match {
       case Some(n) => writer.option("maxRecordsPerFile", n.toLong)
       case None    => writer
     }
-    sized.parquet(staging)
 
     val f = fs(target)
     val stagingPath = new Path(staging)
     try {
+      sized.parquet(staging)
       // The count arrives through the listener bus once the write has ended:
       // a bounded wait, so a dropped event fails the dump instead of hanging it.
       val observed = Await.result(counted.future, 2.minutes)
       if (observed.schema == null || !observed.schema.fieldNames.contains("rows"))
         throw new IllegalStateException(s"write to $staging finished without its row count")
       val rows = observed.getAs[Long]("rows")
-      val parts = f.listStatus(stagingPath)
-        .filter(_.getPath.getName.startsWith("part-"))
+      val emptyFirst = rows > 0 && observed.getAs[Int]("first_part") > 0
+      val parts = f.listStatus(stagingPath).filter { s =>
+        val name = s.getPath.getName
+        name.startsWith("part-") && !(emptyFirst && name.startsWith("part-00000-"))
+      }
       f.mkdirs(new Path(target))
       if (rows == 0) {
         WriteResult(WriteStats(0, 0, 0))

@@ -92,7 +92,7 @@ class Round7Spec extends SparkSpecBase {
     // Materialize so the cache levels are real, then release.
     appended.bands.count(); appended.signatures.count()
     val constituents =
-      Seq(base.bands, base.signatures) ++ appended.cachedFrames
+      Seq(base.bands, base.signatures) ++ appended.cachedLeaves
     assert(constituents.exists(_.storageLevel != StorageLevel.NONE),
       "nothing was cached — the leak test would pass vacuously")
     appended.unpersist()

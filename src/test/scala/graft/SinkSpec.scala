@@ -228,6 +228,30 @@ class SinkSpec extends SparkSpecBase {
     assert(new java.io.File(s"$root/.graft_staging").list().isEmpty)
   }
 
+  test("scalable: a spread that leaves partition 0 without rows writes no 0-row part file") {
+    val root = tmpDir("sink-no-empty-part")
+    val sink = new PartitionedParquetSink(spark, s"file://$root", FileContract.Scalable)
+    val result = sink.write(singleSplit(3), "three", Some(1000), date)
+    val files = parquetFiles(s"$root/three")
+    assert(files.map(rowCount) == Seq(1L, 1L, 1L), files.map(f => f.getName -> rowCount(f)))
+    assert(result.stats.contains(WriteStats(3, 3, files.map(_.length).sum)), result)
+  }
+
+  test("a failed write leaves no staging directory behind") {
+    val root = tmpDir("sink-failed")
+    val sink = new PartitionedParquetSink(spark, s"file://$root", FileContract.Scalable)
+    val boom = org.apache.spark.sql.functions.udf { (n: Long) =>
+      if (n >= 0) throw new IllegalStateException("boom")
+      n
+    }
+    intercept[Exception] {
+      sink.write(spark.range(0, 10).toDF("n").select(boom(col("n")).as("n")), "failed", Some(5), date)
+    }
+    val staging = new java.io.File(s"$root/.graft_staging")
+    assert(!staging.exists() || staging.list().isEmpty,
+      s"a failed write left ${Option(staging.list()).map(_.toSeq)} in .graft_staging")
+  }
+
   // ---- local roots: Hadoop's modes, set without a chmod subprocess ----
 
   private def octal(s: String): Int = Integer.parseInt(s, 8)
