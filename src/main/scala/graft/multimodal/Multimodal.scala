@@ -598,11 +598,10 @@ object Multimodal {
     * container is the full public AVI RIFF form: hdrl with
     * MainAVIHeader + vids/MJPG stream headers, the movi '00dc' list,
     * and an idx1 index. */
-  def renderAviTable(documents: DataFrame,
-                     spread: Boolean = true): Dataset[MediaRow] = {
+  def renderAviTable(documents: DataFrame): Dataset[MediaRow] = {
     val spark = documents.sparkSession
     import spark.implicits._
-    (if (spread) renderInput(documents) else renderInputPlain(documents)).as[(Long, String)]
+    renderInput(documents).as[(Long, String)]
       .mapPartitions { rows =>
         rows.map { case (id, text) =>
           val nFrames = 2 + (id % 3).toInt

@@ -398,8 +398,7 @@ object Dedup {
     * grams (adjacent overlapping grams of one long run each count — the
     * run-length proxy Lee et al. threshold on). */
   def exactSubstrPairs(docs: DataFrame, idCol: String, textCol: String,
-                       k: Int = 10, maxGramDocs: Int = 256,
-                       materialize: Boolean = true): DataFrame = {
+                       k: Int = 10, maxGramDocs: Int = 256): DataFrame = {
     require(k >= 2, s"run length must be >= 2 tokens, got $k")
     require(maxGramDocs >= 2, s"doc-frequency cap must be >= 2, got $maxGramDocs")
     // wordNgrams emits per-doc DISTINCT grams, so (id, gram) rows are
@@ -411,10 +410,8 @@ object Dedup {
     // aggregate and the semi-join probe side (exchange reuse covers the
     // a/b self-join branches but not these two inputs) — without a
     // checkpoint the dominant cost, the per-row k-gram HOF over the full
-    // corpus, is paid twice. `materialize = false` for plan-audit
-    // callers, same contract as the corpus builds.
-    val grams0 = hashedDocGrams(docs, idCol, textCol, k)
-    val grams = if (materialize) grams0.localCheckpoint() else grams0
+    // corpus, is paid twice.
+    val grams = hashedDocGrams(docs, idCol, textCol, k).localCheckpoint()
     val keep = grams.groupBy(col("gram"))
       .agg(count(lit(1)).as("__df"))
       .filter(col("__df") <= maxGramDocs)
@@ -469,18 +466,15 @@ object Dedup {
     * million²-row bucket); the span merge windows partition per document
     * over its CUT instances only (bounded by doc length, never
     * corpus-wide). Same caveat as the pair op: the dominant cost — the
-    * per-row k-gram pass — is paid once behind a localCheckpoint
-    * (`materialize = false` for plan-audit callers).
+    * per-row k-gram pass — is paid once behind a localCheckpoint.
     *
     * Output: (id, cut_start, cut_len) — 1-based token offsets, one row
     * per maximal span; documents needing no cut have no rows. */
   def exactSubstrSpans(docs: DataFrame, idCol: String, textCol: String,
-                       k: Int = 10, maxGramDocs: Int = 256,
-                       materialize: Boolean = true): DataFrame = {
+                       k: Int = 10, maxGramDocs: Int = 256): DataFrame = {
     require(k >= 2, s"run length must be >= 2 tokens, got $k")
     require(maxGramDocs >= 2, s"doc-frequency cap must be >= 2, got $maxGramDocs")
-    val inst0 = positionalGramInstances(docs, idCol, textCol, k)
-    val inst = if (materialize) inst0.localCheckpoint() else inst0
+    val inst = positionalGramInstances(docs, idCol, textCol, k).localCheckpoint()
     val perDoc = inst.groupBy(col("g"), col(idCol))
       .agg(count(lit(1)).as("__n_in_doc"), min(col("pos")).as("__min_pos"))
     val firsts = perDoc.groupBy(col("g"))
@@ -553,10 +547,9 @@ object Dedup {
     * the d16 product shape: the corpus with every ≥ k-token duplicated
     * run cut down to its single first occurrence. */
   def exactSubstrApply(docs: DataFrame, idCol: String, textCol: String,
-                       k: Int = 10, maxGramDocs: Int = 256,
-                       materialize: Boolean = true): DataFrame =
+                       k: Int = 10, maxGramDocs: Int = 256): DataFrame =
     exactSubstrApplyFromSpans(docs,
-      exactSubstrSpans(docs, idCol, textCol, k, maxGramDocs, materialize),
+      exactSubstrSpans(docs, idCol, textCol, k, maxGramDocs),
       idCol, textCol)
 
   /** Duplicate clusters from near-dup PAIRS: connected components by

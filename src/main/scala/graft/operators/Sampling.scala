@@ -195,11 +195,10 @@ object Sampling {
     * smallest train id (deterministic across engines). */
   def contaminationProvenance(df: DataFrame, idCol: String, textCol: String,
                               splitCol: String, n: Int = 13,
-                              trainLabel: String = "train",
-                              spread: Boolean = true): DataFrame = {
+                              trainLabel: String = "train"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val pairs = contaminationMatches(df, idCol, textCol, splitCol, n,
-        trainLabel, spread)
+        trainLabel, spread = true)
       .groupBy(col("eval_id"), col("train_id"))
       .agg(count_distinct(col("gram")).as("n_shared"))
     val byEval = Window.partitionBy(col("eval_id"))
@@ -459,10 +458,9 @@ object Sampling {
     * is the p11 broadcast probe bounded by the eval gram population. */
   def bloomDecontamination(train: DataFrame, idCol: String, textCol: String,
                            idx: BloomIndex, evalGrams: DataFrame,
-                           n: Int = 13, fpCeilingBp: Int = 300,
-                           spread: Boolean = true): DataFrame =
+                           n: Int = 13, fpCeilingBp: Int = 300): DataFrame =
     bloomDecontaminationWith(train, idCol, textCol, bloomContainsAny(idx),
-      evalGrams, n, fpCeilingBp, spread)
+      evalGrams, n, fpCeilingBp)
 
   /** [[bloomDecontamination]] probing an N-way SHARDED filter — the
     * past-2³⁰-bits composition: identical output contract (and so
@@ -472,25 +470,21 @@ object Sampling {
   def shardedBloomDecontamination(train: DataFrame, idCol: String,
                                   textCol: String, idx: ShardedBloomIndex,
                                   evalGrams: DataFrame,
-                                  n: Int = 13, fpCeilingBp: Int = 300,
-                                  spread: Boolean = true): DataFrame =
+                                  n: Int = 13, fpCeilingBp: Int = 300): DataFrame =
     bloomDecontaminationWith(train, idCol, textCol,
-      shardedBloomContainsAny(idx), evalGrams, n, fpCeilingBp, spread)
+      shardedBloomContainsAny(idx), evalGrams, n, fpCeilingBp)
 
   private def bloomDecontaminationWith(train: DataFrame, idCol: String,
                                        textCol: String,
                                        probe: Column => Column,
                                        evalGrams: DataFrame,
-                                       n: Int, fpCeilingBp: Int,
-                                       spread: Boolean): DataFrame = {
+                                       n: Int, fpCeilingBp: Int): DataFrame = {
     // The dominant cost is per-row CPU (the gram HOF + the k-probe walk),
     // and a compact parquet corpus scans as one partition per row group —
     // spread to cluster parallelism first (the contaminationMatches
     // lesson; physical-plan-guarded, already-shuffled inputs pass
-    // through). spread=false for composition callers (the eager
-    // partition-count read).
-    val base0 = train.select(col(idCol), col(textCol))
-    val base = if (spread) Dedup.spreadToParallelism(base0) else base0
+    // through).
+    val base = Dedup.spreadToParallelism(train.select(col(idCol), col(textCol)))
     val g = base.select(col(idCol),
       wordNgrams(col(textCol), n).as("__gs"))
     val probed = g.select(col(idCol),
@@ -545,20 +539,15 @@ object Sampling {
     * at every factor. Checkpointing the sliver pins the HOF to exactly
     * one evaluation per corpus row; the materialized frame is the
     * FLAGGED population (|exact leaks| + |sized FPs| rows), a vanishing
-    * fraction of the corpus at any scale. `materialize = false` for
-    * exchange-ledger audits that need one plan tree. */
+    * fraction of the corpus at any scale. */
   def bloomVerifiedContamination(train: DataFrame, idCol: String,
                                  textCol: String, idx: BloomIndex,
                                  evalGrams: DataFrame,
-                                 n: Int = 13,
-                                 materialize: Boolean = true,
-                                 spread: Boolean = true): DataFrame = {
-    val base0 = train.select(col(idCol), col(textCol))
-    val base = if (spread) Dedup.spreadToParallelism(base0) else base0
-    val flagged0 = base
+                                 n: Int = 13): DataFrame = {
+    val flagged = Dedup.spreadToParallelism(train.select(col(idCol), col(textCol)))
       .select(col(idCol), wordNgrams(col(textCol), n).as("__gs"))
       .filter(bloomContainsAny(idx)(col("__gs")))
-    val flagged = if (materialize) flagged0.localCheckpoint() else flagged0
+      .localCheckpoint()
     flagged.select(col(idCol).as("train_id"), explode(col("__gs")).as("gram"))
       .join(broadcast(evalGrams.select(col("gram"), col("eval_id"))),
         Seq("gram"))

@@ -1516,8 +1516,7 @@ object SimilaritySearch {
     * shipped query uses 3 — n-gram counts, the d03 shingle space with
     * multiplicity.
     *
-    * PREFIX FILTERING (round 11, `prefix = true`, the default): the df
-    * cap alone does not bound candidate volume when term df grows with
+    * PREFIX FILTERING (round 11): the df cap alone does not bound candidate volume when term df grows with
     * the corpus while staying under the cap — the round-11 32× stress
     * measured exactly that curve (Σ_t df_t² quadratic by construction,
     * wall following it: 12.7→35→81 s at 8×/16×/32×). The published
@@ -1549,62 +1548,40 @@ object SimilaritySearch {
   def sparseCosinePairs(docs: DataFrame, idCol: String, textCol: String,
                         threshold: Double,
                         maxTermDocs: Int = 256,
-                        ngram: Int = 1,
-                        prefix: Boolean = true): DataFrame = {
+                        ngram: Int = 1): DataFrame = {
     val (kept, vecs) = sparseCosineBase(docs, idCol, textCol, maxTermDocs, ngram)
-    if (!prefix) {
-      // Cap-only plan, kept as the simpler exact twin the prefix path is
-      // spec-compared against (Round11Spec): per-term work <= cap^2, but
-      // candidate volume tracks SUM df^2 wherever df sits under the cap.
-      val norms = vecs.select(col("id"), col("n2"))
-      val dots = kept.select(col("th"), col("id").as("a_id"), col("tf").as("a_tf"))
-        .join(kept.select(col("th"), col("id").as("b_id"), col("tf").as("b_tf")),
-          Seq("th"))
-        .filter(col("a_id") < col("b_id"))
-        .groupBy(col("a_id"), col("b_id"))
-        .agg(sum(col("a_tf") * col("b_tf")).as("dot"))
-      dots
-        .join(norms.select(col("id").as("a_id"), col("n2").as("a_n2")), Seq("a_id"))
-        .join(norms.select(col("id").as("b_id"), col("n2").as("b_n2")), Seq("b_id"))
-        .withColumn("cos", round(col("dot").cast("double") /
-          (sqrt(col("a_n2").cast("double")) * sqrt(col("b_n2").cast("double"))), 4))
-        .filter(col("cos") >= threshold)
-        .select(col("a_id"), col("b_id"), col("cos"))
-    } else {
-      // NOT materialized (round-19 A/B): vecs is nominally read three
-      // times (norms in the candidate stage, full arrays on both verify
-      // sides), but AQE exchange reuse dedupes the repeated aggregate at
-      // runtime, and an eager localCheckpoint of the arrays REGRESSED
-      // the in-suite bench (s12 1.78 -> 2.3 s median across a committed
-      // triple; the interleaved A/B read within noise) — the
-      // materialization job costs more than the reuse it replaces. At
-      // 100 TB the standing document-vector artifact would be a
-      // persisted table, not an in-query checkpoint.
-      val cand = sparseCosineCandidates(kept, vecs, threshold)
-      // Exact verify over the survivors: full kept vectors as parallel
-      // sorted (hash, tf) arrays, dot by the codegen'd merge walk
-      // (integer, the same value the postings sum produces in the
-      // cap-only plan), norms from the same per-doc aggregate, same
-      // rounding. This stage dominates the stress wall (the pair join
-      // ships a vector per side per candidate), so the payload is two
-      // flat long arrays and the per-pair CPU is allocation-free
-      // generated code, not an interpreted map HOF.
-      cand
-        .join(vecs.select(col("id").as("a_id"), col("ks").as("aks"),
-          col("vs").as("avs"), col("n2").as("a_n2")), Seq("a_id"))
-        .join(vecs.select(col("id").as("b_id"), col("ks").as("bks"),
-          col("vs").as("bvs"), col("n2").as("b_n2")), Seq("b_id"))
-        .withColumn("dot", graft.functions.DotSortedArrays.dotSortedArrays(
-          col("aks"), col("avs"), col("bks"), col("bvs")))
-        .withColumn("cos", round(col("dot").cast("double") /
-          (sqrt(col("a_n2").cast("double")) * sqrt(col("b_n2").cast("double"))), 4))
-        .filter(col("cos") >= threshold)
-        .select(col("a_id"), col("b_id"), col("cos"))
-    }
+    // NOT materialized (round-19 A/B): vecs is nominally read three
+    // times (norms in the candidate stage, full arrays on both verify
+    // sides), but AQE exchange reuse dedupes the repeated aggregate at
+    // runtime, and an eager localCheckpoint of the arrays REGRESSED
+    // the in-suite bench (s12 1.78 -> 2.3 s median across a committed
+    // triple; the interleaved A/B read within noise) — the
+    // materialization job costs more than the reuse it replaces. At
+    // 100 TB the standing document-vector artifact would be a
+    // persisted table, not an in-query checkpoint.
+    val cand = sparseCosineCandidates(kept, vecs, threshold)
+    // Exact verify over the survivors: full kept vectors as parallel
+    // sorted (hash, tf) arrays, dot by the codegen'd merge walk
+    // (integer, the same value the cap-only postings sum produces),
+    // norms from the same per-doc aggregate, same rounding. This stage dominates the stress wall (the pair join
+    // ships a vector per side per candidate), so the payload is two
+    // flat long arrays and the per-pair CPU is allocation-free
+    // generated code, not an interpreted map HOF.
+    cand
+      .join(vecs.select(col("id").as("a_id"), col("ks").as("aks"),
+        col("vs").as("avs"), col("n2").as("a_n2")), Seq("a_id"))
+      .join(vecs.select(col("id").as("b_id"), col("ks").as("bks"),
+        col("vs").as("bvs"), col("n2").as("b_n2")), Seq("b_id"))
+      .withColumn("dot", graft.functions.DotSortedArrays.dotSortedArrays(
+        col("aks"), col("avs"), col("bks"), col("bvs")))
+      .withColumn("cos", round(col("dot").cast("double") /
+        (sqrt(col("a_n2").cast("double")) * sqrt(col("b_n2").cast("double"))), 4))
+      .filter(col("cos") >= threshold)
+      .select(col("a_id"), col("b_id"), col("cos"))
   }
 
-  /** Shared front of both s12 plans: hashed-term postings and the per-doc
-    * vector artifact.
+  /** Shared front of s12 and its cap-only test twin: hashed-term
+    * postings and the per-doc vector artifact.
     *
     * Terms are xxhash64'd SCAN-SIDE, before the first shuffle — the d03
     * shingle discipline: every downstream exchange and sort moves 8-byte

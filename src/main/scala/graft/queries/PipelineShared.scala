@@ -318,8 +318,7 @@ private[graft] object PipelineShared {
     * BOTH composed builds via [[memoizedDedupSurvivors]]. Measured at
     * sf0.1: p10 3.37s → 1.33s (round 6, checkpoint); round 9 removes the
     * second materialization p13 used to pay on top. */
-  private[graft] def dedupSurvivorsWithSplit(base: DataFrame, clusters: DataFrame,
-                                             materialize: Boolean = true): DataFrame = {
+  private[graft] def dedupSurvivorsWithSplit(base: DataFrame, clusters: DataFrame): DataFrame = {
     val s1 = base.filter(TA.qualityKeep(col("text")))
     val drops = clusters
       .filter(col("id") =!= col("cluster")).select(col("id").as("doc_id"))
@@ -336,74 +335,38 @@ private[graft] object PipelineShared {
     // decontam_scored at 21.4 s of single-core HOF work on a host whose
     // per-core speed made it the whole warmup budget. One round-robin
     // exchange of the survivors frame (not keyed on doc_id — the
-    // Round7Spec ledger forbids only KEYED corpus shuffles, and the
-    // ledger audit runs materialize=false, which skips this) buys every
+    // Round7Spec ledger forbids only KEYED corpus shuffles) buys every
     // artifact build cluster parallelism — also exactly what persisting
     // the artifact at 100 TB produces (many output splits), so the bench
     // shape now matches the production shape.
-    if (materialize)
-      withSplit.repartition(withSplit.sparkSession.sparkContext.defaultParallelism)
-        .localCheckpoint()
-    else withSplit
+    withSplit.repartition(withSplit.sparkSession.sparkContext.defaultParallelism)
+      .localCheckpoint()
   }
 
   /** [[corpusBuild]] over an INJECTED corpus + near-dup cluster frame —
     * the shape the Stress harness scales (replicated corpus, budget ∝
-    * factor) without touching the (session, dir)-memoized artifacts.
-    * `materialize = false` skips the localCheckpoint points so the
-    * WHOLE composition is one plan tree — the Round7Spec exchange-ledger
-    * audit needs that (a checkpoint turns every upstream stage into an
-    * opaque RDD scan); production keeps the default. */
+    * factor) without touching the (session, dir)-memoized artifacts. */
   private[graft] def corpusBuildFrom(base: DataFrame, clusters: DataFrame,
-                                     budget: Long,
-                                     materialize: Boolean = true): DataFrame =
-    corpusBuildFromSurvivors(
-      dedupSurvivorsWithSplit(base, clusters, materialize), budget, materialize)
+                                     budget: Long): DataFrame =
+    corpusBuildFromSurvivors(dedupSurvivorsWithSplit(base, clusters), budget)
 
   /** The p10 tail over an already-materialized survivors frame
     * (doc_id, lang, text, n_tokens, split): p03 exact decontamination →
     * p06 temperature mix → p07 token budget → p02 packing → p01 labels. */
   private[graft] def corpusBuildFromSurvivors(withSplit: DataFrame,
-                                              budget: Long,
-                                              materialize: Boolean = true): DataFrame = {
-    def cp(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint() else df
-    // p03: drop TRAIN docs whose byte-identical twin lands in an eval
-    // split — computed over the deduped survivors, split assignment the
-    // same pure content hash p01 emits at the end.
-    // distinct BEFORE the rename (round 19): grouping on the original
-    // train_id keeps the dedup exchange keyed train_id in the ledger
-    // regardless of whether the optimizer collapses the alias into the
-    // grouping (it stopped doing so once the mix stage gained a window).
-    val contaminated = Sampling
-      .exactContamination(withSplit, "doc_id", "text", "split")
-      .select(col("train_id")).distinct()
-      .select(col("train_id").as("doc_id"))
-    val s3 = withSplit.join(broadcast(contaminated), Seq("doc_id"), "left_anti")
-    // p06: temperature-flatten the language mix of the survivors.
-    // n_min rides a bounded unpartitioned window over the |langs|-row
-    // histogram (round 19): crossJoin(broadcast(counts.agg)) carried the
-    // survivors aggregate — including the decontamination anti-join
-    // lineage above — a SECOND time inside the scalar's subplan.
-    val counts = s3.groupBy(col("lang")).agg(count(lit(1)).as("n_lang"))
-    val rates = counts
-      .withColumn("n_min", min(col("n_lang")).over(
-        org.apache.spark.sql.expressions.Window.rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.unboundedFollowing)))
-      .withColumn("rate_bp", floor(lit(10000.0) *
-        sqrt(col("n_min").cast("double") / col("n_lang").cast("double"))))
-      .select(col("lang"), col("rate_bp"))
-    val s4 = s3.join(broadcast(rates), Seq("lang"))
-      .filter(Sampling.hashBucket(col("doc_id"), 10000) < col("rate_bp"))
+                                              budget: Long): DataFrame = {
+    // p03 exact decontamination, then p06: temperature-flatten the
+    // language mix of the survivors.
+    val s4 = v2MixStage(exactDecontaminated(withSplit))
     // p07: per-language token budget over what survived the mix. The
     // admitted set (budget-bounded, far smaller than the corpus) is the
     // second natural artifact: packing's two-pass scan reads it twice.
-    val s5 = cp(Sampling.tokenBudgetPerGroup(
+    val s5 = Sampling.tokenBudgetPerGroup(
         s4.select(col("doc_id"), col("lang"), col("n_tokens")),
         groupCol = "lang", keyCol = "doc_id", tokensCol = "n_tokens",
         budget = budget)
-      .select(col("doc_id"), col("lang"), col("n_tokens")))
+      .select(col("doc_id"), col("lang"), col("n_tokens"))
+      .localCheckpoint()
     // p02 + p01: pack the admitted docs into fixed-context sequences and
     // stamp the final bucket/split labels.
     Packing.packSequences(s5, "doc_id", "n_tokens", ctxLen = 2048L)
@@ -425,10 +388,8 @@ private[graft] object PipelineShared {
     * population), and p12 is map-only (scan-side explode) — the
     * corpus-wide shuffles remain p07's bounded scan + p02's pack scan. */
   private[graft] def corpusBuildV2From(base: DataFrame, clusters: DataFrame,
-                                       budget: Long,
-                                       materialize: Boolean = true): DataFrame =
-    corpusBuildV2FromSurvivors(
-      dedupSurvivorsWithSplit(base, clusters, materialize), budget, materialize)
+                                       budget: Long): DataFrame =
+    corpusBuildV2FromSurvivors(dedupSurvivorsWithSplit(base, clusters), budget)
 
   /** The p13 tail over the SAME survivors artifact p10 starts from — round
     * 8 materialized a second, quality-widened copy of the survivors frame
@@ -437,15 +398,17 @@ private[graft] object PipelineShared {
     * AFTER the decontamination anti-joins instead (same values on every
     * surviving row, and rows about to be dropped are never scored). */
   private[graft] def corpusBuildV2FromSurvivors(withSplit: DataFrame,
-                                                budget: Long,
-                                                materialize: Boolean = true): DataFrame =
-    corpusBuildTail(withSplit, budget, materialize, v2MixStage)
+                                                budget: Long): DataFrame =
+    corpusBuildTail(withSplit, budget, v2MixStage)
 
-  /** The v2 mixture: p06's sqrt temperature over per-language DOC
-    * counts — the emergent flattening the stated-proportion v3 replaces. */
+  /** The v2 mixture (and p10's): p06's sqrt temperature over
+    * per-language DOC counts — the emergent flattening the
+    * stated-proportion v3 replaces. */
   private[queries] def v2MixStage(s3b: DataFrame): DataFrame = {
-    // n_min via the bounded-window total (round 19) — one evaluation of
-    // the per-language histogram instead of the crossJoin'd scalar's two.
+    // n_min rides a bounded unpartitioned window over the |langs|-row
+    // histogram (round 19): crossJoin(broadcast(counts.agg)) carried the
+    // survivors aggregate — including the decontamination anti-join
+    // lineage above it — a SECOND time inside the scalar's subplan.
     val counts = s3b.groupBy(col("lang")).agg(count(lit(1)).as("n_lang"))
     val rates = counts
       .withColumn("n_min", min(col("n_lang")).over(
@@ -465,10 +428,23 @@ private[graft] object PipelineShared {
     * definition here so a fix to the shared stages cannot silently leave
     * the other version stale), then the budget/pack/epoch tail. */
   private[queries] def corpusBuildTail(withSplit: DataFrame, budget: Long,
-                              materialize: Boolean,
                               mixStage: DataFrame => DataFrame): DataFrame =
-    corpusBuildTailFrom(decontaminatedScoredSurvivors(withSplit),
-      budget, materialize, mixStage)
+    corpusBuildTailFrom(decontaminatedScoredSurvivors(withSplit), budget, mixStage)
+
+  /** p03: drop TRAIN docs whose byte-identical twin lands in an eval
+    * split — computed over the deduped survivors, split assignment the
+    * same pure content hash p01 emits at the end. */
+  private def exactDecontaminated(withSplit: DataFrame): DataFrame = {
+    // distinct BEFORE the rename (round 19): grouping on the original
+    // train_id keeps the dedup exchange keyed train_id in the ledger
+    // regardless of whether the optimizer collapses the alias into the
+    // grouping (it stopped doing so once the mix stage gained a window).
+    val contaminated = Sampling
+      .exactContamination(withSplit, "doc_id", "text", "split")
+      .select(col("train_id")).distinct()
+      .select(col("train_id").as("doc_id"))
+    withSplit.join(broadcast(contaminated), Seq("doc_id"), "left_anti")
+  }
 
   /** The decontamination + scoring PREFIX of [[corpusBuildTail]] — every
     * stage up to (not including) the mixture, a pure function of the
@@ -480,15 +456,7 @@ private[graft] object PipelineShared {
     * persisted inter-phase artifact exactly like the survivors frame,
     * not something each downstream build re-derives. */
   private[graft] def decontaminatedScoredSurvivors(withSplit: DataFrame): DataFrame = {
-    // distinct BEFORE the rename (round 19): grouping on the original
-    // train_id keeps the dedup exchange keyed train_id in the ledger
-    // regardless of whether the optimizer collapses the alias into the
-    // grouping (it stopped doing so once the mix stage gained a window).
-    val contaminated = Sampling
-      .exactContamination(withSplit, "doc_id", "text", "split")
-      .select(col("train_id")).distinct()
-      .select(col("train_id").as("doc_id"))
-    val s3 = withSplit.join(broadcast(contaminated), Seq("doc_id"), "left_anti")
+    val s3 = exactDecontaminated(withSplit)
     // p11 over the p03 survivors: spread=false — the input is one stage
     // of a composed plan, and the spread helper's partition-count read is
     // eager. Matches are bounded by the eval population; the dropped-id
@@ -522,17 +490,15 @@ private[graft] object PipelineShared {
   /** The mixture-onward SUFFIX of [[corpusBuildTail]]: `mixStage`, the
     * p07 budget, p02 packing, final labels, p12 epoch repeats. */
   private[queries] def corpusBuildTailFrom(s3b: DataFrame, budget: Long,
-                                  materialize: Boolean,
                                   mixStage: DataFrame => DataFrame): DataFrame = {
-    def cp(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint() else df
     val s4 = mixStage(s3b)
-    val s5 = cp(Sampling.tokenBudgetPerGroup(
+    val s5 = Sampling.tokenBudgetPerGroup(
         s4.select(col("doc_id"), col("lang"), col("n_tokens"),
           col("quality_bp")),
         groupCol = "lang", keyCol = "doc_id", tokensCol = "n_tokens",
         budget = budget)
-      .select(col("doc_id"), col("lang"), col("n_tokens"), col("quality_bp")))
+      .select(col("doc_id"), col("lang"), col("n_tokens"), col("quality_bp"))
+      .localCheckpoint()
     val packed = Packing.packSequences(s5, "doc_id", "n_tokens", ctxLen = 2048L)
       .select(col("doc_id"), col("lang"), col("n_tokens"), col("pack_id"),
         col("quality_bp"),
@@ -544,10 +510,8 @@ private[graft] object PipelineShared {
   /** [[corpusBuildV2From]] with the mixture stage swapped: v3 of the
     * composed build, for the Stress harness's injected-corpus shape. */
   private[graft] def corpusBuildV3From(base: DataFrame, clusters: DataFrame,
-                                       budget: Long,
-                                       materialize: Boolean = true): DataFrame =
-    corpusBuildV3FromSurvivors(
-      dedupSurvivorsWithSplit(base, clusters, materialize), budget, materialize)
+                                       budget: Long): DataFrame =
+    corpusBuildV3FromSurvivors(dedupSurvivorsWithSplit(base, clusters), budget)
 
   /** v3 of the composed build: [[corpusBuildV2FromSurvivors]]'s chain with
     * the p06 sqrt-temperature mix replaced by p15's target-mixture solve
@@ -572,9 +536,8 @@ private[graft] object PipelineShared {
     * corpus still never shuffles keyed on doc_id (Round10Spec pins the
     * ledger like Round7Spec does for v2). */
   private[graft] def corpusBuildV3FromSurvivors(withSplit: DataFrame,
-                                                budget: Long,
-                                                materialize: Boolean = true): DataFrame =
-    corpusBuildTail(withSplit, budget, materialize, v3MixStage(withSplit))
+                                                budget: Long): DataFrame =
+    corpusBuildTail(withSplit, budget, v3MixStage(withSplit))
 
   /** The v3 mixture: stated uniform token-share targets, solved by
     * targetMixture's closed form (binding language admits everything,

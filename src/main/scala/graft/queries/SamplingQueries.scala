@@ -140,7 +140,7 @@ private[graft] object SamplingQueries {
     // counts. Same memoized survivors artifact as p10/p13.
     "p16_corpus_build_v3" -> ((s, dir) =>
       corpusBuildTailFrom(memoizedDecontamSurvivors(s, dir),
-        budget = 3000L, materialize = true,
+        budget = 3000L,
         v3MixStage(memoizedDedupSurvivors(s, dir)))),
 
 
@@ -153,7 +153,7 @@ private[graft] object SamplingQueries {
     // artifact p10 reads.
     "p13_corpus_build_v2" -> ((s, dir) =>
       corpusBuildTailFrom(memoizedDecontamSurvivors(s, dir),
-        budget = 3000L, materialize = true, v2MixStage)),
+        budget = 3000L, v2MixStage)),
 
 
     // N-gram-overlap decontamination (13-gram, the GPT-3/PaLM recipe):

@@ -13,6 +13,16 @@ import graft.queries.PipelineShared._
   * [[PipelineShared]], aggregation in [[PipelineQueries]]). */
 private[queries] object SimilarityQueries {
 
+  /** Run a stream ingest out of a fresh temp directory (its parquet input
+    * and stream checkpoint), deleted once `body` returns: the ingest
+    * localCheckpoints every batch it applies, so the index it leaves
+    * behind reads none of these files. */
+  private def withIngestDir[T](prefix: String)(body: String => T): T = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(tmp.toString)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // s12: sparse lexical cosine pairs — the inverted-index all-pairs
@@ -50,11 +60,13 @@ private[queries] object SimilarityQueries {
         "__vn", m = 8, k = 64, cacheKey = dir + "#s17pq")
       val batch = normalized.filter(col("vec_id") < 10)
         .select((col("vec_id") + 200000L).as("vec_id"), col("__vn"))
-      // empty corpus: nothing to append to — probe the empty artifacts
+      // empty corpus: nothing to append to — probe the empty artifacts.
+      // persist = false: the appended copies are throwaway, so they must
+      // not pin a cached batch leaf nobody releases.
       val ivfA = if (ivf.centroids.isEmpty) ivf
-                 else SimilaritySearch.appendIvfIndex(ivf, batch)
+                 else SimilaritySearch.appendIvfIndex(ivf, batch, persist = false)
       val pqA = if (pq.codebooks.isEmpty) pq
-                else SimilaritySearch.appendPqIndex(pq, batch, "__vn")
+                else SimilaritySearch.appendPqIndex(pq, batch, "__vn", persist = false)
       SimilaritySearch.probeIvfPq(ivfA, pqA,
           batch.select(col("vec_id").as("q_id"), col("__vn").as("__qn")),
           k = 3, nProbe = 8)
@@ -84,9 +96,10 @@ private[queries] object SimilarityQueries {
         nCells = 16, cacheKey = dir + "#s16base")
       // empty corpus: nothing to append TO (the refusal is an API guard
       // for real ingest, not a query-path behavior) — probe the empty
-      // index directly, which yields the oracle's 0 rows
+      // index directly, which yields the oracle's 0 rows. A throwaway
+      // append (persist = false), like s17's.
       val app = if (idx.centroids.isEmpty) idx
-                else SimilaritySearch.appendIvfIndex(idx, batch)
+                else SimilaritySearch.appendIvfIndex(idx, batch, persist = false)
       SimilaritySearch.probeIvf(app, pmod(col("vec_id"), lit(10)) === 7,
         k = 3, nProbe = 16)
     }),
@@ -152,17 +165,18 @@ private[queries] object SimilarityQueries {
       else {
         val batch = e.filter(pmod(col("vec_id"), lit(10)) === 7)
           .select(col("vec_id"), col("embedding"))
-        val tmp = java.nio.file.Files.createTempDirectory("s18_ingest").toString
-        batch.repartition(4).write.parquet(tmp + "/in")
         val ingest = new graft.streaming.EventStreams.IvfIngest(idx)
-        val src = s.readStream.schema(batch.schema)
-          .option("maxFilesPerTrigger", "1").parquet(tmp + "/in")
-        val q = graft.streaming.EventStreams
-          .ivfAppendStream(src, ingest, nCells = 16, compactEvery = 1000)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .option("checkpointLocation", tmp + "/ck")
-          .start()
-        q.awaitTermination()
+        withIngestDir("s18_ingest") { tmp =>
+          batch.repartition(4).write.parquet(tmp + "/in")
+          val src = s.readStream.schema(batch.schema)
+            .option("maxFilesPerTrigger", "1").parquet(tmp + "/in")
+          graft.streaming.EventStreams
+            .ivfAppendStream(src, ingest, nCells = 16, compactEvery = 1000)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .option("checkpointLocation", tmp + "/ck")
+            .start()
+            .awaitTermination()
+        }
         SimilaritySearch.probeIvf(ingest.index,
           pmod(col("vec_id"), lit(10)) === 7, k = 3, nProbe = 16)
       }
@@ -192,21 +206,22 @@ private[queries] object SimilarityQueries {
       val (ivfA, pqA) =
         if (ivf.centroids.isEmpty || pq.codebooks.isEmpty) (ivf, pq)
         else {
-          val tmp = java.nio.file.Files.createTempDirectory("s19_ingest").toString
-          batch.repartition(2).write.parquet(tmp + "/in")
           val ingest = new graft.streaming.EventStreams.PqIngest(pq)
-          val src = s.readStream.schema(batch.schema)
-            .option("maxFilesPerTrigger", "1").parquet(tmp + "/in")
-          val q = graft.streaming.EventStreams
-            .pqAppendStream(src, "__vn", ingest,
-              corpus = () => sys.error(
-                "s19 must never compact: the corpus thunk is spec-only"),
-              compactEvery = 1000)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .option("checkpointLocation", tmp + "/ck")
-            .start()
-          q.awaitTermination()
-          (SimilaritySearch.appendIvfIndex(ivf, batch), ingest.index)
+          withIngestDir("s19_ingest") { tmp =>
+            batch.repartition(2).write.parquet(tmp + "/in")
+            val src = s.readStream.schema(batch.schema)
+              .option("maxFilesPerTrigger", "1").parquet(tmp + "/in")
+            graft.streaming.EventStreams
+              .pqAppendStream(src, "__vn", ingest,
+                corpus = () => sys.error(
+                  "s19 must never compact: the corpus thunk is spec-only"),
+                compactEvery = 1000)
+              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+              .option("checkpointLocation", tmp + "/ck")
+              .start()
+              .awaitTermination()
+          }
+          (SimilaritySearch.appendIvfIndex(ivf, batch, persist = false), ingest.index)
         }
       SimilaritySearch.probeIvfPq(ivfA, pqA,
           batch.select(col("vec_id").as("q_id"), col("__vn").as("__qn")),

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Sampling, TextAnalysis}
+import graft.operators.{Sampling, SimilaritySearch, TextAnalysis}
 
 /** Reference formulations the shipped operators replaced, kept only as the
-  * twins specs pin the shipped forms against (Round12Spec): each computes
+  * twins specs pin the shipped forms against (Round11Spec, Round12Spec): each computes
   * the same result the slow, obvious way. Never call them on
   * production-sized inputs. */
 object ReferenceTwins {
@@ -74,4 +74,29 @@ object ReferenceTwins {
         round(lit(1.0) / (lit(1.0) +
           exp(-(lit(clf.bias) + col("__sw") / col("n_grams").cast("double")))),
           4).as("quality"))
+
+  /** The cap-only plan [[SimilaritySearch.sparseCosinePairs]]' prefix
+    * filter prunes: every term under the df cap joins every other doc
+    * holding it, so per-term work is <= cap² but candidate volume tracks
+    * Σ df² wherever df sits under the cap. Same postings, norms and
+    * rounding as the shipped plan. */
+  def sparseCosinePairsCapOnly(docs: DataFrame, idCol: String, textCol: String,
+                               threshold: Double, maxTermDocs: Int,
+                               ngram: Int): DataFrame = {
+    val (kept, vecs) =
+      SimilaritySearch.sparseCosineBase(docs, idCol, textCol, maxTermDocs, ngram)
+    val norms = vecs.select(col("id"), col("n2"))
+    kept.select(col("th"), col("id").as("a_id"), col("tf").as("a_tf"))
+      .join(kept.select(col("th"), col("id").as("b_id"), col("tf").as("b_tf")),
+        Seq("th"))
+      .filter(col("a_id") < col("b_id"))
+      .groupBy(col("a_id"), col("b_id"))
+      .agg(sum(col("a_tf") * col("b_tf")).as("dot"))
+      .join(norms.select(col("id").as("a_id"), col("n2").as("a_n2")), Seq("a_id"))
+      .join(norms.select(col("id").as("b_id"), col("n2").as("b_n2")), Seq("b_id"))
+      .withColumn("cos", round(col("dot").cast("double") /
+        (sqrt(col("a_n2").cast("double")) * sqrt(col("b_n2").cast("double"))), 4))
+      .filter(col("cos") >= threshold)
+      .select(col("a_id"), col("b_id"), col("cos"))
+  }
 }

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.PlanLedger.{allNodes, shuffleKeyNames}
+
 /** Round 10: the targets-frame contract of targetMixture is self-enforcing
   * (absent groups and conflicting weights fail loudly, duplicates collapse),
   * and annTopK's auto branch uses the `<= 0` not-passed sentinel so explicit
@@ -124,20 +126,26 @@ class Round10Spec extends SparkSpecBase {
 
   test("d16 plan: gram/doc-keyed exchanges only, no nested-loop or cartesian stage") {
     val docs = graft.sources.Sources.table(spark, "/root/testdata/sf0.001", "documents")
-    val out = graft.operators.Dedup
-      .exactSubstrSpans(docs, "doc_id", "text", k = 10, maxGramDocs = 256,
-        materialize = false) // one plan tree for the audit (house convention)
-    out.queryExecution.toRdd.count()
-    val nodes = allNodes(out.queryExecution.executedPlan)
-    assert(!nodes.exists(n =>
-      n.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec] ||
-      n.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]),
-      s"cut marking must be the gram equi-join, never all-pairs:\n" +
-        s"${out.queryExecution.executedPlan}")
-    shuffleKeyNames(out).foreach { names =>
-      assert(names.forall(Set("g", "doc_id", "__island")),
-        s"d16 shuffles gram-hash aggregates, the cut-mark join, and per-doc " +
-          s"span merges only, got $names")
+    // Every execution the shipped call runs: the instance checkpoint and
+    // the collect.
+    val runs = PlanLedger.capture(spark) {
+      graft.operators.Dedup
+        .exactSubstrSpans(docs, "doc_id", "text", k = 10, maxGramDocs = 256)
+        .collect()
+    }
+    PlanLedger.hashKeys(runs) // fails unless the capture saw a checkpoint and a keyed shuffle
+    runs.foreach { run =>
+      val nodes = allNodes(run.plan)
+      assert(!nodes.exists(n =>
+        n.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec] ||
+        n.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]),
+        s"cut marking must be the gram equi-join, never all-pairs:\n" +
+          s"${run.plan}")
+      shuffleKeyNames(run.plan).foreach { names =>
+        assert(names.forall(Set("g", "doc_id", "__island")),
+          s"d16 shuffles gram-hash aggregates, the cut-mark join, and per-doc " +
+            s"span merges only, got $names")
+      }
     }
   }
 
@@ -225,38 +233,15 @@ class Round10Spec extends SparkSpecBase {
     } finally idx2.unpersist()
   }
 
-  private def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    val through = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        Seq(a.executedPlan)
-      case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(qs.plan)
-      case other => other.children
-    }
-    p +: through.flatMap(allNodes)
-  }
-
-  /** Hash-partitioning key names of every shuffle in an EXECUTED plan. */
-  private def shuffleKeyNames(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] = {
-    df.queryExecution.toRdd.count()
-    allNodes(df.queryExecution.executedPlan).collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
-        e.outputPartitioning match {
-          case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
-            h.expressions.flatMap(_.references.map(_.name)).toSeq
-          case _ => Seq.empty // round-robin spread
-        }
-    }
-  }
-
   // ---- p16: the v3 composed build (target-mixture stage) ----
 
   test("p16 exchange ledger: the mixture swap adds no corpus shuffle") {
     val base = graft.sources.Sources.table(spark, sfDir, "documents")
     val clusters = graft.queries.PipelineShared.dupPairsAndClusters(spark, sfDir)._2
-    val built = graft.queries.PipelineShared.corpusBuildV3From(base, clusters,
-      budget = 3000L, materialize = false)
-    built.queryExecution.toRdd.count()
+    val runs = PlanLedger.captureHintedBroadcasts(spark) {
+      graft.queries.PipelineShared.corpusBuildV3From(base, clusters, budget = 3000L)
+        .collect()
+    }
     // p13's allowlist verbatim: the target-mixture solve replaces the
     // doc-count aggregate with a token-sum aggregate but keys the SAME
     // lang exchange, the closed form runs over |langs|-row frames, and
@@ -264,12 +249,10 @@ class Round10Spec extends SparkSpecBase {
     // the corpus still never shuffles on doc_id.
     val allowed = Set(Set("__h"), Set("lang"), Set("lang", "__sub"),
       Set("__bkt"), Set("gram"), Set("train_id", "gram"), Set("train_id"))
-    shuffleKeyNames(built).foreach { names =>
-      if (names.nonEmpty) {
-        assert(allowed.contains(names.toSet),
-          s"unexpected corpus shuffle on $names:\n${built.queryExecution.executedPlan}")
-        assert(names.toSet != Set("doc_id"), "corpus shuffled on doc_id")
-      }
+    PlanLedger.hashKeys(runs).foreach { case (names, run) =>
+      assert(allowed.contains(names),
+        s"unexpected corpus shuffle on $names in ${run.action}:\n${run.plan}")
+      assert(names != Set("doc_id"), "corpus shuffled on doc_id")
     }
   }
 
@@ -294,7 +277,7 @@ class Round10Spec extends SparkSpecBase {
       // totals = admitted/rate is circular; recompute via the v2 build's
       // pre-mix stage equivalent: quality+dedup+p03+p11 survivors.
       val withSplit = graft.queries.PipelineShared
-        .dedupSurvivorsWithSplit(base, clusters, materialize = false)
+        .dedupSurvivorsWithSplit(base, clusters)
       val cont = graft.operators.Sampling
         .exactContamination(withSplit, "doc_id", "text", "split")
         .select(col("train_id").as("doc_id")).distinct()

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.PlanLedger.{allNodes, shuffleKeyNames}
+
 /** Round 10c: the paragraph-dedup family (d22 corpus keep-first, d23
   * ingest-time clean over the standing [[graft.operators.Dedup.LineSetIndex]])
   * and d24 soft-dedup sampling weights — ground truth on handcrafted
@@ -462,28 +464,4 @@ class Round10cSpec extends SparkSpecBase {
       s"got ${got.toSeq}")
   }
 
-  // ---- shared plan-audit helpers (the Round9Spec idiom) ------------------
-
-  private def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    val through = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        Seq(a.executedPlan)
-      case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(qs.plan)
-      case other => other.children
-    }
-    p +: through.flatMap(allNodes)
-  }
-
-  private def shuffleKeyNames(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] = {
-    df.queryExecution.toRdd.count()
-    allNodes(df.queryExecution.executedPlan).collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
-        e.outputPartitioning match {
-          case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
-            h.expressions.flatMap(_.references.map(_.name)).toSeq
-          case _ => Seq.empty
-        }
-    }
-  }
 }

@@ -101,9 +101,12 @@ class Round11Spec extends SparkSpecBase {
     // cap-only computation in DuckDB.)
     val docs = graft.sources.Sources
       .table(spark, "/root/testdata/sf0.001", "documents")
-    def pairs(prefix: Boolean) = SimilaritySearch
-      .sparseCosinePairs(docs, "doc_id", "text", threshold = 0.9,
-        maxTermDocs = 256, ngram = 3, prefix = prefix)
+    def plan(prefix: Boolean, threshold: Double, maxTermDocs: Int) =
+      if (prefix) SimilaritySearch.sparseCosinePairs(docs, "doc_id", "text",
+        threshold, maxTermDocs, ngram = 3)
+      else ReferenceTwins.sparseCosinePairsCapOnly(docs, "doc_id", "text",
+        threshold, maxTermDocs, ngram = 3)
+    def pairs(prefix: Boolean) = plan(prefix, threshold = 0.9, maxTermDocs = 256)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val exact = pairs(prefix = false)
     val filtered = pairs(prefix = true)
@@ -112,9 +115,7 @@ class Round11Spec extends SparkSpecBase {
       s"lost: ${exact -- filtered}; invented: ${filtered -- exact}")
     // And at a LOW threshold the skip budget shrinks toward zero — the
     // filter must degrade to completeness, not over-skip.
-    def lowPairs(prefix: Boolean) = SimilaritySearch
-      .sparseCosinePairs(docs, "doc_id", "text", threshold = 0.3,
-        maxTermDocs = 64, ngram = 3, prefix = prefix)
+    def lowPairs(prefix: Boolean) = plan(prefix, threshold = 0.3, maxTermDocs = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(lowPairs(prefix = true) == lowPairs(prefix = false))
   }

@@ -177,8 +177,11 @@ class Round12Spec extends SparkSpecBase {
     val train = docs.filter(col("split") === "train")
     val mat = Sampling.bloomVerifiedContamination(train, "doc_id", "text",
       idx, evalGrams).as[(Long, Long, Long)].collect().toSet
-    val tree = Sampling.bloomVerifiedContamination(train, "doc_id", "text",
-      idx, evalGrams, materialize = false).as[(Long, Long, Long)].collect().toSet
+    // The reference: p11's one-stage exact join over the same split — the
+    // checkpointed bloom prefilter may only shrink the probe side, never
+    // change a row.
+    val tree = Sampling.ngramContamination(docs, "doc_id", "text", "split", n = 13)
+      .as[(Long, Long, Long)].collect().toSet
     assert(mat == tree, s"materialization changed rows: ${mat -- tree} / ${tree -- mat}")
     assert(mat.nonEmpty, "construction must produce leaks")
   }

@@ -291,18 +291,7 @@ class Round5Spec extends SparkSpecBase {
     // Recurse into AQE query stages: a QueryStageExec is a leaf to
     // TreeNode.collect, so the partial exec below the exchange is only
     // reachable through the stage's own `plan`.
-    def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-        : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-      val through = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          Seq(a.executedPlan)
-        case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          Seq(qs.plan)
-        case other => other.children
-      }
-      p +: through.flatMap(allNodes)
-    }
-    val partials = allNodes(topk.queryExecution.executedPlan).collect {
+    val partials = PlanLedger.allNodes(topk.queryExecution.executedPlan).collect {
       case g: graft.plans.GroupTopKExec if g.partial => g
     }
     assert(partials.nonEmpty,

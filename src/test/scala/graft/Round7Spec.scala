@@ -6,12 +6,15 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{Dedup, JoinStrategies, SimilaritySearch}
 import graft.queries.{PipelineQueries, PipelineShared}
+import graft.PlanLedger.allNodes
 
 /** Round-7 additions: the automated MinHashIndex compaction lifecycle
   * (bounded lineage, probe invariance, full cache release), the `#`
   * -boundary invalidation fix, the salted-join spread proof, the p10
   * exchange-ledger audit + scale-linearity check, the foreachBatch replay
   * idempotence recipe, and the m04 byte-slicing non-ASCII ground truth.
+  * Also: the s16–s19 query-path appends leave no cached batch leaf and no
+  * ingest directory behind.
   */
 class Round7Spec extends SparkSpecBase {
 
@@ -19,25 +22,6 @@ class Round7Spec extends SparkSpecBase {
 
   private def shingleSet(seed: String, n: Int = 24): Seq[String] =
     (1 to n).map(i => s"${seed}_tok$i")
-
-  /** Recurse into AQE query stages (leaves to TreeNode.collect). */
-  private def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    val through = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        Seq(a.executedPlan)
-      case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        Seq(qs.plan)
-      case other => other.children
-    }
-    p +: through.flatMap(allNodes)
-  }
-
-  private def shuffleExchanges(df: DataFrame)
-      : Seq[org.apache.spark.sql.execution.exchange.ShuffleExchangeLike] =
-    allNodes(df.queryExecution.executedPlan).collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
-    }
 
   // ---- MinHashIndex: automated append compaction -------------------------
 
@@ -150,14 +134,9 @@ class Round7Spec extends SparkSpecBase {
       // The big side's exchange must hash on (skew_key, salt) — WITHOUT
       // the salt attribute the hot key still lands in one reduce task and
       // the operator is a no-op wearing a disguise.
-      val saltedExchanges = shuffleExchanges(joined).filter {
-        e => e.outputPartitioning match {
-          case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
-            val names = h.expressions.flatMap(_.references.map(_.name)).toSet
-            names.contains("skew_key") && names.exists(_.contains("salt"))
-          case _ => false
-        }
-      }
+      val saltedExchanges = PlanLedger.shuffleKeyNames(joined.queryExecution.executedPlan)
+        .map(_.toSet)
+        .filter(names => names.contains("skew_key") && names.exists(_.contains("salt")))
       assert(saltedExchanges.size >= 2,
         s"expected both join sides to shuffle on (skew_key, salt):\n" +
           joined.queryExecution.executedPlan)
@@ -182,14 +161,15 @@ class Round7Spec extends SparkSpecBase {
   test("p10 exchange ledger: no corpus shuffle is keyed on doc_id") {
     val base = graft.sources.Sources.table(spark, dir, "documents")
     val clusters = PipelineShared.dupPairsAndClusters(spark, dir)._2
-    // materialize = false: one plan tree, so EVERY exchange of the
-    // composition is visible (a localCheckpoint hides its upstream as an
-    // opaque RDD scan).
-    val built = PipelineShared.corpusBuildFrom(base, clusters,
-      budget = 3000L, materialize = false)
-    assert(built.queryExecution.toRdd.count() > 0)
-    val exchanges = shuffleExchanges(built)
-    assert(exchanges.nonEmpty)
+    // The shipped composition, checkpoints included: every execution it
+    // runs (the survivors and budget localCheckpoints, then the collect)
+    // is audited, so a stage behind a checkpoint is seen too. The
+    // memoized clusters above are built before the capture opens.
+    val runs = PlanLedger.captureHintedBroadcasts(spark) {
+      assert(PipelineShared.corpusBuildFrom(base, clusters, budget = 3000L)
+        .collect().nonEmpty)
+    }
+    val keyed = PlanLedger.hashKeys(runs)
     // The documented stage ledger. Hash exchanges may only key on:
     //   __h              p03 contamination hash equi-join
     //   lang             p06 language histogram (partial-agg'd, ~|langs|)
@@ -200,15 +180,10 @@ class Round7Spec extends SparkSpecBase {
     // Above all: NOTHING may shuffle the corpus on doc_id — the dedup
     // drop set and contaminated-id set join as broadcast semi/anti.
     val allowed = Set(Set("__h"), Set("lang"), Set("lang", "__sub"), Set("__bkt"))
-    exchanges.foreach { e =>
-      e.outputPartitioning match {
-        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
-          val names = h.expressions.flatMap(_.references.map(_.name)).toSet
-          assert(allowed.contains(names),
-            s"unexpected corpus shuffle on $names:\n${built.queryExecution.executedPlan}")
-          assert(!names.contains("doc_id"), s"corpus shuffled on doc_id")
-        case _ => () // SinglePartition / range: bounded by construction
-      }
+    keyed.foreach { case (names, run) =>
+      assert(allowed.contains(names),
+        s"unexpected corpus shuffle on $names in ${run.action}:\n${run.plan}")
+      assert(!names.contains("doc_id"), s"corpus shuffled on doc_id")
     }
   }
 
@@ -265,9 +240,11 @@ class Round7Spec extends SparkSpecBase {
   test("p13 exchange ledger and epoch invariants") {
     val base = graft.sources.Sources.table(spark, dir, "documents")
     val clusters = PipelineShared.dupPairsAndClusters(spark, dir)._2
-    val built = PipelineShared.corpusBuildV2From(base, clusters,
-      budget = 3000L, materialize = false)
-    assert(built.queryExecution.toRdd.count() > 0)
+    val runs = PlanLedger.captureHintedBroadcasts(spark) {
+      assert(PipelineShared.corpusBuildV2From(base, clusters, budget = 3000L)
+        .collect().nonEmpty)
+    }
+    val keyed = PlanLedger.hashKeys(runs)
     // Ledger = p10's allowlist + the gram stage: its broadcast probe's
     // matched rows aggregate per (train doc, gram) for the distinct count.
     // Still NOTHING shuffles the corpus on doc_id alone — the gram-drop id
@@ -275,15 +252,10 @@ class Round7Spec extends SparkSpecBase {
     // p12's epoch explode is map-only (adds no exchange at all).
     val allowed = Set(Set("__h"), Set("lang"), Set("lang", "__sub"),
       Set("__bkt"), Set("gram"), Set("train_id", "gram"), Set("train_id"))
-    shuffleExchanges(built).foreach { e =>
-      e.outputPartitioning match {
-        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
-          val names = h.expressions.flatMap(_.references.map(_.name)).toSet
-          assert(allowed.contains(names),
-            s"unexpected corpus shuffle on $names:\n${built.queryExecution.executedPlan}")
-          assert(names != Set("doc_id"), s"corpus shuffled on doc_id")
-        case _ => ()
-      }
+    keyed.foreach { case (names, run) =>
+      assert(allowed.contains(names),
+        s"unexpected corpus shuffle on $names in ${run.action}:\n${run.plan}")
+      assert(names != Set("doc_id"), s"corpus shuffled on doc_id")
     }
     // Epoch invariants on the real output: repeats in 1..4, epochs dense
     // per doc, and the doc-level frame equals p10's shape semantics
@@ -298,6 +270,33 @@ class Round7Spec extends SparkSpecBase {
       assert(rs.map(_._3).sorted.toSeq == (1L to rep),
         s"doc $id epochs not dense 1..$rep")
     }
+  }
+
+  // ---- query-path appends: throwaway batches, no leftovers ------------------
+
+  private def runPlans(names: String*): Seq[Long] =
+    names.map(n => PipelineQueries.queries(n)(spark, dir).count())
+
+  test("s16, s17 and s19 leave no cached batch leaf once their artifacts are invalidated") {
+    def uncheckpointed: Set[Int] = spark.sparkContext.getPersistentRDDs.values
+      .filterNot(_.isCheckpointed).map(_.id).toSet
+    val before = uncheckpointed
+    runPlans("s16_index_append_probe", "s17_pq_append_probe", "s19_stream_pq_append")
+    PipelineQueries.invalidateDupCache(spark, dir)
+    val leaked = uncheckpointed -- before
+    assert(leaked.isEmpty, s"${leaked.size} persistent RDDs outlived invalidation: $leaked")
+  }
+
+  test("s18 and s19 remove their stream ingest directories") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def ingestDirs: Set[String] = tmp.listFiles().map(_.getName)
+      .filter(n => n.startsWith("s18_ingest") || n.startsWith("s19_ingest")).toSet
+    val before = ingestDirs
+    val Seq(s18, s19) = runPlans("s18_stream_index_append", "s19_stream_pq_append")
+    assert(ingestDirs -- before == Set.empty[String], "a run left its ingest directory behind")
+    // the streamed appends still answer what their batch twins do
+    val Seq(s16, s17) = runPlans("s16_index_append_probe", "s17_pq_append_probe")
+    assert(s18 == s16 && s19 == s17 && s18 > 0 && s19 > 0, s"rows: $s18/$s16, $s19/$s17")
   }
 
   // ---- foreachBatch replay idempotence -----------------------------------

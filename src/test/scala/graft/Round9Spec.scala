@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.PlanLedger.{allNodes, shuffleKeyNames}
+
 /** Round 9: the timestamp physical-encoding normalization is generalized
   * beyond `events.ts` (any column, any table, keyed on inspected physical
   * type) and the legacy `nanosAsLong` conf is SCOPED — set only when a
@@ -211,19 +213,25 @@ class Round9Spec extends SparkSpecBase {
 
   test("d15 plan: gram-keyed exchanges only, no nested-loop or cartesian stage") {
     val docs = graft.sources.Sources.table(spark, "/root/testdata/sf0.001", "documents")
-    val out = graft.operators.Dedup
-      .exactSubstrPairs(docs, "doc_id", "text", k = 10, maxGramDocs = 256,
-        materialize = false) // one plan tree for the audit (house convention)
-    out.queryExecution.toRdd.count()
-    val nodes = allNodes(out.queryExecution.executedPlan)
-    assert(!nodes.exists(n =>
-      n.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec] ||
-      n.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]),
-      s"candidate generation must be the gram equi-join, never all-pairs:\n" +
-        s"${out.queryExecution.executedPlan}")
-    shuffleKeyNames(out).foreach { names =>
-      assert(names.forall(Set("gram", "a_id", "b_id")),
-        s"d15 shuffles (id, gram) rows and the pair aggregate only, got $names")
+    // Every execution the shipped call runs: the gram checkpoint and the
+    // collect.
+    val runs = PlanLedger.capture(spark) {
+      graft.operators.Dedup
+        .exactSubstrPairs(docs, "doc_id", "text", k = 10, maxGramDocs = 256)
+        .collect()
+    }
+    PlanLedger.hashKeys(runs) // fails unless the capture saw a checkpoint and a keyed shuffle
+    runs.foreach { run =>
+      val nodes = allNodes(run.plan)
+      assert(!nodes.exists(n =>
+        n.isInstanceOf[org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec] ||
+        n.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec]),
+        s"candidate generation must be the gram equi-join, never all-pairs:\n" +
+          s"${run.plan}")
+      shuffleKeyNames(run.plan).foreach { names =>
+        assert(names.forall(Set("gram", "a_id", "b_id")),
+          s"d15 shuffles (id, gram) rows and the pair aggregate only, got $names")
+      }
     }
   }
 
@@ -382,30 +390,6 @@ class Round9Spec extends SparkSpecBase {
     val messages = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
       .map(t => Option(t.getMessage).getOrElse("")).mkString(" | ")
     assert(messages.contains("out of (0, 10000]"), s"got: $messages")
-  }
-
-  private def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    val through = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        Seq(a.executedPlan)
-      case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(qs.plan)
-      case other => other.children
-    }
-    p +: through.flatMap(allNodes)
-  }
-
-  /** Hash-partitioning key names of every shuffle in an EXECUTED plan. */
-  private def shuffleKeyNames(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] = {
-    df.queryExecution.toRdd.count()
-    allNodes(df.queryExecution.executedPlan).collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
-        e.outputPartitioning match {
-          case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
-            h.expressions.flatMap(_.references.map(_.name)).toSeq
-          case _ => Seq.empty // round-robin spread
-        }
-    }
   }
 
   test("t15 plan: broadcast seed probe; the only hash shuffle is the per-doc aggregate") {
