@@ -66,7 +66,9 @@ object EngineConfig {
         env.get("POSTGRES_SERVICE_HOST").filter(_.nonEmpty).map { host =>
           JdbcConfig(
             host = host,
-            port = env.getOrElse("POSTGRES_SERVICE_PORT", "5432").toInt,
+            port = env.get("POSTGRES_SERVICE_PORT").fold(5432)(p =>
+              p.trim.toIntOption.getOrElse(throw ConfigError(
+                s"POSTGRES_SERVICE_PORT '$p' is not a number"))),
             database = required("POSTGRESQL_DATABASE"),
             user = required("POSTGRESQL_USER"),
             password = required("POSTGRESQL_PASSWORD"))

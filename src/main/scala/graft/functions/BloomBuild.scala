@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
@@ -21,10 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * position expressions (no cross-element subexpression elimination in
   * an `array(...)` literal), and hash-aggregated 16n rows into up to
   * m/64 groups. Here both hashes are drawn ONCE per gram and the k
-  * strides are pure arithmetic (the Kirsch–Mitzenmacher double-hash,
-  * bit-identical to [[BloomContainsAny.compute]]'s probe — the
-  * build/probe pairing is pinned by Round12Spec against the Column
-  * `bloomPositions` reference).
+  * strides are pure arithmetic — the probe's own walk
+  * ([[BloomContainsAny.testOrSet]]), pinned by Round12Spec against the
+  * Column reference build.
   *
   * Buffer lifecycle: one `long[mBits/64]` per (task × group). Flat
   * aggregation (no grouping) holds exactly one buffer per task; the
@@ -48,7 +47,11 @@ case class BloomBitsAgg(child: Expression, mBits: Int, k: Int,
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
-    if (v != null) BloomBitsAgg.setBits(v.asInstanceOf[UTF8String], buf, mBits, k)
+    if (v != null) {
+      // the probe's own walk, writing instead of testing
+      BloomContainsAny.testOrSet(
+        BloomContainsAny.h1(v.asInstanceOf[UTF8String]), buf, mBits, k, set = true)
+    }
     buf
   }
 
@@ -62,12 +65,7 @@ case class BloomBitsAgg(child: Expression, mBits: Int, k: Int,
 
   override def serialize(buf: Array[Long]): Array[Byte] = BloomBitsAgg.toBytes(buf)
 
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](bytes.length / 8)
-    val bb = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.asLongBuffer().get(out)
-    out
-  }
+  override def deserialize(bytes: Array[Byte]): Array[Long] = BloomBitsAgg.fromBytes(bytes)
 
   override def withNewMutableAggBufferOffset(newOffset: Int): BloomBitsAgg =
     copy(mutableAggBufferOffset = newOffset)
@@ -78,23 +76,6 @@ case class BloomBitsAgg(child: Expression, mBits: Int, k: Int,
 }
 
 object BloomBitsAgg {
-
-  /** The probe-side arithmetic verbatim ([[BloomContainsAny.compute]]),
-    * writing instead of testing: two XXH64 draws per gram, k
-    * Kirsch–Mitzenmacher strides. */
-  def setBits(s: UTF8String, bits: Array[Long], m: Int, k: Int): Unit = {
-    val mL = m.toLong
-    val h1 = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
-    val h2 = XXH64.hashLong(BloomContainsAny.H2Seed, h1)
-    val h1m = java.lang.Math.floorMod(h1, mL)
-    val stride = java.lang.Math.floorMod(h2, mL) * 2L + 1L
-    var j = 0
-    while (j < k) {
-      val pos = ((h1m + j * stride) % mL).toInt
-      bits(pos >>> 6) |= 1L << (pos & 63)
-      j += 1
-    }
-  }
 
   def toBytes(buf: Array[Long]): Array[Byte] = {
     val bytes = new Array[Byte](buf.length * 8)
@@ -118,107 +99,8 @@ object BloomBitsAgg {
   }
 }
 
-/** Codegen'd membership probe against an N-way SHARDED Bloom filter —
-  * the past-2³⁰-bits scale path: the reference set is split by an
-  * independent per-gram hash draw into nShards sub-filters built and
-  * sized separately, so no single bit array (or its builder's buffer)
-  * ever exceeds ~2³⁰ bits. Per gram exactly ONE shard is probed (the
-  * shard hash picks it; the other shards' bits are irrelevant to this
-  * gram by construction), so probe cost is identical to the unsharded
-  * filter plus one 64-bit hash.
-  *
-  * The shard draw hashes h1 again with [[ShardedBloomContains.ShardSeed]]
-  * rather than reusing `h1 mod nShards`: both m and nShards are powers
-  * of two, so reusing h1 would correlate the shard index with the low
-  * bits of the first probe position and skew each shard's occupied
-  * positions. nShards == 1 skips the draw and is bit-identical to
-  * [[BloomContainsAny]]. */
-case class ShardedBloomContains(child: Expression, shards: Array[Array[Long]],
-                                mBits: Int, k: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with Serializable {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "sharded_bloom_contains_any"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"sharded_bloom_contains_any expects array<string>, got $other")
-    }
-
-  override def nullSafeEval(arr: Any): Any =
-    ShardedBloomContains.compute(
-      arr.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      shards, mBits, k)
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val shardsRef = ctx.addReferenceObj("bloomShards", shards, "long[][]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.ShardedBloomContains.compute($a, $shardsRef, $mBits, $k);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object ShardedBloomContains {
-  /** Seed of the shard-selection draw (64-bit golden ratio — a constant
-    * distinct from every other seed in the engine). */
-  final val ShardSeed = 0x9E3779B97F4A7C15L
-
-  def shardOf(h1: Long, nShards: Int): Int =
-    if (nShards == 1) 0
-    else java.lang.Math.floorMod(XXH64.hashLong(ShardSeed, h1), nShards.toLong).toInt
-
-  def compute(arr: org.apache.spark.sql.catalyst.util.ArrayData,
-              shards: Array[Array[Long]], m: Int, k: Int): Boolean = {
-    val n = arr.numElements()
-    val nShards = shards.length
-    val mL = m.toLong
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val s = arr.getUTF8String(i)
-        val h1 = XXH64.hashUnsafeBytes(
-          s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
-        val h2 = XXH64.hashLong(BloomContainsAny.H2Seed, h1)
-        val bits = shards(shardOf(h1, nShards))
-        val h1m = java.lang.Math.floorMod(h1, mL)
-        val stride = java.lang.Math.floorMod(h2, mL) * 2L + 1L
-        var j = 0
-        var all = true
-        while (all && j < k) {
-          val pos = ((h1m + j * stride) % mL).toInt
-          if ((bits(pos >>> 6) & (1L << (pos & 63))) == 0L) all = false
-          j += 1
-        }
-        if (all) return true
-      }
-      i += 1
-    }
-    false
-  }
-
-  /** Shard index of a gram COLUMN (build side) — the same h1 + ShardSeed
-    * draw [[compute]] makes probe-side, as Catalyst arithmetic:
-    * `xxhash64(gram)` is the h1 draw, and `xxhash64(lit, gram-hash)`
-    * cannot express hashLong(seed, v) directly, so the build side goes
-    * through [[ShardOfGram]]. */
-  def shardOfGram(gram: Column, nShards: Int): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(ShardOfGram(GraftColumnBridge.expression(gram), nShards))
-  }
-}
-
-/** Build-side shard selector: `shardOf(xxhash64(gram), nShards)` as one
-  * codegen'd scalar, guaranteed to agree with the probe's draw. */
+/** Build-side shard selector: [[BloomContainsAny.shardOf]] of the gram's
+  * h1 as one codegen'd scalar, guaranteed to agree with the probe's draw. */
 case class ShardOfGram(child: Expression, nShards: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with Serializable {
@@ -235,21 +117,16 @@ case class ShardOfGram(child: Expression, nShards: Int)
           s"shard_of_gram expects string, got $other")
     }
 
-  override def nullSafeEval(s: Any): Any = {
-    val u = s.asInstanceOf[UTF8String]
-    val h1 = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
-    ShardedBloomContains.shardOf(h1, nShards)
-  }
+  override def nullSafeEval(s: Any): Any =
+    BloomContainsAny.shardOf(BloomContainsAny.h1(s.asInstanceOf[UTF8String]), nShards)
 
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
     nullSafeCodeGen(ctx, ev, s =>
-      s"""${ev.value} = graft.functions.ShardedBloomContains.shardOf(
-         |  org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-         |    $s.getBaseObject(), $s.getBaseOffset(), $s.numBytes(), 42L), $nShards);
-         |""".stripMargin)
+      s"${ev.value} = graft.functions.BloomContainsAny.shardOf(" +
+        s"graft.functions.BloomContainsAny.h1($s), $nShards);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -225,66 +225,48 @@ object Sampling {
   // NO false negatives (a leak can never slip through), false positives
   // only cost over-dropping at a measured, bounded rate.
 
-  /** The Bloom artifact: `mBits` bits as packed longs, `k` probes per
-    * item (Kirsch–Mitzenmacher double hashing — two xxhash64 draws
-    * derive all k positions). Save/load/memoize like the gram and IVF
-    * indexes; persisted as a one-shard [[ShardedBloomIndex]]. */
-  final case class BloomIndex(bits: Array[Long], mBits: Int, k: Int,
+  /** The Bloom artifact: `nShards` independent sub-filters of `mBits` bits
+    * each as packed longs, `k` probes per item (Kirsch–Mitzenmacher
+    * double hashing — two xxhash64 draws derive all k positions). A plain
+    * filter is one shard; past 2³⁰ bits a per-gram hash draw picks the
+    * shard on BOTH sides (build routes the gram's bits into its shard;
+    * probe tests only that shard), so no single bit array, aggregation
+    * buffer, or collected row ever exceeds `mBits`, while the union
+    * behaves as one filter of nShards × mBits bits. Save/load/memoize like
+    * the gram and IVF indexes.
+    *
+    * Persisted form: `bloom_bits` rows (shard, w, bits), one file per
+    * shard, beside (m_bits per shard, k, n_items, n_shards). Rows are
+    * produced executor-side from one broadcast per shard, so the driver
+    * holds the index itself and never a row per word (the pre-round-13
+    * driver-local Seq of nShards × m/64 boxed tuples was 10^8+ objects at
+    * the >2^30-bit scale), and each write task fetches only its own
+    * shard. */
+  final case class BloomIndex(shards: Array[Array[Long]], mBits: Int, k: Int,
                               nItems: Long) {
-    def save(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
-      saveBloom(spark, dir, "bloom_index", Array(bits), mBits, k, nItems)
+    def nShards: Int = shards.length
+
+    def save(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
+      import spark.implicits._
+      val bcs = shards.map(spark.sparkContext.broadcast(_))
+      try {
+        val rows = bcs.zipWithIndex.map { case (bc, s) =>
+          spark.range(mBits / 64L).map(w => (s, w.toInt, bc.value(w.toInt))).coalesce(1)
+        }.reduce(_ union _)
+        Persisted.save(dir, "bloom_index", Map("m_bits" -> mBits, "k" -> k,
+          "n_items" -> nItems, "n_shards" -> nShards))(
+          "bloom_bits" -> rows.toDF("shard", "w", "bits"))
+      } finally bcs.foreach(_.destroy())
+    }
   }
 
   def loadBloomIndex(spark: org.apache.spark.sql.SparkSession,
                      dir: String): BloomIndex = {
-    val (shards, m, k, n) = loadBloom(spark, dir, "bloom_index")
-    BloomIndex(shards(0), m, k, n)
-  }
-
-  /** The one persisted form of both Bloom artifacts: `bloom_bits` rows
-    * (shard, w, bits), one file per shard, beside (m_bits per shard, k,
-    * n_items, n_shards). Rows are produced executor-side from one
-    * broadcast per shard, so the driver holds the index itself and never
-    * a row per word (the pre-round-13 driver-local Seq of nShards × m/64
-    * boxed tuples was 10^8+ objects at the >2^30-bit scale the sharded
-    * artifact targets), and each write task fetches only its own shard. */
-  private def saveBloom(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        kind: String, shards: Array[Array[Long]], mBits: Int,
-                        k: Int, nItems: Long): Unit = {
-    import spark.implicits._
-    val bcs = shards.map(spark.sparkContext.broadcast(_))
-    try {
-      val rows = bcs.zipWithIndex.map { case (bc, s) =>
-        spark.range(mBits / 64L).map(w => (s, w.toInt, bc.value(w.toInt))).coalesce(1)
-      }.reduce(_ union _)
-      Persisted.save(dir, kind, Map("m_bits" -> mBits, "k" -> k, "n_items" -> nItems,
-        "n_shards" -> shards.length))("bloom_bits" -> rows.toDF("shard", "w", "bits"))
-    } finally bcs.foreach(_.destroy())
-  }
-
-  private def loadBloom(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        kind: String): (Array[Array[Long]], Int, Int, Long) = {
-    val p = Persisted.load(spark, dir, kind)
+    val p = Persisted.load(spark, dir, "bloom_index")
     val shards = Array.fill(p.int("n_shards"))(new Array[Long](p.int("m_bits") / 64))
     p.frame("bloom_bits").collect()
       .foreach(r => shards(r.getInt(0))(r.getInt(1)) = r.getLong(2))
-    (shards, p.int("m_bits"), p.int("k"), p.long("n_items"))
-  }
-
-  /** 1L << i for i in 0..63 — the variable-shift stand-in: Spark's Column
-    * API only shifts by literals, so bit masks come from this 64-element
-    * literal array instead (element_at is O(1) on a constant). */
-  private[graft] val BitMasks: Seq[Long] = (0 until 64).map(i => 1L << i)
-
-  /** k bit positions of `gram` (Kirsch–Mitzenmacher: `h1 + i·(2·h2+1)`
-    * mod m; the odd multiplier keeps the stride nonzero). Both hashes are
-    * reduced mod m BEFORE the affine combine so no intermediate can
-    * overflow (ANSI-safe). */
-  private[graft] def bloomPositions(gram: Column, mBits: Int, k: Int): Seq[Column] = {
-    val m = lit(mBits.toLong)
-    val h1 = pmod(xxhash64(gram), m)
-    val h2 = pmod(xxhash64(gram, lit(0x9E3779B9L)), m) * 2L + 1L
-    (0 until k).map(i => pmod(h1 + lit(i.toLong) * h2, m))
+    BloomIndex(shards, p.int("m_bits"), p.int("k"), p.long("n_items"))
   }
 
   /** Build the filter over a gram frame (one column of strings) in TWO
@@ -295,38 +277,68 @@ object Sampling {
     * neighbor is correctly sized) and one
     * [[graft.functions.BloomBitsAgg]] pass: every task ORs its grams'
     * bits into a local `long[m/64]`, partials merge by array OR, and the
-    * driver collects ONE binary row — bounded by the FILTER SIZE, never
-    * the reference set (contrast every other fit-collect in the engine,
-    * which bounds by sampling). Both hashes are drawn once per gram
-    * inside the aggregate; the round-11 k-way `explode(array(...))` →
-    * `(word, bit_or)` shape re-derived them in each of the 16 position
-    * expressions and pushed 16n rows through a hash aggregate.
+    * driver collects ONE binary row per shard — bounded by the FILTER
+    * SIZE, never the reference set (contrast every other fit-collect in
+    * the engine, which bounds by sampling). Both hashes are drawn once
+    * per gram inside the aggregate; the round-11 k-way
+    * `explode(array(...))` → `(word, bit_or)` shape re-derived them in
+    * each of the 16 position expressions and pushed 16n rows through a
+    * hash aggregate.
     *
-    * `mBits <= 0` auto-sizes from the distinct-gram estimate (the
-    * autoLshParams discipline — a pinned size silently degrades as the
-    * reference set grows, exactly the bug the round-9 LSH fix closed):
-    * m = next power of two ≥ 32·n, floor 2¹⁷. The sizing target is the
-    * DOC-level verdict, which compounds the per-gram rate over every
-    * gram in a document (1−(1−p)^G): at load ≤ 1/32 with k=16 the
-    * per-gram FP is ≤ (1−e^{−1/2})¹⁶ ≈ 3·10⁻⁷, so even 10⁴-gram
+    * One shard aggregates globally, with no shuffle. More shards route
+    * each gram's bits into its shard's aggregate after
+    * `repartition(nShards, shard)`, so every task holds exactly one
+    * `long[m/64]` buffer (the buffer-per-group memory story in
+    * [[graft.functions.BloomBitsAgg]]'s scaladoc); the reference-set
+    * shuffle this adds is bounded by the reference set, which is
+    * precisely the population the op exists to avoid broadcasting.
+    *
+    * `mBits <= 0` auto-sizes each shard from the distinct-gram estimate
+    * over nShards (the autoLshParams discipline — a pinned size silently
+    * degrades as the reference set grows, exactly the bug the round-9 LSH
+    * fix closed): m = next power of two ≥ 32·n, floor 2¹⁷. The sizing
+    * target is the DOC-level verdict, which compounds the per-gram rate
+    * over every gram in a document (1−(1−p)^G): at load ≤ 1/32 with k=16
+    * the per-gram FP is ≤ (1−e^{−1/2})¹⁶ ≈ 3·10⁻⁷, so even 10⁴-gram
     * documents flag falsely at < 1%, far under
     * [[bloomDecontamination]]'s 300 bp corpus ceiling. (A k=3 filter at
     * load 0.1 — the textbook per-ITEM sizing — measures ~80% doc-level
     * FP on 190-gram docs; the compounding is the whole sizing story.) */
-  def buildBloomIndex(grams: DataFrame, gramCol: String, mBits: Int = 0,
-                      k: Int = 16): BloomIndex = {
+  def buildBloomIndex(grams: DataFrame, gramCol: String, nShards: Int = 1,
+                      mBits: Int = 0, k: Int = 16): BloomIndex = {
+    require(nShards >= 1, s"nShards must be >= 1, got $nShards")
     require(k >= 1 && k <= 16, s"k must be in [1,16], got $k")
     val nItems = approxDistinct(grams, gramCol)
-    require(mBits > 0 || nItems * 32L <= (1L << 30),
-      s"auto-sized bloom would exceed 2^30 bits for ~$nItems grams — " +
-        "use buildShardedBloomIndex, or pass mBits explicitly with a " +
-        "documented FP budget")
-    val m = if (mBits > 0) mBits else autoBloomBits(nItems)
+    // The shard hash draw splits grams ~evenly, so ceil(n/nShards) is the
+    // per-shard population the 32-bits/item target must cover; fail here
+    // with a message naming the fix rather than in autoBloomBits.
+    val perShard = (nItems + nShards - 1) / nShards
+    require(mBits > 0 || perShard * 32L <= (1L << 30),
+      s"auto-sized bloom would exceed 2^30 bits per shard for ~$perShard " +
+        s"grams/shard (~$nItems total over $nShards shards) — increase " +
+        "nShards, or pass mBits explicitly with a documented FP budget")
+    val m = if (mBits > 0) mBits else autoBloomBits(perShard)
     require(m % 64 == 0 && m > 0, s"mBits must be a positive multiple of 64, got $m")
-    val bytes = grams
-      .agg(graft.functions.BloomBitsAgg.bloomBitsAgg(col(gramCol), m, k).as("bits"))
-      .head.getAs[Array[Byte]](0)
-    BloomIndex(graft.functions.BloomBitsAgg.fromBytes(bytes), m, k, nItems)
+    import graft.functions.BloomBitsAgg.{bloomBitsAgg, fromBytes}
+    val shards =
+      if (nShards == 1)
+        Array(fromBytes(grams.agg(bloomBitsAgg(col(gramCol), m, k).as("bits"))
+          .head.getAs[Array[Byte]](0)))
+      else {
+        import org.apache.spark.sql.GraftColumnBridge
+        val shard = GraftColumnBridge.column(graft.functions.ShardOfGram(
+          GraftColumnBridge.expression(col(gramCol)), nShards))
+        val out = Array.fill(nShards)(new Array[Long](m / 64))
+        grams
+          .select(col(gramCol).as("__g"), shard.as("__shard"))
+          .repartition(nShards, col("__shard"))
+          .groupBy(col("__shard"))
+          .agg(bloomBitsAgg(col("__g"), m, k).as("bits"))
+          .collect()
+          .foreach(r => out(r.getInt(0)) = fromBytes(r.getAs[Array[Byte]](1)))
+        out
+      }
+    BloomIndex(shards, m, k, nItems)
   }
 
   private def approxDistinct(grams: DataFrame, gramCol: String): Long =
@@ -346,102 +358,19 @@ object Sampling {
     math.max(1 << 17, target.toInt)
   }
 
-  /** The past-2³⁰-bits artifact: nShards independent sub-filters, a
-    * per-gram hash draw picking the shard on BOTH sides (build routes the
-    * gram's bits into its shard; probe tests only that shard) — so no
-    * single bit array, aggregation buffer, or collected row ever exceeds
-    * mBitsPerShard, while the union behaves as one filter of
-    * nShards × mBitsPerShard bits. Same save/load lifecycle. */
-  final case class ShardedBloomIndex(shards: Array[Array[Long]],
-                                     mBitsPerShard: Int, k: Int,
-                                     nItems: Long) {
-    def nShards: Int = shards.length
-    def save(spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
-      saveBloom(spark, dir, "bloom_sharded", shards, mBitsPerShard, k, nItems)
-  }
-
-  def loadShardedBloomIndex(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): ShardedBloomIndex = {
-    val (shards, m, k, n) = loadBloom(spark, dir, "bloom_sharded")
-    ShardedBloomIndex(shards, m, k, n)
-  }
-
-  /** Sharded build: one sizing pass, then ONE pass routing each gram's
-    * bits into its shard's aggregate — `repartition(nShards, shard)` so
-    * every task holds exactly one `long[m/64]` buffer (the partial-agg
-    * buffer-per-group memory story in [[graft.functions.BloomBitsAgg]]'s
-    * scaladoc); the reference-set shuffle this adds is bounded by the
-    * reference set, which is precisely the population the op exists to
-    * avoid broadcasting. Per-shard m auto-sizes from n/nShards with the
-    * same 32-bits/item target, so the whole-filter FP story is unchanged. */
-  def buildShardedBloomIndex(grams: DataFrame, gramCol: String, nShards: Int,
-                             mBitsPerShard: Int = 0,
-                             k: Int = 16): ShardedBloomIndex = {
-    require(nShards >= 1, s"nShards must be >= 1, got $nShards")
-    require(k >= 1 && k <= 16, s"k must be in [1,16], got $k")
-    val nItems = approxDistinct(grams, gramCol)
-    // Mirror of buildBloomIndex's 2^30 guard, applied per shard: the
-    // shard hash draw splits grams ~evenly, so ceil(n/nShards) is the
-    // per-shard population the 32-bits/item target must cover. Without
-    // this, autoBloomBits's bound trips with a message that doesn't
-    // name the fix (shard wider).
-    val perShard = (nItems + nShards - 1) / math.max(1L, nShards.toLong)
-    require(mBitsPerShard > 0 || perShard * 32L <= (1L << 30),
-      s"auto-sized per-shard bloom would exceed 2^30 bits for ~$perShard " +
-        s"grams/shard (~$nItems total over $nShards shards) — increase " +
-        "nShards or pass mBitsPerShard explicitly with a documented FP budget")
-    val m =
-      if (mBitsPerShard > 0) mBitsPerShard
-      else autoBloomBits(math.max(1L, perShard))
-    require(m % 64 == 0, s"mBitsPerShard must be a multiple of 64, got $m")
-    val rows = grams
-      .select(col(gramCol).as("__g"),
-        graft.functions.ShardedBloomContains.shardOfGram(col(gramCol), nShards)
-          .as("__shard"))
-      .repartition(nShards, col("__shard"))
-      .groupBy(col("__shard"))
-      .agg(graft.functions.BloomBitsAgg.bloomBitsAgg(col("__g"), m, k).as("bits"))
-      .collect()
-    val shards = Array.fill(nShards)(new Array[Long](m / 64))
-    rows.foreach(r => shards(r.getInt(0)) =
-      graft.functions.BloomBitsAgg.fromBytes(r.getAs[Array[Byte]](1)))
-    ShardedBloomIndex(shards, m, k, nItems)
-  }
-
-  /** Scan-side exists-over-grams probe of a sharded filter — the
-    * [[bloomContainsAny]] hot path with the shard draw fused in. */
-  def shardedBloomContainsAny(idx: ShardedBloomIndex)(grams: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge
-    GraftColumnBridge.column(graft.functions.ShardedBloomContains(
-      GraftColumnBridge.expression(grams), idx.shards, idx.mBitsPerShard, idx.k))
-  }
-
-  /** Scan-side membership probe: true iff all k bits are set. The bit
-    * array rides the plan as ONE array literal (broadcast with the task
-    * binary — the intended shape for a fixed-size filter); the test is
-    * element_at + bitwiseAND, fully inside whole-stage codegen. May
-    * return false positives at the sized rate; never false negatives. */
-  def bloomMightContain(idx: BloomIndex)(gram: Column): Column = {
-    val bitsLit = typedlit(idx.bits.toSeq)
-    val masks = typedlit(BitMasks)
-    bloomPositions(gram, idx.mBits, idx.k).map { pos =>
-      (element_at(bitsLit, shiftright(pos, 6).cast("int") + 1)
-        .bitwiseAND(element_at(masks, pmod(pos, lit(64)).cast("int") + 1))
-        ) =!= 0L
-    }.reduce(_ && _)
-  }
-
   /** Fused exists-over-grams probe as ONE codegen'd expression
     * ([[graft.functions.BloomContainsAny]]) — the hot-path form of
-    * `exists(grams, bloomMightContain(idx))`: higher-order functions are
+    * `exists(grams, mightContain)`: higher-order functions are
     * CodegenFallback in Spark, so the per-gram interpreted tree dominated
     * the probe's wall clock (measured ~2× on p21 at sf0.1). The Column
-    * composition above stays as the REFERENCE definition; FunctionsSpec
-    * pins the two equal so the probe can never drift from the build. */
+    * composition stays in the test tree as the REFERENCE definition, and
+    * Round11bSpec pins the two equal so the probe can never drift from
+    * the build. Per gram one shard is probed; may return false positives
+    * at the sized rate, never false negatives. */
   def bloomContainsAny(idx: BloomIndex)(grams: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(graft.functions.BloomContainsAny(
-      GraftColumnBridge.expression(grams), idx.bits, idx.mBits, idx.k))
+      GraftColumnBridge.expression(grams), idx.shards, idx.mBits, idx.k))
   }
 
   /** Bloom-filter n-gram decontamination over a TRAIN frame: one row per
@@ -452,33 +381,15 @@ object Sampling {
     * corpus-level false-positive rate must sit under `fpCeilingBp`
     * (`fp_ok`, the recallBand-style cross-joined flag). At 100 TB only
     * the bloom column ships; the exact side IS the oracle's claim here.
+    * The shard count never reaches the output: `no_false_neg`/`fp_ok` are
+    * properties every shard count satisfies.
     *
     * Shapes: grams scan-side (wordNgrams HOF); the bloom probe is
     * row-local over the gram array (no shuffle, no join); the exact twin
     * is the p11 broadcast probe bounded by the eval gram population. */
   def bloomDecontamination(train: DataFrame, idCol: String, textCol: String,
                            idx: BloomIndex, evalGrams: DataFrame,
-                           n: Int = 13, fpCeilingBp: Int = 300): DataFrame =
-    bloomDecontaminationWith(train, idCol, textCol, bloomContainsAny(idx),
-      evalGrams, n, fpCeilingBp)
-
-  /** [[bloomDecontamination]] probing an N-way SHARDED filter — the
-    * past-2³⁰-bits composition: identical output contract (and so
-    * identical oracle claim — the bit layout never reaches the output;
-    * `no_false_neg`/`fp_ok` are properties BOTH filter shapes satisfy),
-    * with the probe the fused shard-draw expression. */
-  def shardedBloomDecontamination(train: DataFrame, idCol: String,
-                                  textCol: String, idx: ShardedBloomIndex,
-                                  evalGrams: DataFrame,
-                                  n: Int = 13, fpCeilingBp: Int = 300): DataFrame =
-    bloomDecontaminationWith(train, idCol, textCol,
-      shardedBloomContainsAny(idx), evalGrams, n, fpCeilingBp)
-
-  private def bloomDecontaminationWith(train: DataFrame, idCol: String,
-                                       textCol: String,
-                                       probe: Column => Column,
-                                       evalGrams: DataFrame,
-                                       n: Int, fpCeilingBp: Int): DataFrame = {
+                           n: Int = 13, fpCeilingBp: Int = 300): DataFrame = {
     // The dominant cost is per-row CPU (the gram HOF + the k-probe walk),
     // and a compact parquet corpus scans as one partition per row group —
     // spread to cluster parallelism first (the contaminationMatches
@@ -489,7 +400,7 @@ object Sampling {
       wordNgrams(col(textCol), n).as("__gs"))
     val probed = g.select(col(idCol),
       size(col("__gs")).cast("long").as("n_grams"),
-      probe(col("__gs")).as("__bloom"),
+      bloomContainsAny(idx)(col("__gs")).as("__bloom"),
       col("__gs"))
     val exactIds = probed.select(col(idCol), explode(col("__gs")).as("gram"))
       .join(broadcast(evalGrams.select(col("gram")).distinct()), Seq("gram"),
@@ -519,7 +430,7 @@ object Sampling {
 
   /** Two-stage bloom-prefiltered EXACT decontamination (p22) — the
     * production composition: the corpus probes the bloom scan-side
-    * (shuffle-free, [[bloomMightContain]]) and ONLY the flagged sliver
+    * (shuffle-free, [[bloomContainsAny]]) and ONLY the flagged sliver
     * joins the exact gram table for verification and the per-doc report.
     * Because the filter has no false negatives, the prefilter is
     * LOSSLESS for the final output — this returns exactly

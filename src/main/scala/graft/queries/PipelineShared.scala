@@ -211,15 +211,15 @@ private[graft] object PipelineShared {
       Sampling.buildBloomIndex(memoizedEvalGrams(s, dir), "gram")
     }
 
-  /** The memoized ([[ArtifactStore]]) 2-shard [[Sampling.ShardedBloomIndex]]
+  /** The memoized ([[ArtifactStore]]) 2-shard [[Sampling.BloomIndex]]
     * over the same eval gram table as [[memoizedBloomIndex]] — p23's
     * probe artifact (the past-2³⁰-bits lifecycle exercised end-to-end at
     * bench scale: same grams, same k, the shard draw the only
     * difference). */
-  private[queries] def memoizedShardedBloom(s: SparkSession,
-                                            dir: String): Sampling.ShardedBloomIndex =
+  private[queries] def memoizedTwoShardBloom(s: SparkSession,
+                                             dir: String): Sampling.BloomIndex =
     ArtifactStore.get("bloom_sharded", s, dir) {
-      Sampling.buildShardedBloomIndex(memoizedEvalGrams(s, dir), "gram", nShards = 2)
+      Sampling.buildBloomIndex(memoizedEvalGrams(s, dir), "gram", nShards = 2)
     }
 
   /** The memoized ([[ArtifactStore]]) [[SimilaritySearch.KnnGraph]] over

@@ -65,20 +65,20 @@ private[graft] object SamplingQueries {
     }),
 
 
-    // p23: p21 through the N-way SHARDED filter (2 shards here — the
-    // past-2³⁰-bits lifecycle exercised end-to-end at bench scale: same
-    // eval grams, same k; the per-gram shard draw is the only plan
-    // difference, and the output contract — exact verdict beside the
-    // probe, no_false_neg pinned 1, corpus FP under 300 bp — is
-    // identical, so the oracle is p21's verbatim. The bit layout never
-    // reaches the output; the hash claim is that SHARDING PRESERVES the
-    // one-sided-error + FP-ceiling contract.
+    // p23: p21 through a 2-shard filter (the past-2³⁰-bits lifecycle
+    // exercised end-to-end at bench scale: same eval grams, same k; the
+    // per-gram shard draw is the only plan difference, and the output
+    // contract — exact verdict beside the probe, no_false_neg pinned 1,
+    // corpus FP under 300 bp — is identical, so the oracle is p21's
+    // verbatim. The bit layout never reaches the output; the hash claim
+    // is that SHARDING PRESERVES the one-sided-error + FP-ceiling
+    // contract.
     "p23_sharded_bloom_decontam" -> ((s, dir) => {
       val withSplit = docs(s, dir).withColumn("split",
         graft.operators.Sampling.assignSplit(col("doc_id")))
-      Sampling.shardedBloomDecontamination(
+      Sampling.bloomDecontamination(
         withSplit.filter(col("split") === "train"),
-        "doc_id", "text", memoizedShardedBloom(s, dir), memoizedEvalGrams(s, dir))
+        "doc_id", "text", memoizedTwoShardBloom(s, dir), memoizedEvalGrams(s, dir))
     }),
 
 
@@ -344,7 +344,7 @@ private[graft] object SamplingQueries {
     }),
   )
 
-  /** Production-plan side of p21 (the [[SimilarityQueries
+  /** Production-plan side of p21 and p23 (the [[SimilarityQueries
     * .productionOverrides]] convention): at 100 TB only the scan-side
     * bloom probe ships — (doc_id, n_grams, bloom_flagged), zero shuffle,
     * zero joins; the exact verdict riding along in [[queries]] is the
@@ -352,31 +352,23 @@ private[graft] object SamplingQueries {
     * exact verification of the flagged sliver IS the production
     * composition.) */
   val productionOverrides: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "p23_sharded_bloom_decontam" -> ((s, dir) => {
-      val withSplit = docs(s, dir).withColumn("split",
-        graft.operators.Sampling.assignSplit(col("doc_id")))
-      val idx = memoizedShardedBloom(s, dir)
-      Dedup.spreadToParallelism(
-          withSplit.filter(col("split") === "train")
-            .select(col("doc_id"), col("text")))
-        .select(col("doc_id"), Sampling.wordNgrams(col("text"), 13).as("__gs"))
-        .select(col("doc_id"),
-          size(col("__gs")).cast("long").as("n_grams"),
-          Sampling.shardedBloomContainsAny(idx)(col("__gs")).as("bloom_flagged"))
-    }),
-    "p21_bloom_decontam" -> ((s, dir) => {
-      val withSplit = docs(s, dir).withColumn("split",
-        graft.operators.Sampling.assignSplit(col("doc_id")))
-      val idx = memoizedBloomIndex(s, dir)
-      Dedup.spreadToParallelism(
-          withSplit.filter(col("split") === "train")
-            .select(col("doc_id"), col("text")))
-        .select(col("doc_id"), Sampling.wordNgrams(col("text"), 13).as("__gs"))
-        .select(col("doc_id"),
-          size(col("__gs")).cast("long").as("n_grams"),
-          Sampling.bloomContainsAny(idx)(col("__gs")).as("bloom_flagged"))
-    }),
+    "p23_sharded_bloom_decontam" ->
+      ((s, dir) => bloomFlags(s, dir, memoizedTwoShardBloom(s, dir))),
+    "p21_bloom_decontam" -> ((s, dir) => bloomFlags(s, dir, memoizedBloomIndex(s, dir))),
   )
+
+  /** p21/p23's production plan over `idx`: (doc_id, n_grams,
+    * bloom_flagged) for the train split. */
+  private def bloomFlags(s: SparkSession, dir: String,
+                         idx: Sampling.BloomIndex): DataFrame =
+    Dedup.spreadToParallelism(
+        docs(s, dir).withColumn("split", Sampling.assignSplit(col("doc_id")))
+          .filter(col("split") === "train")
+          .select(col("doc_id"), col("text")))
+      .select(col("doc_id"), Sampling.wordNgrams(col("text"), 13).as("__gs"))
+      .select(col("doc_id"),
+        size(col("__gs")).cast("long").as("n_grams"),
+        Sampling.bloomContainsAny(idx)(col("__gs")).as("bloom_flagged"))
 
   // p21/p23: the exact side recomputed verbatim (p11's gram CTEs); the
   // engine-specific bloom bit pattern stays out of the hash — the pinned

@@ -201,7 +201,8 @@ object EventStreams {
     *
     * Plan shape: completely STATELESS — grams scan-side, the probe is a
     * row-local expression over the gram array ([[graft.operators
-    * .Sampling.bloomMightContain]]), no join, no watermark, no state
+    * .Sampling.bloomContainsAny]]; on a sharded filter the shard draw is
+    * per-gram arithmetic inside it), no join, no watermark, no state
     * store; a replayed doc trivially re-derives the same flag. The
     * one-sided error contract carries over: `bloom_hit` is never false
     * on a true leak; false positives occur at the filter's sized rate
@@ -220,24 +221,6 @@ object EventStreams {
       .select(col("new_id"), col(tsCol),
         size(col("__gs")).cast("long").as("n_grams"),
         graft.operators.Sampling.bloomContainsAny(idx)(col("__gs"))
-          .as("bloom_hit"))
-
-  /** [[bloomDecontamStream]] probing the N-way SHARDED filter
-    * ([[graft.operators.Sampling.ShardedBloomIndex]]) — the
-    * past-2³⁰-bits admission gate. Identically stateless: the shard draw
-    * is per-gram arithmetic inside the fused probe expression, so the
-    * plan gains no operator, no state store, and replays still re-derive
-    * the verdict. */
-  def shardedBloomDecontamStream(docs: DataFrame, idCol: String,
-                                 textCol: String, tsCol: String,
-                                 idx: graft.operators.Sampling.ShardedBloomIndex,
-                                 n: Int = 13): DataFrame =
-    docs
-      .select(col(idCol).as("new_id"), col(tsCol),
-        graft.operators.Sampling.wordNgrams(col(textCol), n).as("__gs"))
-      .select(col("new_id"), col(tsCol),
-        size(col("__gs")).cast("long").as("n_grams"),
-        graft.operators.Sampling.shardedBloomContainsAny(idx)(col("__gs"))
           .as("bloom_hit"))
 
   /** Streaming template-admission gate — d26's ingest twin: arriving

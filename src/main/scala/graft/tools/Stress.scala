@@ -254,11 +254,13 @@ object Stress {
         graft.functions.WordShingles.wordShingles(col("text"), 3).as("sh"))
       .filter(size(col("sh")) > 0)
     time("index_append_fold") {
-      val out = java.nio.file.Files.createTempDirectory("stress_mhidx").toString
-      val batchIdx = Dedup.buildMinHashIndex(batchSh, "doc_id", "sh",
-        persist = false)
-      batchIdx.save(out, mode = "append")
-      spark.read.parquet(s"$out/signatures").count()
+      val out = java.nio.file.Files.createTempDirectory("stress_mhidx").toFile
+      try {
+        val batchIdx = Dedup.buildMinHashIndex(batchSh, "doc_id", "sh",
+          persist = false)
+        batchIdx.save(out.toString, mode = "append")
+        spark.read.parquet(s"$out/signatures").count()
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(out)
     }
     time("probe_after_append") {
       val appended = deltaIdx.append(batchSh, "sh")
@@ -923,12 +925,12 @@ object Stress {
         .distinct()
       graft.operators.Dedup.connectedComponents(pairs, "a_id", "b_id").count()
     }
-    // The sharded probe's only delta over bloom_probe is one extra
+    // The 2-shard probe's only delta over bloom_probe is one extra
     // 64-bit hash per gram (the shard draw) — the curve must track
     // bloom_probe within noise at every factor.
-    lazy val pinnedShardedBloom = graft.operators.Sampling
-      .buildShardedBloomIndex(pinnedEvalGrams, "gram", nShards = 2)
-    if (want("sharded_bloom_probe")) { val _ = pinnedShardedBloom }
+    lazy val pinnedTwoShardBloom = graft.operators.Sampling
+      .buildBloomIndex(pinnedEvalGrams, "gram", nShards = 2)
+    if (want("sharded_bloom_probe")) { val _ = pinnedTwoShardBloom }
     time("sharded_bloom_probe") {
       val trainScaled = docs
         .withColumn("split",
@@ -938,7 +940,7 @@ object Stress {
           graft.operators.Sampling.wordNgrams(col("text"), 13).as("__gs"))
       trainScaled.select(col("doc_id"),
           graft.operators.Sampling
-            .shardedBloomContainsAny(pinnedShardedBloom)(col("__gs")).as("hit"))
+            .bloomContainsAny(pinnedTwoShardBloom)(col("__gs")).as("hit"))
         .filter(col("hit")).count()
     }
     // t24: row-local regex counting like char_diversity — pure scan CPU.

@@ -114,9 +114,9 @@ class EngineConfigSpec extends AnyFunSuite {
     "FLOORPLAN_FILE" -> floorplan)
 
   private def withFloorplanFile(f: String => Unit): Unit = {
-    val file = java.io.File.createTempFile("floorplan", ".yaml")
-    try { java.nio.file.Files.writeString(file.toPath, "- prefix: p\n  query: SELECT 1\n"); f(file.getPath) }
-    finally file.delete()
+    val file = SparkSpecBase.tmpFile("floorplan", ".yaml")
+    java.nio.file.Files.writeString(file, "- prefix: p\n  query: SELECT 1\n")
+    f(file.toString)
   }
 
   test("missing AWS_BUCKET fails fast") {
@@ -151,36 +151,42 @@ class EngineConfigSpec extends AnyFunSuite {
     }
   }
 
+  test("a non-numeric POSTGRES_SERVICE_PORT fails fast as a config error naming the variable") {
+    withFloorplanFile { fp =>
+      val e = intercept[ConfigError](EngineConfig.fromEnv(baseEnv(fp) ++ Map(
+        "POSTGRES_SERVICE_HOST" -> "db", "POSTGRES_SERVICE_PORT" -> "tcp://10.0.0.1:5432",
+        "POSTGRESQL_DATABASE" -> "d", "POSTGRESQL_USER" -> "u",
+        "POSTGRESQL_PASSWORD" -> "pw")))
+      assert(e.getMessage.contains("POSTGRES_SERVICE_PORT"))
+    }
+  }
+
   test("Clowder config (ACG_CONFIG) overrides env DB settings") {
-    val acg = java.io.File.createTempFile("acg", ".json")
-    try {
-      java.nio.file.Files.writeString(acg.toPath,
-        """{"database": {"hostname": "clowder-db", "port": 5433,
-          |  "name": "cdb", "username": "cu", "password": "cpw"}}""".stripMargin)
-      withFloorplanFile { fp =>
-        val c = EngineConfig.fromEnv(baseEnv(fp) ++ Map(
-          "ACG_CONFIG" -> acg.getPath,
-          // Plain env settings present but must lose to Clowder:
-          "POSTGRES_SERVICE_HOST" -> "env-db", "POSTGRESQL_DATABASE" -> "d",
-          "POSTGRESQL_USER" -> "u", "POSTGRESQL_PASSWORD" -> "pw"))
-        assert(c.jdbc.map(_.url).contains("jdbc:postgresql://clowder-db:5433/cdb"))
-        assert(c.jdbc.map(_.user).contains("cu"))
-      }
-    } finally acg.delete()
+    val acg = SparkSpecBase.tmpFile("acg", ".json")
+    java.nio.file.Files.writeString(acg,
+      """{"database": {"hostname": "clowder-db", "port": 5433,
+        |  "name": "cdb", "username": "cu", "password": "cpw"}}""".stripMargin)
+    withFloorplanFile { fp =>
+      val c = EngineConfig.fromEnv(baseEnv(fp) ++ Map(
+        "ACG_CONFIG" -> acg.toString,
+        // Plain env settings present but must lose to Clowder:
+        "POSTGRES_SERVICE_HOST" -> "env-db", "POSTGRESQL_DATABASE" -> "d",
+        "POSTGRESQL_USER" -> "u", "POSTGRESQL_PASSWORD" -> "pw"))
+      assert(c.jdbc.map(_.url).contains("jdbc:postgresql://clowder-db:5433/cdb"))
+      assert(c.jdbc.map(_.user).contains("cu"))
+    }
   }
 
   test("Clowder config without a database section fails fast") {
-    val acg = java.io.File.createTempFile("acg", ".json")
-    try {
-      java.nio.file.Files.writeString(acg.toPath, """{"kafka": {}}""")
-      withFloorplanFile { fp =>
-        val e = intercept[ConfigError](
-          EngineConfig.fromEnv(baseEnv(fp) + ("ACG_CONFIG" -> acg.getPath)))
-        assert(e.getMessage.contains("database"))
-      }
-      val e2 = intercept[ConfigError](EngineConfig.clowderJdbc("/nonexistent/acg.json"))
-      assert(e2.getMessage.contains("ACG_CONFIG"))
-    } finally acg.delete()
+    val acg = SparkSpecBase.tmpFile("acg", ".json")
+    java.nio.file.Files.writeString(acg, """{"kafka": {}}""")
+    withFloorplanFile { fp =>
+      val e = intercept[ConfigError](
+        EngineConfig.fromEnv(baseEnv(fp) + ("ACG_CONFIG" -> acg.toString)))
+      assert(e.getMessage.contains("database"))
+    }
+    val e2 = intercept[ConfigError](EngineConfig.clowderJdbc("/nonexistent/acg.json"))
+    assert(e2.getMessage.contains("ACG_CONFIG"))
   }
 
   test("LOGLEVEL maps python names to spark levels and rejects junk") {

@@ -12,7 +12,7 @@ class FlooristaSpec extends SparkSpecBase {
   private def run(floorplanYaml: String, extraEnv: Map[String, String] = Map.empty)
       : (Int, String) = {
     val root = tmpDir("floorista")
-    val fp = Files.createTempFile("floorplan", ".yaml")
+    val fp = SparkSpecBase.tmpFile("floorplan", ".yaml")
     Files.writeString(fp, floorplanYaml)
     val config = EngineConfig.fromEnv(Map(
       "AWS_BUCKET" -> s"file://$root",
@@ -191,7 +191,7 @@ class FlooristaSpec extends SparkSpecBase {
   test("unreachable output root aborts before any dump -> exit 1, nothing written") {
     // Reference parity: S3Client.verify() raises in Floorist.__init__
     // (floorist.py:81-92,263-265) — no dump may run against a bad root.
-    val fp = Files.createTempFile("floorplan", ".yaml")
+    val fp = SparkSpecBase.tmpFile("floorplan", ".yaml")
     Files.writeString(fp,
       """- prefix: dumps/never
         |  query: SELECT * FROM VALUES (1, 'one') AS t(num, letter)

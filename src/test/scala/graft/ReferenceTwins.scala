@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Sampling, SimilaritySearch, TextAnalysis}
 
 /** Reference formulations the shipped operators replaced, kept only as the
-  * twins specs pin the shipped forms against (Round11Spec, Round12Spec): each computes
+  * twins specs pin the shipped forms against (Round11Spec, Round11bSpec, Round12Spec): each computes
   * the same result the slow, obvious way. Never call them on
   * production-sized inputs. */
 object ReferenceTwins {
@@ -29,16 +29,48 @@ object ReferenceTwins {
       1)
   }
 
+  /** 1L << i for i in 0..63 — the variable-shift stand-in: Spark's Column
+    * API only shifts by literals, so bit masks come from this 64-element
+    * literal array instead (element_at is O(1) on a constant). */
+  val BitMasks: Seq[Long] = (0 until 64).map(i => 1L << i)
+
+  /** k bit positions of `gram` (Kirsch–Mitzenmacher: `h1 + i·(2·h2+1)`
+    * mod m; the odd multiplier keeps the stride nonzero). Both hashes are
+    * reduced mod m BEFORE the affine combine so no intermediate can
+    * overflow (ANSI-safe). */
+  def bloomPositions(gram: Column, mBits: Int, k: Int): Seq[Column] = {
+    val m = lit(mBits.toLong)
+    val h1 = pmod(xxhash64(gram), m)
+    val h2 = pmod(xxhash64(gram, lit(0x9E3779B9L)), m) * 2L + 1L
+    (0 until k).map(i => pmod(h1 + lit(i.toLong) * h2, m))
+  }
+
+  /** Column membership probe of a one-shard filter: true iff all k bits
+    * are set. The bit array rides the plan as ONE array literal; the test
+    * is element_at + bitwiseAND, fully inside whole-stage codegen. The
+    * reference definition [[Sampling.bloomContainsAny]] is pinned
+    * against. */
+  def bloomMightContain(idx: Sampling.BloomIndex)(gram: Column): Column = {
+    require(idx.nShards == 1, s"the Column reference probes one shard, got ${idx.nShards}")
+    val bitsLit = typedlit(idx.shards(0).toSeq)
+    val masks = typedlit(BitMasks)
+    bloomPositions(gram, idx.mBits, idx.k).map { pos =>
+      (element_at(bitsLit, shiftright(pos, 6).cast("int") + 1)
+        .bitwiseAND(element_at(masks, pmod(pos, lit(64)).cast("int") + 1))
+        ) =!= 0L
+    }.reduce(_ && _)
+  }
+
   /** The round-11 shape of [[Sampling.buildBloomIndex]]: positions fan out
-    * scan-side via the Column `bloomPositions` and reduce to
+    * scan-side via the Column [[bloomPositions]] and reduce to
     * (word, bit_or) rows — quadratically more row traffic than the
     * aggregate build, which must produce word-for-word equal bits. */
   def buildBloomIndexReference(grams: DataFrame, gramCol: String,
                                mBits: Int, k: Int = 16): Sampling.BloomIndex = {
     val m = mBits
-    val masks = typedlit(Sampling.BitMasks)
+    val masks = typedlit(BitMasks)
     val pos = grams.select(
-      explode(array(Sampling.bloomPositions(col(gramCol), m, k): _*)).as("pos"))
+      explode(array(bloomPositions(col(gramCol), m, k): _*)).as("pos"))
     val words = pos.select(
         shiftright(col("pos"), 6).cast("int").as("w"),
         element_at(masks, pmod(col("pos"), lit(64)).cast("int") + 1).as("mk"))
@@ -46,7 +78,7 @@ object ReferenceTwins {
       .collect()
     val bits = new Array[Long](m / 64)
     words.foreach(r => bits(r.getInt(0)) = r.getLong(1))
-    Sampling.BloomIndex(bits, m, k, grams.select(col(gramCol)).distinct().count())
+    Sampling.BloomIndex(Array(bits), m, k, grams.select(col(gramCol)).distinct().count())
   }
 
   /** The explode → broadcast-join → aggregate formulation

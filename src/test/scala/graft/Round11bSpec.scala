@@ -22,7 +22,7 @@ class Round11bSpec extends SparkSpecBase {
     val grams = gramFrame(5000, "in")
     val idx = Sampling.buildBloomIndex(grams, "gram")
     val misses = grams
-      .filter(!Sampling.bloomMightContain(idx)(col("gram"))).count()
+      .filter(!ReferenceTwins.bloomMightContain(idx)(col("gram"))).count()
     assert(misses == 0L, s"$misses inserted grams probed false")
     // round 12: nItems is the sizing ESTIMATE (approx_count_distinct,
     // rsd 5% — deterministic for fixed data) — band, not pin
@@ -33,7 +33,7 @@ class Round11bSpec extends SparkSpecBase {
     val idx = Sampling.buildBloomIndex(gramFrame(5000, "in"), "gram")
     val probes = 20000
     val fp = gramFrame(probes, "out")
-      .filter(Sampling.bloomMightContain(idx)(col("gram"))).count()
+      .filter(ReferenceTwins.bloomMightContain(idx)(col("gram"))).count()
     // Sized for ~3e-7 per gram; allow three orders of magnitude of
     // slack and it still guarantees <1% doc-level FP on 30-gram docs.
     assert(fp.toDouble / probes < 3e-4, s"$fp/$probes false positives")
@@ -55,7 +55,7 @@ class Round11bSpec extends SparkSpecBase {
     val back = Sampling.loadBloomIndex(spark, d)
     assert(back.mBits == idx.mBits && back.k == idx.k &&
       back.nItems == idx.nItems)
-    assert(java.util.Arrays.equals(back.bits, idx.bits))
+    assert(back.nShards == 1 && java.util.Arrays.equals(back.shards(0), idx.shards(0)))
   }
 
   test("bloomContainsAny: the codegen'd probe equals the Column-composed reference on every doc") {
@@ -74,7 +74,7 @@ class Round11bSpec extends SparkSpecBase {
     val df = rows.toDF("id", "gs")
     val both = df.select($"id",
         Sampling.bloomContainsAny(idx)($"gs").as("fast"),
-        exists($"gs", Sampling.bloomMightContain(idx)).as("ref"))
+        exists($"gs", ReferenceTwins.bloomMightContain(idx)).as("ref"))
       .as[(Long, Boolean, Boolean)].collect()
     assert(both.forall(r => r._2 == r._3),
       s"drift: ${both.filter(r => r._2 != r._3).take(5).toSeq}")
@@ -82,7 +82,7 @@ class Round11bSpec extends SparkSpecBase {
     val interp = graft.functions.BloomContainsAny.compute(
       org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
         Array(org.apache.spark.unsafe.types.UTF8String.fromString("in_gram_7"))),
-      idx.bits, idx.mBits, idx.k)
+      idx.shards, idx.mBits, idx.k)
     assert(interp, "inserted gram must probe true interpreted")
   }
 

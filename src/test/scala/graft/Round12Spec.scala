@@ -113,7 +113,7 @@ class Round12Spec extends SparkSpecBase {
     val m = 1 << 17
     val fast = Sampling.buildBloomIndex(grams, "gram", mBits = m)
     val ref = ReferenceTwins.buildBloomIndexReference(grams, "gram", mBits = m)
-    assert(java.util.Arrays.equals(fast.bits, ref.bits),
+    assert(java.util.Arrays.equals(fast.shards(0), ref.shards(0)),
       "aggregate build drifted from the bloomPositions reference")
     assert(fast.mBits == ref.mBits && fast.k == ref.k)
   }
@@ -121,12 +121,12 @@ class Round12Spec extends SparkSpecBase {
   test("sharded bloom: 2-shard verdicts equal the unsharded filter's") {
     val grams = gramFrame(5000, "in")
     val flat = Sampling.buildBloomIndex(grams, "gram")
-    val sharded = Sampling.buildShardedBloomIndex(grams, "gram", nShards = 2)
+    val sharded = Sampling.buildBloomIndex(grams, "gram", nShards = 2)
     assert(sharded.nShards == 2)
     val probes = gramFrame(5000, "in").union(gramFrame(20000, "out"))
       .select(array(col("gram")).as("gs"),
         Sampling.bloomContainsAny(flat)(array(col("gram"))).as("flat"),
-        Sampling.shardedBloomContainsAny(sharded)(array(col("gram"))).as("shd"))
+        Sampling.bloomContainsAny(sharded)(array(col("gram"))).as("shd"))
     // members: both must be true (one-sided error, both filters)
     val memberMiss = probes.limit(5000).filter(!col("flat") || !col("shd")).count()
     assert(memberMiss == 0L, s"$memberMiss members missed")
@@ -137,7 +137,7 @@ class Round12Spec extends SparkSpecBase {
   }
 
   test("sharded bloom: both shards carry load and save/load round-trips") {
-    val idx = Sampling.buildShardedBloomIndex(gramFrame(8000, "s"), "gram",
+    val idx = Sampling.buildBloomIndex(gramFrame(8000, "s"), "gram",
       nShards = 2)
     def popcount(bits: Array[Long]) = bits.map(java.lang.Long.bitCount(_).toLong).sum
     val loads = idx.shards.map(popcount)
@@ -146,8 +146,8 @@ class Round12Spec extends SparkSpecBase {
     assert(loads.max < loads.min * 2, s"skewed shards: ${loads.toSeq}")
     val d = tmpDir("shbloom")
     idx.save(spark, d)
-    val back = Sampling.loadShardedBloomIndex(spark, d)
-    assert(back.nShards == idx.nShards && back.mBitsPerShard == idx.mBitsPerShard
+    val back = Sampling.loadBloomIndex(spark, d)
+    assert(back.nShards == idx.nShards && back.mBits == idx.mBits
       && back.k == idx.k && back.nItems == idx.nItems)
     idx.shards.zip(back.shards).foreach { case (a, b) =>
       assert(java.util.Arrays.equals(a, b))
@@ -156,12 +156,10 @@ class Round12Spec extends SparkSpecBase {
 
   test("sharded bloom with nShards=1 probes bit-identically to BloomContainsAny") {
     val grams = gramFrame(3000, "one")
-    val flat = Sampling.buildBloomIndex(grams, "gram", mBits = 1 << 17)
-    val one = Sampling.ShardedBloomIndex(Array(flat.bits), flat.mBits, flat.k,
-      flat.nItems)
+    val one = Sampling.buildBloomIndex(grams, "gram", nShards = 1, mBits = 1 << 17)
     val disagree = gramFrame(3000, "one").union(gramFrame(9000, "x"))
-      .select(Sampling.bloomContainsAny(flat)(array(col("gram"))).as("a"),
-        Sampling.shardedBloomContainsAny(one)(array(col("gram"))).as("b"))
+      .select(exists(array(col("gram")), ReferenceTwins.bloomMightContain(one)).as("a"),
+        Sampling.bloomContainsAny(one)(array(col("gram"))).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(disagree == 0L)
   }
@@ -284,13 +282,13 @@ class Round12Spec extends SparkSpecBase {
     val passage = (1 to 13).map(i => s"ev$i").mkString(" ")
     val evalGrams = Sampling.evalGramTable(
       Seq((100L, passage)).toDF("doc_id", "text"), "doc_id", "text", 13)
-    val idx = Sampling.buildShardedBloomIndex(
+    val idx = Sampling.buildBloomIndex(
       evalGrams.select($"gram"), "gram", nShards = 2)
     val leaky = s"${(1 to 20).map(i => s"t$i").mkString(" ")} $passage"
     val clean = (1 to 40).map(i => s"c$i").mkString(" ")
     val memStream = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Timestamp, String)](spark, 1)
-    val q = EventStreams.shardedBloomDecontamStream(
+    val q = EventStreams.bloomDecontamStream(
         memStream.toDS().toDF("doc_id", "ts", "text"),
         "doc_id", "text", "ts", idx)
       .writeStream.outputMode("append").format("memory")

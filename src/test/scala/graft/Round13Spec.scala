@@ -83,12 +83,12 @@ class Round13Spec extends SparkSpecBase {
 
   test("sharded save/load roundtrips bit-exact with per-shard write jobs") {
     val grams = (0 until 4000).map(i => s"gram_$i").toDF("gram")
-    val idx = Sampling.buildShardedBloomIndex(grams, "gram", nShards = 3,
-      mBitsPerShard = 1 << 17)
+    val idx = Sampling.buildBloomIndex(grams, "gram", nShards = 3,
+      mBits = 1 << 17)
     val d = tmpDir("r13bloom")
     idx.save(spark, d)
-    val back = Sampling.loadShardedBloomIndex(spark, d)
-    assert(back.nShards === 3 && back.mBitsPerShard === idx.mBitsPerShard &&
+    val back = Sampling.loadBloomIndex(spark, d)
+    assert(back.nShards === 3 && back.mBits === idx.mBits &&
       back.k === idx.k && back.nItems === idx.nItems)
     (0 until 3).foreach { s =>
       assert(java.util.Arrays.equals(back.shards(s), idx.shards(s)),

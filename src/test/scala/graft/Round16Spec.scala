@@ -60,7 +60,7 @@ class Round16Spec extends SparkSpecBase {
   test("IVF append to a LOADED index assigns identically (cell-order invariance)") {
     val idx = SimilaritySearch.buildIvfIndex(baseDf, "vec_id", "embedding",
       nCells = 4)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_r16").toString
+    val dir = tmpDir("ivf_r16")
     idx.save(dir)
     val loaded = SimilaritySearch.loadIvfIndex(spark, dir, "vec_id", "embedding")
     def batchCells(i: SimilaritySearch.IvfIndex): Seq[(Long, Int)] =
@@ -106,7 +106,7 @@ class Round16Spec extends SparkSpecBase {
   test("PQ append to a LOADED index encodes identically") {
     val pq = SimilaritySearch.buildPqIndex(baseDf, "vec_id", "embedding",
       m = 4, k = 16)
-    val dir = java.nio.file.Files.createTempDirectory("pq_r16").toString
+    val dir = tmpDir("pq_r16")
     pq.save(dir)
     val loaded = SimilaritySearch.loadPqIndex(spark, dir, "vec_id")
     def batchCodes(i: SimilaritySearch.PqIndex): Seq[(Long, Seq[Int])] =
