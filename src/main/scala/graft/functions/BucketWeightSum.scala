@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   * that plan is correct but pays an explode to 2·tokens rows, a hash
   * probe per gram and a full exchange on the doc id — for a model that
   * is just a `buckets`-element weight vector. With the vector bound into
-  * the expression (weight tables are built bucket-COMPLETE over
-  * `range(0, buckets)`, so a gram can never miss), scoring is row-local:
+  * the expression (the models hold it as a dense driver-side array, one
+  * weight per bucket, so a gram can never miss), scoring is row-local:
   * zero shuffles at any corpus size, and the plan composes into scans
   * and stateless streams.
   *
@@ -69,9 +69,22 @@ object BucketWeightSum {
         org.apache.spark.sql.GraftColumnBridge.expression(grams), weights))
   }
 
+  /** The (bucket BIGINT, `wCol`) frame view of a dense weight vector: a
+    * local relation built from the array itself, so a model can be saved
+    * as parquet or probed by a join without any upstream job. */
+  def weightTable(spark: org.apache.spark.sql.SparkSession, weights: Array[Double],
+                  wCol: String, wType: DataType = DoubleType): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val rows = weights.indices.map(b => org.apache.spark.sql.Row(b.toLong, weights(b)))
+    val schema = StructType(Seq(StructField("bucket", LongType, nullable = false),
+      StructField(wCol, DoubleType, nullable = false)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .select(col("bucket"), col(wCol).cast(wType).as(wCol))
+  }
+
   /** Collect a bucket-COMPLETE (bucket, weight) table into the dense
-    * vector the expression binds — the bridge from the build topology's
-    * weight DataFrame. Validates completeness (every bucket exactly
+    * vector the expression binds — how a saved model's frame comes back
+    * to the driver. Validates completeness (every bucket exactly
     * once), because a missing bucket would silently change semantics vs
     * the join form (where a gram could fail to match). Driver-local and
     * bounded by construction: `buckets` rows. */
@@ -88,9 +101,9 @@ object BucketWeightSum {
       val b = r.getInt(0)
       require(b >= 0 && b < buckets && !seen(b), s"bad/duplicate bucket $b")
       seen(b) = true
-      // A model built from an EMPTY corpus carries null weights (its
-      // totals are null); score it as all-zero — the no-information
-      // model — so empty-input pipelines stay runnable end-to-end.
+      // A DSIR model saved from an EMPTY corpus by the frame-built fit
+      // carries null weights (its totals were null); read it as all-zero,
+      // the no-information model the driver-side fit now produces.
       arr(b) = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
     }
     arr

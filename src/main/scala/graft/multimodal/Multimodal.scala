@@ -36,12 +36,11 @@ object Multimodal {
     *
     * GUARDED round-robin repartition (round 19): the spread fires only
     * when the input carries FEWER splits than the cluster —
-    * `proj.rdd.getNumPartitions < defaultParallelism`, one RDD-
-    * conversion planning pass, cheaper than
-    * [[graft.operators.Dedup.spreadToParallelism]]'s additional
-    * executedPlan inspection (which exists to skip frames that already
-    * shuffled; render inputs are plain scan projections, so the
-    * partition count alone answers the question). The round-18
+    * [[graft.plans.PreparedPlan.spreadUnderSplit]], whose count a plain
+    * scan projection answers from its prepared plan without running
+    * anything; [[graft.operators.Dedup.spreadToParallelism]] adds a
+    * check that skips frames that already shuffled, which render inputs
+    * never have. The round-18
     * unconditional form repartitioned even a thousands-of-splits 100 TB
     * corpus scan down to defaultParallelism — adding a shuffle the
     * input never needed and COLLAPSING scan parallelism, the opposite

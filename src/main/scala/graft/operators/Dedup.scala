@@ -43,9 +43,11 @@ object Dedup {
     *
     * INPUT CONSTRAINT: pass a PHYSICALLY NARROW frame (scan, map-only
     * projection, broadcast-join enrichment of a scan), never a shuffled
-    * or streaming frame. Reading the partition count goes through
-    * `df.rdd`, which forces eager physical planning — under AQE that
-    * MATERIALIZES any upstream shuffle stages, whose work is then
+    * or streaming frame. A scan or map-only projection has its partition
+    * count read from the prepared plan, running nothing
+    * ([[PreparedPlan.narrowPartitionCount]]); any other plan's goes
+    * through `df.rdd`, which forces eager physical planning — under AQE
+    * that MATERIALIZES any upstream shuffle stages, whose work is then
     * recomputed by the real job (this helper does not cache). Streaming
     * frames have no `.rdd` at all, hence the require. The guard is
     * PHYSICAL, not logical: the planned (pre-AQE) tree is checked for a
@@ -62,7 +64,7 @@ object Dedup {
     * once, against a serialized pair-walk measured 3× slower. */
   def spreadToParallelism(df: DataFrame): DataFrame = {
     require(!df.isStreaming,
-      "spreadToParallelism reads df.rdd.getNumPartitions, which a streaming frame cannot answer")
+      "spreadToParallelism reads the frame's partition count, which a streaming frame cannot answer")
     if (PreparedPlan.exists(df)(_.isInstanceOf[ShuffleExchangeLike])) {
       org.apache.log4j.Logger.getLogger(getClass).warn(
         "spreadToParallelism: physical plan contains a shuffle exchange " +

@@ -682,11 +682,10 @@ object Sampling {
     * Shape at 100 TB: grams and buckets are scan-side (codegen'd
     * [[graft.functions.WordShingles]] + the md5 bucket hash inside a
     * `transform`); the model build is one hash aggregate whose key space
-    * is `buckets` (tiny, then a broadcast totals join); scoring is a
-    * map-side broadcast join against the `buckets`-row weight table plus
-    * one per-doc aggregate whose map-side partials collapse each doc's
-    * grams before the shuffle — shuffled rows ≈ one per document (the
-    * t15 ledger). The corpus never shuffles keyed on content.
+    * is `buckets` (tiny), collected once, with the totals and weights
+    * computed on the driver; scoring is one row-local pass against the
+    * `buckets`-element weight vector bound into the plan. The corpus
+    * never shuffles keyed on content.
     *
     * Output: (idCol, n_grams, sum_w_bp, dsir_w) for every non-target doc
     * with at least one gram. */
@@ -695,69 +694,84 @@ object Sampling {
     dsirScoreAgainst(docs.filter(!isTarget), idCol, textCol,
       dsirModelTable(docs, textCol, isTarget, buckets))
 
-  /** The standing DSIR artifact: the DENSE `buckets`-row weight table
-    * (bucket, w_bp) — dense so any future document scores against it,
-    * including one whose grams hash to buckets neither fit corpus ever
-    * saw (those get the pure-smoothing weight; a sparse table would
-    * silently drop them from the doc's gram count). The bucket count
-    * rides IN the artifact (the LshVecIndex-density principle: a probe
-    * at a different bucketing would silently hash grams into the wrong
-    * rows), with parquet save/load for the offline cycle. */
-  final case class DsirModel(weights: DataFrame, buckets: Int)
-      extends graft.artifacts.Releasable {
-    def unpersist(): Unit = { weights.unpersist(); () }
+  /** The standing DSIR artifact: the DENSE `buckets`-element weight
+    * vector `w_bp`, held on the driver in the form the
+    * [[graft.functions.BucketWeightSum]] kernel binds — dense so any
+    * future document scores against it, including one whose grams hash
+    * to buckets neither fit corpus ever saw (those get the pure-smoothing
+    * weight; a sparse table would silently drop them from the doc's gram
+    * count), and driver-side so a probe builds its scoring plan without
+    * running a job. The bucket count rides IN the artifact (the
+    * LshVecIndex-density principle: a probe at a different bucketing
+    * would silently hash grams into the wrong rows), with parquet
+    * save/load of the (bucket, w_bp) frame view for the offline cycle. */
+  final case class DsirModel(weights: Array[Double], buckets: Int) {
+    require(weights.length == buckets,
+      s"a DSIR model over $buckets buckets needs $buckets weights, got ${weights.length}")
+
+    /** The (bucket, w_bp BIGINT) frame form: what [[save]] writes. */
+    def table(spark: org.apache.spark.sql.SparkSession): DataFrame =
+      graft.functions.BucketWeightSum.weightTable(spark, weights, "w_bp",
+        org.apache.spark.sql.types.LongType)
 
     def save(dir: String): Unit =
       Persisted.save(dir, "dsir_model", Map("buckets" -> buckets))(
-        "dsir_weights" -> weights)
+        "dsir_weights" -> table(org.apache.spark.sql.SparkSession.active))
   }
 
-  /** Load a model previously written with [[DsirModel.save]]. */
+  /** Load a model previously written with [[DsirModel.save]]: one collect
+    * of the saved `buckets`-row frame, checked bucket-complete. */
   def loadDsirModel(spark: org.apache.spark.sql.SparkSession,
                     dir: String): DsirModel = {
     val p = Persisted.load(spark, dir, "dsir_model")
-    DsirModel(p.frame("dsir_weights"), p.int("buckets"))
+    val buckets = p.int("buckets")
+    DsirModel(graft.functions.BucketWeightSum
+      .collectWeights(p.frame("dsir_weights"), "bucket", "w_bp", buckets), buckets)
   }
 
-  /** Fit the [[DsirModel]]: totals ride a broadcast 1-row aggregate —
-    * no driver action anywhere. This is what [[dsirScoreAgainst]] and
-    * the streaming twin probe, the build/apply split every standing
-    * artifact here has. */
+  /** Fit the [[DsirModel]]: one distributed gram census (a hash aggregate
+    * keyed by bucket, so at most `buckets` rows reach the driver) and one
+    * collect; the integer-bp weights are then driver arithmetic over the
+    * `buckets` counts. This is what [[dsirScoreAgainst]] and the
+    * streaming twin probe, the build/apply split every standing artifact
+    * here has. */
   def dsirModelTable(docs: DataFrame, textCol: String, isTarget: Column,
                      buckets: Int = 1024): DsirModel = {
     require(buckets >= 2, s"need >= 2 hash buckets, got $buckets")
-    val counts = dsirGrams(docs, textCol, isTarget.as("__t"), buckets)
+    val census = dsirGrams(docs, textCol, isTarget.as("__t"), buckets)
       .groupBy(col("bucket")).agg(
         sum(when(col("__t"), 1L).otherwise(0L)).as("t_cnt"),
         sum(when(!col("__t"), 1L).otherwise(0L)).as("r_cnt"))
-    val totals = counts.agg(sum(col("t_cnt")).as("t_total"),
-      sum(col("r_cnt")).as("r_total"))
-    DsirModel(
-      docs.sparkSession.range(0, buckets).toDF("bucket")
-        .join(counts, Seq("bucket"), "left")
-        .na.fill(0L, Seq("t_cnt", "r_cnt"))
-        .crossJoin(broadcast(totals))
-        .withColumn("w_bp",
-          expr(s"CAST((t_cnt + 1) * 10000 DIV (t_total + $buckets) AS BIGINT)" +
-            s" - CAST((r_cnt + 1) * 10000 DIV (r_total + $buckets) AS BIGINT)"))
-        .select(col("bucket"), col("w_bp")),
-      buckets)
+      .collect()
+    val (t, r) = (new Array[Long](buckets), new Array[Long](buckets))
+    census.foreach { row =>
+      val b = row.getLong(0).toInt
+      t(b) = row.getLong(1)
+      r(b) = row.getLong(2)
+    }
+    // p_bp = (cnt + 1) * 10000 DIV (total + buckets) per side: the SQL
+    // integer division of non-negative longs the oracle computes. A corpus
+    // without grams is pure smoothing on both sides: all-zero weights.
+    val (tTotal, rTotal) = (t.sum, r.sum)
+    DsirModel(Array.tabulate(buckets) { b =>
+      ((t(b) + 1) * 10000 / (tTotal + buckets) -
+        (r(b) + 1) * 10000 / (rTotal + buckets)).toDouble
+    }, buckets)
   }
 
   /** Score any frame against a prebuilt [[dsirModelTable]] — the apply
-    * half: scan-side gram buckets, a broadcast probe of the
-    * `buckets`-row weight table, one per-doc aggregate (map-side
-    * partials collapse each doc's grams before the shuffle — the t15
-    * ledger). Docs with no grams are absent, the [[dsirScore]]
-    * contract. */
+    * half: scan-side grams and one row-local
+    * [[graft.functions.BucketWeightSum]] pass over the model's weight
+    * vector, bound into the plan as a constant, so building the plan
+    * runs no job and running it shuffles nothing. Docs with no grams are
+    * absent, the [[dsirScore]] contract. */
   def dsirScoreAgainst(docs: DataFrame, idCol: String, textCol: String,
                        model: DsirModel): DataFrame = {
     import graft.functions.WordShingles.wordShingles
     // Integer-bp weights carried as doubles: sums of integer-valued
     // doubles are exact and order-independent, so the row-local sum is
     // bit-identical to the join form's long aggregate.
-    val w = graft.functions.BucketWeightSum
-      .collectWeights(model.weights, "bucket", "w_bp", model.buckets)
+    val w = model.weights
     docs.select(col(idCol),
         concat(wordShingles(col(textCol), 1, distinct = false),
           wordShingles(col(textCol), 2, distinct = false)).as("__g"))

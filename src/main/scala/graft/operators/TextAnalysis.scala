@@ -769,23 +769,35 @@ object TextAnalysis {
     * classifier" recipe, public method description: a linear classifier
     * on hashed n-gram features, positives = the curated seed corpus,
     * negatives = raw web text; documents are kept in proportion to the
-    * classifier's score). Weights are a DENSE `buckets`-row table like
-    * [[graft.operators.Sampling.DsirModel]] — geometry rides in the
-    * artifact, parquet save/load for the offline cycle. */
-  final case class QualityClassifier(weights: DataFrame, bias: Double,
-                                     buckets: Int) extends graft.artifacts.Releasable {
-    def unpersist(): Unit = { weights.unpersist(); () }
+    * classifier's score). Weights are a DENSE `buckets`-element
+    * driver-side vector like [[graft.operators.Sampling.DsirModel]] —
+    * the form the scoring kernel binds, so a probe runs no job; geometry
+    * rides in the artifact, parquet save/load of the (bucket, w) frame
+    * view for the offline cycle. */
+  final case class QualityClassifier(weights: Array[Double], bias: Double,
+                                     buckets: Int) {
+    require(weights.length == buckets,
+      s"a classifier over $buckets buckets needs $buckets weights, got ${weights.length}")
+
+    /** The (bucket, w) frame form: what [[save]] writes. */
+    def table(spark: org.apache.spark.sql.SparkSession): DataFrame =
+      graft.functions.BucketWeightSum.weightTable(spark, weights, "w")
 
     def save(dir: String): Unit =
       Persisted.save(dir, "quality_clf", Map("bias" -> bias, "buckets" -> buckets))(
-        "qc_weights" -> weights)
+        "qc_weights" -> table(org.apache.spark.sql.SparkSession.active))
   }
 
-  /** Load a classifier previously written with [[QualityClassifier.save]]. */
+  /** Load a classifier previously written with [[QualityClassifier.save]]:
+    * one collect of the saved `buckets`-row frame, checked
+    * bucket-complete. */
   def loadQualityClassifier(spark: org.apache.spark.sql.SparkSession,
                             dir: String): QualityClassifier = {
     val p = Persisted.load(spark, dir, "quality_clf")
-    QualityClassifier(p.frame("qc_weights"), p.double("bias"), p.int("buckets"))
+    val buckets = p.int("buckets")
+    QualityClassifier(graft.functions.BucketWeightSum
+      .collectWeights(p.frame("qc_weights"), "bucket", "w", buckets),
+      p.double("bias"), buckets)
   }
 
   /** Deterministic full-batch gradient-descent logistic regression over
@@ -833,60 +845,71 @@ object TextAnalysis {
     * features), label 1 for seed docs and 0 for the rest, one bounded
     * collect, then a driver-local deterministic logistic fit. The fit
     * input is the `sampleMod` hash-sample (the localKMeans discipline;
-    * an unbounded sample fails loudly). */
+    * an unbounded sample fails loudly).
+    *
+    * The fit is one job with one shuffle: the documents are hashed by id
+    * before their grams exist, so the per-(doc, bucket) count and the
+    * per-doc feature list both aggregate inside that exchange's
+    * partitions, and the driver receives one (bucket, count) pair per
+    * distinct bucket per document. */
   def trainQualityClassifier(docs: DataFrame, idCol: String, textCol: String,
                              isSeed: Column, buckets: Int = 1024,
                              sampleMod: Int = 1, iters: Int = 100,
                              maxLocalFit: Int = 250000): QualityClassifier = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val base0 =
+    val base =
       if (sampleMod <= 1) docs
       else docs.filter(pmod(xxhash64(col(idCol)), lit(sampleMod)) === 0)
-    // The collected rows below are read with positional getLong/getBoolean
-    // accessors; cast the id and seed expressions up front so a caller
-    // with an int id or a non-boolean seed predicate gets a widened fit
-    // instead of a ClassCastException at collect time.
-    val base = base0.withColumn(idCol, col(idCol).cast("long"))
-    val perDoc = graft.operators.Sampling
-      .dsirGrams(base, textCol, isSeed.cast("boolean").as("__t"), buckets, Seq(idCol))
+    // The collected rows are read with positional getLong/getBoolean
+    // accessors; cast the id up front so a caller with an int id gets a
+    // widened fit instead of a ClassCastException at collect time.
+    val byDoc = base.withColumn(idCol, col(idCol).cast("long")).repartition(col(idCol))
+    fitPerDoc(perDocGramCounts(byDoc, idCol, textCol, isSeed, buckets)
+      .limit(maxLocalFit + 1).collect(), buckets, iters, maxLocalFit)
+  }
+
+  /** (id, label, [(bucket, count)], n_grams) per document of `docs`,
+    * whose `idCol` is a long: the fit input [[fitPerDoc]] reads. */
+  private[graft] def perDocGramCounts(docs: DataFrame, idCol: String, textCol: String,
+                                      isSeed: Column, buckets: Int): DataFrame =
+    graft.operators.Sampling
+      .dsirGrams(docs, textCol, isSeed.cast("boolean").as("__t"), buckets, Seq(idCol))
       .groupBy(col(idCol), col("__t"), col("bucket"))
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col(idCol), col("__t"))
       .agg(collect_list(struct(col("bucket"), col("cnt"))).as("fs"),
         sum(col("cnt")).as("n"))
-      .limit(maxLocalFit + 1)
-      .collect()
+
+  /** The driver half of [[trainQualityClassifier]] over collected
+    * [[perDocGramCounts]] rows: bucket-sorted tf features, a fit order
+    * sorted by (id, label) — collect order is partition-dependent — and
+    * [[localLogReg]]. */
+  private[graft] def fitPerDoc(perDoc: Array[org.apache.spark.sql.Row], buckets: Int,
+                               iters: Int, maxLocalFit: Int): QualityClassifier = {
     require(perDoc.length <= maxLocalFit,
       s"classifier fit sample exceeds $maxLocalFit docs — raise sampleMod " +
         "(the fit is a bounded-sample job by design)")
-    // Deterministic fit order (collect order is partition-dependent).
     val xs = perDoc.map { r =>
       val n = r.getLong(3).toDouble
       val feats = r.getSeq[org.apache.spark.sql.Row](2)
         .map(f => (f.getLong(0).toInt, f.getLong(1).toDouble / n))
         .sortBy(_._1).toArray
-      (r.getLong(0), feats, if (r.getBoolean(1)) 1.0 else 0.0)
-    }.sortBy(_._1).map { case (_, f, y) => (f, y) }
+      (r.getLong(0), if (r.getBoolean(1)) 1.0 else 0.0, feats)
+    }.sortBy(x => (x._1, x._2)).map { case (_, y, f) => (f, y) }
     val (w, b) = localLogReg(xs, buckets, iters)
-    QualityClassifier(
-      spark.range(0, buckets).toDF("bucket")
-        .withColumn("w", element_at(typedlit(w.toSeq), col("bucket").cast("int") + 1)),
-      b, buckets)
+    QualityClassifier(w, b, buckets)
   }
 
   /** Score any frame against a trained [[QualityClassifier]] — the
     * [[graft.operators.Sampling.dsirScoreAgainst]] probe topology
-    * (scan-side gram buckets, broadcast weight join, one per-doc
-    * aggregate) with the logistic link applied scan-side after the
-    * aggregate: quality = sigmoid(bias + Σ tf_b·w_b), and
+    * (scan-side grams, one row-local weight-vector pass, no job to
+    * build it) with the logistic link applied in the same pass:
+    * quality = sigmoid(bias + Σ tf_b·w_b), and
     * Σ tf_b·w_b = (Σ_grams w_bucket)/n_grams. Output: (idCol, n_grams,
     * quality), quality rounded to 4. */
   def scoreQualityClassifier(docs: DataFrame, idCol: String, textCol: String,
                              clf: QualityClassifier): DataFrame = {
     import graft.functions.WordShingles.wordShingles
-    val w = graft.functions.BucketWeightSum
-      .collectWeights(clf.weights, "bucket", "w", clf.buckets)
+    val w = clf.weights
     docs.select(col(idCol),
         concat(wordShingles(col(textCol), 1, distinct = false),
           wordShingles(col(textCol), 2, distinct = false)).as("__g"))

@@ -124,7 +124,8 @@ private[graft] object SamplingQueries {
 
 
     // Model memoized per (session, dir) — the build/apply split: repeat
-    // calls pay the broadcast probe only (the s04/s05 index convention).
+    // calls bind its driver-side weights into a row-local scan and run
+    // no job while the plan is built (the s04/s05 index convention).
     "p17_dsir_select" -> ((s, dir) =>
       graft.operators.Sampling.dsirScoreAgainst(
         docs(s, dir).filter(col("source") =!= "src0"), "doc_id", "text",

@@ -7,8 +7,6 @@ import scala.concurrent.duration._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.functions.{count, lit, min, spark_partition_id}
 
 import graft.plans.PreparedPlan
@@ -164,23 +162,16 @@ class PartitionedParquetSink(
   /** The frame the writer runs on. A single file (chunksize 0) and the
     * `Exact` contract take one writer task. `Scalable` spreads an input
     * with fewer partitions than `defaultParallelism` across all cores, but
-    * only when reading its partition count runs nothing and breaks no
-    * promise: a plan with an exchange, a subquery or a cached relation
-    * would pre-run work to answer, and a round-robin spread would scramble
-    * a plan's output ordering (an `ORDER BY … LIMIT` dump). The count is
-    * read from the prepared plan itself, not `df.rdd`, which Spark runs as
-    * an SQL execution of its own. */
+    * only when [[PreparedPlan.narrowPartitionCount]] can read its count:
+    * without running anything, and from a plan whose output ordering a
+    * round-robin spread would not scramble. */
   private def shape(df: DataFrame, rowsPerFile: Option[Int]): DataFrame =
     (rowsPerFile, contract) match {
       case (Some(_), FileContract.Scalable) =>
-        val plan = df.queryExecution.executedPlan
-        val keep = plan.outputOrdering.nonEmpty || PreparedPlan.exists(df) {
-          case _: Exchange | _: ReusedExchangeExec | _: InMemoryTableScanExec => true
-          case n => n.subqueries.nonEmpty
-        }
         val parallelism = spark.sparkContext.defaultParallelism
-        if (keep || plan.execute().getNumPartitions >= parallelism) df
-        else df.repartition(parallelism)
+        if (PreparedPlan.narrowPartitionCount(df).exists(_ < parallelism))
+          df.repartition(parallelism)
+        else df
       case _ => df.coalesce(1)
     }
 

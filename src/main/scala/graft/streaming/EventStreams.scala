@@ -731,9 +731,9 @@ object EventStreams {
 
   /** Streaming DSIR importance scoring — [[graft.operators.Sampling
     * .dsirScoreAgainst]]'s ingest twin (p17): arriving documents score
-    * against the STATIC dense `buckets`-row weight table
+    * against the STATIC dense `buckets`-element weight vector
     * ([[graft.operators.Sampling.dsirModelTable]], the standing
-    * artifact) in-flight — the admission signal a quality-gated ingest
+    * artifact, held on the driver) in-flight — the admission signal a quality-gated ingest
     * routes on. A stream cannot fit the raw-corpus half of the model
     * in-flight (no global counts), which is exactly why the model is an
     * offline artifact here, like the boilerplate threshold and the gram

@@ -649,9 +649,9 @@ object Stress {
         .count()
     }
     // p17 with the production shape: the target (seed) corpus is PINNED
-    // (base src0) while the scored raw corpus scales — model table stays
-    // `buckets` rows, scoring is a broadcast probe + one-row-per-doc
-    // aggregate, so the curve must be linear in the corpus like t15's.
+    // (base src0) while the scored raw corpus scales — the model stays
+    // `buckets` weights on the driver, scoring is one row-local pass, so
+    // the curve must be linear in the corpus like t15's.
     time("dsir_select") {
       val seed = graft.sources.Sources.table(spark, dir, "documents")
         .filter(col("source") === "src0")

@@ -41,11 +41,9 @@ class QualityClassifierSpec extends SparkSpecBase {
   }
 
   test("training and scoring are fully deterministic under repartitioning") {
-    def weightsOf(d: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+    def weightsOf(d: org.apache.spark.sql.DataFrame): Seq[Double] =
       TextAnalysis.trainQualityClassifier(d, "doc_id", "text",
-          col("source") === "seed", buckets = 256)
-        .weights.collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
+          col("source") === "seed", buckets = 256).weights.toSeq
     val base = df(corpus)
     assert(weightsOf(base) === weightsOf(base.repartition(13, col("text"))))
   }

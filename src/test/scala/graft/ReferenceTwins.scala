@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Sampling, SimilaritySearch, TextAnalysis}
 
 /** Reference formulations the shipped operators replaced, kept only as the
-  * twins specs pin the shipped forms against (Round11Spec, Round11bSpec, Round12Spec): each computes
+  * twins specs pin the shipped forms against (Round11Spec, Round11bSpec, Round12Spec,
+  * HashedGramModelSpec): each computes
   * the same result the slow, obvious way. Never call them on
   * production-sized inputs. */
 object ReferenceTwins {
@@ -81,12 +82,45 @@ object ReferenceTwins {
     Sampling.BloomIndex(Array(bits), m, k, grams.select(col(gramCol)).distinct().count())
   }
 
+  /** The frame-built DSIR weight table the driver-side
+    * [[Sampling.dsirModelTable]] fit replaced: `range(buckets)` left-joins
+    * the gram census and cross-joins its broadcast totals (a second
+    * census). (bucket, w_bp); every weight is null on a corpus without
+    * grams, whose totals are null. */
+  def dsirModelFrame(docs: DataFrame, textCol: String, isTarget: Column,
+                     buckets: Int): DataFrame = {
+    val counts = Sampling.dsirGrams(docs, textCol, isTarget.as("__t"), buckets)
+      .groupBy(col("bucket")).agg(
+        sum(when(col("__t"), 1L).otherwise(0L)).as("t_cnt"),
+        sum(when(!col("__t"), 1L).otherwise(0L)).as("r_cnt"))
+    val totals = counts.agg(sum(col("t_cnt")).as("t_total"),
+      sum(col("r_cnt")).as("r_total"))
+    docs.sparkSession.range(0, buckets).toDF("bucket")
+      .join(counts, Seq("bucket"), "left")
+      .na.fill(0L, Seq("t_cnt", "r_cnt"))
+      .crossJoin(broadcast(totals))
+      .withColumn("w_bp",
+        expr(s"CAST((t_cnt + 1) * 10000 DIV (t_total + $buckets) AS BIGINT)" +
+          s" - CAST((r_cnt + 1) * 10000 DIV (r_total + $buckets) AS BIGINT)"))
+      .select(col("bucket"), col("w_bp"))
+  }
+
+  /** The two-level-aggregate fit [[TextAnalysis.trainQualityClassifier]]
+    * replaced: the same per-(doc, bucket) and per-doc aggregates with no
+    * up-front exchange on the id, so each shuffles on its own keys. */
+  def trainQualityClassifierTwoLevel(docs: DataFrame, idCol: String, textCol: String,
+                                     isSeed: Column, buckets: Int): TextAnalysis.QualityClassifier =
+    TextAnalysis.fitPerDoc(
+      TextAnalysis.perDocGramCounts(docs.withColumn(idCol, col(idCol).cast("long")),
+        idCol, textCol, isSeed, buckets).collect(),
+      buckets, iters = 100, maxLocalFit = Int.MaxValue)
+
   /** The explode → broadcast-join → aggregate formulation
     * [[Sampling.dsirScoreAgainst]] replaced. */
   def dsirScoreAgainstJoined(docs: DataFrame, idCol: String, textCol: String,
                              model: Sampling.DsirModel): DataFrame =
     Sampling.dsirGrams(docs, textCol, lit(false).as("__t"), model.buckets, Seq(idCol))
-      .join(broadcast(model.weights.select(col("bucket"), col("w_bp"))),
+      .join(broadcast(model.table(docs.sparkSession)),
         Seq("bucket"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_grams"), sum(col("w_bp")).as("sum_w_bp"))
@@ -98,7 +132,7 @@ object ReferenceTwins {
   def scoreQualityClassifierJoined(docs: DataFrame, idCol: String, textCol: String,
                                    clf: TextAnalysis.QualityClassifier): DataFrame =
     Sampling.dsirGrams(docs, textCol, lit(false).as("__t"), clf.buckets, Seq(idCol))
-      .join(broadcast(clf.weights.select(col("bucket"), col("w"))),
+      .join(broadcast(clf.table(docs.sparkSession)),
         Seq("bucket"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_grams"), sum(col("w")).as("__sw"))
