@@ -73,9 +73,11 @@ object FloorplanParser {
 
   /** Convert one raw YAML map to a [[FloorplanRow]], enforcing required keys
     * exactly like the reference (missing `prefix`/`query` fails the dump).
-    * Null values (`prefix:` with no value) and unparseable chunksizes are
-    * treated as invalid too — they must fail THIS dump, not escape as
-    * NPE/NumberFormatException and kill the whole run. */
+    * Null values (`prefix:` with no value), unparseable chunksizes, and a
+    * `chunksize` outside [0, Int.MaxValue] or `partitions` outside
+    * [1, Int.MaxValue] are treated as invalid too — they must fail THIS
+    * dump, not escape as NPE/NumberFormatException and kill the whole run,
+    * nor wrap into another value. */
   def toRow(raw: Map[String, Any]): FloorplanRow = {
     def required(key: String): String = raw.get(key) match {
       case Some(v) if v != null => v.toString
@@ -83,32 +85,29 @@ object FloorplanParser {
     }
     val prefix = required("prefix")
     val query = required("query")
-    val chunksize = raw.get("chunksize").filter(_ != null).map { v =>
+    def longValue(key: String, v: Any): Long =
       try v match {
-        case i: java.lang.Integer => i.intValue
-        case l: java.lang.Long    => l.intValue
-        case other                => other.toString.trim.toInt
+        case i: java.lang.Integer => i.longValue
+        case l: java.lang.Long    => l.longValue
+        case other                => other.toString.trim.toLong
       } catch {
-        case _: NumberFormatException => throw InvalidFloorplanRow("chunksize")
+        case _: NumberFormatException => throw InvalidFloorplanRow(key)
       }
-    }
     def longKey(key: String): Long = raw.get(key) match {
-      case Some(v) if v != null =>
-        try v match {
-          case i: java.lang.Integer => i.longValue
-          case l: java.lang.Long    => l.longValue
-          case other                => other.toString.trim.toLong
-        } catch {
-          case _: NumberFormatException => throw InvalidFloorplanRow(key)
-        }
+      case Some(v) if v != null => longValue(key, v)
       case _ => throw InvalidFloorplanRow(key)
     }
+    // YAML integers past Int range load as Long: narrowing would wrap
+    // (2^32 + 1 → 1), and a negative chunksize would read as "no limit".
+    def intIn(key: String, n: Long, lo: Long): Int =
+      if (n < lo || n > Int.MaxValue) throw InvalidFloorplanRow(key) else n.toInt
+    val chunksize = raw.get("chunksize").filter(_ != null)
+      .map(v => intIn("chunksize", longValue("chunksize", v), 0))
     // The parallel-read extension block: all-or-nothing — a column with
     // no bounds (or bounds with no column) is a spec error for THIS dump,
     // failing it like any other invalid row while later dumps keep going.
     val partitioning = raw.get("partition_column").filter(_ != null).map { c =>
-      val n = longKey("partitions").toInt
-      if (n < 1) throw InvalidFloorplanRow("partitions")
+      val n = intIn("partitions", longKey("partitions"), 1)
       (c.toString, longKey("partition_lower"), longKey("partition_upper"), n)
     }
     if (partitioning.isEmpty &&

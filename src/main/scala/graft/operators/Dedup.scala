@@ -288,10 +288,10 @@ object Dedup {
 
   /** Verification augmentation: plants a deterministic near-duplicate copy
     * of every row matching `pred` under `id + idOffset` — per-coordinate
-    * ±3% scaling, cosine ≈ 0.9996 to the original. The d06/s05 oracles and
-    * the stress harness apply the IDENTICAL formula (list_transform with
-    * 1-based i in SQL), so keep the three in lockstep. Input must already
-    * be projected to (idCol, vecCol). */
+    * ±3% scaling, cosine ≈ 0.9996 to the original. The d06/s05 oracles
+    * apply the IDENTICAL formula (list_transform with 1-based i in SQL),
+    * so keep the three in lockstep. Input must already be projected to
+    * (idCol, vecCol). */
   def withPlantedNearDups(emb: DataFrame, idCol: String, vecCol: String,
                           pred: Column, idOffset: Long): DataFrame = {
     val base = emb.select(col(idCol), col(vecCol))
@@ -325,8 +325,9 @@ object Dedup {
     * candidate pairs grow with density², so `bits` must track log2(N) — a
     * fixed `bits` under a growing corpus goes quadratic (measured: 8 bits
     * is linear to ~4× sf0.1 and super-linear at 8×, where bits=11
-    * restores linearity — see `tools/Stress`). The default (`bits = 0`)
-    * therefore AUTO-SIZES from the corpus count via
+    * restores linearity — `stress_history/r7_sweep_f148.jsonl`; the
+    * auto-sized curve is `stress_history/r9_highfactor_f16_32.jsonl`).
+    * The default (`bits = 0`) therefore AUTO-SIZES from the corpus count via
     * [[SimilaritySearch.autoLshParams]]. The count is one cheap job ONLY
     * for a raw scan (column-pruned to parquet row counts); a COMPOSED
     * input re-executes its whole upstream plan for the count and then

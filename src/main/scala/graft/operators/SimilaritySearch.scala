@@ -188,11 +188,13 @@ object SimilaritySearch {
     * Per-table bucket density is n / 2^bits and within-bucket candidate
     * pairs grow with density², so `bits` must track log2(n):
     * `bits = max(baseBits, ceil(log2(n / targetDensity)))`. The target
-    * density default (16 rows/bucket/table) is calibrated from `tools/
-    * Stress`: with bits pinned at 8 the bucketed dedup measured linear at
-    * density ≤ 32 and super-linear at density 64, and bits = 11 (density
-    * 8) restored linearity at the same corpus size — 16 sits safely
-    * inside the measured-linear regime at the next doubling.
+    * density default (16 rows/bucket/table) is calibrated from
+    * `stress_history/r7_sweep_f148.jsonl` and
+    * `stress_history/r9_highfactor_f16_32.jsonl`: with bits pinned at 8
+    * the bucketed dedup measured linear at density ≤ 32 and super-linear
+    * at density 64, and bits = 11 (density 8) restored linearity at the
+    * same corpus size — 16 sits safely inside the measured-linear regime
+    * at the next doubling.
     *
     * Each extra bit multiplies a true pair's per-table collision
     * probability by p (< 1), so `tables` compensates at +2 per bit — at
@@ -1402,7 +1404,7 @@ object SimilaritySearch {
 
   /** The probe half of [[ivfPqTopK]], against PREBUILT index halves — the
     * build-once/probe-many split every other index artifact here has
-    * (the stress harness and any online serving path time exactly this).
+    * (an online serving path times exactly this).
     * `queries`: (q_id, __qn) with __qn already L2-normalized in the
     * index's geometry. */
   def probeIvfPq(ivf: IvfIndex, pq: PqIndex, queries: DataFrame,
@@ -1438,7 +1440,7 @@ object SimilaritySearch {
     * queries, almost all of it this exchange. A production deployment
     * persists this frame as the single bucketed serving artifact;
     * in-session it is one cached join, paid on first probe (or charged to
-    * the build by forcing it there — what the stress harness does). Its
+    * the build by forcing it there). Its
     * key names no corpus, so invalidating a dir does not reach it; an
     * entry whose index frames were replaced is never read again and ages
     * out under the per-kind bound. */
@@ -1633,10 +1635,9 @@ object SimilaritySearch {
   /** The Bayardo prefix-filtered candidate set over [[sparseCosineBase]]'s
     * postings: (a_id, b_id) pairs, a < b, guaranteed to contain every
     * pair with cosine >= `threshold` (the skip-set bound in the
-    * [[sparseCosinePairs]] scaladoc). Package-visible so the stress
-    * harness can measure the candidate volume the verify stage pays. */
-  private[graft] def sparseCosineCandidates(kept: DataFrame, vecs: DataFrame,
-                                            threshold: Double): DataFrame = {
+    * [[sparseCosinePairs]] scaladoc). */
+  private def sparseCosineCandidates(kept: DataFrame, vecs: DataFrame,
+                                     threshold: Double): DataFrame = {
     require(threshold > 0, s"threshold must be positive, got $threshold")
     // Per-term max normalized weight — the partner-side upper bound the
     // skip condition needs. Keyed on the hashed term like the postings

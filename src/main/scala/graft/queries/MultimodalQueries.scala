@@ -829,8 +829,7 @@ private[graft] object MultimodalQueries {
 
   /** m27's plan over a non-empty-text docs frame: every payload of the
     * rendered admission mix through the decode gate, one row per (kind,
-    * admit, reason) with its integer-bp share. The catalog runs it on
-    * `documents`, the stress harness on its replicated corpus. */
+    * admit, reason) with its integer-bp share. */
   private[graft] def admissionReport(base: DataFrame): DataFrame = {
     val M = graft.multimodal.Multimodal
     val media = M.renderAdmissionMixTable(base).toDF()

@@ -52,8 +52,7 @@ private[graft] object PipelineShared {
       s: SparkSession, dir: String): (DataFrame, DataFrame) =
     ArtifactStore.get("dup_pairs_clusters", s, dir)(dupPairsAndClustersOf(docs(s, dir)))
 
-  /** The unmemoized body of [[dupPairsAndClusters]] over any docs frame
-    * (the stress harness runs it on its replicated corpus). */
+  /** The unmemoized body of [[dupPairsAndClusters]] over any docs frame. */
   private[graft] def dupPairsAndClustersOf(docs: DataFrame): (DataFrame, DataFrame) = {
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", "n_chars",
         threshold = 0.2, maxBucketSize = Some(D03BucketCap))
@@ -341,8 +340,9 @@ private[graft] object PipelineShared {
   }
 
   /** [[corpusBuild]] over an INJECTED corpus + near-dup cluster frame —
-    * the shape the Stress harness scales (replicated corpus, budget ∝
-    * factor) without touching the (session, dir)-memoized artifacts. */
+    * the replicated-corpus, budget ∝ factor shape of the `corpus_build`
+    * curves in `stress_history/` (e.g. `r14_final_sweep_f8_32.jsonl`) —
+    * without touching the (session, dir)-memoized artifacts. */
   private[graft] def corpusBuildFrom(base: DataFrame, clusters: DataFrame,
                                      budget: Long): DataFrame =
     corpusBuildFromSurvivors(dedupSurvivorsWithSplit(base, clusters), budget)
@@ -505,7 +505,9 @@ private[graft] object PipelineShared {
   }
 
   /** [[corpusBuildV2From]] with the mixture stage swapped: v3 of the
-    * composed build, for the Stress harness's injected-corpus shape. */
+    * composed build over an injected corpus, the shape of the
+    * `corpus_build_v3` curves in `stress_history/` (e.g.
+    * `r10_highfactor_f16_32.jsonl`). */
   private[graft] def corpusBuildV3From(base: DataFrame, clusters: DataFrame,
                                        budget: Long): DataFrame =
     corpusBuildV3FromSurvivors(dedupSurvivorsWithSplit(base, clusters), budget)

@@ -407,9 +407,7 @@ private[graft] object SamplingQueries {
          WHERE sp.split = 'train'"""
 
   /** p24's plan over a docs frame: the %10 = 7 delta through quality →
-    * blocklist → corpus-exact-dup, reported per disposition class. The
-    * catalog runs it on `documents`, the stress harness on its replicated
-    * corpus. */
+    * blocklist → corpus-exact-dup, reported per disposition class. */
   private[graft] def admissionPipeline(all: DataFrame): DataFrame = {
     val spark = all.sparkSession
     import spark.implicits._

@@ -68,6 +68,28 @@ class FloorplanParserSpec extends AnyFunSuite {
       Map("prefix" -> "p", "query" -> "q", "chunksize" -> null)).chunksize.isEmpty)
   }
 
+  // SnakeYAML loads integers past Int range as Long; 2^32 + 1 narrowed to
+  // Int is 1, and a negative maxRecordsPerFile means "no limit".
+  private def yamlRow(extra: String) = FloorplanParser.toRow(FloorplanParser.parseString(
+    "- prefix: p\n  query: q\n" + extra).head)
+
+  test("a chunksize past Int range fails the row instead of wrapping") {
+    assert(intercept[InvalidFloorplanRow](yamlRow("  chunksize: 4294967297\n"))
+      .missingKey == "chunksize")
+    assert(yamlRow(s"  chunksize: ${Int.MaxValue}\n").chunksize.contains(Int.MaxValue))
+  }
+
+  test("a negative chunksize fails the row instead of lifting the file limit") {
+    assert(intercept[InvalidFloorplanRow](yamlRow("  chunksize: -1\n"))
+      .missingKey == "chunksize")
+  }
+
+  test("a partition count past Int range fails the row instead of wrapping") {
+    assert(intercept[InvalidFloorplanRow](yamlRow(
+      "  partition_column: a\n  partition_lower: 0\n  partition_upper: 7\n" +
+        "  partitions: 4294967297\n")).missingKey == "partitions")
+  }
+
   test("empty floorplan yields no rows") {
     assert(FloorplanParser.parseString("").isEmpty)
   }
