@@ -77,7 +77,7 @@ object Persisted {
     val (fs, root) = open(spark, dir)
     val m = read(fs, new Path(root, ManifestName), dir, kind)
     val frames = m.get("frames").elements().asScala.map(_.asText)
-      .map(name => name -> spark.read.parquet(s"$dir/$name")).toMap
+      .map(name => name -> graft.sources.Sources.parquet(spark, s"$dir/$name")).toMap
     new Persisted(m.get("params"), frames)
   }
 

@@ -21,8 +21,12 @@ import graft.sources.SqlTranslate
   * .withPinnedSnapshot]] and reading via `readPinned` — every partition
   * and every retried task then sees the anchor's exported snapshot, which
   * the reference's single cursor cannot offer past one connection.
+  *
+  * Every dump record and the closing totals record go to `record` (the
+  * executor's log by default).
   */
-class Floorista(spark: SparkSession, config: EngineConfig) {
+class Floorista(spark: SparkSession, config: EngineConfig,
+                record: String => Unit = DumpExecutor.logRecord) {
 
   private val log = LoggerFactory.getLogger(classOf[Floorista])
 
@@ -44,8 +48,18 @@ class Floorista(spark: SparkSession, config: EngineConfig) {
     log.info("Successfully connected to the output root")
 
     // Parquet-lake mode: floorplan SQL queries the registered tables the
-    // same way reference floorplans query Postgres tables.
-    config.tableDir.foreach(dir => graft.sources.Sources.registerAll(spark, dir))
+    // same way reference floorplans query Postgres tables. The table
+    // directory gets the output root's rule: one that does not exist or
+    // cannot be listed aborts before any dump, instead of registering
+    // nothing and failing every table dump on its own.
+    config.tableDir.foreach { dir =>
+      if (!listable(dir)) {
+        log.error(s"Table directory $dir does not exist or cannot be listed; " +
+          "aborting before any dump")
+        return 1
+      }
+      graft.sources.Sources.registerAll(spark, dir)
+    }
 
     // Two source modes, reference-faithful in both:
     //  - JDBC mode (config.jdbc set — the reference's ONLY mode): each
@@ -58,8 +72,9 @@ class Floorista(spark: SparkSession, config: EngineConfig) {
     val executor = config.jdbc match {
       case Some(j) =>
         new DumpExecutor(sink, runQuery,
-          attemptScope = graft.sources.SnapshotJdbcSource.dumpAttemptScope(spark, j))
-      case None => new DumpExecutor(sink, runQuery)
+          attemptScope = graft.sources.SnapshotJdbcSource.dumpAttemptScope(spark, j),
+          record = record)
+      case None => new DumpExecutor(sink, runQuery, record = record)
     }
 
     val rows = FloorplanParser.parseFile(config.floorplanFile)
@@ -68,8 +83,16 @@ class Floorista(spark: SparkSession, config: EngineConfig) {
       if (executor.execute(raw, i + 1)) dumped += 1
     }
     log.info(s"Dumped $dumped from total of ${rows.size}")
-    log.info(executor.totals.json)
+    record(executor.totals.json)
     if (dumped != rows.size) 1 else 0
+  }
+
+  private def listable(dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    try {
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.getFileStatus(p).isDirectory && { fs.listStatus(p); true }
+    } catch { case scala.util.control.NonFatal(_) => false }
   }
 }
 

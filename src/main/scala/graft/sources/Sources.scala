@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.artifacts.ArtifactStore
@@ -11,12 +12,14 @@ import graft.artifacts.ArtifactStore
   * `src/floorist/floorist.py:142`) runs natively on Spark via `spark.sql`.
   *
   * Scale notes: a temp view over a parquet path is just a logical plan —
-  * Catalyst prunes columns and pushes filters into the scan. The plan is
-  * memoized in [[graft.artifacts.ArtifactStore]] as kind `source_table`,
-  * keyed on the directory: `spark.read.parquet` lists files and reads
-  * footers for schema inference, which on object storage is a LIST + GET
-  * per call — a catalog would do that once, so the memo restores
-  * catalog-like behavior. A session that rewrites a table in place calls
+  * Catalyst prunes columns and pushes filters into the scan. Registration
+  * runs no Spark job: [[parquet]] lists the path once and reads the one
+  * footer Spark's schema inference would read, on the driver, and hands
+  * the schema to the reader (Spark's own inference starts a job per path
+  * for that one footer). The plan is memoized in
+  * [[graft.artifacts.ArtifactStore]] as kind `source_table`, keyed on the
+  * directory, so a session reads each table's footer once, as a catalog
+  * would. A session that rewrites a table in place calls
   * `ArtifactStore.invalidate(session, dir)` to drop the old listing.
   */
 object Sources {
@@ -73,52 +76,92 @@ object Sources {
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(path)))
       throw new java.io.FileNotFoundException(path)
+    val footer = inferenceFooter(spark, path)
     val raw =
-      try spark.read.parquet(path)
+      try parquet(spark, path, footer)
       catch {
         // ILLEGAL_PARQUET_TYPE on TIMESTAMP(NANOS): take the legacy
         // read path, but only after the footer CONFIRMS a nanos column
         // (any other analysis failure rethrows untouched).
         case e: org.apache.spark.sql.AnalysisException =>
-          // If the footer inspection itself fails, surface the ORIGINAL
-          // read error, not the inspection's.
-          val nanosCols =
-            try nanosAnnotatedColumns(spark, path)
-            catch { case scala.util.control.NonFatal(_) => Set.empty[String] }
+          val nanosCols = footer.fold(Set.empty[String])(nanosAnnotatedColumns)
           if (nanosCols.isEmpty) throw e
-          readWithLegacyNanos(spark, path, nanosCols)
+          readWithLegacyNanos(spark, path, footer.get, nanosCols)
       }
     normalizeTimestamps(spark, raw, name)
   }
 
-  /** Column names in the first data file's footer annotated
-    * TIMESTAMP(unit=NANOS). One footer read (the testdata writer emits a
-    * uniform schema across part files), driver-side, metadata-only. */
-  private def nanosAnnotatedColumns(spark: SparkSession, path: String): Set[String] = {
+  /** `spark.read.parquet(path)` without Spark's schema-inference job: the
+    * schema comes from the footer [[inferenceFooter]] picks, read on the
+    * driver and converted by Spark's own footer conversion under the
+    * session's conf, so it equals what Spark would infer. With
+    * `spark.sql.parquet.mergeSchema` on, or nothing to read, the read is
+    * Spark's own: a merge reads every footer, which Spark spreads over
+    * executors, and a path without a data file fails with Spark's
+    * "unable to infer schema" error. */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame =
+    parquet(spark, path, inferenceFooter(spark, path))
+
+  private def parquet(spark: SparkSession, path: String, footer: Option[Footer]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.conf
+    footer match {
+      case Some(f) if !conf.isParquetSchemaMergingEnabled =>
+        spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+          f, new ParquetToSparkSchemaConverter(conf))).parquet(path)
+      case _ => spark.read.parquet(path)
+    }
+  }
+
+  /** The footer of the file Spark's non-merging schema inference reads for
+    * `path`: `_common_metadata`, else `_metadata`, else the first data
+    * file by path, among the leaves of one recursive listing that skips
+    * what Spark's file index skips (names that start with `.`, or with `_`
+    * and hold no `=`, other than the two summary files; in-flight
+    * `._COPYING_` files). `None` when the path is missing or holds no
+    * such file. */
+  private def inferenceFooter(spark: SparkSession, path: String): Option[Footer] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val summaries = Seq("_common_metadata", "_metadata")
+    def hidden(name: String): Boolean =
+      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")) && !summaries.exists(name.startsWith)
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(hconf)
+    def leaves(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.filterNot(st => hidden(st.getPath.getName))
+        .flatMap(st => if (st.isDirectory) leaves(st.getPath) else Seq(st))
+    val files =
+      try leaves(root).sortBy(_.getPath.toString)
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    val chosen = summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+    chosen.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hconf),
+        HadoopReadOptions.builder(hconf, f.getPath).withMetadataFilter(SKIP_ROW_GROUPS).build())
+      try new Footer(f.getPath, reader.getFooter) finally reader.close()
+    }
+  }
+
+  /** Column names in `footer`'s schema annotated TIMESTAMP(unit=NANOS)
+    * (the testdata writer emits a uniform schema across part files). */
+  private def nanosAnnotatedColumns(footer: Footer): Set[String] = {
+    import scala.jdk.CollectionConverters._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     import LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path), hconf)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val dataFile =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).map(_.getPath)
-          .find(q => q.getName.endsWith(".parquet") && !q.getName.startsWith("_"))
-      else Some(p)
-    dataFile.fold(Set.empty[String]) { f =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hconf))
-      try {
-        import scala.jdk.CollectionConverters._
-        reader.getFooter.getFileMetaData.getSchema.getFields.asScala.collect {
-          case field if field.isPrimitive &&
-            (field.asPrimitiveType().getLogicalTypeAnnotation match {
-              case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
-              case _ => false
-            }) => field.getName
-        }.toSet
-      } finally reader.close()
-    }
+    footer.getParquetMetadata.getFileMetaData.getSchema.getFields.asScala.collect {
+      case field if field.isPrimitive &&
+        (field.asPrimitiveType().getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+          case _ => false
+        }) => field.getName
+    }.toSet
   }
 
   /** Read a TIMESTAMP(NANOS) parquet under a SCOPED legacy conf: set
@@ -132,12 +175,12 @@ object Sources {
     * re-encoding the data, not this shim.
     */
   private def readWithLegacyNanos(spark: SparkSession, path: String,
-                                  nanosCols: Set[String]): DataFrame = {
+                                  footer: Footer, nanosCols: Set[String]): DataFrame = {
     import org.apache.spark.sql.functions._
     val prev = spark.conf.getOption(NanosAsLongKey)
     try {
       spark.conf.set(NanosAsLongKey, "true")
-      val raw = spark.read.parquet(path) // nanos columns arrive as raw longs
+      val raw = parquet(spark, path, Some(footer)) // nanos columns arrive as raw longs
       val cols = raw.schema.fields.map { f =>
         if (nanosCols(f.name)) timestamp_micros(expr(s"`${f.name}` div 1000")).as(f.name)
         else col(f.name)
@@ -222,7 +265,7 @@ object Sources {
   def readFormat(spark: SparkSession, path: String, format: String,
                  schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
     format.toLowerCase match {
-      case "parquet" => spark.read.parquet(path)
+      case "parquet" => parquet(spark, path)
       case "orc" => spark.read.orc(path)
       case "csv" =>
         val s = schema.getOrElse(throw new IllegalArgumentException(

@@ -205,6 +205,29 @@ class FlooristaSpec extends SparkSpecBase {
     assert(!new java.io.File(root).exists(), "no dump output may be created")
   }
 
+  test("a missing table directory aborts before any dump -> exit 1, no record, nothing written") {
+    // The output root's rule (A11) holds for GRAFT_TABLE_DIR too: without
+    // it no table registers, every table dump fails on its own, and the
+    // GENERATE_SERIES dump still writes dated output.
+    val root = tmpDir("floorista")
+    val fp = SparkSpecBase.tmpFile("floorplan", ".yaml")
+    Files.writeString(fp,
+      """- prefix: dumps/series
+        |  query: SELECT GENERATE_SERIES(0,9)
+        |- prefix: dumps/orders
+        |  query: SELECT o_orderkey FROM orders
+        |""".stripMargin)
+    val config = EngineConfig.fromEnv(Map(
+      "AWS_BUCKET" -> s"file://$root",
+      "FLOORPLAN_FILE" -> fp.toString,
+      "GRAFT_TABLE_DIR" -> s"/nonexistent-graft-lake/${java.util.UUID.randomUUID()}"))
+    val records = Seq.newBuilder[String]
+    val code = new Floorista(spark, config, records += _).run()
+    assert(code == 1)
+    assert(records.result().isEmpty)
+    assert(filesUnder(root).isEmpty, "no dump output may be created")
+  }
+
   test("chunked dump under the Scalable default still bounds rows per file") {
     val (code, root) = run(
       """- prefix: dumps/scalable

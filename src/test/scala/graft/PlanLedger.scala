@@ -1,10 +1,12 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -43,6 +45,24 @@ object PlanLedger {
       TestListenerBus.drain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
     seen.asScala.toSeq
+  }
+
+  /** How many Spark jobs `block` starts on `spark`'s context. Unlike
+    * [[capture]], this sees jobs that run outside any SQL execution, such
+    * as a parquet schema-inference job. */
+  def jobs(spark: SparkSession)(block: => Any): Int = {
+    val started = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    TestListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      block
+      TestListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    started.get
   }
 
   /** [[capture]] with size-based broadcasting off, static and adaptive:
