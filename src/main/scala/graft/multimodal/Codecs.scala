@@ -23,6 +23,18 @@ import java.nio.{ByteBuffer, ByteOrder}
   * pixels/samples, with golden-byte fixtures in CodecSpec pinning the
   * layouts to the public specs (not merely to this encoder's own output).
   *
+  * Later rounds added PNG, GIF, AVI and baseline/progressive JPEG, all
+  * from their public specifications. Each container has ONE writer:
+  * `bmpFile` (over `bmpPixelArray`, which also writes the DIB AVI
+  * frames) behind both BMP encoders; `riffWave` behind the five WAV
+  * encoders; [[encodeGifAnimated]] behind [[encodeGif]]; and for JPEG
+  * one front half (`JpegFront`: checks, geometry, planes, chroma,
+  * quantizers), one header writer (`JpegOut.header`, SOFn by argument)
+  * and one DC and one AC Huffman coder (`JpegBitWriter.dc`/`.ac`)
+  * shared by [[encodeJpeg]] and [[encodeJpegProgressive]]. PNG's filter
+  * predictor (`pngPredict`) serves the encoder and the decoder.
+  * CodecGoldenSpec pins every encoder's output bytes.
+  *
   * The reference scope note: floorist itself has no media path
   * (`/root/reference/src/floorist/floorist.py` is tabular-only); this
   * family is part of the training-data-pipeline surface the engine adds.
@@ -42,47 +54,105 @@ object Codecs {
 
   // ---- BMP ----------------------------------------------------------------
 
-  private def bmpStride(width: Int): Int = ((width * 3) + 3) & ~3
-  private def bmpStride8(width: Int): Int = (width + 3) & ~3
+  /** Bytes in one BMP pixel row: `bytesPerPixel` per pixel, padded to a
+    * 4-byte boundary. */
+  private def bmpStride(width: Int, bytesPerPixel: Int = 3): Int =
+    (width * bytesPerPixel + 3) & ~3
+
+  /** The BMP pixel array, which is also a DIB AVI frame: rows bottom-up,
+    * or top-down when `topDown`, each padded to a 4-byte boundary. At
+    * 3 bytes per pixel `pixels` is top-down RGB and each pixel goes out as
+    * B,G,R; at 1 byte per pixel `pixels` holds the palette indices. */
+  private def bmpPixelArray(width: Int, height: Int, bytesPerPixel: Int,
+                            pixels: Array[Byte], topDown: Boolean): Array[Byte] = {
+    val stride = bmpStride(width, bytesPerPixel)
+    val out = new Array[Byte](stride * height)
+    var fileRow = 0
+    while (fileRow < height) {
+      val imgRow = if (topDown) fileRow else height - 1 - fileRow
+      var c = 0
+      while (c < width) {
+        val o = fileRow * stride + c * bytesPerPixel
+        val p = imgRow * width + c
+        if (bytesPerPixel == 1) out(o) = pixels(p)
+        else {
+          out(o) = pixels(p * 3 + 2); out(o + 1) = pixels(p * 3 + 1); out(o + 2) = pixels(p * 3)
+        }
+        c += 1
+      }
+      fileRow += 1
+    }
+    out
+  }
+
+  /** Read a pixel array laid out as [[bmpPixelArray]] writes it, starting
+    * at `offset`, back to top-down RGB; 1-byte indices are looked up in
+    * `palette`, a run of B,G,R,reserved quads (null at 3 bytes per pixel). */
+  private def bmpReadPixels(bytes: Array[Byte], offset: Int, width: Int, height: Int,
+                            bytesPerPixel: Int, topDown: Boolean,
+                            palette: Array[Byte]): Array[Byte] = {
+    val stride = bmpStride(width, bytesPerPixel)
+    val rgb = new Array[Byte](width * height * 3)
+    var fileRow = 0
+    while (fileRow < height) {
+      val imgRow = if (topDown) fileRow else height - 1 - fileRow
+      val base = offset + fileRow * stride
+      var c = 0
+      while (c < width) {
+        val p = (imgRow * width + c) * 3
+        if (bytesPerPixel == 3) {
+          rgb(p) = bytes(base + c * 3 + 2) // R
+          rgb(p + 1) = bytes(base + c * 3 + 1) // G
+          rgb(p + 2) = bytes(base + c * 3) // B
+        } else {
+          val idx = bytes(base + c) & 0xFF
+          require(idx * 4 + 3 < palette.length,
+            s"pixel index $idx outside the ${palette.length / 4}-entry palette")
+          rgb(p) = palette(idx * 4 + 2) // R
+          rgb(p + 1) = palette(idx * 4 + 1) // G
+          rgb(p + 2) = palette(idx * 4) // B
+        }
+        c += 1
+      }
+      fileRow += 1
+    }
+    rgb
+  }
+
+  /** The one BMP writer: the 14-byte BITMAPFILEHEADER, the 40-byte
+    * BITMAPINFOHEADER (`BI_RGB`, negative height when `topDown`, 72 dpi,
+    * biClrUsed = the palette size), the palette as B,G,R,reserved quads
+    * (`palette` entries are 0xRRGGBB; empty at 24 bits), the pixel array. */
+  private def bmpFile(width: Int, height: Int, bitsPerPixel: Int, palette: Array[Int],
+                      pixels: Array[Byte], topDown: Boolean): Array[Byte] = {
+    val data = bmpPixelArray(width, height, bitsPerPixel / 8, pixels, topDown)
+    val pixelOffset = 54 + palette.length * 4
+    val buf = ByteBuffer.allocate(pixelOffset + data.length).order(ByteOrder.LITTLE_ENDIAN)
+    buf.put('B'.toByte).put('M'.toByte)
+    buf.putInt(pixelOffset + data.length) // file size
+    buf.putShort(0).putShort(0) // reserved
+    buf.putInt(pixelOffset)
+    buf.putInt(40)
+    buf.putInt(width)
+    buf.putInt(if (topDown) -height else height)
+    buf.putShort(1) // planes
+    buf.putShort(bitsPerPixel.toShort)
+    buf.putInt(0) // BI_RGB (uncompressed)
+    buf.putInt(data.length)
+    buf.putInt(2835).putInt(2835) // 72 dpi in pixels/metre
+    buf.putInt(palette.length) // biClrUsed
+    buf.putInt(0) // biClrImportant
+    palette.foreach { rgb =>
+      buf.put((rgb & 0xFF).toByte).put(((rgb >> 8) & 0xFF).toByte)
+        .put(((rgb >> 16) & 0xFF).toByte).put(0.toByte)
+    }
+    buf.put(data).array()
+  }
 
   /** Encode as 24-bit `BI_RGB`. `topDown = true` writes the negative-height
     * variant — same pixels, different (equally valid) file bytes. */
-  def encodeBmp(img: Image, topDown: Boolean = false): Array[Byte] = {
-    val stride = bmpStride(img.width)
-    val dataSize = stride * img.height
-    val buf = ByteBuffer.allocate(54 + dataSize).order(ByteOrder.LITTLE_ENDIAN)
-    // BITMAPFILEHEADER (14 bytes)
-    buf.put('B'.toByte).put('M'.toByte)
-    buf.putInt(54 + dataSize) // file size
-    buf.putShort(0).putShort(0) // reserved
-    buf.putInt(54) // pixel data offset
-    // BITMAPINFOHEADER (40 bytes)
-    buf.putInt(40)
-    buf.putInt(img.width)
-    buf.putInt(if (topDown) -img.height else img.height)
-    buf.putShort(1) // planes
-    buf.putShort(24) // bits per pixel
-    buf.putInt(0) // BI_RGB (uncompressed)
-    buf.putInt(dataSize)
-    buf.putInt(2835).putInt(2835) // 72 dpi in pixels/metre
-    buf.putInt(0).putInt(0) // palette: unused at 24bpp
-    // Pixel rows: bottom-up unless topDown; B,G,R per pixel; rows padded
-    // to a 4-byte boundary.
-    var fileRow = 0
-    while (fileRow < img.height) {
-      val imgRow = if (topDown) fileRow else img.height - 1 - fileRow
-      var c = 0
-      while (c < img.width) {
-        val p = (imgRow * img.width + c) * 3
-        buf.put(img.rgb(p + 2)).put(img.rgb(p + 1)).put(img.rgb(p))
-        c += 1
-      }
-      var pad = stride - img.width * 3
-      while (pad > 0) { buf.put(0.toByte); pad -= 1 }
-      fileRow += 1
-    }
-    buf.array()
-  }
+  def encodeBmp(img: Image, topDown: Boolean = false): Array[Byte] =
+    bmpFile(img.width, img.height, 24, Array.emptyIntArray, img.rgb, topDown)
 
   /** Encode 8-bit indexed (palette) BMP — the other uncompressed variant
     * real tools emit (grayscale exports, screenshots). `palette` entries
@@ -93,38 +163,7 @@ object Codecs {
       s"palette must have 1..256 entries, got ${palette.length}")
     require(indices.length == width * height,
       s"index buffer ${indices.length} != $width x $height")
-    val stride = bmpStride8(width)
-    val dataSize = stride * height
-    val paletteBytes = palette.length * 4
-    val pixelOffset = 54 + paletteBytes
-    val buf = ByteBuffer.allocate(pixelOffset + dataSize)
-      .order(ByteOrder.LITTLE_ENDIAN)
-    buf.put('B'.toByte).put('M'.toByte)
-    buf.putInt(pixelOffset + dataSize)
-    buf.putShort(0).putShort(0)
-    buf.putInt(pixelOffset)
-    buf.putInt(40)
-    buf.putInt(width).putInt(height)
-    buf.putShort(1).putShort(8)
-    buf.putInt(0) // BI_RGB
-    buf.putInt(dataSize)
-    buf.putInt(2835).putInt(2835)
-    buf.putInt(palette.length) // biClrUsed
-    buf.putInt(0)
-    palette.foreach { rgb => // palette quads are B,G,R,reserved
-      buf.put((rgb & 0xFF).toByte).put(((rgb >> 8) & 0xFF).toByte)
-        .put(((rgb >> 16) & 0xFF).toByte).put(0.toByte)
-    }
-    var fileRow = 0
-    while (fileRow < height) {
-      val imgRow = height - 1 - fileRow // bottom-up
-      var c = 0
-      while (c < width) { buf.put(indices(imgRow * width + c)); c += 1 }
-      var pad = stride - width
-      while (pad > 0) { buf.put(0.toByte); pad -= 1 }
-      fileRow += 1
-    }
-    buf.array()
+    bmpFile(width, height, 8, palette, indices, topDown = false)
   }
 
   /** Decode uncompressed BMP — 24-bit direct or 8-bit palette, positive OR
@@ -150,7 +189,7 @@ object Codecs {
     val topDown = heightRaw < 0
     val height = math.abs(heightRaw)
     require(width > 0 && height > 0, s"degenerate BMP dimensions ${width}x$heightRaw")
-    val stride = if (bpp == 24) bmpStride(width) else bmpStride8(width)
+    val stride = bmpStride(width, bpp / 8)
     // Lower bound: pixel data cannot start before the headers end (a
     // below-header offset would silently decode header/palette bytes as
     // pixels); the 8-bit branch tightens this further to include the palette.
@@ -172,31 +211,8 @@ object Codecs {
         System.arraycopy(bytes, 14 + headerSize, p, 0, entries * 4)
         p
       } else null
-    val rgb = new Array[Byte](width * height * 3)
-    var fileRow = 0
-    while (fileRow < height) {
-      val imgRow = if (topDown) fileRow else height - 1 - fileRow
-      val base = pixelOffset + fileRow * stride
-      var c = 0
-      while (c < width) {
-        val p = (imgRow * width + c) * 3
-        if (bpp == 24) {
-          rgb(p) = bytes(base + c * 3 + 2) // R
-          rgb(p + 1) = bytes(base + c * 3 + 1) // G
-          rgb(p + 2) = bytes(base + c * 3) // B
-        } else {
-          val idx = bytes(base + c) & 0xFF
-          require(idx * 4 + 3 < palette.length,
-            s"pixel index $idx outside the ${palette.length / 4}-entry palette")
-          rgb(p) = palette(idx * 4 + 2) // R
-          rgb(p + 1) = palette(idx * 4 + 1) // G
-          rgb(p + 2) = palette(idx * 4) // B
-        }
-        c += 1
-      }
-      fileRow += 1
-    }
-    Image(width, height, rgb)
+    Image(width, height,
+      bmpReadPixels(bytes, pixelOffset, width, height, bpp / 8, topDown, palette))
   }
 
   // ---- PNG ----------------------------------------------------------------
@@ -235,13 +251,28 @@ object Codecs {
     c.getValue.toInt
   }
 
-  /** Paeth predictor (PNG spec §4.5.4, public): the neighbor (left, up,
-    * up-left) closest to left + up − upLeft, ties breaking left, up,
-    * up-left in that order. */
-  private def paeth(a: Int, b: Int, c: Int): Int = {
-    val p = a + b - c
-    val pa = math.abs(p - a); val pb = math.abs(p - b); val pc = math.abs(p - c)
-    if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
+  /** The PNG filter predictor of filter type `ft` (None, Sub, Up,
+    * Average, Paeth) for byte `at` of `rows`, unfiltered rows `rowBytes`
+    * long; `x` and `r` place the byte in its row and its (sub-)image, so
+    * neighbors past the top or left edge read 0. Paeth (PNG spec, public)
+    * picks the neighbor (left, up, up-left) closest to left + up − upLeft,
+    * ties breaking left, up, up-left in that order. The encoder predicts
+    * from the raw rows, the decoder from the rows it has rebuilt so far. */
+  private def pngPredict(ft: Int, rows: Array[Byte], at: Int, x: Int, r: Int,
+                         rowBytes: Int, bpp: Int): Int = {
+    val left = if (x >= bpp) rows(at - bpp) & 0xFF else 0
+    val up = if (r > 0) rows(at - rowBytes) & 0xFF else 0
+    val upLeft = if (r > 0 && x >= bpp) rows(at - rowBytes - bpp) & 0xFF else 0
+    ft match {
+      case 0 => 0
+      case 1 => left
+      case 2 => up
+      case 3 => (left + up) / 2
+      case 4 =>
+        val p = left + up - upLeft
+        val pa = math.abs(p - left); val pb = math.abs(p - up); val pc = math.abs(p - upLeft)
+        if (pa <= pb && pa <= pc) left else if (pb <= pc) up else upLeft
+    }
   }
 
   /** Encode as a REAL compressed PNG — 8-bit truecolor (color type 2) or
@@ -326,16 +357,7 @@ object Codecs {
       var x = 0
       while (x < rowBytes) {
         val cur = raw(inBase + x) & 0xFF
-        val left = if (x >= bpp) raw(inBase + x - bpp) & 0xFF else 0
-        val up = if (r > 0) raw(inBase - rowBytes + x) & 0xFF else 0
-        val upLeft = if (r > 0 && x >= bpp) raw(inBase - rowBytes + x - bpp) & 0xFF else 0
-        val pred = ft match {
-          case 0 => 0
-          case 1 => left
-          case 2 => up
-          case 3 => (left + up) / 2
-          case 4 => paeth(left, up, upLeft)
-        }
+        val pred = pngPredict(ft, raw, inBase + x, x, r, rowBytes, bpp)
         filtered(outBase + 1 + x) = ((cur - pred) & 0xFF).toByte
         x += 1
       }
@@ -575,16 +597,7 @@ object Codecs {
         var x = 0
         while (x < prb) {
           val f = filtered(inBase + x) & 0xFF
-          val left = if (x >= bpp) sub(outBase + x - bpp) & 0xFF else 0
-          val up = if (r > 0) sub(outBase - prb + x) & 0xFF else 0
-          val upLeft = if (r > 0 && x >= bpp) sub(outBase - prb + x - bpp) & 0xFF else 0
-          val pred = ft match {
-            case 0 => 0
-            case 1 => left
-            case 2 => up
-            case 3 => (left + up) / 2
-            case 4 => paeth(left, up, upLeft)
-          }
+          val pred = pngPredict(ft, sub, outBase + x, x, r, prb, bpp)
           sub(outBase + x) = ((f + pred) & 0xFF).toByte
           x += 1
         }
@@ -839,35 +852,11 @@ object Codecs {
     * in 2..256), a Graphic Control Extension (so the extension-skip path
     * in every decoder is load-bearing), one image block (full-screen,
     * optionally interlaced — the four-pass row order), LZW-compressed
-    * pixel indices in ≤255-byte sub-blocks, trailer. */
+    * pixel indices in ≤255-byte sub-blocks, trailer. This is the one-frame,
+    * zero-delay, non-looping case of [[encodeGifAnimated]]. */
   def encodeGif(width: Int, height: Int, palette: Array[Int],
-                indices: Array[Byte], interlaced: Boolean = false): Array[Byte] = {
-    require(width >= 1 && width <= 0xFFFF && height >= 1 && height <= 0xFFFF,
-      s"GIF dimensions ${width}x$height out of the format's [1,65535] range")
-    require(palette.length >= 2 && palette.length <= 256 &&
-      Integer.bitCount(palette.length) == 1,
-      s"GIF global color table must be a power of two in 2..256, got ${palette.length}")
-    require(indices.length == width * height,
-      s"index buffer ${indices.length} != $width x $height")
-    val sizeBits = 31 - Integer.numberOfLeadingZeros(palette.length) // log2
-    val out = new java.io.ByteArrayOutputStream
-    out.write("GIF89a".getBytes("US-ASCII"))
-    // Logical screen descriptor: LE dims; packed = GCT present, color
-    // resolution 8 bits (111), unsorted, GCT size field (2^(n+1) entries).
-    out.write(width & 0xFF); out.write((width >> 8) & 0xFF)
-    out.write(height & 0xFF); out.write((height >> 8) & 0xFF)
-    out.write(0x80 | (7 << 4) | (sizeBits - 1))
-    out.write(0) // background color index
-    out.write(0) // pixel aspect ratio
-    palette.foreach { rgb =>
-      out.write((rgb >> 16) & 0xFF); out.write((rgb >> 8) & 0xFF)
-      out.write(rgb & 0xFF)
-    }
-    writeGifFrame(out, width, height, indices, interlaced, delayCs = 0,
-      sizeBits = sizeBits)
-    out.write(0x3B) // trailer
-    out.toByteArray
-  }
+                indices: Array[Byte], interlaced: Boolean = false): Array[Byte] =
+    encodeGifAnimated(width, height, palette, Seq((indices, interlaced, 0)))
 
   /** One frame: Graphic Control Extension (delay in centiseconds — present
     * on every frame so the extension-walk path is load-bearing), image
@@ -961,39 +950,15 @@ object Codecs {
     * `IllegalArgumentException` naming unsupported features (local color
     * table, multiple frames, missing GCT). */
   def decodeGif(bytes: Array[Byte]): Gif = {
-    require(bytes.length >= 6 &&
-      new String(bytes, 0, 3, "US-ASCII") == "GIF",
-      "not a GIF: missing 'GIF' magic")
-    val ver = new String(bytes, 3, 3, "US-ASCII")
-    require(ver == "89a" || ver == "87a", s"unsupported GIF version $ver")
-    require(bytes.length >= 13, s"truncated GIF: ${bytes.length} bytes")
-    def u16(off: Int): Int = (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8)
-    val screenW = u16(6)
-    val screenH = u16(8)
-    val packed = bytes(10) & 0xFF
-    require((packed & 0x80) != 0,
-      "unsupported GIF: no global color table (local-table-only files)")
-    val gctEntries = 1 << ((packed & 0x07) + 1)
-    var off = 13
-    require(off.toLong + gctEntries * 3 <= bytes.length,
-      s"truncated GIF: global color table of $gctEntries entries runs past ${bytes.length}")
-    val gctOff = off
-    off += gctEntries * 3
+    val (screenW, screenH, gctEntries) = readGifScreen(bytes)
+    var off = GifColorTableAt + gctEntries * 3
     // Block walk: extensions (label + sub-blocks) until the image block.
     var imageAt = -1
     while (imageAt < 0) {
       require(off < bytes.length, "truncated GIF: no image block before EOF")
       (bytes(off) & 0xFF) match {
         case 0x21 => // extension: introducer, label, sub-blocks, terminator
-          off += 2
-          var blockLen = -1
-          while (blockLen != 0) {
-            require(off < bytes.length, "truncated GIF extension block")
-            blockLen = bytes(off) & 0xFF
-            require(off.toLong + 1 + blockLen <= bytes.length,
-              "truncated GIF extension sub-block")
-            off += 1 + blockLen
-          }
+          off = skipGifSubBlocks(bytes, off + 2)
         case 0x2C => imageAt = off
         case 0x3B =>
           throw new IllegalArgumentException("GIF trailer before any image block")
@@ -1003,7 +968,7 @@ object Codecs {
       }
     }
     val (img, interlaced, endOff) =
-      readGifImage(bytes, imageAt, screenW, screenH, gctOff, gctEntries)
+      readGifImage(bytes, imageAt, screenW, screenH, gctEntries)
     // Single-frame scope: the next block must be the trailer (animations
     // go through decodeGifFrames).
     require(endOff < bytes.length && (bytes(endOff) & 0xFF) == 0x3B,
@@ -1011,18 +976,57 @@ object Codecs {
     Gif(img, gctEntries, interlaced)
   }
 
+  private def gifU16(bytes: Array[Byte], off: Int): Int =
+    (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8)
+
+  /** The global color table follows the 6-byte header and the 7-byte
+    * logical screen descriptor. */
+  private val GifColorTableAt = 13
+
+  /** The header, logical screen descriptor and global color table checks
+    * both decoders share: (screen width, screen height, color table
+    * entries). */
+  private def readGifScreen(bytes: Array[Byte]): (Int, Int, Int) = {
+    require(bytes.length >= 6 &&
+      new String(bytes, 0, 3, "US-ASCII") == "GIF",
+      "not a GIF: missing 'GIF' magic")
+    val ver = new String(bytes, 3, 3, "US-ASCII")
+    require(ver == "89a" || ver == "87a", s"unsupported GIF version $ver")
+    require(bytes.length >= GifColorTableAt, s"truncated GIF: ${bytes.length} bytes")
+    val packed = bytes(10) & 0xFF
+    require((packed & 0x80) != 0,
+      "unsupported GIF: no global color table (local-table-only files)")
+    val gctEntries = 1 << ((packed & 0x07) + 1)
+    require(GifColorTableAt.toLong + gctEntries * 3 <= bytes.length,
+      s"truncated GIF: global color table of $gctEntries entries runs past ${bytes.length}")
+    (gifU16(bytes, 6), gifU16(bytes, 8), gctEntries)
+  }
+
+  /** Skip an extension's data sub-blocks starting at `from`, through the
+    * zero-length terminator; returns the offset just past it. */
+  private def skipGifSubBlocks(bytes: Array[Byte], from: Int): Int = {
+    var off = from
+    var blockLen = -1
+    while (blockLen != 0) {
+      require(off < bytes.length, "truncated GIF extension block")
+      blockLen = bytes(off) & 0xFF
+      require(off.toLong + 1 + blockLen <= bytes.length,
+        "truncated GIF extension sub-block")
+      off += 1 + blockLen
+    }
+    off
+  }
+
   /** One image block starting at its 0x2C introducer: descriptor checks
     * (full-canvas, no local table), LZW sub-block concatenation + decode,
     * interlace row mapping, palette lookup. Returns the pixels, the
     * interlace flag, and the offset just past the block terminator. */
   private def readGifImage(bytes: Array[Byte], imageAt: Int, screenW: Int,
-                           screenH: Int, gctOff: Int,
-                           gctEntries: Int): (Image, Boolean, Int) = {
-    def u16(off: Int): Int = (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8)
+                           screenH: Int, gctEntries: Int): (Image, Boolean, Int) = {
     var off = imageAt + 1
     require(off + 9 <= bytes.length, "truncated GIF image descriptor")
-    val left = u16(off); val top = u16(off + 2)
-    val w = u16(off + 4); val h = u16(off + 6)
+    val left = gifU16(bytes, off); val top = gifU16(bytes, off + 2)
+    val w = gifU16(bytes, off + 4); val h = gifU16(bytes, off + 6)
     val iPacked = bytes(off + 8) & 0xFF
     off += 9
     require((iPacked & 0x80) == 0,
@@ -1064,9 +1068,9 @@ object Codecs {
         require(idx < gctEntries,
           s"pixel index $idx outside the $gctEntries-entry global color table")
         val p = (imgRow * w + c) * 3
-        rgb(p) = bytes(gctOff + idx * 3)
-        rgb(p + 1) = bytes(gctOff + idx * 3 + 1)
-        rgb(p + 2) = bytes(gctOff + idx * 3 + 2)
+        rgb(p) = bytes(GifColorTableAt + idx * 3)
+        rgb(p + 1) = bytes(GifColorTableAt + idx * 3 + 1)
+        rgb(p + 2) = bytes(GifColorTableAt + idx * 3 + 2)
         c += 1
       }
       fileRow += 1
@@ -1092,24 +1096,8 @@ object Codecs {
     * table only (disposal compositing of sub-rectangle frames is out of
     * scope and NAMES itself via the frame-geometry require). */
   def decodeGifFrames(bytes: Array[Byte]): GifAnimation = {
-    require(bytes.length >= 6 &&
-      new String(bytes, 0, 3, "US-ASCII") == "GIF",
-      "not a GIF: missing 'GIF' magic")
-    val ver = new String(bytes, 3, 3, "US-ASCII")
-    require(ver == "89a" || ver == "87a", s"unsupported GIF version $ver")
-    require(bytes.length >= 13, s"truncated GIF: ${bytes.length} bytes")
-    def u16(off: Int): Int = (bytes(off) & 0xFF) | ((bytes(off + 1) & 0xFF) << 8)
-    val screenW = u16(6)
-    val screenH = u16(8)
-    val packed = bytes(10) & 0xFF
-    require((packed & 0x80) != 0,
-      "unsupported GIF: no global color table (local-table-only files)")
-    val gctEntries = 1 << ((packed & 0x07) + 1)
-    var off = 13
-    require(off.toLong + gctEntries * 3 <= bytes.length,
-      s"truncated GIF: global color table of $gctEntries entries runs past ${bytes.length}")
-    val gctOff = off
-    off += gctEntries * 3
+    val (screenW, screenH, gctEntries) = readGifScreen(bytes)
+    var off = GifColorTableAt + gctEntries * 3
     val frames = Vector.newBuilder[GifFrame]
     var nFrames = 0
     var pendingDelay = 0
@@ -1126,25 +1114,17 @@ object Codecs {
           // for known and unknown labels).
           if (label == 0xF9 && off + 5 < bytes.length &&
             (bytes(off + 2) & 0xFF) >= 4)
-            pendingDelay = u16(off + 4)
+            pendingDelay = gifU16(bytes, off + 4)
           if (label == 0xFF && off + 13 < bytes.length &&
             (bytes(off + 2) & 0xFF) == 11 &&
             new String(bytes, off + 3, 11, "US-ASCII") == "NETSCAPE2.0" &&
             off + 17 < bytes.length && (bytes(off + 14) & 0xFF) == 3 &&
             (bytes(off + 15) & 0xFF) == 1)
-            loops = u16(off + 16)
-          off += 2
-          var blockLen = -1
-          while (blockLen != 0) {
-            require(off < bytes.length, "truncated GIF extension block")
-            blockLen = bytes(off) & 0xFF
-            require(off.toLong + 1 + blockLen <= bytes.length,
-              "truncated GIF extension sub-block")
-            off += 1 + blockLen
-          }
+            loops = gifU16(bytes, off + 16)
+          off = skipGifSubBlocks(bytes, off + 2)
         case 0x2C =>
           val (img, interlaced, endOff) =
-            readGifImage(bytes, off, screenW, screenH, gctOff, gctEntries)
+            readGifImage(bytes, off, screenW, screenH, gctEntries)
           frames += GifFrame(img, interlaced, pendingDelay)
           nFrames += 1
           pendingDelay = 0
@@ -1188,26 +1168,43 @@ object Codecs {
 
   // ---- WAV ----------------------------------------------------------------
 
-  /** Encode PCM 16-bit LE. `junkChunk = true` inserts a `JUNK` metadata
-    * chunk between `fmt ` and `data` (with an ODD payload size, so the
-    * RIFF pad byte is exercised) — decoders must walk chunks, not assume
-    * the canonical 44-byte layout. */
-  def encodeWav(pcm: Pcm, junkChunk: Boolean = false): Array[Byte] = {
-    require(pcm.channels >= 1, "channels must be >= 1")
-    val dataBytes = pcm.samples.length * 2
+  /** The one RIFF/WAVE writer behind the five WAV encoders. `fmt ` is the
+    * 16-byte PCM layout for format tag 1, and otherwise the 18-byte layout
+    * (cbSize 0 — the non-PCM layout real encoders write) followed by the
+    * spec-REQUIRED `fact` chunk carrying the samples per channel.
+    * `junkChunk = true` then inserts a `JUNK` metadata chunk with an ODD
+    * payload size, so the RIFF pad byte is exercised — decoders must walk
+    * chunks, not assume the canonical 44-byte layout. An odd-sized `data`
+    * chunk gets its pad byte too. `putSamples` writes the `sampleCount`
+    * samples, `bitsPerSample` bits each. */
+  private def riffWave(formatTag: Int, channels: Int, sampleRate: Int,
+                       bitsPerSample: Int, sampleCount: Int, junkChunk: Boolean)(
+                        putSamples: ByteBuffer => Unit): Array[Byte] = {
+    require(channels >= 1, "channels must be >= 1")
+    val pcm = formatTag == 1
+    val bytesPerSample = bitsPerSample / 8
+    val dataBytes = sampleCount * bytesPerSample
+    val dataPad = dataBytes & 1
+    val fmtBytes = if (pcm) 16 else 18
+    val factBytes = if (pcm) 0 else 8 + 4
     val junkPayload = 5 // odd on purpose: exercises the pad byte
     val junkBytes = if (junkChunk) 8 + junkPayload + 1 else 0
-    val riffSize = 4 + (8 + 16) + junkBytes + (8 + dataBytes)
+    val riffSize = 4 + (8 + fmtBytes) + factBytes + junkBytes + (8 + dataBytes + dataPad)
     val buf = ByteBuffer.allocate(8 + riffSize).order(ByteOrder.LITTLE_ENDIAN)
     buf.put("RIFF".getBytes("US-ASCII")).putInt(riffSize)
       .put("WAVE".getBytes("US-ASCII"))
-    buf.put("fmt ".getBytes("US-ASCII")).putInt(16)
-    buf.putShort(1) // PCM
-    buf.putShort(pcm.channels.toShort)
-    buf.putInt(pcm.sampleRate)
-    buf.putInt(pcm.sampleRate * pcm.channels * 2) // byte rate
-    buf.putShort((pcm.channels * 2).toShort) // block align
-    buf.putShort(16) // bits per sample
+    buf.put("fmt ".getBytes("US-ASCII")).putInt(fmtBytes)
+    buf.putShort(formatTag.toShort)
+    buf.putShort(channels.toShort)
+    buf.putInt(sampleRate)
+    buf.putInt(sampleRate * channels * bytesPerSample) // byte rate
+    buf.putShort((channels * bytesPerSample).toShort) // block align
+    buf.putShort(bitsPerSample.toShort)
+    if (!pcm) {
+      buf.putShort(0) // cbSize: no format extension
+      buf.put("fact".getBytes("US-ASCII")).putInt(4)
+      buf.putInt(sampleCount / channels) // samples per channel
+    }
     if (junkChunk) {
       buf.put("JUNK".getBytes("US-ASCII")).putInt(junkPayload)
       var i = 0
@@ -1215,10 +1212,17 @@ object Codecs {
       buf.put(0.toByte) // RIFF pad: chunks are word-aligned
     }
     buf.put("data".getBytes("US-ASCII")).putInt(dataBytes)
-    var i = 0
-    while (i < pcm.samples.length) { buf.putShort(pcm.samples(i)); i += 1 }
+    putSamples(buf)
+    if (dataPad == 1) buf.put(0.toByte)
     buf.array()
   }
+
+  /** Encode PCM 16-bit LE (format tag 1); `junkChunk` as in `riffWave`. */
+  def encodeWav(pcm: Pcm, junkChunk: Boolean = false): Array[Byte] =
+    riffWave(1, pcm.channels, pcm.sampleRate, 16, pcm.samples.length, junkChunk) { buf =>
+      var i = 0
+      while (i < pcm.samples.length) { buf.putShort(pcm.samples(i)); i += 1 }
+    }
 
   // ---- G.711 μ-law (the WAV lossy-audio path) ------------------------------
   //
@@ -1299,34 +1303,8 @@ object Codecs {
     * quantization is the exact closed form (s ≫ 8) ≪ 8 when codes come
     * from [[pcm8Compress]]. */
   def encodeWavPcm8(codes: Array[Byte], sampleRate: Int, channels: Int,
-                    junkChunk: Boolean = false): Array[Byte] = {
-    require(channels >= 1, "channels must be >= 1")
-    val dataBytes = codes.length
-    val dataPad = dataBytes & 1
-    val junkPayload = 5
-    val junkBytes = if (junkChunk) 8 + junkPayload + 1 else 0
-    val riffSize = 4 + (8 + 16) + junkBytes + (8 + dataBytes + dataPad)
-    val buf = ByteBuffer.allocate(8 + riffSize).order(ByteOrder.LITTLE_ENDIAN)
-    buf.put("RIFF".getBytes("US-ASCII")).putInt(riffSize)
-      .put("WAVE".getBytes("US-ASCII"))
-    buf.put("fmt ".getBytes("US-ASCII")).putInt(16)
-    buf.putShort(1) // PCM
-    buf.putShort(channels.toShort)
-    buf.putInt(sampleRate)
-    buf.putInt(sampleRate * channels) // byte rate: 1 byte per sample
-    buf.putShort(channels.toShort) // block align
-    buf.putShort(8) // bits per sample
-    if (junkChunk) {
-      buf.put("JUNK".getBytes("US-ASCII")).putInt(junkPayload)
-      var i = 0
-      while (i < junkPayload) { buf.put(0x6a.toByte); i += 1 }
-      buf.put(0.toByte)
-    }
-    buf.put("data".getBytes("US-ASCII")).putInt(dataBytes)
-    buf.put(codes)
-    if (dataPad == 1) buf.put(0.toByte)
-    buf.array()
-  }
+                    junkChunk: Boolean = false): Array[Byte] =
+    riffWave(1, channels, sampleRate, 8, codes.length, junkChunk)(_.put(codes))
 
   /** Quantize one 16-bit sample to its unsigned 8-bit PCM code: the top
     * byte, rebased to unsigned — (s ≫ 8) + 128 (arithmetic shift =
@@ -1340,38 +1318,13 @@ object Codecs {
     * power-of-two rescale — both exact, so this round trip is lossless
     * and the oracle needs no float arithmetic at all). 18-byte `fmt `
     * (cbSize 0) + the spec-required `fact` chunk, like the G.711 pair. */
-  def encodeWavFloat(pcm: Pcm, junkChunk: Boolean = false): Array[Byte] = {
-    require(pcm.channels >= 1, "channels must be >= 1")
-    val dataBytes = pcm.samples.length * 4
-    val junkPayload = 5
-    val junkBytes = if (junkChunk) 8 + junkPayload + 1 else 0
-    val riffSize = 4 + (8 + 18) + (8 + 4) + junkBytes + (8 + dataBytes)
-    val buf = ByteBuffer.allocate(8 + riffSize).order(ByteOrder.LITTLE_ENDIAN)
-    buf.put("RIFF".getBytes("US-ASCII")).putInt(riffSize)
-      .put("WAVE".getBytes("US-ASCII"))
-    buf.put("fmt ".getBytes("US-ASCII")).putInt(18)
-    buf.putShort(3) // WAVE_FORMAT_IEEE_FLOAT
-    buf.putShort(pcm.channels.toShort)
-    buf.putInt(pcm.sampleRate)
-    buf.putInt(pcm.sampleRate * pcm.channels * 4) // byte rate
-    buf.putShort((pcm.channels * 4).toShort) // block align
-    buf.putShort(32) // bits per sample
-    buf.putShort(0) // cbSize
-    buf.put("fact".getBytes("US-ASCII")).putInt(4)
-    buf.putInt(pcm.samples.length / pcm.channels)
-    if (junkChunk) {
-      buf.put("JUNK".getBytes("US-ASCII")).putInt(junkPayload)
+  def encodeWavFloat(pcm: Pcm, junkChunk: Boolean = false): Array[Byte] =
+    riffWave(3, pcm.channels, pcm.sampleRate, 32, pcm.samples.length, junkChunk) { buf =>
       var i = 0
-      while (i < junkPayload) { buf.put(0x6a.toByte); i += 1 }
-      buf.put(0.toByte)
+      while (i < pcm.samples.length) {
+        buf.putFloat(pcm.samples(i) / 32768.0f); i += 1
+      }
     }
-    buf.put("data".getBytes("US-ASCII")).putInt(dataBytes)
-    var i = 0
-    while (i < pcm.samples.length) {
-      buf.putFloat(pcm.samples(i) / 32768.0f); i += 1
-    }
-    buf.array()
-  }
 
   /** Encode μ-law WAV: format tag 7, 8 bits/sample, an 18-byte `fmt `
     * chunk (cbSize = 0 — the non-PCM layout real encoders write) and the
@@ -1381,47 +1334,13 @@ object Codecs {
     * itself odd-sized (its RIFF pad byte becomes load-bearing). */
   def encodeWavMulaw(samples: Array[Byte], sampleRate: Int, channels: Int,
                      junkChunk: Boolean = false): Array[Byte] =
-    encodeWavG711(7, samples, sampleRate, channels, junkChunk)
+    riffWave(7, channels, sampleRate, 8, samples.length, junkChunk)(_.put(samples))
 
   /** Encode A-law WAV: format tag 6 (WAVE_FORMAT_ALAW), same 18-byte
     * `fmt ` + `fact` layout as the μ-law writer. */
   def encodeWavAlaw(samples: Array[Byte], sampleRate: Int, channels: Int,
                     junkChunk: Boolean = false): Array[Byte] =
-    encodeWavG711(6, samples, sampleRate, channels, junkChunk)
-
-  private def encodeWavG711(formatTag: Int, samples: Array[Byte],
-                            sampleRate: Int, channels: Int,
-                            junkChunk: Boolean): Array[Byte] = {
-    require(channels >= 1, "channels must be >= 1")
-    val dataBytes = samples.length
-    val dataPad = dataBytes & 1
-    val junkPayload = 5
-    val junkBytes = if (junkChunk) 8 + junkPayload + 1 else 0
-    val riffSize = 4 + (8 + 18) + (8 + 4) + junkBytes + (8 + dataBytes + dataPad)
-    val buf = ByteBuffer.allocate(8 + riffSize).order(ByteOrder.LITTLE_ENDIAN)
-    buf.put("RIFF".getBytes("US-ASCII")).putInt(riffSize)
-      .put("WAVE".getBytes("US-ASCII"))
-    buf.put("fmt ".getBytes("US-ASCII")).putInt(18)
-    buf.putShort(formatTag.toShort) // 7 = WAVE_FORMAT_MULAW, 6 = WAVE_FORMAT_ALAW
-    buf.putShort(channels.toShort)
-    buf.putInt(sampleRate)
-    buf.putInt(sampleRate * channels) // byte rate: 1 byte per sample
-    buf.putShort(channels.toShort) // block align
-    buf.putShort(8) // bits per sample
-    buf.putShort(0) // cbSize: no format extension
-    buf.put("fact".getBytes("US-ASCII")).putInt(4)
-    buf.putInt(samples.length / channels) // samples per channel
-    if (junkChunk) {
-      buf.put("JUNK".getBytes("US-ASCII")).putInt(junkPayload)
-      var i = 0
-      while (i < junkPayload) { buf.put(0x6a.toByte); i += 1 }
-      buf.put(0.toByte)
-    }
-    buf.put("data".getBytes("US-ASCII")).putInt(dataBytes)
-    buf.put(samples)
-    if (dataPad == 1) buf.put(0.toByte)
-    buf.array()
-  }
+    riffWave(6, channels, sampleRate, 8, samples.length, junkChunk)(_.put(samples))
 
   /** Decode RIFF/WAVE by walking the chunk list — PCM 16-bit passes
     * samples through; PCM 8-bit (unsigned, centered 128) widens via
@@ -1545,21 +1464,7 @@ object Codecs {
       val stride = bmpStride(w)
       require(payload.length == stride * h,
         s"DIB frame carries ${payload.length} bytes, expected ${stride * h}")
-      val rgb = new Array[Byte](w * h * 3)
-      var y = 0
-      while (y < h) {
-        val src = (h - 1 - y) * stride
-        var x = 0
-        while (x < w) {
-          val p = (y * w + x) * 3
-          rgb(p) = payload(src + x * 3 + 2)     // R from BGR
-          rgb(p + 1) = payload(src + x * 3 + 1)
-          rgb(p + 2) = payload(src + x * 3)
-          x += 1
-        }
-        y += 1
-      }
-      Image(w, h, rgb)
+      Image(w, h, bmpReadPixels(payload, 0, w, h, 3, topDown = false, palette = null))
     }
 
   /** Encode frames (each a complete baseline JPEG) as an MJPEG AVI:
@@ -1578,24 +1483,7 @@ object Codecs {
     val w = images.head.width; val h = images.head.height
     require(images.forall(i => i.width == w && i.height == h),
       "all AVI frames must share one geometry")
-    val stride = bmpStride(w)
-    val payloads = images.map { img =>
-      val out = new Array[Byte](stride * h)
-      var y = 0
-      while (y < h) {
-        val dst = (h - 1 - y) * stride
-        var x = 0
-        while (x < w) {
-          val p = (y * w + x) * 3
-          out(dst + x * 3) = img.rgb(p + 2)     // B
-          out(dst + x * 3 + 1) = img.rgb(p + 1) // G
-          out(dst + x * 3 + 2) = img.rgb(p)     // R
-          x += 1
-        }
-        y += 1
-      }
-      out
-    }
+    val payloads = images.map(img => bmpPixelArray(w, h, 3, img.rgb, topDown = false))
     encodeAviStream(payloads, w, h, usPerFrame, mjpeg = false)
   }
 
@@ -2032,7 +1920,14 @@ object Codecs {
     table
   }
 
-  /** MSB-first bit writer with T.81 §B.1.1.5 byte stuffing (0xFF → 0xFF 0x00). */
+  /** The encoders' (codeLength, code) tables: index 0 luma, 1 chroma. */
+  private val JpegDcCodes: Array[Array[(Int, Int)]] =
+    Array(huffEncodeTable(JpegDcLum), huffEncodeTable(JpegDcChr))
+  private val JpegAcCodes: Array[Array[(Int, Int)]] =
+    Array(huffEncodeTable(JpegAcLum), huffEncodeTable(JpegAcChr))
+
+  /** MSB-first bit writer with T.81 §B.1.1.5 byte stuffing (0xFF → 0xFF 0x00),
+    * carrying the DC and AC Huffman coders both encoders share. */
   private final class JpegBitWriter(out: java.io.ByteArrayOutputStream) {
     private var acc = 0L
     private var nBits = 0
@@ -2049,6 +1944,39 @@ object Codecs {
     /** Pad the final partial byte with 1-bits (§B.1.1.5). */
     def flushAlign(): Unit =
       if (nBits > 0) put(0x7F, 8 - nBits) // all-ones pad
+    /** The `cat` magnitude bits of `v`, negatives offset by 2^cat − 1. */
+    private def putBits(v: Int, cat: Int): Unit =
+      put(if (v < 0) v + (1 << cat) - 1 else v, cat)
+    /** One DC difference: its category's code, then its magnitude bits. */
+    def dc(codes: Array[(Int, Int)], diff: Int): Unit = {
+      val cat = jpegCategory(diff)
+      val (len, code) = codes(cat)
+      put(code, len)
+      putBits(diff, cat)
+    }
+    /** One block's AC coefficients 1..63 in zigzag order (`coef` is in
+      * natural order): run/size codes, ZRL per 16 zeros before a nonzero
+      * value, EOB after the last nonzero value. */
+    def ac(codes: Array[(Int, Int)], coef: Array[Int]): Unit = {
+      var run = 0
+      var k = 1
+      while (k < 64) {
+        val v = coef(JpegZigzag(k))
+        if (v == 0) run += 1
+        else {
+          while (run >= 16) {
+            val (zl, zc) = codes(0xF0); put(zc, zl); run -= 16
+          }
+          val sz = jpegCategory(v)
+          val (len, code) = codes((run << 4) | sz)
+          put(code, len)
+          putBits(v, sz)
+          run = 0
+        }
+        k += 1
+      }
+      if (run > 0) { val (el, ec) = codes(0x00); put(ec, el) }
+    }
   }
 
   private def scaleQuant(base: Array[Int], qscale: Int): Array[Int] =
@@ -2138,19 +2066,17 @@ object Codecs {
     out
   }
 
-  /** Encode baseline JPEG: YCbCr (3 components) or grayscale. `qscale`
-    * multiplies the Annex K tables (clamped to [1,255]);
-    * `restartInterval` > 0 emits DRI + RSTn markers every that many MCUs.
-    * `lumaH`/`lumaV` are the luma sampling factors with chroma fixed at
-    * 1×1 — (1,1) = 4:4:4 (byte-identical to the pre-subsampling encoder),
-    * (2,1) = 4:2:2, (1,2) = 4:4:0, (2,2) = 4:2:0, the forms real camera/
-    * web encoders emit. Chroma is box-averaged (round half up) over each
-    * lumaH×lumaV group — exact on flat regions, which keeps the oracle
-    * closed form. Images whose dims aren't multiples of the MCU are
-    * edge-replicated to the MCU grid (§A.2.1); the decoder crops back. */
-  def encodeJpeg(img: Image, qscale: Int = 1, restartInterval: Int = 0,
-                 gray: Boolean = false, lumaH: Int = 1, lumaV: Int = 1,
-                 orientation: Int = 1): Array[Byte] = {
+  /** The front half both JPEG encoders share: the argument checks, the
+    * MCU geometry, the YCbCr planes and the `qscale`-scaled quantizers.
+    * Component c is 0 = Y, 1 = Cb, 2 = Cr; luma carries the lumaH×lumaV
+    * sampling factors and chroma is 1×1. Images whose dims aren't
+    * multiples of the MCU are edge-replicated to the MCU grid (§A.2.1).
+    * Chroma is box-averaged (round half up) over each lumaH×lumaV group —
+    * the identity at 1×1, so 4:4:4 output is byte-stable, and exact on
+    * flat regions, which keeps the oracle closed form. */
+  private final class JpegFront(img: Image, qscale: Int, restartInterval: Int,
+                                orientation: Int, val gray: Boolean,
+                                val lumaH: Int, val lumaV: Int) {
     require(qscale >= 1 && qscale <= 15, s"qscale out of [1,15]: $qscale")
     require(restartInterval >= 0 && restartInterval <= 0xFFFF,
       s"restart interval out of [0,65535]: $restartInterval")
@@ -2160,215 +2086,234 @@ object Codecs {
       s"luma sampling factors out of [1,2]: ${lumaH}x$lumaV")
     require(!gray || (lumaH == 1 && lumaV == 1),
       "grayscale has a single component — subsampling does not apply")
-    val w = img.width; val h = img.height
+    val w: Int = img.width
+    val h: Int = img.height
     // u16 SOF fields: dims past 65535 would silently truncate on the wire
     require(w >= 1 && w <= 0xFFFF && h >= 1 && h <= 0xFFFF,
       s"JPEG dimensions ${w}x$h out of the format's [1,65535] range")
     require(w.toLong * h <= MaxDecodePixels,
       s"JPEG dimensions ${w}x$h exceed the $MaxDecodePixels-pixel cap")
-    val mcusX = (w + 8 * lumaH - 1) / (8 * lumaH)
-    val mcusY = (h + 8 * lumaV - 1) / (8 * lumaV)
-    val pwY = mcusX * lumaH * 8; val phY = mcusY * lumaV * 8
-    val pwC = mcusX * 8; val phC = mcusY * 8
-    val nComp = if (gray) 1 else 3
-    // full-res planes on the MCU-padded luma grid, level-shifted later
-    val planes = Array.ofDim[Int](nComp, pwY * phY)
-    var y = 0
-    while (y < phY) {
-      val sy = math.min(y, h - 1)
-      var x = 0
-      while (x < pwY) {
-        val sx = math.min(x, w - 1)
-        val p = (sy * w + sx) * 3
-        val r = img.rgb(p) & 0xFF
-        val g = img.rgb(p + 1) & 0xFF
-        val b = img.rgb(p + 2) & 0xFF
-        val o = y * pwY + x
-        // JFIF fixed-point RGB→YCbCr; the multipliers sum to 256 (Y) and
-        // 0 (Cb/Cr), so R=G=B lands on Y=R, Cb=Cr=128 EXACTLY.
-        planes(0)(o) = (77 * r + 150 * g + 29 * b + 128) >> 8
-        if (!gray) {
-          planes(1)(o) = 128 + ((-43 * r - 85 * g + 128 * b + 128) >> 8)
-          planes(2)(o) = 128 + ((128 * r - 107 * g - 21 * b + 128) >> 8)
-        }
-        x += 1
-      }
-      y += 1
-    }
-    // chroma downsample: box average over each lumaH×lumaV group, round
-    // half up (identity at 1×1, so 4:4:4 output is byte-stable)
-    val chroma: Array[Array[Int]] =
-      if (gray) null
-      else if (lumaH == 1 && lumaV == 1) Array(planes(1), planes(2))
-      else {
-        val area = lumaH * lumaV
-        Array.tabulate(2) { ci =>
-          val src = planes(ci + 1)
-          val dst = new Array[Int](pwC * phC)
-          var cy = 0
-          while (cy < phC) {
-            var cx = 0
-            while (cx < pwC) {
-              var s = 0
-              var dy = 0
-              while (dy < lumaV) {
-                var dx = 0
-                while (dx < lumaH) {
-                  s += src((cy * lumaV + dy) * pwY + cx * lumaH + dx)
-                  dx += 1
-                }
-                dy += 1
-              }
-              dst(cy * pwC + cx) = (s + area / 2) / area
-              cx += 1
-            }
-            cy += 1
+    val nComp: Int = if (gray) 1 else 3
+    val mcusX: Int = (w + 8 * lumaH - 1) / (8 * lumaH)
+    val mcusY: Int = (h + 8 * lumaV - 1) / (8 * lumaV)
+    def fH(c: Int): Int = if (c == 0) lumaH else 1
+    def fV(c: Int): Int = if (c == 0) lumaV else 1
+    /** Blocks across and down component c's MCU-padded plane. */
+    def blocksW(c: Int): Int = mcusX * fH(c)
+    def blocksH(c: Int): Int = mcusY * fV(c)
+    /** Quantizers, 0 = luma and 1 = chroma (natural order). */
+    val quant: Array[Array[Int]] =
+      Array(scaleQuant(JpegQuantLum, qscale), scaleQuant(JpegQuantChr, qscale))
+
+    /** Component planes, each blocksW(c)·8 samples wide, not yet
+      * level-shifted. */
+    private val planes: Array[Array[Int]] = {
+      val pwY = blocksW(0) * 8
+      val full = Array.ofDim[Int](nComp, pwY * blocksH(0) * 8)
+      var y = 0
+      while (y < blocksH(0) * 8) {
+        val sy = math.min(y, h - 1)
+        var x = 0
+        while (x < pwY) {
+          val sx = math.min(x, w - 1)
+          val p = (sy * w + sx) * 3
+          val r = img.rgb(p) & 0xFF
+          val g = img.rgb(p + 1) & 0xFF
+          val b = img.rgb(p + 2) & 0xFF
+          val o = y * pwY + x
+          // JFIF fixed-point RGB→YCbCr; the multipliers sum to 256 (Y) and
+          // 0 (Cb/Cr), so R=G=B lands on Y=R, Cb=Cr=128 EXACTLY.
+          full(0)(o) = (77 * r + 150 * g + 29 * b + 128) >> 8
+          if (!gray) {
+            full(1)(o) = 128 + ((-43 * r - 85 * g + 128 * b + 128) >> 8)
+            full(2)(o) = 128 + ((128 * r - 107 * g - 21 * b + 128) >> 8)
           }
-          dst
+          x += 1
+        }
+        y += 1
+      }
+      if (gray || (lumaH == 1 && lumaV == 1)) full
+      else {
+        val pwC = mcusX * 8
+        val area = lumaH * lumaV
+        Array.tabulate(3) { c =>
+          if (c == 0) full(0)
+          else {
+            val src = full(c)
+            val dst = new Array[Int](pwC * mcusY * 8)
+            var cy = 0
+            while (cy < mcusY * 8) {
+              var cx = 0
+              while (cx < pwC) {
+                var s = 0
+                var dy = 0
+                while (dy < lumaV) {
+                  var dx = 0
+                  while (dx < lumaH) {
+                    s += src((cy * lumaV + dy) * pwY + cx * lumaH + dx)
+                    dx += 1
+                  }
+                  dy += 1
+                }
+                dst(cy * pwC + cx) = (s + area / 2) / area
+                cx += 1
+              }
+              cy += 1
+            }
+            dst
+          }
         }
       }
-    val qLum = scaleQuant(JpegQuantLum, qscale)
-    val qChr = scaleQuant(JpegQuantChr, qscale)
-    val out = new java.io.ByteArrayOutputStream(1024)
-    def u16(v: Int): Unit = { out.write((v >> 8) & 0xFF); out.write(v & 0xFF) }
-    def marker(m: Int): Unit = { out.write(0xFF); out.write(m) }
-    marker(0xD8) // SOI
-    // APP0 / JFIF 1.1
-    marker(0xE0); u16(16)
-    out.write("JFIF".getBytes("US-ASCII")); out.write(0)
-    out.write(1); out.write(1); out.write(0) // version 1.1, units 0
-    u16(1); u16(1); out.write(0); out.write(0)
-    if (orientation != 1) {
-      // APP1 / Exif: minimal little-endian TIFF — header (8) + IFD0 with
-      // the single Orientation entry (2 + 12) + next-IFD offset 0 (4)
-      marker(0xE1); u16(2 + 6 + 26)
-      out.write("Exif".getBytes("US-ASCII")); out.write(0); out.write(0)
-      def le16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
-      le16(0x4949)        // "II"
-      le16(42); le16(8); le16(0) // magic, IFD0 at offset 8
-      le16(1)             // one entry
-      le16(0x0112); le16(3); le16(1); le16(0) // tag, SHORT, count 1
-      le16(orientation); le16(0) // value, left-justified in its 4 bytes
-      le16(0); le16(0)    // no next IFD
     }
-    // DQT (zigzag order on the wire)
-    def dqt(id: Int, tbl: Array[Int]): Unit = {
-      marker(0xDB); u16(2 + 1 + 64); out.write(id)
-      var k = 0
-      while (k < 64) { out.write(tbl(JpegZigzag(k))); k += 1 }
-    }
-    dqt(0, qLum)
-    if (!gray) dqt(1, qChr)
-    // SOF0: baseline, precision 8; luma carries the sampling factors,
-    // chroma is 1×1 (4:4:4 when luma is 1×1 too)
-    marker(0xC0); u16(8 + 3 * nComp); out.write(8); u16(h); u16(w)
-    out.write(nComp)
-    var c = 0
-    while (c < nComp) {
-      out.write(c + 1) // component id
-      out.write(if (c == 0) (lumaH << 4) | lumaV else 0x11)
-      out.write(if (c == 0) 0 else 1) // quant table id
-      c += 1
-    }
-    // DHT
-    def dht(cls: Int, id: Int, spec: HuffSpec): Unit = {
-      marker(0xC4); u16(2 + 1 + 16 + spec.vals.length)
-      out.write((cls << 4) | id)
-      spec.bits.foreach(out.write)
-      spec.vals.foreach(out.write)
-    }
-    dht(0, 0, JpegDcLum); dht(1, 0, JpegAcLum)
-    if (!gray) { dht(0, 1, JpegDcChr); dht(1, 1, JpegAcChr) }
-    if (restartInterval > 0) { marker(0xDD); u16(4); u16(restartInterval) }
-    // SOS
-    marker(0xDA); u16(6 + 2 * nComp); out.write(nComp)
-    c = 0
-    while (c < nComp) {
-      out.write(c + 1)
-      out.write(if (c == 0) 0x00 else 0x11) // DC/AC table ids
-      c += 1
-    }
-    out.write(0); out.write(63); out.write(0) // Ss/Se/AhAl (baseline fixed)
-    // entropy-coded segment
-    val dcTab = Array(huffEncodeTable(JpegDcLum), huffEncodeTable(JpegDcChr))
-    val acTab = Array(huffEncodeTable(JpegAcLum), huffEncodeTable(JpegAcChr))
-    val writer = new JpegBitWriter(out)
-    val pred = new Array[Int](nComp)
-    val block = new Array[Int](64)
-    // one encoded block: load from (plane, planeW, baseY, baseX), fdct,
-    // huffman-code — shared by the luma and chroma unit loops below
-    def encodeBlock(plane: Array[Int], planeW: Int, baseY: Int, baseX: Int,
-                    c: Int): Unit = {
+
+    private val samples = new Array[Int](64)
+
+    /** Level-shifted forward DCT + quantization of component c's block
+      * (by, bx): a fresh coefficient array in natural order. */
+    def coefficients(c: Int, by: Int, bx: Int): Array[Int] = {
+      val pw = blocksW(c) * 8
       var i = 0
       while (i < 64) {
-        block(i) = plane((baseY + i / 8) * planeW + baseX + i % 8) - 128
+        samples(i) = planes(c)((by * 8 + i / 8) * pw + bx * 8 + i % 8) - 128
         i += 1
       }
-      val coef = fdctQuant(block, if (c == 0) qLum else qChr)
-      val ti = if (c == 0) 0 else 1
-      // DC: category code + magnitude bits (negatives offset by 2^cat−1)
-      val diff = coef(0) - pred(c)
-      pred(c) = coef(0)
-      val cat = jpegCategory(diff)
-      val (dl, dc) = dcTab(ti)(cat)
-      writer.put(dc, dl)
-      if (cat > 0)
-        writer.put(if (diff < 0) diff + (1 << cat) - 1 else diff, cat)
-      // AC: run/size with ZRL and EOB
-      var run = 0
-      var k = 1
-      while (k < 64) {
-        val v = coef(JpegZigzag(k))
-        if (v == 0) run += 1
-        else {
-          while (run >= 16) {
-            val (zl, zc) = acTab(ti)(0xF0); writer.put(zc, zl); run -= 16
-          }
-          val sz = jpegCategory(v)
-          val (al, ac) = acTab(ti)((run << 4) | sz)
-          writer.put(ac, al)
-          writer.put(if (v < 0) v + (1 << sz) - 1 else v, sz)
-          run = 0
-        }
-        k += 1
-      }
-      if (run > 0) { val (el, ec) = acTab(ti)(0x00); writer.put(ec, el) }
+      fdctQuant(samples, quant(math.min(c, 1)))
     }
-    // interleaved MCU walk (§A.2.3): per MCU, lumaV×lumaH luma units in
-    // raster order, then one Cb and one Cr unit (1×1 chroma)
-    var mcu = 0
-    var rstIdx = 0
-    var my = 0
-    while (my < mcusY) {
-      var mx = 0
-      while (mx < mcusX) {
-        if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
-          writer.flushAlign()
-          marker(0xD0 + rstIdx)
-          rstIdx = (rstIdx + 1) % 8
-          java.util.Arrays.fill(pred, 0)
-        }
-        var vb = 0
-        while (vb < lumaV) {
-          var hb = 0
-          while (hb < lumaH) {
-            encodeBlock(planes(0), pwY,
-              (my * lumaV + vb) * 8, (mx * lumaH + hb) * 8, 0)
-            hb += 1
+
+    /** The interleaved MCU walk (§A.2.3): per MCU in raster order,
+      * `atMcu(mcu index)`, then each component's fV×fH blocks in raster
+      * order as `block(c, by, bx)`. */
+    def mcuWalk(atMcu: Int => Unit)(block: (Int, Int, Int) => Unit): Unit = {
+      var my = 0
+      while (my < mcusY) {
+        var mx = 0
+        while (mx < mcusX) {
+          atMcu(my * mcusX + mx)
+          var c = 0
+          while (c < nComp) {
+            var vb = 0
+            while (vb < fV(c)) {
+              var hb = 0
+              while (hb < fH(c)) {
+                block(c, my * fV(c) + vb, mx * fH(c) + hb)
+                hb += 1
+              }
+              vb += 1
+            }
+            c += 1
           }
-          vb += 1
+          mx += 1
         }
-        if (!gray) {
-          encodeBlock(chroma(0), pwC, my * 8, mx * 8, 1)
-          encodeBlock(chroma(1), pwC, my * 8, mx * 8, 2)
-        }
-        mcu += 1
-        mx += 1
+        my += 1
       }
-      my += 1
+    }
+  }
+
+  /** A JPEG byte stream with the marker-segment writers both encoders
+    * share. */
+  private final class JpegOut extends java.io.ByteArrayOutputStream(1024) {
+    def u16(v: Int): Unit = { write((v >> 8) & 0xFF); write(v & 0xFF) }
+    def marker(m: Int): Unit = { write(0xFF); write(m) }
+
+    /** SOI; APP0 / JFIF 1.1; `appSegments` (what an encoder adds after
+      * APP0); DQT, zigzag order on the wire; SOFn — `sof` is 0xC0
+      * (baseline) or 0xC2 (progressive), precision 8, luma carrying the
+      * sampling factors; DHT with the Annex K tables. */
+    def header(f: JpegFront, sof: Int)(appSegments: => Unit): Unit = {
+      val tables = if (f.gray) 1 else 2 // quantizers and Huffman table pairs
+      marker(0xD8)
+      marker(0xE0); u16(16)
+      write("JFIF".getBytes("US-ASCII")); write(0)
+      write(1); write(1); write(0) // version 1.1, units 0
+      u16(1); u16(1); write(0); write(0)
+      appSegments
+      var id = 0
+      while (id < tables) {
+        marker(0xDB); u16(2 + 1 + 64); write(id)
+        var k = 0
+        while (k < 64) { write(f.quant(id)(JpegZigzag(k))); k += 1 }
+        id += 1
+      }
+      marker(sof); u16(8 + 3 * f.nComp); write(8); u16(f.h); u16(f.w)
+      write(f.nComp)
+      var c = 0
+      while (c < f.nComp) {
+        write(c + 1) // component id
+        write((f.fH(c) << 4) | f.fV(c))
+        write(math.min(c, 1)) // quant table id
+        c += 1
+      }
+      def dht(cls: Int, id: Int, spec: HuffSpec): Unit = {
+        marker(0xC4); u16(2 + 1 + 16 + spec.vals.length)
+        write((cls << 4) | id)
+        spec.bits.foreach(write)
+        spec.vals.foreach(write)
+      }
+      id = 0
+      while (id < tables) {
+        dht(0, id, if (id == 0) JpegDcLum else JpegDcChr)
+        dht(1, id, if (id == 0) JpegAcLum else JpegAcChr)
+        id += 1
+      }
+    }
+
+    /** SOS over components `comps`, `tableIds(c)` = DC id << 4 | AC id,
+      * spectral band Ss..Se, Ah = Al = 0. */
+    def sos(comps: Range, tableIds: Int => Int, ss: Int, se: Int): Unit = {
+      marker(0xDA); u16(6 + 2 * comps.size); write(comps.size)
+      comps.foreach { c => write(c + 1); write(tableIds(c)) }
+      write(ss); write(se); write(0)
+    }
+  }
+
+  /** Encode baseline JPEG: YCbCr (3 components) or grayscale. `qscale`
+    * multiplies the Annex K tables (clamped to [1,255]);
+    * `restartInterval` > 0 emits DRI + RSTn markers every that many MCUs.
+    * `lumaH`/`lumaV` are the luma sampling factors with chroma fixed at
+    * 1×1 — (1,1) = 4:4:4 (byte-identical to the pre-subsampling encoder),
+    * (2,1) = 4:2:2, (1,2) = 4:4:0, (2,2) = 4:2:0, the forms real camera/
+    * web encoders emit; see [[JpegFront]] for the planes. The decoder
+    * crops the MCU padding back. */
+  def encodeJpeg(img: Image, qscale: Int = 1, restartInterval: Int = 0,
+                 gray: Boolean = false, lumaH: Int = 1, lumaV: Int = 1,
+                 orientation: Int = 1): Array[Byte] = {
+    val f = new JpegFront(img, qscale, restartInterval, orientation, gray, lumaH, lumaV)
+    val out = new JpegOut
+    out.header(f, 0xC0) {
+      if (orientation != 1) {
+        // APP1 / Exif: minimal little-endian TIFF — header (8) + IFD0 with
+        // the single Orientation entry (2 + 12) + next-IFD offset 0 (4)
+        out.marker(0xE1); out.u16(2 + 6 + 26)
+        out.write("Exif".getBytes("US-ASCII")); out.write(0); out.write(0)
+        def le16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
+        le16(0x4949)        // "II"
+        le16(42); le16(8); le16(0) // magic, IFD0 at offset 8
+        le16(1)             // one entry
+        le16(0x0112); le16(3); le16(1); le16(0) // tag, SHORT, count 1
+        le16(orientation); le16(0) // value, left-justified in its 4 bytes
+        le16(0); le16(0)    // no next IFD
+      }
+    }
+    if (restartInterval > 0) { out.marker(0xDD); out.u16(4); out.u16(restartInterval) }
+    out.sos(0 until f.nComp, c => if (c == 0) 0x00 else 0x11, 0, 63)
+    // entropy-coded segment: one interleaved scan, RSTn every
+    // restartInterval MCUs (m cycling 0..7, DC predictors reset)
+    val writer = new JpegBitWriter(out)
+    val pred = new Array[Int](f.nComp)
+    f.mcuWalk { mcu =>
+      if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
+        writer.flushAlign()
+        out.marker(0xD0 + (mcu / restartInterval - 1) % 8)
+        java.util.Arrays.fill(pred, 0)
+      }
+    } { (c, by, bx) =>
+      val coef = f.coefficients(c, by, bx)
+      writer.dc(JpegDcCodes(math.min(c, 1)), coef(0) - pred(c))
+      pred(c) = coef(0)
+      writer.ac(JpegAcCodes(math.min(c, 1)), coef)
     }
     writer.flushAlign()
-    marker(0xD9) // EOI
+    out.marker(0xD9) // EOI
     out.toByteArray
   }
 
@@ -2380,225 +2325,42 @@ object Codecs {
     * away). Per-block AC coding inside a band-complete first scan is
     * exactly the baseline entropy coder (EOB = an EOB run of 1), so the
     * pixels decode bit-identically to [[encodeJpeg]] at the same
-    * qscale/factors — the m28 oracle property. Same planes, Annex K
-    * tables, quantizers, and luma-subsampling support as the sequential
-    * encoder; no restart markers. */
+    * qscale/factors — the m28 oracle property. Same front half, headers
+    * and coders as the sequential encoder; no restart markers. */
   def encodeJpegProgressive(img: Image, qscale: Int = 1, gray: Boolean = false,
                             lumaH: Int = 1, lumaV: Int = 1): Array[Byte] = {
-    require(qscale >= 1 && qscale <= 15, s"qscale out of [1,15]: $qscale")
-    require(lumaH >= 1 && lumaH <= 2 && lumaV >= 1 && lumaV <= 2,
-      s"luma sampling factors out of [1,2]: ${lumaH}x$lumaV")
-    require(!gray || (lumaH == 1 && lumaV == 1),
-      "grayscale has a single component — subsampling does not apply")
-    val w = img.width; val h = img.height
-    require(w >= 1 && w <= 0xFFFF && h >= 1 && h <= 0xFFFF,
-      s"JPEG dimensions ${w}x$h out of the format's [1,65535] range")
-    require(w.toLong * h <= MaxDecodePixels,
-      s"JPEG dimensions ${w}x$h exceed the $MaxDecodePixels-pixel cap")
-    val mcusX = (w + 8 * lumaH - 1) / (8 * lumaH)
-    val mcusY = (h + 8 * lumaV - 1) / (8 * lumaV)
-    val pwY = mcusX * lumaH * 8; val phY = mcusY * lumaV * 8
-    val pwC = mcusX * 8; val phC = mcusY * 8
-    val nComp = if (gray) 1 else 3
-    // full-res planes on the MCU-padded luma grid (the encodeJpeg front
-    // half — shared arithmetic so the two encoders' pixels agree exactly)
-    val planes = Array.ofDim[Int](nComp, pwY * phY)
-    var y = 0
-    while (y < phY) {
-      val sy = math.min(y, h - 1)
-      var x = 0
-      while (x < pwY) {
-        val sx = math.min(x, w - 1)
-        val p = (sy * w + sx) * 3
-        val r = img.rgb(p) & 0xFF
-        val g = img.rgb(p + 1) & 0xFF
-        val b = img.rgb(p + 2) & 0xFF
-        val o = y * pwY + x
-        planes(0)(o) = (77 * r + 150 * g + 29 * b + 128) >> 8
-        if (!gray) {
-          planes(1)(o) = 128 + ((-43 * r - 85 * g + 128 * b + 128) >> 8)
-          planes(2)(o) = 128 + ((128 * r - 107 * g - 21 * b + 128) >> 8)
-        }
-        x += 1
-      }
-      y += 1
+    val f = new JpegFront(img, qscale, 0, 1, gray, lumaH, lumaV)
+    // every block's coefficients over the MCU-padded grids (the DC scan
+    // walks every padded block), row-major per component
+    val coefs = Array.tabulate(f.nComp) { c =>
+      val bw = f.blocksW(c)
+      Array.tabulate(bw * f.blocksH(c))(i => f.coefficients(c, i / bw, i % bw))
     }
-    val chroma: Array[Array[Int]] =
-      if (gray) null
-      else if (lumaH == 1 && lumaV == 1) Array(planes(1), planes(2))
-      else {
-        val area = lumaH * lumaV
-        Array.tabulate(2) { ci =>
-          val src = planes(ci + 1)
-          val dst = new Array[Int](pwC * phC)
-          var cy = 0
-          while (cy < phC) {
-            var cx = 0
-            while (cx < pwC) {
-              var s = 0
-              var dy = 0
-              while (dy < lumaV) {
-                var dx = 0
-                while (dx < lumaH) {
-                  s += src((cy * lumaV + dy) * pwY + cx * lumaH + dx)
-                  dx += 1
-                }
-                dy += 1
-              }
-              dst(cy * pwC + cx) = (s + area / 2) / area
-              cx += 1
-            }
-            cy += 1
-          }
-          dst
-        }
-      }
-    val qLum = scaleQuant(JpegQuantLum, qscale)
-    val qChr = scaleQuant(JpegQuantChr, qscale)
-    // precompute quantized coefficient blocks per component over the
-    // MCU-padded grids (the DC scan walks every padded block)
-    val bwC = Array.tabulate(nComp)(c => if (c == 0) mcusX * lumaH else mcusX)
-    val bhC = Array.tabulate(nComp)(c => if (c == 0) mcusY * lumaV else mcusY)
-    val coefs = Array.tabulate(nComp) { c =>
-      val plane = if (c == 0) planes(0) else chroma(c - 1)
-      val pw = bwC(c) * 8
-      val q = if (c == 0) qLum else qChr
-      val arr = new Array[Int](bwC(c) * bhC(c) * 64)
-      val block = new Array[Int](64)
-      var by = 0
-      while (by < bhC(c)) {
-        var bx = 0
-        while (bx < bwC(c)) {
-          var i = 0
-          while (i < 64) {
-            block(i) = plane((by * 8 + i / 8) * pw + bx * 8 + i % 8) - 128
-            i += 1
-          }
-          System.arraycopy(fdctQuant(block, q), 0, arr, (by * bwC(c) + bx) * 64, 64)
-          bx += 1
-        }
-        by += 1
-      }
-      arr
+    val out = new JpegOut
+    out.header(f, 0xC2) {}
+    // ---- scan 1: interleaved DC (Ss=0, Se=0; the AC table id is inert) ----
+    out.sos(0 until f.nComp, c => if (c == 0) 0x00 else 0x10, 0, 0)
+    val dcWriter = new JpegBitWriter(out)
+    val pred = new Array[Int](f.nComp)
+    f.mcuWalk(_ => ()) { (c, by, bx) =>
+      val dc = coefs(c)(by * f.blocksW(c) + bx)(0)
+      dcWriter.dc(JpegDcCodes(math.min(c, 1)), dc - pred(c))
+      pred(c) = dc
     }
-    val out = new java.io.ByteArrayOutputStream(1024)
-    def u16(v: Int): Unit = { out.write((v >> 8) & 0xFF); out.write(v & 0xFF) }
-    def marker(m: Int): Unit = { out.write(0xFF); out.write(m) }
-    marker(0xD8)
-    marker(0xE0); u16(16) // APP0 / JFIF 1.1
-    out.write("JFIF".getBytes("US-ASCII")); out.write(0)
-    out.write(1); out.write(1); out.write(0)
-    u16(1); u16(1); out.write(0); out.write(0)
-    def dqt(id: Int, tbl: Array[Int]): Unit = {
-      marker(0xDB); u16(2 + 1 + 64); out.write(id)
-      var k = 0
-      while (k < 64) { out.write(tbl(JpegZigzag(k))); k += 1 }
-    }
-    dqt(0, qLum)
-    if (!gray) dqt(1, qChr)
-    // SOF2: progressive, precision 8; same component spec as encodeJpeg
-    marker(0xC2); u16(8 + 3 * nComp); out.write(8); u16(h); u16(w)
-    out.write(nComp)
+    dcWriter.flushAlign()
+    // ---- scans 2..: one full-band AC scan (Ss=1, Se=63; the DC table id
+    // is inert) per component, non-interleaved over ceil(compDim/8) blocks
     var c = 0
-    while (c < nComp) {
-      out.write(c + 1)
-      out.write(if (c == 0) (lumaH << 4) | lumaV else 0x11)
-      out.write(if (c == 0) 0 else 1)
-      c += 1
-    }
-    def dht(cls: Int, id: Int, spec: HuffSpec): Unit = {
-      marker(0xC4); u16(2 + 1 + 16 + spec.vals.length)
-      out.write((cls << 4) | id)
-      spec.bits.foreach(out.write)
-      spec.vals.foreach(out.write)
-    }
-    dht(0, 0, JpegDcLum); dht(1, 0, JpegAcLum)
-    if (!gray) { dht(0, 1, JpegDcChr); dht(1, 1, JpegAcChr) }
-    val dcTab = Array(huffEncodeTable(JpegDcLum), huffEncodeTable(JpegDcChr))
-    val acTab = Array(huffEncodeTable(JpegAcLum), huffEncodeTable(JpegAcChr))
-    // ---- scan 1: interleaved DC (Ss=0, Se=0, AhAl=0) ----
-    marker(0xDA); u16(6 + 2 * nComp); out.write(nComp)
-    c = 0
-    while (c < nComp) {
-      out.write(c + 1)
-      out.write(if (c == 0) 0x00 else 0x10) // DC table id (AC id inert)
-      c += 1
-    }
-    out.write(0); out.write(0); out.write(0) // Ss=0 Se=0 AhAl
-    locally {
-      val writer = new JpegBitWriter(out)
-      val pred = new Array[Int](nComp)
-      var my = 0
-      while (my < mcusY) {
-        var mx = 0
-        while (mx < mcusX) {
-          c = 0
-          while (c < nComp) {
-            val fH = if (c == 0) lumaH else 1
-            val fV = if (c == 0) lumaV else 1
-            val ti = if (c == 0) 0 else 1
-            var vb = 0
-            while (vb < fV) {
-              var hb = 0
-              while (hb < fH) {
-                val dc = coefs(c)(((my * fV + vb) * bwC(c) + mx * fH + hb) * 64)
-                val diff = dc - pred(c)
-                pred(c) = dc
-                val cat = jpegCategory(diff)
-                val (dl, dcc) = dcTab(ti)(cat)
-                writer.put(dcc, dl)
-                if (cat > 0)
-                  writer.put(if (diff < 0) diff + (1 << cat) - 1 else diff, cat)
-                hb += 1
-              }
-              vb += 1
-            }
-            c += 1
-          }
-          mx += 1
-        }
-        my += 1
-      }
-      writer.flushAlign()
-    }
-    // ---- scans 2..: one full-band AC scan per component,
-    // non-interleaved over ceil(compDim/8) blocks ----
-    c = 0
-    while (c < nComp) {
-      val fH = if (c == 0) lumaH else 1
-      val fV = if (c == 0) lumaV else 1
-      val hMaxE = lumaH; val vMaxE = lumaV
-      val nbwE = ((w * fH + hMaxE - 1) / hMaxE + 7) / 8
-      val nbhE = ((h * fV + vMaxE - 1) / vMaxE + 7) / 8
-      val ti = if (c == 0) 0 else 1
-      marker(0xDA); u16(8); out.write(1)
-      out.write(c + 1)
-      out.write(if (c == 0) 0x00 else 0x11) // AC table id (DC id inert)
-      out.write(1); out.write(63); out.write(0) // Ss=1 Se=63 AhAl=0
+    while (c < f.nComp) {
+      val nbw = ((f.w * f.fH(c) + lumaH - 1) / lumaH + 7) / 8
+      val nbh = ((f.h * f.fV(c) + lumaV - 1) / lumaV + 7) / 8
+      out.sos(c to c, _ => if (c == 0) 0x00 else 0x11, 1, 63)
       val writer = new JpegBitWriter(out)
       var by = 0
-      while (by < nbhE) {
+      while (by < nbh) {
         var bx = 0
-        while (bx < nbwE) {
-          val off = (by * bwC(c) + bx) * 64
-          var run = 0
-          var k = 1
-          while (k < 64) {
-            val v = coefs(c)(off + JpegZigzag(k))
-            if (v == 0) run += 1
-            else {
-              while (run >= 16) {
-                val (zl, zc) = acTab(ti)(0xF0); writer.put(zc, zl); run -= 16
-              }
-              val sz = jpegCategory(v)
-              val (al2, ac2) = acTab(ti)((run << 4) | sz)
-              writer.put(ac2, al2)
-              writer.put(if (v < 0) v + (1 << sz) - 1 else v, sz)
-              run = 0
-            }
-            k += 1
-          }
-          if (run > 0) { val (el, ec) = acTab(ti)(0x00); writer.put(ec, el) }
+        while (bx < nbw) {
+          writer.ac(JpegAcCodes(math.min(c, 1)), coefs(c)(by * f.blocksW(c) + bx))
           bx += 1
         }
         by += 1
@@ -2606,7 +2368,7 @@ object Codecs {
       writer.flushAlign()
       c += 1
     }
-    marker(0xD9)
+    out.marker(0xD9)
     out.toByteArray
   }
 

@@ -339,14 +339,6 @@ private[graft] object PipelineShared {
       .localCheckpoint()
   }
 
-  /** [[corpusBuild]] over an INJECTED corpus + near-dup cluster frame —
-    * the replicated-corpus, budget ∝ factor shape of the `corpus_build`
-    * curves in `stress_history/` (e.g. `r14_final_sweep_f8_32.jsonl`) —
-    * without touching the (session, dir)-memoized artifacts. */
-  private[graft] def corpusBuildFrom(base: DataFrame, clusters: DataFrame,
-                                     budget: Long): DataFrame =
-    corpusBuildFromSurvivors(dedupSurvivorsWithSplit(base, clusters), budget)
-
   /** The p10 tail over an already-materialized survivors frame
     * (doc_id, lang, text, n_tokens, split): p03 exact decontamination →
     * p06 temperature mix → p07 token budget → p02 packing → p01 labels. */
@@ -372,28 +364,26 @@ private[graft] object PipelineShared {
         Sampling.assignSplit(col("doc_id")).as("split"))
   }
 
-  /** [[corpusBuildFrom]] extended with the round-7 admission ops — v2 of
-    * the composed product story. Two new stages, same recompute-over-
-    * survivors semantics: after the exact (p03) decontamination, drop
-    * train docs sharing any 13-gram with an eval-split SURVIVOR (p11 —
-    * the quoted-passage leak p03's whole-doc hash misses); after packing,
-    * expand the admitted corpus into epoch-weighted repeats (p12) keyed
-    * on the shared t02 quality score computed once over the deduped
-    * survivors and carried through budget and packing. Shuffle-ledger
-    * delta vs [[corpusBuildFrom]]: the gram stage adds one broadcast
-    * probe whose shuffled rows are the matches (bounded by the eval
-    * population), and p12 is map-only (scan-side explode) — the
-    * corpus-wide shuffles remain p07's bounded scan + p02's pack scan. */
-  private[graft] def corpusBuildV2From(base: DataFrame, clusters: DataFrame,
-                                       budget: Long): DataFrame =
-    corpusBuildV2FromSurvivors(dedupSurvivorsWithSplit(base, clusters), budget)
-
-  /** The p13 tail over the SAME survivors artifact p10 starts from — round
-    * 8 materialized a second, quality-widened copy of the survivors frame
-    * just for v2; the quality columns are a per-row pure function of
-    * `text`, so they attach map-side over the shared checkpoint blocks
-    * AFTER the decontamination anti-joins instead (same values on every
-    * surviving row, and rows about to be dropped are never scored). */
+  /** [[corpusBuildFromSurvivors]] extended with the round-7 admission ops
+    * — v2 of the composed product story. Two new stages, same
+    * recompute-over-survivors semantics: after the exact (p03)
+    * decontamination, drop train docs sharing any 13-gram with an
+    * eval-split SURVIVOR (p11 — the quoted-passage leak p03's whole-doc
+    * hash misses); after packing, expand the admitted corpus into
+    * epoch-weighted repeats (p12) keyed on the shared t02 quality score
+    * computed once over the deduped survivors and carried through budget
+    * and packing. Shuffle-ledger delta vs p10: the gram stage adds one
+    * broadcast probe whose shuffled rows are the matches (bounded by the
+    * eval population), and p12 is map-only (scan-side explode) — the
+    * corpus-wide shuffles remain p07's bounded scan + p02's pack scan.
+    *
+    * This is the p13 tail over the SAME survivors artifact p10 starts
+    * from — round 8 materialized a second, quality-widened copy of the
+    * survivors frame just for v2; the quality columns are a per-row pure
+    * function of `text`, so they attach map-side over the shared
+    * checkpoint blocks AFTER the decontamination anti-joins instead (same
+    * values on every surviving row, and rows about to be dropped are
+    * never scored). */
   private[graft] def corpusBuildV2FromSurvivors(withSplit: DataFrame,
                                                 budget: Long): DataFrame =
     corpusBuildTail(withSplit, budget, v2MixStage)
@@ -503,14 +493,6 @@ private[graft] object PipelineShared {
         Sampling.assignSplit(col("doc_id")).as("split"))
     Sampling.epochRepeat(packed, "doc_id", "quality_bp", maxEpochs = 4)
   }
-
-  /** [[corpusBuildV2From]] with the mixture stage swapped: v3 of the
-    * composed build over an injected corpus, the shape of the
-    * `corpus_build_v3` curves in `stress_history/` (e.g.
-    * `r10_highfactor_f16_32.jsonl`). */
-  private[graft] def corpusBuildV3From(base: DataFrame, clusters: DataFrame,
-                                       budget: Long): DataFrame =
-    corpusBuildV3FromSurvivors(dedupSurvivorsWithSplit(base, clusters), budget)
 
   /** v3 of the composed build: [[corpusBuildV2FromSurvivors]]'s chain with
     * the p06 sqrt-temperature mix replaced by p15's target-mixture solve

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+
 import graft.core.{EngineConfig, Floorista}
 
 /** End-to-end floorist-surface tests: floorplan YAML in, partitioned gzip
@@ -9,8 +11,15 @@ import graft.core.{EngineConfig, Floorista}
   * (tests/test_floorist.py behavioral invariants on local FS). */
 class FlooristaSpec extends SparkSpecBase {
 
-  private def run(floorplanYaml: String, extraEnv: Map[String, String] = Map.empty)
-      : (Int, String) = {
+  /** One Floorista run over a fresh catalog: every temp view of the
+    * shared session is dropped first (a table an earlier run or suite
+    * registered must not satisfy this floorplan), then `views` are
+    * registered — the catalog a fresh process would see. */
+  private def run(floorplanYaml: String, extraEnv: Map[String, String] = Map.empty,
+                  views: Map[String, DataFrame] = Map.empty): (Int, String) = {
+    spark.catalog.listTables().collect().filter(_.isTemporary)
+      .foreach(t => spark.catalog.dropTempView(t.name))
+    views.foreach { case (name, df) => df.createOrReplaceTempView(name) }
     val root = tmpDir("floorista")
     val fp = SparkSpecBase.tmpFile("floorplan", ".yaml")
     Files.writeString(fp, floorplanYaml)
@@ -162,14 +171,13 @@ class FlooristaSpec extends SparkSpecBase {
     // Floorista -> PartitionedParquetSink path as every reference dump —
     // dated partitioned layout, chunked gzip parquet, append semantics.
     val lake = "/root/testdata/sf0.001"
-    graft.queries.PipelineShared.corpusBuild(spark, lake)
-      .createOrReplaceTempView("corpus_build")
     val (code, root) = run(
       """- prefix: corpora/main
         |  query: SELECT * FROM corpus_build
         |  chunksize: 100
         |""".stripMargin,
-      extraEnv = Map("GRAFT_TABLE_DIR" -> lake))
+      extraEnv = Map("GRAFT_TABLE_DIR" -> lake),
+      views = Map("corpus_build" -> graft.queries.PipelineShared.corpusBuild(spark, lake)))
     assert(code == 0)
 
     val leaf = datedLeaf(s"$root/corpora/main")
@@ -226,6 +234,20 @@ class FlooristaSpec extends SparkSpecBase {
     assert(code == 1)
     assert(records.result().isEmpty)
     assert(filesUnder(root).isEmpty, "no dump output may be created")
+  }
+
+  test("a run sees only what it registers: a lake run's tables do not reach the next run") {
+    val floorplan =
+      """- prefix: dumps/orders
+        |  query: SELECT o_orderkey FROM orders
+        |""".stripMargin
+    val (lakeCode, lakeRoot) =
+      run(floorplan, extraEnv = Map("GRAFT_TABLE_DIR" -> "/root/testdata/sf0.001"))
+    assert(lakeCode == 0)
+    assert(filesUnder(s"$lakeRoot/dumps/orders").nonEmpty)
+    val (code, root) = run(floorplan)
+    assert(code == 1, "without GRAFT_TABLE_DIR no `orders` table is registered")
+    assert(filesUnder(s"$root/dumps/orders").isEmpty)
   }
 
   test("chunked dump under the Scalable default still bounds rows per file") {

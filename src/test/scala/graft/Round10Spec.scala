@@ -239,7 +239,8 @@ class Round10Spec extends SparkSpecBase {
     val base = graft.sources.Sources.table(spark, sfDir, "documents")
     val clusters = graft.queries.PipelineShared.dupPairsAndClusters(spark, sfDir)._2
     val runs = PlanLedger.captureHintedBroadcasts(spark) {
-      graft.queries.PipelineShared.corpusBuildV3From(base, clusters, budget = 3000L)
+      graft.queries.PipelineShared.corpusBuildV3FromSurvivors(
+        graft.queries.PipelineShared.dedupSurvivorsWithSplit(base, clusters), budget = 3000L)
         .collect()
     }
     // p13's allowlist verbatim: the target-mixture solve replaces the
@@ -267,7 +268,8 @@ class Round10Spec extends SparkSpecBase {
     val base = graft.sources.Sources.table(spark, sfDir, "documents")
     val clusters = graft.queries.PipelineShared.dupPairsAndClusters(spark, sfDir)._2
     val out = graft.queries.PipelineShared
-      .corpusBuildV3From(base, clusters, budget = 1000000L)
+      .corpusBuildV3FromSurvivors(
+        graft.queries.PipelineShared.dedupSurvivorsWithSplit(base, clusters), budget = 1000000L)
       .filter(col("epoch_idx") === 1) // one row per admitted doc
       .groupBy(col("lang")).agg(sum(col("n_tokens")).cast("long").as("adm"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

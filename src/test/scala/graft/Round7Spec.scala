@@ -166,7 +166,8 @@ class Round7Spec extends SparkSpecBase {
     // is audited, so a stage behind a checkpoint is seen too. The
     // memoized clusters above are built before the capture opens.
     val runs = PlanLedger.captureHintedBroadcasts(spark) {
-      assert(PipelineShared.corpusBuildFrom(base, clusters, budget = 3000L)
+      assert(PipelineShared.corpusBuildFromSurvivors(
+        PipelineShared.dedupSurvivorsWithSplit(base, clusters), budget = 3000L)
         .collect().nonEmpty)
     }
     val keyed = PlanLedger.hashKeys(runs)
@@ -221,7 +222,8 @@ class Round7Spec extends SparkSpecBase {
     def measure(k: Int): (Long, Long) = {
       val docs = replicated(k)
       val out = PipelineShared
-        .corpusBuildFrom(docs, clustersOf(docs), budget = 3000L * k)
+        .corpusBuildFromSurvivors(
+          PipelineShared.dedupSurvivorsWithSplit(docs, clustersOf(docs)), budget = 3000L * k)
         .agg(sum(col("n_tokens")).cast("long"),
           (max(col("pack_id")) + 1).cast("long"))
         .collect().head
@@ -241,7 +243,8 @@ class Round7Spec extends SparkSpecBase {
     val base = graft.sources.Sources.table(spark, dir, "documents")
     val clusters = PipelineShared.dupPairsAndClusters(spark, dir)._2
     val runs = PlanLedger.captureHintedBroadcasts(spark) {
-      assert(PipelineShared.corpusBuildV2From(base, clusters, budget = 3000L)
+      assert(PipelineShared.corpusBuildV2FromSurvivors(
+        PipelineShared.dedupSurvivorsWithSplit(base, clusters), budget = 3000L)
         .collect().nonEmpty)
     }
     val keyed = PlanLedger.hashKeys(runs)
@@ -260,7 +263,8 @@ class Round7Spec extends SparkSpecBase {
     // Epoch invariants on the real output: repeats in 1..4, epochs dense
     // per doc, and the doc-level frame equals p10's shape semantics
     // (every admitted doc appears exactly `repeats` times).
-    val rows = PipelineShared.corpusBuildV2From(base, clusters, budget = 3000L)
+    val rows = PipelineShared.corpusBuildV2FromSurvivors(
+      PipelineShared.dedupSurvivorsWithSplit(base, clusters), budget = 3000L)
       .select(col("doc_id"), col("repeats"), col("epoch_idx"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(rows.nonEmpty)
